@@ -5,7 +5,9 @@ Replaces the reference's Jinja2-template → pySHACL-interpretation stack
 data_shapes.template.ttl) with a driver-side planner that compiles every
 shape family to ONE fused DataFrame job (filters, semi/anti joins, hash
 aggregates over the triple table T), emitting a uniform violations
-DataFrame V(metric, item, focus, value).
+DataFrame V(metric, item, focus, value). The instantiated shape list — one
+ShapeSpec per report row — is data_shapes, plain Python over the same
+inputs, so a caller that only needs the list builds no plan.
 
 Key semantics preserved from the reference (citations per family below):
   * the sh:or exemption wrapper — focus nodes typed rdfs:Class /
@@ -142,6 +144,271 @@ def _v(df: DataFrame, metric: str, item: Column | str | None,
     )
 
 
+# the flag columns of subject_flags, in the order the incremental state
+# stores them (SUBJ_FLAGS_SCHEMA)
+SUBJECT_FLAGS = ("is_entity", "is_exempt", "has_label", "has_ilp", "has_desc",
+                 "is_prolix", "lbl_nolang", "dsc_nolang")
+
+
+def subject_flags(T: DataFrame, cfg: DQAConfig) -> DataFrame:
+    """The per-subject flags aggregate (s, *SUBJECT_FLAGS) that every
+    entity-scoped family (C2/C3/C6/C8-C13/C15) and the entity counts of the
+    incremental profile read. Booleans combine map-side, so this costs a
+    single #distinct-subjects-wide shuffle instead of the separate
+    distinct + anti/semi-join shuffles each family would otherwise run —
+    at 100 TB that is 1 shuffle of the subject set vs ~8. Every flag is a
+    bool-max, which is how the incremental state merges a delta's
+    aggregate into its own."""
+    p, o = F.col("p"), F.col("o")
+    typed = p == cfg.type_property
+    label = p == cfg.labeling_property
+    desc = p == cfg.description_property
+    untagged = F.col("o_lang").isNull()
+    flags = {
+        "is_entity": typed,
+        "is_exempt": typed & o.isin(EXEMPT_TYPES),
+        "has_label": label,
+        "has_ilp": p == cfg.interlinking_property,
+        "has_desc": desc,
+        "is_prolix": typed & o.isin(PROLIX_CLASSES),
+        "lbl_nolang": label & untagged,
+        "dsc_nolang": desc & untagged,
+    }
+    return T.groupBy("s").agg(*[F.max(flags[f]).alias(f) for f in SUBJECT_FLAGS])
+
+
+def flag_families(cfg: DQAConfig) -> list[tuple]:
+    """The entity-scoped families as fused-scan entries (metric, item,
+    focus, value, condition) over subject_flags rows. The batch plan and
+    the incremental state both emit them with ONE fused_scan."""
+    s = F.col("s")
+    null = F.lit(None).cast("string")
+    bnode = s.startswith("_:")
+    # entity targets minus the sh:or exemption set (rdfs:Class/rdf:Property/
+    # owl:NamedIndividual focus nodes are exempt — template:16-33)
+    ent = F.col("is_entity") & ~F.col("is_exempt")
+    # C2 UsageHashURIsEntities (template:12-34): sh:pattern applies to the
+    # string form; blank-node focus nodes always violate pattern
+    # constraints (observed in the pizza golden output: the 3 bnodes are in
+    # the violation list). C3 LabelForEntities (template:36-59): minCount 1.
+    fams = [
+        ("UsageHashURIsEntities", null, s, null,
+         ent & (s.contains("#") | bnode)),
+        ("LabelForEntities", null, s, null, ent & ~F.col("has_label")),
+    ]
+    # C4/C5 URI regex/space compliance (template:61-107, gated)
+    if cfg.uri_regex_pattern:
+        fams.append(("URIRegexComplianceEntities", null, s, null,
+                     ent & (bnode | ~s.rlike("^" + cfg.uri_regex_pattern))))
+    if cfg.uri_space:
+        fams.append(("URISpaceComplianceEntities", null, s, null,
+                     ent & ~s.startswith(cfg.uri_space)))
+    # C6 InterlinkingCompleteness (template:109-132); C8/C9 URI length /
+    # query params (template:156-202) — sh:maxLength also violates for
+    # blank-node focus nodes (SHACL spec; confirmed in the pizza golden);
+    # C10 ProlixFeatures (template:204-234)
+    fams += [
+        ("InterlinkingCompleteness", null, s, null, ent & ~F.col("has_ilp")),
+        ("URIsLengthEntities", null, s, null,
+         ent & ((F.length("s") > cfg.uris_max_length) | bnode)),
+        ("URIsParametersEntities", null, s, null, ent & s.rlike(r"\?.+=.*")),
+        ("ProlixFeatures", null, s, null, ent & F.col("is_prolix")),
+    ]
+    # C11/C12 DifferentLanguages* (template:236-284, gated): subjects with
+    # >=1 untagged value of the property, minus the exemption set (the
+    # target here is NOT restricted to entities)
+    if cfg.check_languages:
+        fams += [
+            ("DifferentLanguagesLabelsEntities", F.lit(cfg.labeling_property),
+             s, null, ~F.col("is_exempt") & F.col("lbl_nolang")),
+            ("DifferentLanguagesDescriptionsEntities",
+             F.lit(cfg.description_property),
+             s, null, ~F.col("is_exempt") & F.col("dsc_nolang")),
+        ]
+    # C13/C15 SelfDescriptiveFormat + BlankNodesUsage (286-340): identical
+    # filter, two metrics — same fused scan, two entries
+    fams += [("SelfDescriptiveFormat", null, s, null, ent & bnode),
+             ("BlankNodesUsageEntities", null, s, null, ent & bnode)]
+    return fams
+
+
+def fused_scan(base: DataFrame, fams: list[tuple]) -> DataFrame:
+    """ONE scan + explode of ``base`` emitting the violations of every
+    (metric, item, focus, value, condition) entry in ``fams`` — 1 pass
+    over the input instead of one union branch per family."""
+    entries = [
+        F.when(cond, F.struct(
+            F.lit(metric).alias("metric"),
+            item.cast("string").alias("item"),
+            focus.cast("string").alias("focus"),
+            value.cast("string").alias("value"),
+        ))
+        for metric, item, focus, value, cond in fams
+    ]
+    return (base.select(F.explode(F.array_compact(F.array(*entries)))
+                        .alias("_f"))
+            .select("_f.metric", "_f.item", "_f.focus", "_f.value"))
+
+
+OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
+
+
+@dataclass(frozen=True)
+class _Terms:
+    """The vocabulary terms each family instantiates shapes for, after
+    deprecation and usage pruning. data_shapes and the plan's branches read
+    this one selection, so a shape and the branch that scores it cannot
+    disagree on their terms."""
+
+    classes: list[str]              # non-deprecated vocab classes
+    depr_classes: list[str]
+    props: list[str]                # every property term
+    depr_props: list[str]
+    used_obj: list[str]
+    used_dt: list[str]
+    ifp: list[str]
+    fp: list[str]
+    asym: list[str]
+    irr: list[str]
+    dom_terms: list[VocabTerm]
+    rng_terms: list[VocabTerm]
+    rng_dt: list[VocabTerm]         # sh:datatype + MalformedLiteral
+    rng_cls: list[VocabTerm]        # sh:class anti-join
+    rng_nk_literal: list[VocabTerm]  # nodeKind Literal
+    rng_nk_bi: list[VocabTerm]      # nodeKind BlankNodeOrIRI
+    dpairs: list[tuple[str, str]]   # directed disjoint-class pairs
+
+
+def _select_terms(
+    vocab_terms: list[VocabTerm],
+    disjoint_pairs: list[tuple[str, str]],
+    used_props: set[str],
+    used_classes: set[str],
+) -> _Terms:
+    props = [t for t in vocab_terms if t.term_kind != "class"]
+    live = [t for t in props if not t.deprecated]
+    # CorrectRange instantiation rules differ BY TERM KIND
+    # (shacl_shape_builder.py):
+    #   * datatype_property (builder:340-362): ALWAYS sh:datatype(range) +
+    #     MalformedLiteral(range) — including range rdfs:Literal (which no
+    #     literal satisfies, so every value violates);
+    #   * object_property (builder:330-336): owl:Thing → nodeKind
+    #     BlankNodeOrIRI; rdfs:Resource → both (vacuous); else sh:class;
+    #   * rdf_property (builder:433-455): literal-kind range != rdfs:Literal
+    #     → sh:datatype + MalformedLiteral; == rdfs:Literal → nodeKind
+    #     Literal; class-kind → sh:class (see below).
+    rng_terms = [t for t in live if t.range and t.term in used_props]
+    rng_dt, rng_cls, rng_nk_literal, rng_nk_bi = [], [], [], []
+    for t in rng_terms:
+        if t.term_kind == "datatype_property":
+            rng_dt.append(t)
+        elif t.term_kind == "object_property":
+            if t.range == OWL_THING:
+                rng_nk_bi.append(t)
+            elif t.range != f"{RDFS}Resource":
+                rng_cls.append(t)
+        elif t.range_kind == "literal":  # rdf_property
+            (rng_nk_literal if t.range == f"{RDFS}Literal" else rng_dt).append(t)
+        else:
+            # Reference parity (shacl_shape_builder.py:450-455): the
+            # rdf_property branch compares info['range'] (a dict) to the
+            # owl:Thing / rdfs:Resource strings — always false — so it
+            # ALWAYS emits sh:class for class-kind ranges, including
+            # owl:Thing and rdfs:Resource. nodeKind routing applies to
+            # object_property terms only (builder:330-336).
+            rng_cls.append(t)
+    pairs = set(disjoint_pairs) | {(b, a) for (a, b) in disjoint_pairs}
+    return _Terms(
+        classes=[t.term for t in vocab_terms
+                 if t.term_kind == "class" and not t.deprecated],
+        depr_classes=[t.term for t in vocab_terms
+                      if t.term_kind == "class" and t.deprecated],
+        props=[t.term for t in props],
+        depr_props=sorted(t.term for t in props if t.deprecated),
+        used_obj=sorted({t.term for t in live
+                         if t.term_kind == "object_property"} & used_props),
+        used_dt=sorted({t.term for t in live
+                        if t.term_kind == "datatype_property"} & used_props),
+        # deprecated terms are excluded from IFP/functional checks —
+        # reference parity: utils.py:313-318 skips deprecated when
+        # harvesting both sets (asymmetric/irreflexive harvesting does not)
+        ifp=sorted({t.term for t in live if t.inverse_functional} & used_props),
+        fp=sorted({t.term for t in live if t.functional} & used_props),
+        asym=sorted({t.term for t in props if t.asymmetric} & used_props),
+        irr=sorted({t.term for t in props if t.irreflexive} & used_props),
+        dom_terms=[t for t in live if t.domain and t.term in used_props],
+        rng_terms=rng_terms, rng_dt=rng_dt, rng_cls=rng_cls,
+        rng_nk_literal=rng_nk_literal, rng_nk_bi=rng_nk_bi,
+        dpairs=sorted((a, b) for (a, b) in pairs if a in used_classes),
+    )
+
+
+def data_shapes(
+    vocab_terms: list[VocabTerm],
+    disjoint_pairs: list[tuple[str, str]],
+    cfg: DQAConfig,
+    used_props: set[str],
+    used_classes: set[str],
+) -> list[ShapeSpec]:
+    """The instantiated data shapes — one ShapeSpec per (metric, item)
+    report row — of the plan compile_data_constraints builds over the same
+    inputs. Pure Python: the incremental path instantiates it from
+    state-derived usage sets without building a plan. Each shape's denom
+    follows const.py:33-104 (DeprecatedProperties: const.py:76-86)."""
+    t = _select_terms(vocab_terms, disjoint_pairs, used_props, used_classes)
+
+    def ent(metric: str) -> ShapeSpec:
+        return ShapeSpec(metric, None, "entities")
+
+    def per_prop(metric: str, prop: str) -> ShapeSpec:
+        return ShapeSpec(metric, prop, "subjects_per_property", prop)
+
+    def binary(metric: str, item: str | None) -> ShapeSpec:
+        return ShapeSpec(metric, item, "binary")
+
+    shapes = []
+    if cfg.base_uri:
+        shapes.append(per_prop("UsageExternalURIEntities",
+                               cfg.interlinking_property))
+    shapes += [ent("UsageHashURIsEntities"), ent("LabelForEntities")]
+    if cfg.uri_regex_pattern:
+        shapes.append(ent("URIRegexComplianceEntities"))
+    if cfg.uri_space:
+        shapes.append(ent("URISpaceComplianceEntities"))
+    shapes.append(ent("InterlinkingCompleteness"))
+    shapes += [binary("SchemaCompletenessClassUsage", c) for c in t.classes]
+    shapes += [ent("URIsLengthEntities"), ent("URIsParametersEntities"),
+               ent("ProlixFeatures")]
+    if cfg.check_languages:
+        shapes += [per_prop("DifferentLanguagesLabelsEntities",
+                            cfg.labeling_property),
+                   per_prop("DifferentLanguagesDescriptionsEntities",
+                            cfg.description_property)]
+    shapes += [ent("SelfDescriptiveFormat"), ent("BlankNodesUsageEntities")]
+    shapes += [binary("SelfDescriptiveFormatProperties", p)
+               for p in sorted(used_props)]
+    shapes += [ShapeSpec("EntitiesDisjointClasses", f"{a}|{b}",
+                         "entities_per_class", a) for a, b in t.dpairs]
+    shapes += [binary("MisplacedProperties", p) for p in t.props]
+    shapes += [binary("MisplacedClasses", c) for c in t.classes]
+    shapes += [per_prop("MisuseOwlObjectProperties", p) for p in t.used_obj]
+    shapes += [per_prop("MisuseOwlDatatypeProperties", p) for p in t.used_dt]
+    if t.depr_classes:
+        shapes.append(binary("DeprecatedClasses", None))
+    shapes += [ShapeSpec("DeprecatedProperties", p, "entities")
+               for p in t.depr_props]
+    shapes += [binary("InverseFunctionalPropertyUniqueness", p) for p in t.ifp]
+    shapes += [per_prop("FunctionalProperty", p) for p in t.fp]
+    shapes += [per_prop("AsymmetricProperty", p) for p in t.asym]
+    shapes += [per_prop("IrreflexiveProperty", p) for p in t.irr]
+    # owl:Thing domain → nodeKind BlankNodeOrIRI, structurally satisfied for
+    # RDF subjects (C27) — shape still instantiated, score 1
+    shapes += [per_prop("CorrectDomain", x.term) for x in t.dom_terms]
+    shapes += [per_prop("CorrectRange", x.term) for x in t.rng_terms]
+    shapes += [per_prop("MalformedLiteral", x.term) for x in t.rng_dt]
+    return shapes
+
+
 def compile_data_constraints(
     T: DataFrame,
     vocab_terms: list[VocabTerm],
@@ -152,7 +419,8 @@ def compile_data_constraints(
     subclass_pairs: list[tuple[str, str]] | None = None,
 ) -> ConstraintPlan:
     """Compile + evaluate all data shapes. Returns the violations DF
-    (lazy; caller caches before scoring) and the instantiated shape list.
+    (lazy; caller caches before scoring) and the instantiated shape list
+    (data_shapes).
 
     ``used_props``/``used_classes`` override the usage-pruning sets — the
     reference prunes by the PRE-TBox-merge data profile
@@ -167,24 +435,7 @@ def compile_data_constraints(
 
     # ---- shared sub-plans (each used by several families) ----------------
     typing = T.filter(p == cfg.type_property).select("s", "o")
-
-    # ONE per-subject flags aggregation feeds every entity-scoped family
-    # (C2/C3/C6/C8-C13/C15): booleans combine map-side, so this costs a
-    # single #distinct-subjects-wide shuffle instead of the separate
-    # distinct + anti/semi-join shuffles each family would otherwise run —
-    # at 100 TB that is 1 shuffle of the subject set vs ~8.
-    subj = T.groupBy("s").agg(
-        F.max(p == cfg.type_property).alias("is_entity"),
-        F.max((p == cfg.type_property) & o.isin(EXEMPT_TYPES)).alias("is_exempt"),
-        F.max(p == cfg.labeling_property).alias("has_label"),
-        F.max(p == cfg.interlinking_property).alias("has_ilp"),
-        F.max((p == cfg.type_property) & o.isin(PROLIX_CLASSES)).alias("is_prolix"),
-        F.max((p == cfg.labeling_property) & F.col("o_lang").isNull()).alias("lbl_nolang"),
-        F.max((p == cfg.description_property) & F.col("o_lang").isNull()).alias("dsc_nolang"),
-    ).cache()
-    # entity targets minus the sh:or exemption set (rdfs:Class/rdf:Property/
-    # owl:NamedIndividual focus nodes are exempt — template:16-33) are
-    # expressed as the fused scan's `_ent` predicate, not a separate branch
+    subj = subject_flags(T, cfg).cache()
 
     # sh:class semantics: SHACL instance = typed as the class OR any
     # rdfs:subClassOf descendant — extend typing through the closure dim.
@@ -206,28 +457,21 @@ def compile_data_constraints(
         used_props = props_set if used_props is None else used_props
         used_classes = classes_set if used_classes is None else used_classes
 
-    classes = [t for t in vocab_terms if t.term_kind == "class" and not t.deprecated]
-    depr_classes = [t.term for t in vocab_terms if t.term_kind == "class" and t.deprecated]
-    props = [t for t in vocab_terms if t.term_kind != "class"]
-    depr_props = [t.term for t in props if t.deprecated]
-    obj_props = [t.term for t in props if t.term_kind == "object_property" and not t.deprecated]
-    dt_props = [t.term for t in props if t.term_kind == "datatype_property" and not t.deprecated]
-
-    shapes: list[ShapeSpec] = []
+    terms = _select_terms(vocab_terms, disjoint_pairs, used_props, used_classes)
     parts: list[DataFrame] = []
     part_metrics: list[frozenset] = []
-    # fused single-scan families: (metric, item_col, focus_col, value_col,
-    # condition). Every per-row filter family over the same base DF joins
-    # one of these lists and is emitted by ONE scan + explode instead of
+
+    def branch(df: DataFrame, metric: str) -> None:
+        parts.append(df)
+        part_metrics.append(frozenset({metric}))
+
+    # fused single-scan families over the triple table: (metric, item_col,
+    # focus_col, value_col, condition). Every per-row filter family joins
+    # this list and is emitted by ONE scan + explode (fused_scan) instead of
     # one union branch per family — at 100 TB that is 1 pass over the
-    # subject flags (resp. the triple table) instead of ~10 (resp. ~8).
-    flag_fams: list[tuple] = []   # over the per-subject flags aggregate
-    row_fams: list[tuple] = []    # over the triple table
-
-    def add(metric: str, item: str | None, denom: str, denom_key: str | None = None):
-        shapes.append(ShapeSpec(metric, item, denom, denom_key))
-
-    _ent = F.col("is_entity") & ~F.col("is_exempt")
+    # triple table instead of ~8. The per-subject families are
+    # flag_families over subj, fused the same way.
+    row_fams: list[tuple] = []
     _null = F.lit(None).cast("string")
 
     # ---- C1 UsageExternalURIEntities (template:1-10) ----------------------
@@ -236,44 +480,12 @@ def compile_data_constraints(
         ilp = cfg.interlinking_property
         row_fams.append(("UsageExternalURIEntities", F.lit(ilp), s, o,
                          (p == ilp) & o.startswith(cfg.base_uri)))
-        add("UsageExternalURIEntities", cfg.interlinking_property,
-            "subjects_per_property", cfg.interlinking_property)
-
-    # ---- C2 UsageHashURIsEntities (template:12-34) ------------------------
-    # sh:pattern applies to the string form; blank-node focus nodes always
-    # violate pattern constraints (observed in the pizza golden output:
-    # the 3 bnodes are in the violation list).
-    flag_fams.append(("UsageHashURIsEntities", _null, F.col("s"), _null,
-                      _ent & (F.col("s").contains("#")
-                              | F.col("s").startswith("_:"))))
-    add("UsageHashURIsEntities", None, "entities")
-
-    # ---- C3 LabelForEntities (template:36-59): minCount 1 flag filter -----
-    flag_fams.append(("LabelForEntities", _null, F.col("s"), _null,
-                      _ent & ~F.col("has_label")))
-    add("LabelForEntities", None, "entities")
-
-    # ---- C4/C5 URI regex/space compliance (template:61-107, gated) --------
-    if cfg.uri_regex_pattern:
-        flag_fams.append(("URIRegexComplianceEntities", _null, F.col("s"), _null,
-                          _ent & (F.col("s").startswith("_:")
-                                  | ~F.col("s").rlike("^" + cfg.uri_regex_pattern))))
-        add("URIRegexComplianceEntities", None, "entities")
-    if cfg.uri_space:
-        flag_fams.append(("URISpaceComplianceEntities", _null, F.col("s"), _null,
-                          _ent & ~F.col("s").startswith(cfg.uri_space)))
-        add("URISpaceComplianceEntities", None, "entities")
-
-    # ---- C6 InterlinkingCompleteness (template:109-132) -------------------
-    flag_fams.append(("InterlinkingCompleteness", _null, F.col("s"), _null,
-                      _ent & ~F.col("has_ilp")))
-    add("InterlinkingCompleteness", None, "entities")
 
     # ---- C7 SchemaCompletenessClassUsage (template:134-154) ---------------
     # Per vocab class: >=1 instance that is not the NamedIndividual IRI.
     # ONE job for all classes: classes-with-real-instances, anti-joined.
-    if classes:
-        cls_df = spark.createDataFrame([(c.term,) for c in classes], ["cls"])
+    if terms.classes:
+        cls_df = spark.createDataFrame([(c,) for c in terms.classes], ["cls"])
         # qualifying instance = one NOT typed owl:NamedIndividual (the
         # NotNamedIndividualShape is a property shape on rdf:type —
         # template:136-140)
@@ -285,154 +497,80 @@ def compile_data_constraints(
         # hint the BUILD (right) side: a left-anti join can only broadcast
         # its right input — with_instances is #distinct-classes small
         missing = cls_df.join(F.broadcast(with_instances), "cls", "left_anti")
-        parts.append(_v(missing, "SchemaCompletenessClassUsage",
-                        F.col("cls"), F.col("cls")))
-        part_metrics.append(frozenset({"SchemaCompletenessClassUsage"}))
-        for c in classes:
-            add("SchemaCompletenessClassUsage", c.term, "binary")
-
-    # ---- C8/C9 URI length / query params (template:156-202) ---------------
-    # sh:maxLength also violates for blank-node focus nodes (SHACL spec:
-    # maxLength fails for blank nodes; confirmed in the pizza golden).
-    flag_fams.append(("URIsLengthEntities", _null, F.col("s"), _null,
-                      _ent & ((F.length("s") > cfg.uris_max_length)
-                              | F.col("s").startswith("_:"))))
-    add("URIsLengthEntities", None, "entities")
-    flag_fams.append(("URIsParametersEntities", _null, F.col("s"), _null,
-                      _ent & F.col("s").rlike(r"\?.+=.*")))
-    add("URIsParametersEntities", None, "entities")
-
-    # ---- C10 ProlixFeatures (template:204-234) -----------------------------
-    flag_fams.append(("ProlixFeatures", _null, F.col("s"), _null,
-                      _ent & F.col("is_prolix")))
-    add("ProlixFeatures", None, "entities")
-
-    # ---- C11/C12 DifferentLanguages* (template:236-284, gated) ------------
-    if cfg.check_languages:
-        for metric, prop, flag in (
-            ("DifferentLanguagesLabelsEntities", cfg.labeling_property, "lbl_nolang"),
-            ("DifferentLanguagesDescriptionsEntities", cfg.description_property,
-             "dsc_nolang"),
-        ):
-            # subjects with >=1 untagged value of the property, minus the
-            # exemption set (the target here is NOT restricted to entities)
-            flag_fams.append((metric, F.lit(prop), F.col("s"), _null,
-                              ~F.col("is_exempt") & F.col(flag)))
-            add(metric, prop, "subjects_per_property", prop)
-
-    # ---- C13/C15 SelfDescriptiveFormat + BlankNodesUsage (286-340) ---------
-    # Identical filter, two metrics: same fused scan, two entries.
-    _bn = _ent & F.col("s").startswith("_:")
-    flag_fams.append(("SelfDescriptiveFormat", _null, F.col("s"), _null, _bn))
-    flag_fams.append(("BlankNodesUsageEntities", _null, F.col("s"), _null, _bn))
-    add("SelfDescriptiveFormat", None, "entities")
-    add("BlankNodesUsageEntities", None, "entities")
+        branch(_v(missing, "SchemaCompletenessClassUsage",
+                  F.col("cls"), F.col("cls")), "SchemaCompletenessClassUsage")
 
     # ---- C14 SelfDescriptiveFormatProperties (310-316): per used property --
     # targetObjectsOf <prop>: object must be IRI.
     row_fams.append(("SelfDescriptiveFormatProperties", p, o, _null,
                      F.col("o_kind") != "iri"))
-    for prop in sorted(used_props):
-        add("SelfDescriptiveFormatProperties", prop, "binary")
 
     # ---- C16 EntitiesDisjointClasses (342-350): directed pairs ------------
-    dpairs = [
-        (a, b) for (a, b) in
-        {(a, b) for (a, b) in disjoint_pairs} | {(b, a) for (a, b) in disjoint_pairs}
-        if a in used_classes
-    ]
-    if dpairs:
-        pair_df = spark.createDataFrame(dpairs, ["class_a", "class_b"])
+    if terms.dpairs:
+        pair_df = spark.createDataFrame(terms.dpairs, ["class_a", "class_b"])
         # sh:targetClass / sh:class follow rdfs:subClassOf → closure typing
         ta = typing_ext.withColumnsRenamed({"o": "class_a"})
         tb = typing_ext.withColumnsRenamed({"o": "class_b"})
         both = ta.join(tb, "s").join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
-        parts.append(_v(both, "EntitiesDisjointClasses",
-                        F.concat_ws("|", "class_a", "class_b"), F.col("s")))
-        part_metrics.append(frozenset({"EntitiesDisjointClasses"}))
-        for a, b in sorted(dpairs):
-            add("EntitiesDisjointClasses", f"{a}|{b}", "entities_per_class", a)
+        branch(_v(both, "EntitiesDisjointClasses",
+                  F.concat_ws("|", "class_a", "class_b"), F.col("s")),
+               "EntitiesDisjointClasses")
 
     # ---- C17 MisplacedProperties (352-361): prop IRI used as a class ------
-    if props:
-        prop_df = spark.createDataFrame([(t.term,) for t in props], ["term"])
+    if terms.props:
+        prop_df = spark.createDataFrame([(t,) for t in terms.props], ["term"])
         misplaced_p = (
             typing.select(F.col("o").alias("term")).distinct()
             .join(F.broadcast(prop_df), "term", "semi")
         )
-        parts.append(_v(misplaced_p, "MisplacedProperties", F.col("term"), F.col("term")))
-        part_metrics.append(frozenset({"MisplacedProperties"}))
-        for t in props:
-            add("MisplacedProperties", t.term, "binary")
+        branch(_v(misplaced_p, "MisplacedProperties", F.col("term"), F.col("term")),
+               "MisplacedProperties")
 
     # ---- C18 MisplacedClasses (363-386): class IRI used as predicate ------
-    if classes:
+    if terms.classes:
         row_fams.append(("MisplacedClasses", p, s, _null,
-                         p.isin([c.term for c in classes])))
-        for c in classes:
-            add("MisplacedClasses", c.term, "binary")
+                         p.isin(terms.classes)))
 
     # ---- C19/C20 Misuse of object/datatype properties (388-408) -----------
-    used_obj = sorted(set(obj_props) & used_props)
-    if used_obj:
+    if terms.used_obj:
         row_fams.append(("MisuseOwlObjectProperties", p, s, o,
-                         p.isin(used_obj) & (F.col("o_kind") == "literal")))
-        for prop in used_obj:
-            add("MisuseOwlObjectProperties", prop, "subjects_per_property", prop)
-    used_dt = sorted(set(dt_props) & used_props)
-    if used_dt:
+                         p.isin(terms.used_obj) & (F.col("o_kind") == "literal")))
+    if terms.used_dt:
         row_fams.append(("MisuseOwlDatatypeProperties", p, s, o,
-                         p.isin(used_dt) & (F.col("o_kind") != "literal")))
-        for prop in used_dt:
-            add("MisuseOwlDatatypeProperties", prop, "subjects_per_property", prop)
+                         p.isin(terms.used_dt) & (F.col("o_kind") != "literal")))
 
     # ---- C21 DeprecatedClasses (410-435): single binary shape -------------
-    if depr_classes:
+    if terms.depr_classes:
         row_fams.append(("DeprecatedClasses", _null, s, o,
-                         (p == cfg.type_property) & o.isin(depr_classes)))
-        add("DeprecatedClasses", None, "binary")
+                         (p == cfg.type_property) & o.isin(terms.depr_classes)))
 
     # ---- C22 DeprecatedProperties (437-460): per deprecated prop ----------
-    if depr_props:
+    if terms.depr_props:
         row_fams.append(("DeprecatedProperties", p, s, _null,
-                         p.isin(depr_props)))
-        for prop in sorted(depr_props):
-            add("DeprecatedProperties", prop, "entities")  # const.py:76-86
+                         p.isin(terms.depr_props)))
 
     # ---- C23 InverseFunctionalPropertyUniqueness (462-471) ----------------
-    # deprecated terms are excluded from IFP/functional checks — reference
-    # parity: utils.py:313-318 skips deprecated when harvesting both sets
-    ifp = sorted({t.term for t in props
-                  if t.inverse_functional and not t.deprecated} & used_props)
-    if ifp:
+    if terms.ifp:
         shared = (
-            T.filter(p.isin(ifp))
+            T.filter(p.isin(terms.ifp))
             .groupBy("p", "o").agg(F.countDistinct("s").alias("n"))
             .filter(F.col("n") > 1)
         )
-        parts.append(_v(shared, "InverseFunctionalPropertyUniqueness", p, o))
-        part_metrics.append(frozenset({"InverseFunctionalPropertyUniqueness"}))
-        for prop in ifp:
-            add("InverseFunctionalPropertyUniqueness", prop, "binary")
+        branch(_v(shared, "InverseFunctionalPropertyUniqueness", p, o),
+               "InverseFunctionalPropertyUniqueness")
 
     # ---- C24 FunctionalProperty (473-482): maxCount 1 per subject ---------
-    fp = sorted({t.term for t in props
-                 if t.functional and not t.deprecated} & used_props)
-    if fp:
+    if terms.fp:
         multi = (
-            T.filter(p.isin(fp))
+            T.filter(p.isin(terms.fp))
             .groupBy("p", "s").agg(F.count("*").alias("n"))
             .filter(F.col("n") > 1)
         )
-        parts.append(_v(multi, "FunctionalProperty", p, s))
-        part_metrics.append(frozenset({"FunctionalProperty"}))
-        for prop in fp:
-            add("FunctionalProperty", prop, "subjects_per_property", prop)
+        branch(_v(multi, "FunctionalProperty", p, s), "FunctionalProperty")
 
     # ---- C25 AsymmetricProperty (484-493): pair-swap semi self-join -------
-    asym = sorted({t.term for t in props if t.asymmetric} & used_props)
-    if asym:
-        R = T.filter(p.isin(asym)).select("p", "s", "o")
+    if terms.asym:
+        R = T.filter(p.isin(terms.asym)).select("p", "s", "o")
         Rswap = R.select(F.col("p").alias("p2"), F.col("o").alias("s2"),
                          F.col("s").alias("o2"))
         mutual = R.join(
@@ -440,73 +578,31 @@ def compile_data_constraints(
             (R.p == Rswap.p2) & (R.s == Rswap.s2) & (R.o == Rswap.o2),
             "semi",
         )
-        parts.append(_v(mutual, "AsymmetricProperty", p, s, o))
-        part_metrics.append(frozenset({"AsymmetricProperty"}))
-        for prop in asym:
-            add("AsymmetricProperty", prop, "subjects_per_property", prop)
+        branch(_v(mutual, "AsymmetricProperty", p, s, o), "AsymmetricProperty")
 
     # ---- C31 IrreflexiveProperty (573-579): s==o loops ---------------------
-    irr = sorted({t.term for t in props if t.irreflexive} & used_props)
-    if irr:
+    if terms.irr:
         row_fams.append(("IrreflexiveProperty", p, s, _null,
-                         p.isin(irr) & (s == o)))
-        for prop in irr:
-            add("IrreflexiveProperty", prop, "subjects_per_property", prop)
+                         p.isin(terms.irr) & (s == o)))
 
     # ---- C26/C27 CorrectDomain (495-509) -----------------------------------
-    dom_terms = [t for t in props if t.domain and t.term in used_props and not t.deprecated]
-    dom_class = [t for t in dom_terms if t.domain != "http://www.w3.org/2002/07/owl#Thing"]
+    dom_class = [t for t in terms.dom_terms if t.domain != OWL_THING]
     if dom_class:
         dom_df = spark.createDataFrame(
             [(t.term, t.domain) for t in dom_class], ["p", "domain"])
         subj_prop = T.join(F.broadcast(dom_df), "p").select("p", "s", "domain").distinct()
         typed_as = typing_ext.withColumnsRenamed({"o": "domain"})
         bad_dom = subj_prop.join(typed_as, ["s", "domain"], "left_anti")
-        parts.append(_v(bad_dom, "CorrectDomain", p, s))
-        part_metrics.append(frozenset({"CorrectDomain"}))
-    for t in dom_terms:
-        # owl:Thing domain → nodeKind BlankNodeOrIRI, structurally satisfied
-        # for RDF subjects (C27) — shape still instantiated, score 1.
-        add("CorrectDomain", t.term, "subjects_per_property", t.term)
+        branch(_v(bad_dom, "CorrectDomain", p, s), "CorrectDomain")
 
     # ---- C28/C29/C30/C32 CorrectRange + MalformedLiteral (511-590) --------
-    # Instantiation rules differ BY TERM KIND (shacl_shape_builder.py):
-    #   * datatype_property (builder:340-362): ALWAYS sh:datatype(range) +
-    #     MalformedLiteral(range) — including range rdfs:Literal (which no
-    #     literal satisfies, so every value violates);
-    #   * object_property (builder:330-336): owl:Thing → nodeKind
-    #     BlankNodeOrIRI; rdfs:Resource → both (vacuous); else sh:class;
-    #   * rdf_property (builder:433-455): literal-kind range != rdfs:Literal
-    #     → sh:datatype + MalformedLiteral; == rdfs:Literal → nodeKind
-    #     Literal; class-kind → Thing/Resource/sh:class as above.
-    OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
-    rng_terms = [t for t in props if t.range and t.term in used_props and not t.deprecated]
-    rng_dt, rng_cls, rng_nk_literal, rng_nk_bi = [], [], [], []
-    for t in rng_terms:
-        if t.term_kind == "datatype_property":
-            rng_dt.append(t)
-        elif t.term_kind == "object_property":
-            if t.range == OWL_THING:
-                rng_nk_bi.append(t)
-            elif t.range != f"{RDFS}Resource":
-                rng_cls.append(t)
-        else:  # rdf_property
-            if t.range_kind == "literal":
-                (rng_nk_literal if t.range == f"{RDFS}Literal" else rng_dt).append(t)
-            else:
-                # Reference parity (shacl_shape_builder.py:450-455): the
-                # rdf_property branch compares info['range'] (a dict) to the
-                # owl:Thing / rdfs:Resource strings — always false — so it
-                # ALWAYS emits sh:class for class-kind ranges, including
-                # owl:Thing and rdfs:Resource. nodeKind routing applies to
-                # object_property terms only (builder:330-336).
-                rng_cls.append(t)
-    if rng_dt:
+    # routed by term kind in _select_terms
+    if terms.rng_dt:
         # per-row range lookup as a chained CASE instead of a broadcast
         # join — the dt-prop list is TBox-small, and CASE keeps the branch
         # inside the fused single scan of T
         rng_expr = F.lit(None).cast("string")
-        for t in rng_dt:
+        for t in terms.rng_dt:
             rng_expr = F.when(p == t.term, F.lit(t.range)).otherwise(rng_expr)
         # plain literals carry xsd:string (RDF 1.1); lang-tagged carry
         # rdf:langString. All in-repo parsers set o_dtype for lang-tagged
@@ -522,7 +618,7 @@ def compile_data_constraints(
             rng_expr == RDF_LANGSTRING,
             (F.col("o_kind") != "literal") | F.col("o_lang").isNull(),
         )
-        bad_dt_cond = p.isin([t.term for t in rng_dt]) & F.coalesce(
+        bad_dt_cond = p.isin([t.term for t in terms.rng_dt]) & F.coalesce(
             is_langstring,
             (F.col("o_kind") != "literal")
             | (eff_dtype != rng_expr)
@@ -531,51 +627,31 @@ def compile_data_constraints(
         row_fams.append(("CorrectRange", p, s, o, bad_dt_cond))
         # Same physical violations, second metric (builder:361-362,440)
         row_fams.append(("MalformedLiteral", p, s, o, bad_dt_cond))
-    if rng_nk_literal:
-        nk_terms = sorted(t.term for t in rng_nk_literal)
+    if terms.rng_nk_literal:
+        nk_terms = sorted(t.term for t in terms.rng_nk_literal)
         row_fams.append(("CorrectRange", p, s, o,
                          p.isin(nk_terms) & (F.col("o_kind") != "literal")))
-    if rng_nk_bi:
-        bi_terms = sorted(t.term for t in rng_nk_bi)
+    if terms.rng_nk_bi:
+        bi_terms = sorted(t.term for t in terms.rng_nk_bi)
         row_fams.append(("CorrectRange", p, s, o,
                          p.isin(bi_terms) & (F.col("o_kind") == "literal")))
-    if rng_cls:
+    if terms.rng_cls:
         cls_rng_df = spark.createDataFrame(
-            [(t.term, t.range) for t in rng_cls], ["p", "range"])
+            [(t.term, t.range) for t in terms.rng_cls], ["p", "range"])
         vals_c = T.join(F.broadcast(cls_rng_df), "p").select("p", "s", "o", "range")
         typed_obj = typing_ext.select(F.col("s").alias("o"), F.col("o").alias("range"))
         bad_rng_cls = vals_c.join(typed_obj, ["o", "range"], "left_anti")
-        parts.append(_v(bad_rng_cls, "CorrectRange", p, s, o))
-        part_metrics.append(frozenset({"CorrectRange"}))
-    for t in rng_terms:
-        add("CorrectRange", t.term, "subjects_per_property", t.term)
-    for t in rng_dt:
-        add("MalformedLiteral", t.term, "subjects_per_property", t.term)
+        branch(_v(bad_rng_cls, "CorrectRange", p, s, o), "CorrectRange")
 
     # ---- emit the fused single-scan parts ---------------------------------
-    def _fused(base: DataFrame, fams: list[tuple]) -> DataFrame:
-        entries = [
-            F.when(cond, F.struct(
-                F.lit(metric).alias("metric"),
-                item.cast("string").alias("item"),
-                focus.cast("string").alias("focus"),
-                value.cast("string").alias("value"),
-            ))
-            for metric, item, focus, value, cond in fams
-        ]
-        return (base.select(F.explode(F.array_compact(F.array(*entries)))
-                            .alias("_f"))
-                .select("_f.metric", "_f.item", "_f.focus", "_f.value"))
+    flag_fams = flag_families(cfg)
+    parts.append(fused_scan(subj, flag_fams))
+    part_metrics.append(frozenset(f[0] for f in flag_fams))
+    parts.append(fused_scan(T, row_fams))
+    part_metrics.append(frozenset(f[0] for f in row_fams))
 
-    if flag_fams:
-        parts.append(_fused(subj, flag_fams))
-        part_metrics.append(frozenset(f[0] for f in flag_fams))
-    if row_fams:
-        parts.append(_fused(T, row_fams))
-        part_metrics.append(frozenset(f[0] for f in row_fams))
-
-    violations = reduce(DataFrame.unionByName, parts) if parts else (
-        spark.createDataFrame([], VIOLATIONS_SCHEMA)
-    )
-    return ConstraintPlan(violations=violations, shapes=shapes, cached=[subj],
-                          parts=parts, part_metrics=part_metrics)
+    return ConstraintPlan(
+        violations=reduce(DataFrame.unionByName, parts),
+        shapes=data_shapes(vocab_terms, disjoint_pairs, cfg,
+                           used_props, used_classes),
+        cached=[subj], parts=parts, part_metrics=part_metrics)

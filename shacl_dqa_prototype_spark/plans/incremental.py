@@ -9,8 +9,9 @@ together cover all families — no family re-scans historical triples:
    each merge is ONE co-partitioned shuffle of (delta-aggregate ∪ touched
    state buckets), never a scan of historical triples:
 
-     subj_flags  (s, is_entity, is_exempt, has_label, has_ilp, is_prolix,
-                  lbl_nolang, dsc_nolang)        merge: groupBy(s) bool-max
+     subj_flags  (s, is_entity, is_exempt, has_label, has_ilp, has_desc,
+                  is_prolix, lbl_nolang, dsc_nolang)
+                 [constraints.subject_flags]     merge: groupBy(s) bool-max
      ps_counts   (p, s, n)                       merge: groupBy(p,s) sum
      cls_pairs   (cls, s)                        merge: union-distinct
      po_pairs    (p, o, s)  [IFP props only]     merge: union-distinct
@@ -36,7 +37,8 @@ tests/test_incremental.py):
   * profile: num_triples / num_properties / triples_per_property (sums
     over ps_counts), subjects_per_property (row counts), num_entities /
     label/ilp coverage (subj_flags), entities_per_class (cls_pairs);
-  * entity-scoped families C2-C6/C8-C13/C15 (filters on subj_flags);
+  * entity-scoped families C2-C6/C8-C13/C15 (the batch compiler's
+    flag_families, one fused scan of subj_flags);
   * C24 FunctionalProperty (ps_counts n > 1 for functional props);
   * C23 IFP uniqueness (po_pairs grouped, >1 distinct subject);
   * the RETRACTABLE anti-join families — a later type-triple can retract
@@ -48,8 +50,11 @@ tests/test_incremental.py):
       C16 EntitiesDisjointClasses cls_pairs self-join on s
       C7  SchemaCompletenessClassUsage  vocab classes anti-join cls_pairs
     (dom_pairs is bucketed by s and spo_pairs by o to co-partition with
-    cls_pairs(s) for the anti-joins; usage-pruning sets are read from
-    ps_counts/cls_pairs — O(#terms) collects, no triple scan.)
+    cls_pairs(s) for the anti-joins.)
+
+score_from_state re-scores the report from this state: the O(state) work
+(violation counts, one read per state dimension) runs as concurrent Spark
+jobs, everything O(#shapes) on the driver (scoring.score_rows).
 
 State emits violations per DISTINCT (item, focus[, value]) — duplicate
 raw triples don't produce duplicate violation rows the way a batch scan
@@ -77,6 +82,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,25 +95,28 @@ from pyspark.sql.types import (
 )
 
 from shacl_dqa_prototype_spark.plans.constraints import (
+    OWL_THING,
+    SUBJECT_FLAGS,
     DQAConfig,
     VocabTerm,
     compile_data_constraints,
+    data_shapes,
+    flag_families,
+    fused_scan,
+    subject_flags,
 )
-from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
+from shacl_dqa_prototype_spark.plans.scoring import (
+    collect_concurrently,
+    score_rows,
+    violation_counts,
+)
+from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA, VIOLATIONS_SCHEMA
 from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
-from shacl_dqa_prototype_spark.functions.terms import (
-    EXEMPT_TYPES,
-    OWL_NAMED_INDIVIDUAL,
-    PROLIX_CLASSES,
-    RDFS,
-)
-
-_FLAGS = ["is_entity", "is_exempt", "has_label", "has_ilp", "has_desc",
-          "is_prolix", "lbl_nolang", "dsc_nolang"]
+from shacl_dqa_prototype_spark.functions.terms import OWL_NAMED_INDIVIDUAL, RDFS
 
 SUBJ_FLAGS_SCHEMA = StructType(
     [StructField("s", StringType(), False)]
-    + [StructField(f, BooleanType(), True) for f in _FLAGS]
+    + [StructField(f, BooleanType(), True) for f in SUBJECT_FLAGS]
 )
 PS_COUNTS_SCHEMA = StructType([
     StructField("p", StringType(), False),
@@ -149,8 +158,6 @@ MONOTONE_METRICS = (
     "MalformedLiteral",
 )
 
-_OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
-
 
 def _dom_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
     """prop → class domain, for the props whose CorrectDomain branch is the
@@ -158,7 +165,7 @@ def _dom_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
     are the vacuous nodeKind shape — no violations, no state)."""
     return {t.term: t.domain for t in vocab_terms
             if t.term_kind != "class" and t.domain and not t.deprecated
-            and t.domain != _OWL_THING}
+            and t.domain != OWL_THING}
 
 
 def _rng_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
@@ -171,7 +178,7 @@ def _rng_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
         if t.term_kind == "class" or not t.range or t.deprecated:
             continue
         if (t.term_kind == "object_property"
-                and t.range not in (_OWL_THING, f"{RDFS}Resource")):
+                and t.range not in (OWL_THING, f"{RDFS}Resource")):
             out[t.term] = t.range
         elif t.term_kind == "rdf_property" and t.range_kind != "literal":
             out[t.term] = t.range
@@ -259,20 +266,6 @@ class IncrementalDQAState:
         return deleted
 
 
-def _delta_subj_flags(delta: DataFrame, cfg: DQAConfig) -> DataFrame:
-    p, o = F.col("p"), F.col("o")
-    return delta.groupBy("s").agg(
-        F.max(p == cfg.type_property).alias("is_entity"),
-        F.max((p == cfg.type_property) & o.isin(EXEMPT_TYPES)).alias("is_exempt"),
-        F.max(p == cfg.labeling_property).alias("has_label"),
-        F.max(p == cfg.interlinking_property).alias("has_ilp"),
-        F.max(p == cfg.description_property).alias("has_desc"),
-        F.max((p == cfg.type_property) & o.isin(PROLIX_CLASSES)).alias("is_prolix"),
-        F.max((p == cfg.labeling_property) & F.col("o_lang").isNull()).alias("lbl_nolang"),
-        F.max((p == cfg.description_property) & F.col("o_lang").isNull()).alias("dsc_nolang"),
-    )
-
-
 def delta_monotone_violations(
     delta: DataFrame, vocab_terms: list[VocabTerm], cfg: DQAConfig,
 ) -> DataFrame:
@@ -296,7 +289,7 @@ def delta_monotone_violations(
     for t in vocab_terms:
         nonmono_range = t.range is not None and (
             (t.term_kind == "object_property"
-             and t.range not in (_OWL_THING, f"{RDFS}Resource"))
+             and t.range not in (OWL_THING, f"{RDFS}Resource"))
             or (t.term_kind == "rdf_property" and t.range_kind != "literal")
         )
         safe.append(replace(t, range=None, range_kind=None)
@@ -376,13 +369,13 @@ def apply_delta(
         # and downstream per-subject work share the layout
         if _already(state.subj_flags):
             return
-        d_flags = _delta_subj_flags(delta, cfg)
+        d_flags = subject_flags(delta, cfg)
         bs = _changed_buckets(d_flags, "s", n_buckets)
         merged_flags = (
             state.subj_flags.read_buckets(bs)
             .unionByName(d_flags)
             .groupBy("s")
-            .agg(*[F.max(f).alias(f) for f in _FLAGS])
+            .agg(*[F.max(f).alias(f) for f in SUBJECT_FLAGS])
         )
         state.subj_flags.commit_merge_buckets(
             merged_flags, bs, bucket_col="s", n_buckets=n_buckets,
@@ -514,33 +507,42 @@ def apply_delta(
 # derivations from state (all O(state), no triple scans)
 # ---------------------------------------------------------------------------
 
+def _state_dims(state: IncrementalDQAState
+                ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One read per state dimension, shared by every derivation:
+    (p, num_triples, num_subjects) per property from ps_counts,
+    (cls, num_instances) per class from cls_pairs, and the one-row entity
+    counts from subj_flags. The property and class keys are also the
+    usage-pruning sets."""
+    per_p = state.ps_counts.read().groupBy("p").agg(
+        F.sum("n").cast("long").alias("num_triples"),
+        F.count("*").alias("num_subjects"))
+    per_cls = state.cls_pairs.read().groupBy("cls").agg(
+        F.countDistinct("s").alias("num_instances"))
+    # B8 counts cover ALL subjects carrying the property (profile_graph
+    # semantics), not just typed entities
+    entities = state.subj_flags.read().agg(
+        F.sum(F.col("is_entity").cast("long")).alias("num_entities"),
+        F.sum(F.col("has_label").cast("long")).alias("num_entities_label"),
+        F.sum(F.col("has_ilp").cast("long")).alias("num_entities_interlinking"),
+        F.sum(F.col("has_desc").cast("long")).alias("num_entities_description"),
+    )
+    return per_p, per_cls, entities
+
+
 def profile_from_state(state: IncrementalDQAState) -> dict[str, DataFrame]:
     """The profile aggregates (B1-B8) re-expressed over the state tables."""
-    ps = state.ps_counts.read()
-    flags = state.subj_flags.read()
-    scalars = ps.agg(
-        F.sum("n").cast("long").alias("num_triples"),
-        F.countDistinct("p").alias("num_properties"),
-    ).crossJoin(
-        # B8 counts cover ALL subjects carrying the property (profile_graph
-        # semantics), not just typed entities
-        flags.agg(
-            F.sum(F.col("is_entity").cast("long")).alias("num_entities"),
-            F.sum(F.col("has_label").cast("long")).alias("num_entities_label"),
-            F.sum(F.col("has_ilp").cast("long")).alias("num_entities_interlinking"),
-            F.sum(F.col("has_desc").cast("long")).alias("num_entities_description"),
-        )
-    ).crossJoin(
-        state.cls_pairs.read().agg(F.countDistinct("cls").alias("num_classes"))
-    )
+    per_p, per_cls, entities = _state_dims(state)
+    scalars = per_p.agg(
+        F.sum("num_triples").cast("long").alias("num_triples"),
+        F.count("*").alias("num_properties"),
+    ).crossJoin(entities).crossJoin(
+        per_cls.agg(F.count("*").alias("num_classes")))
     return {
         "scalars": scalars,
-        "triples_per_property": ps.groupBy("p").agg(
-            F.sum("n").cast("long").alias("num_triples")),
-        "subjects_per_property": ps.groupBy("p").agg(
-            F.count("*").alias("num_subjects")),
-        "entities_per_class": state.cls_pairs.read().groupBy("cls").agg(
-            F.countDistinct("s").alias("num_instances")),
+        "triples_per_property": per_p.select("p", "num_triples"),
+        "subjects_per_property": per_p.select("p", "num_subjects"),
+        "entities_per_class": per_cls,
     }
 
 
@@ -555,51 +557,31 @@ def violations_from_state(
     log, same (metric, item, focus, value) shape as
     compile_data_constraints emits (rows per distinct item/focus — see
     module docstring). ``disjoint_pairs``/``subclass_pairs`` mirror the
-    batch compiler's arguments."""
-    flags = state.subj_flags.read()
-    EnX = flags.filter(F.col("is_entity") & ~F.col("is_exempt"))
-    parts = []
+    batch compiler's arguments.
 
-    def _v(df, metric, item, focus_col):
+    Builds a plan only; no job runs until the result is evaluated. The
+    batch compiler's usage pruning needs no collect here: the pair states
+    hold pairs of used properties only, so pruning the class-domain,
+    class-range and asymmetric branches by usage changes nothing, and the
+    disjoint pairs are pruned by a semi-join with the typed classes."""
+    spark = state.subj_flags.spark
+    # entity-scoped families C2-C6/C8-C13/C15: the batch compiler's flag
+    # families, in one fused scan of subj_flags
+    parts = [fused_scan(state.subj_flags.read(), flag_families(cfg))]
+
+    def _v(df, metric, item_col, focus_col, value_col=None):
         parts.append(df.select(
             F.lit(metric).alias("metric"),
-            (F.lit(item) if isinstance(item, str) else
-             (item if item is not None else F.lit(None).cast("string"))).alias("item"),
+            F.col(item_col).alias("item"),
             F.col(focus_col).alias("focus"),
-            F.lit(None).cast("string").alias("value")))
-
-    _v(EnX.filter(F.col("s").contains("#") | F.col("s").startswith("_:")),
-       "UsageHashURIsEntities", None, "s")
-    _v(EnX.filter(~F.col("has_label")), "LabelForEntities", None, "s")
-    _v(EnX.filter(~F.col("has_ilp")), "InterlinkingCompleteness", None, "s")
-    _v(EnX.filter((F.length("s") > cfg.uris_max_length)
-                  | F.col("s").startswith("_:")), "URIsLengthEntities", None, "s")
-    _v(EnX.filter(F.col("s").rlike(r"\?.+=.*")), "URIsParametersEntities", None, "s")
-    _v(EnX.filter(F.col("is_prolix")), "ProlixFeatures", None, "s")
-    _v(EnX.filter(F.col("s").startswith("_:")), "SelfDescriptiveFormat", None, "s")
-    _v(EnX.filter(F.col("s").startswith("_:")), "BlankNodesUsageEntities", None, "s")
-    # C4/C5 are entity-scoped URI filters — derivable from subj_flags too
-    if cfg.uri_regex_pattern:
-        _v(EnX.filter(F.col("s").startswith("_:")
-                      | ~F.col("s").rlike("^" + cfg.uri_regex_pattern)),
-           "URIRegexComplianceEntities", None, "s")
-    if cfg.uri_space:
-        _v(EnX.filter(~F.col("s").startswith(cfg.uri_space)),
-           "URISpaceComplianceEntities", None, "s")
-    if cfg.check_languages:
-        _v(flags.filter(~F.col("is_exempt") & F.col("lbl_nolang")),
-           "DifferentLanguagesLabelsEntities", cfg.labeling_property, "s")
-        _v(flags.filter(~F.col("is_exempt") & F.col("dsc_nolang")),
-           "DifferentLanguagesDescriptionsEntities", cfg.description_property, "s")
+            (F.col(value_col) if value_col
+             else F.lit(None).cast("string")).alias("value")))
 
     fp = sorted(t.term for t in vocab_terms if t.functional and not t.deprecated)
     if fp:
         multi = state.ps_counts.read().filter(
             F.col("p").isin(fp) & (F.col("n") > 1))
-        parts.append(multi.select(
-            F.lit("FunctionalProperty").alias("metric"),
-            F.col("p").alias("item"), F.col("s").alias("focus"),
-            F.lit(None).cast("string").alias("value")))
+        _v(multi, "FunctionalProperty", "p", "s")
 
     ifp = sorted(t.term for t in vocab_terms
                  if t.inverse_functional and not t.deprecated)
@@ -609,19 +591,10 @@ def violations_from_state(
             .groupBy("p", "o").agg(F.countDistinct("s").alias("ns"))
             .filter(F.col("ns") > 1)
         )
-        parts.append(shared.select(
-            F.lit("InverseFunctionalPropertyUniqueness").alias("metric"),
-            F.col("p").alias("item"), F.col("o").alias("focus"),
-            F.lit(None).cast("string").alias("value")))
+        _v(shared, "InverseFunctionalPropertyUniqueness", "p", "o")
 
     # ---- retractable anti-join families: state ⋈ state, no triple scan ----
-    spark = flags.sparkSession
     cls = state.cls_pairs.read()
-    # usage-pruning parity with the batch compiler, read from state
-    # (O(#properties)/O(#classes) collects)
-    used_props = {r["p"] for r in
-                  state.ps_counts.read().select("p").distinct().collect()}
-    used_classes = {r["cls"] for r in cls.select("cls").distinct().collect()}
     # typing extended through the rdfs:subClassOf closure (broadcast dim)
     typed = cls.select("s", F.col("cls").alias("o"))
     if subclass_pairs:
@@ -631,39 +604,29 @@ def violations_from_state(
             .select("s", F.col("anc").alias("o"))
         ).distinct()
 
-    def _v2(df, metric, item_col, focus_col, value_col=None):
-        parts.append(df.select(
-            F.lit(metric).alias("metric"),
-            F.col(item_col).alias("item"),
-            F.col(focus_col).alias("focus"),
-            (F.col(value_col) if value_col
-             else F.lit(None).cast("string")).alias("value")))
-
     # C26 CorrectDomain(class): dom_pairs without a matching (s, domain)
     # typing row — both sides bucketed by s
-    dom = {pp: d for pp, d in _dom_class_props(vocab_terms).items()
-           if pp in used_props}
+    dom = _dom_class_props(vocab_terms)
     if dom:
         dom_df = spark.createDataFrame(list(dom.items()), ["p", "domain"])
         subj_prop = state.dom_pairs.read().join(F.broadcast(dom_df), "p")
         typed_as = typed.withColumnsRenamed({"o": "domain"})
-        _v2(subj_prop.join(typed_as, ["s", "domain"], "left_anti"),
-            "CorrectDomain", "p", "s")
+        _v(subj_prop.join(typed_as, ["s", "domain"], "left_anti"),
+           "CorrectDomain", "p", "s")
 
     # C29 CorrectRange(class): spo_pairs whose object lacks the range
     # typing — spo_pairs bucketed by o to co-partition with cls_pairs(s)
-    rng = {pp: r for pp, r in _rng_class_props(vocab_terms).items()
-           if pp in used_props}
+    rng = _rng_class_props(vocab_terms)
     if rng:
         rng_df = spark.createDataFrame(list(rng.items()), ["p", "range"])
         vals_c = state.spo_pairs.read().join(F.broadcast(rng_df), "p")
         typed_obj = typed.select(F.col("s").alias("o"),
                                  F.col("o").alias("range"))
-        _v2(vals_c.join(typed_obj, ["o", "range"], "left_anti"),
-            "CorrectRange", "p", "s", "o")
+        _v(vals_c.join(typed_obj, ["o", "range"], "left_anti"),
+           "CorrectRange", "p", "s", "o")
 
     # C25 AsymmetricProperty: pair-swap semi self-join within state
-    asym = sorted(set(_asym_props(vocab_terms)) & used_props)
+    asym = sorted(_asym_props(vocab_terms))
     if asym:
         R = state.spo_pairs.read().filter(F.col("p").isin(asym))
         Rswap = R.select(F.col("p").alias("p2"), F.col("o").alias("s2"),
@@ -672,24 +635,22 @@ def violations_from_state(
             Rswap,
             (R.p == Rswap.p2) & (R.s == Rswap.s2) & (R.o == Rswap.o2),
             "semi")
-        _v2(mutual, "AsymmetricProperty", "p", "s", "o")
+        _v(mutual, "AsymmetricProperty", "p", "s", "o")
 
-    # C16 EntitiesDisjointClasses: directed pairs over the typing state
+    # C16 EntitiesDisjointClasses: directed pairs over the typing state,
+    # pruned (as the batch compiler) to pairs whose first class has a
+    # direct instance
     if disjoint_pairs:
-        dpairs = [
-            (a, b) for (a, b) in
-            ({(a, b) for (a, b) in disjoint_pairs}
-             | {(b, a) for (a, b) in disjoint_pairs})
-            if a in used_classes
-        ]
-        if dpairs:
-            pair_df = spark.createDataFrame(dpairs, ["class_a", "class_b"])
-            ta = typed.withColumnsRenamed({"o": "class_a"})
-            tb = typed.withColumnsRenamed({"o": "class_b"})
-            both = (ta.join(tb, "s")
-                    .join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
-                    .withColumn("pair", F.concat_ws("|", "class_a", "class_b")))
-            _v2(both, "EntitiesDisjointClasses", "pair", "s")
+        directed = sorted(set(disjoint_pairs)
+                          | {(b, a) for (a, b) in disjoint_pairs})
+        pair_df = spark.createDataFrame(directed, ["class_a", "class_b"]).join(
+            cls.select(F.col("cls").alias("class_a")), "class_a", "semi")
+        ta = typed.withColumnsRenamed({"o": "class_a"})
+        tb = typed.withColumnsRenamed({"o": "class_b"})
+        both = (ta.join(tb, "s")
+                .join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
+                .withColumn("pair", F.concat_ws("|", "class_a", "class_b")))
+        _v(both, "EntitiesDisjointClasses", "pair", "s")
 
     # C7 SchemaCompletenessClassUsage: vocab classes with no instance that
     # isn't typed owl:NamedIndividual
@@ -702,7 +663,7 @@ def violations_from_state(
         with_instances = (cls.join(ni, "s", "left_anti")
                           .select("cls").distinct())
         missing = cls_df.join(F.broadcast(with_instances), "cls", "left_anti")
-        _v2(missing, "SchemaCompletenessClassUsage", "cls", "cls")
+        _v(missing, "SchemaCompletenessClassUsage", "cls", "cls")
 
     # monotone families come straight off the append-only log. Per-triple
     # rows are naturally disjoint across deltas; MisplacedProperties emits
@@ -711,8 +672,6 @@ def violations_from_state(
     mono = state.mono_violations.read()
     parts.append(mono.filter(F.col("metric") != "MisplacedProperties"))
     parts.append(mono.filter(F.col("metric") == "MisplacedProperties").distinct())
-
-    from functools import reduce
 
     return reduce(DataFrame.unionByName, parts)
 
@@ -724,50 +683,30 @@ def score_from_state(
     disjoint_pairs: list[tuple[str, str]] | None = None,
     subclass_pairs: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """The FULL DQA report (per-shape scores + meta rollup) maintained from
-    incremental state: violations via violations_from_state, denominators
-    via profile_from_state, and the shape-spec list from the batch compiler
-    invoked over an EMPTY triple frame with state-derived usage sets — plan
-    construction is lazy, so no triple scan ever runs. This closes the
-    loop: appends fold into state (apply_delta / start_streaming_dqa) and
-    the scored report is re-derived from state alone, bit-equal to the
-    batch run_data_dqa (asserted in tests and by the shared oracle)."""
-    from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan
-    from shacl_dqa_prototype_spark.plans.profile import GraphProfile
-    from shacl_dqa_prototype_spark.plans.scoring import score_plan
-    from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
+    """The FULL DQA report (per-shape scores + meta rollup) re-derived from
+    incremental state alone — row-equal to the batch run_data_dqa report
+    over the same triples (asserted in tests and by the shared oracle).
+    This closes the loop: appends fold into state (apply_delta /
+    start_streaming_dqa) and the report is re-scored without a triple scan.
 
-    ps = state.ps_counts.read()
-    spark = ps.sparkSession
-    used_props = {r["p"] for r in ps.select("p").distinct().collect()}
-    used_classes = {r["cls"] for r in
-                    state.cls_pairs.read().select("cls").distinct().collect()}
-    shapes_plan = compile_data_constraints(
-        spark.createDataFrame([], TRIPLES_SCHEMA), vocab_terms,
-        disjoint_pairs or [], cfg,
-        used_props=used_props, used_classes=used_classes,
-        subclass_pairs=subclass_pairs,
-    )
-    shapes = shapes_plan.shapes
-    shapes_plan.unpersist()  # only the spec list is used — drop the
-    # eagerly-registered (never-materialized) cache entries right away
-
-    prof = profile_from_state(state)
-    row = prof["scalars"].first()
-    profile = GraphProfile(
-        num_triples=row["num_triples"] or 0,
-        num_classes=row["num_classes"] or 0,
-        num_entities=row["num_entities"] or 0,
-        num_properties=row["num_properties"] or 0,
-        num_entities_interlinking=row["num_entities_interlinking"] or 0,
-        num_entities_label=row["num_entities_label"] or 0,
-        num_entities_description=row["num_entities_description"] or 0,
-        triples_per_property=prof["triples_per_property"],
-        subjects_per_property=prof["subjects_per_property"],
-        entities_per_class=prof["entities_per_class"],
-    )
+    Spark runs only O(state) work, as four concurrent jobs: the
+    violation_counts of violations_from_state, and one read per state
+    dimension (_state_dims) — ps_counts per property gives the used
+    properties and subjects_per_property, cls_pairs per class the used
+    classes and entities_per_class, subj_flags the entity count.
+    Everything O(#shapes) runs on the driver: data_shapes instantiates the
+    shape list from the usage sets, score_rows scores it, and the report
+    comes back as one local relation. Nothing is cached."""
+    per_p, per_cls, entities = _state_dims(state)
     violations = violations_from_state(
         state, vocab_terms, cfg,
         disjoint_pairs=disjoint_pairs, subclass_pairs=subclass_pairs)
-    plan = ConstraintPlan(violations=violations, shapes=shapes)
-    return score_plan(spark, plan, profile, target="data")
+    counts, props, classes, (ent,) = collect_concurrently(
+        violation_counts(violations), per_p.select("p", "num_subjects"),
+        per_cls, entities.select("num_entities"))
+    spp, epc = dict(map(tuple, props)), dict(map(tuple, classes))
+    shapes = data_shapes(vocab_terms, disjoint_pairs or [], cfg,
+                         set(spp), set(epc))
+    rows = score_rows(shapes, counts, ent["num_entities"] or 0, spp, epc,
+                      target="data")
+    return state.subj_flags.spark.createDataFrame(rows, REPORT_SCHEMA)

@@ -9,20 +9,27 @@ const.py:33-104):
     (dq_assessment.py:577-586);
   * violations stringified '; '-joined (dq_assessment.py:566-568).
 
-Spark shape: ONE aggregation over the cached violations DF →
-countDistinct(focus) per (metric, item); join the shape-spec dim (so
-zero-violation shapes appear with score 1) and the broadcast denominator
-dims; meta rollup is a second tiny aggregate. The violations DF is the only
-large input — everything downstream is O(#shapes).
+Spark does only the O(violations) part: ONE aggregation of the violations
+DF to (metric, item) → distinct-focus count + sorted sample
+(violation_counts), collected. Everything after it is O(#shapes) and runs
+on the driver in plain Python (score_rows): the shape list supplies the
+zero-violation rows, the denominator dims are looked up in dicts, the
+measure rule and the meta rollup are applied row by row, and the report
+comes back as one local relation. No shape-spec join, denominator
+broadcast or rollup aggregate runs in Spark, and nothing is cached or
+checkpointed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan
+from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan, ShapeSpec
 from shacl_dqa_prototype_spark.plans.profile import GraphProfile
+from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA
 
 # metric → dimension (reference metrics_templates/*.json + const.py:148-341)
 DIMENSIONS: dict[str, str] = {
@@ -73,31 +80,24 @@ DIMENSIONS: dict[str, str] = {
 MAX_VIOLATION_SAMPLES = 100  # cap the '; '-joined list (CSV stays small)
 
 
-def score_plan(
-    spark: SparkSession,
-    plan: ConstraintPlan,
-    profile: GraphProfile,
-    target: str = "data",
-) -> DataFrame:
-    """Violations + shape specs + denominators → per-shape report rows +
-    meta-rollup rows (score_kind='meta')."""
-    shapes_df = spark.createDataFrame(
-        [(s.metric, s.item, s.denom, s.denom_key) for s in plan.shapes],
-        "metric string, item string, denom string, denom_key string",
-    )
+def violation_counts(violations: DataFrame) -> DataFrame:
+    """(metric, item, num_violations, violations): the distinct focus nodes
+    per shape and their smallest MAX_VIOLATION_SAMPLES, '; '-joined — the
+    D2/D3 numerator and the D5 sample list, one row per shape that has
+    violations.
 
-    # D2/D3 numerator: distinct focus nodes per shape; sample list for D5.
-    # Two-level aggregation keeps reducer state bounded: each salt bucket
-    # contributes an exact sub-count plus its local smallest-K sample; the
-    # final merge sums counts and re-sorts at most K × #buckets strings.
-    # A single collect_set over the group (the naive plan) would buffer
-    # EVERY distinct violation of a metric in one reducer — unbounded at
-    # 100 TB. The salt must be DETERMINISTIC (a hash of focus, not
-    # spark_partition_id): nondeterministic expressions make the plan fail
-    # sameResult checks, so downstream queries would never hit this DF's
-    # cache and silently re-aggregate.
+    Two-level aggregation keeps reducer state bounded: each salt bucket
+    contributes an exact sub-count plus its local smallest-K sample; the
+    final merge sums counts and re-sorts at most K × #buckets strings.
+    A single collect_set over the group (the naive plan) would buffer
+    EVERY distinct violation of a metric in one reducer — unbounded at
+    100 TB. The salt must be DETERMINISTIC (a hash of focus, not
+    spark_partition_id): nondeterministic expressions make the plan fail
+    sameResult checks, so downstream queries would never hit a cache of
+    this DF and silently re-aggregate."""
+    spark = violations.sparkSession
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    d = plan.violations.select("metric", "item", "focus").distinct()
+    d = violations.select("metric", "item", "focus").distinct()
     part = d.groupBy(
         "metric", "item",
         F.pmod(F.xxhash64("focus"), F.lit(n_buckets)).alias("_salt"),
@@ -106,7 +106,7 @@ def score_plan(
         F.slice(F.array_sort(F.collect_list("focus")),
                 1, MAX_VIOLATION_SAMPLES).alias("_tops"),
     )
-    per_shape = part.groupBy("metric", "item").agg(
+    return part.groupBy("metric", "item").agg(
         F.sum("_c").alias("num_violations"),
         F.concat_ws(
             "; ",
@@ -115,104 +115,85 @@ def score_plan(
         ).alias("violations"),
     )
 
-    # eqNullSafe: entity-scoped shapes have item = NULL on both sides.
-    joined = (
-        shapes_df.alias("sp")
-        .join(
-            per_shape.alias("pv"),
-            (F.col("sp.metric") == F.col("pv.metric"))
-            & F.col("sp.item").eqNullSafe(F.col("pv.item")),
-            "left",
-        )
-        .select("sp.*", "pv.num_violations", "pv.violations")
-        .fillna({"num_violations": 0})
-    )
 
-    # Denominator dims (broadcast: O(#properties), O(#classes)).
-    spp = F.broadcast(
-        profile.subjects_per_property.withColumnsRenamed(
-            {"p": "denom_key", "num_subjects": "denom_spp"}
-        )
-    )
-    epc = F.broadcast(
-        profile.entities_per_class.withColumnsRenamed(
-            {"cls": "denom_key", "num_instances": "denom_epc"}
-        )
-    )
-    joined = joined.join(spp, "denom_key", "left").join(epc, "denom_key", "left")
-
-    denominator = (
-        F.when(F.col("denom") == "entities", F.lit(profile.num_entities))
-        .when(F.col("denom") == "subjects_per_property", F.col("denom_spp"))
-        .when(F.col("denom") == "entities_per_class", F.col("denom_epc"))
-    )
-    # Parity note: EntitiesDisjointClasses divides a subclass-CLOSURE
-    # numerator (pySHACL sh:class semantics) by the DIRECT-typing
-    # entities_per_class denominator — deliberately mirroring the
-    # reference (utils.py:869-871 reads the same profile dict and
-    # defaults a missing class to 1, flooring the measure to 0; our NULL
-    # denominator floors to the same 0.0 through greatest()).
-    measure = (
-        F.when(F.col("denom") == "binary",
-               (F.col("num_violations") == 0).cast("double"))
-        # zero violations → 1.0 even when the denominator dim has no row
-        # (property unused); greatest() would otherwise swallow the NULL.
-        .when(F.col("num_violations") == 0, F.lit(1.0))
-        .otherwise(
-            F.greatest(
-                F.lit(0.0),
-                1.0 - F.col("num_violations") / F.nullif(denominator, F.lit(0)),
-            )
-        )
-    )
-    per_shape_report = joined.select(
-        F.lit(target).alias("target"),
-        _dimension_col().alias("dimension"),
-        "metric",
-        "item",
-        F.when(F.col("denom") == "binary", "binary").otherwise("ratio").alias("score_kind"),
-        F.coalesce(measure, F.lit(1.0)).alias("measure"),
-        F.col("num_violations").cast("long").alias("num_violations"),
-        "violations",
-    )
-    # Materialize NOW and truncate lineage (O(#shapes) rows): the meta
-    # rollup below re-reads this DF, and without materialization both
-    # union branches would re-run the whole violation aggregation inside
-    # one action. cache() is NOT enough — Spark's cache substitution
-    # failed to match the subtrees inside the union plan (measured: the
-    # union's optimized plan re-derived everything from parquet, 692
-    # scans). localCheckpoint worked but PINNED its blocks outside the
-    # CacheManager, where Dataset.unpersist can't release them — one
-    # leaked RDD per assessed dataset in a long-lived session. The report
-    # is a per-shape summary (violation strings already truncated to
-    # MAX_VIOLATION_SAMPLES), so collecting it to a LocalRelation is
-    # driver-bounded at any corpus scale and leaves nothing persisted.
-    per_shape_report = spark.createDataFrame(
-        per_shape_report.collect(), per_shape_report.schema)
-
-    # D4 — meta rollup for per-item families: share of items scoring 1.
-    meta = (
-        per_shape_report.filter(F.col("item").isNotNull())
-        .groupBy("target", "dimension", "metric")
-        .agg(
-            F.avg((F.col("measure") == 1.0).cast("double")).alias("measure"),
-            F.sum("num_violations").cast("long").alias("num_violations"),
-            F.count("*").alias("n_items"),
-        )
-        .filter(F.col("n_items") >= 1)
-        .select(
-            "target", "dimension", "metric",
-            F.lit(None).cast("string").alias("item"),
-            F.lit("meta").alias("score_kind"),
-            "measure", "num_violations",
-            F.lit(None).cast("string").alias("violations"),
-        )
-    )
-    return per_shape_report.unionByName(meta)
+def collect_concurrently(*dfs: DataFrame) -> list[list[Row]]:
+    """Collect independent DataFrames as concurrent Spark jobs, so that
+    small driver-bound collects overlap the large one instead of queueing
+    behind it."""
+    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
+        return list(ex.map(DataFrame.collect, dfs))
 
 
-def _dimension_col():
-    expr = F.lit(None).cast("string")
-    for metric, dim in DIMENSIONS.items():
-        expr = F.when(F.col("metric") == metric, F.lit(dim)).otherwise(expr)
-    return expr
+def score_rows(
+    shapes: list[ShapeSpec],
+    counts: list[tuple],
+    num_entities: int,
+    subjects_per_property: dict[str, int],
+    entities_per_class: dict[str, int],
+    target: str = "data",
+) -> list[tuple]:
+    """The report rows (REPORT_SCHEMA order) for ``shapes``: one per shape,
+    then one meta-rollup row per per-item family (score_kind='meta').
+
+    ``counts`` holds the collected violation_counts rows as (metric, item,
+    num_violations, violations); a shape without a row has no violations.
+    The denominator of a count metric is ``num_entities`` or the shape's
+    denom_key looked up in the per-property / per-class dims."""
+    found = {(m, i): (n, v) for m, i, n, v in counts}
+    dims = {"subjects_per_property": subjects_per_property,
+            "entities_per_class": entities_per_class}
+    rows = []
+    for sp in shapes:
+        n, sample = found.get((sp.metric, sp.item), (0, None))
+        if sp.denom == "binary":
+            measure = 1.0 if n == 0 else 0.0
+        elif n == 0:
+            # zero violations → 1.0 even when the denominator dim has no
+            # row (property unused)
+            measure = 1.0
+        else:
+            # Parity note: EntitiesDisjointClasses divides a subclass-
+            # CLOSURE numerator (pySHACL sh:class semantics) by the
+            # DIRECT-typing entities_per_class denominator — deliberately
+            # mirroring the reference (utils.py:869-871 reads the same
+            # profile dict and defaults a missing class to 1, flooring the
+            # measure to 0). A missing or zero denominator floors to 0.0.
+            denom = (num_entities if sp.denom == "entities"
+                     else dims.get(sp.denom, {}).get(sp.denom_key))
+            measure = max(0.0, 1.0 - n / denom) if denom else 0.0
+        rows.append((target, DIMENSIONS.get(sp.metric), sp.metric, sp.item,
+                     "binary" if sp.denom == "binary" else "ratio",
+                     measure, n, sample))
+
+    # D4 — meta rollup for per-item families: share of items scoring 1
+    per_metric: dict[str, list[tuple]] = {}
+    for r in rows:
+        if r[3] is not None:
+            per_metric.setdefault(r[2], []).append(r)
+    for metric, items in per_metric.items():
+        rows.append((target, DIMENSIONS.get(metric), metric, None, "meta",
+                     sum(r[5] == 1.0 for r in items) / len(items),
+                     sum(r[6] for r in items), None))
+    return rows
+
+
+def score_plan(
+    spark: SparkSession,
+    plan: ConstraintPlan,
+    profile: GraphProfile,
+    target: str = "data",
+) -> DataFrame:
+    """Violations + shape specs + denominators → per-shape report rows +
+    meta-rollup rows (score_kind='meta'), as one local relation.
+
+    The violation counts and the two denominator dims are collected as
+    concurrent jobs; the rest is score_rows on the driver. Driver memory is
+    O(#shapes + #properties + #classes): the per-shape rows carry at most
+    MAX_VIOLATION_SAMPLES focus nodes each, at any corpus scale."""
+    counts, spp, epc = collect_concurrently(
+        violation_counts(plan.violations),
+        profile.subjects_per_property.select("p", "num_subjects"),
+        profile.entities_per_class.select("cls", "num_instances"))
+    rows = score_rows(plan.shapes, counts, profile.num_entities,
+                      dict(map(tuple, spp)), dict(map(tuple, epc)), target)
+    return spark.createDataFrame(rows, REPORT_SCHEMA)

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,7 @@ from shacl_dqa_prototype_spark.plans.constraints import (
 from shacl_dqa_prototype_spark.plans.profile import profile_graph
 from shacl_dqa_prototype_spark.plans.scoring import score_plan
 from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
+from tests.test_pizza_parity import PIZZA
 
 EX = "http://example.org/"
 XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
@@ -344,41 +347,165 @@ def test_doc_contract_count_in_sync():
     assert {int(g) for g in m.groups()} == {n}, (m.groups(), n)
 
 
+# A tiny data graph, OWL vocabulary (RDF/XML, as the pizza ontology) and
+# VoID description: enough RDF for every stage of the dqa CLI. Seeded
+# violations: margherita has two bases (FunctionalProperty), `odd` is typed
+# with both disjoint classes and tops itself (IrreflexiveProperty), _:b1 is
+# a blank-node entity and Crust has no instance.
+MINI_NS = "http://example.org/mini#"
+MINI_DATA = f"""\
+@prefix ex: <{MINI_NS}> .
+@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+@prefix owl: <http://www.w3.org/2002/07/owl#> .
+ex:margherita a ex:Pizza ; rdfs:label "Margherita"@en ;
+    ex:hasTopping ex:tomato , ex:basil ; ex:hasBase ex:thin , ex:deep .
+ex:odd a ex:Pizza , ex:Topping ; ex:hasTopping ex:odd .
+ex:tomato a ex:Topping ; rdfs:label "Tomato" ; owl:sameAs ex:basil .
+ex:basil a ex:Topping .
+ex:thin a ex:Base .
+_:b1 a ex:Pizza .
+"""
+MINI_VOCAB = """\
+<?xml version="1.0"?>
+<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+         xmlns:rdfs="http://www.w3.org/2000/01/rdf-schema#"
+         xmlns:owl="http://www.w3.org/2002/07/owl#"
+         xml:base="http://example.org/mini">
+  <owl:Ontology rdf:about=""/>
+  <owl:Class rdf:about="#Pizza">
+    <rdfs:label xml:lang="en">Pizza</rdfs:label>
+    <owl:disjointWith rdf:resource="#Topping"/>
+  </owl:Class>
+  <owl:Class rdf:about="#Topping"/>
+  <owl:Class rdf:about="#Base"/>
+  <owl:Class rdf:about="#Crust"/>
+  <owl:ObjectProperty rdf:about="#hasTopping">
+    <rdf:type rdf:resource="http://www.w3.org/2002/07/owl#IrreflexiveProperty"/>
+    <rdfs:domain rdf:resource="#Pizza"/>
+    <rdfs:range rdf:resource="#Topping"/>
+  </owl:ObjectProperty>
+  <owl:ObjectProperty rdf:about="#hasBase">
+    <rdf:type rdf:resource="http://www.w3.org/2002/07/owl#FunctionalProperty"/>
+    <rdfs:domain rdf:resource="#Pizza"/>
+    <rdfs:range rdf:resource="#Base"/>
+  </owl:ObjectProperty>
+</rdf:RDF>
+"""
+MINI_VOID = """\
+@prefix void: <http://rdfs.org/ns/void#> .
+@prefix dct: <http://purl.org/dc/terms/> .
+<http://example.org/mini> a void:Dataset ;
+    dct:title "Mini pizza graph" ;
+    void:uriSpace "http://example.org/mini#" ;
+    void:dataDump <http://example.org/mini.ttl> .
+"""
+
+
+def _mini_dataset(tmp_path) -> dict[str, str]:
+    """Write the mini data graph, vocabulary and VoID description under
+    ``tmp_path``; returns their paths by role."""
+    d = tmp_path / "mini"
+    d.mkdir()
+    out = {}
+    for role, name, text in (("data", "data.ttl", MINI_DATA),
+                             ("vocab", "vocab.xml", MINI_VOCAB),
+                             ("void", "void.ttl", MINI_VOID)):
+        (d / name).write_text(text)
+        out[role] = str(d / name)
+    return out
+
+
+def _dqa_args(output, **kw):
+    import argparse
+
+    args = dict(
+        cmd="dqa", config=None, triples=None, triples_format=None,
+        vocab=[], vocab_names=[], vocab_formats=[],
+        metadata=None, metadata_format=None, metadata_class=None,
+        output=str(output), dataset_name=None, base_uri=None,
+        type_property=None, labeling_property=None,
+        description_property=None, interlinking_property=None,
+        uris_max_length=None, master=None, shuffle_partitions=None)
+    args.update(kw)
+    return argparse.Namespace(**args)
+
+
 def test_cmd_dqa_releases_all_caches(spark, tmp_path):
     """The spark-submit dqa surface must leave NO persistent RDDs behind —
     a long-lived session (notebook, orchestrated batch) would otherwise
-    accumulate one violations cache per assessed dataset."""
-    import argparse
+    accumulate one violations cache per assessed dataset. The data report
+    it writes carries the seeded violations' scores."""
+    import glob
+    import json as _json
 
     from main import cmd_dqa
-
-    args = argparse.Namespace(
-        cmd="dqa", config=None, triples="/root/reference/datasets/pizza/data.ttl",
-        triples_format="ttl", vocab=["/root/reference/datasets/pizza/pizza.xml"],
-        vocab_names=["pizza_owl"], vocab_formats=["xml"],
-        metadata="/root/reference/datasets/pizza/void.ttl",
-        metadata_format="ttl", metadata_class=None,
-        output=str(tmp_path / "out"), dataset_name="pizza",
-        base_uri="http://example.org/pizza#", type_property=None,
-        labeling_property=None, description_property=None,
-        interlinking_property=None, uris_max_length=None,
-        master=None, shuffle_partitions=None,
+    from shacl_dqa_prototype_spark.plans.vocab import (
+        mine_vocab,
+        vocab_profile_json,
     )
+    from shacl_dqa_prototype_spark.sources.rdf import parse_rdfxml
+
+    mini = _mini_dataset(tmp_path)
+    args = _dqa_args(
+        tmp_path / "out", triples=mini["data"], triples_format="ttl",
+        vocab=[mini["vocab"]], vocab_names=["mini_owl"],
+        vocab_formats=["xml"], metadata=mini["void"], metadata_format="ttl",
+        dataset_name="mini", base_uri=MINI_NS)
     # other tests share this session and legitimately hold module-scoped
     # caches — assert cmd_dqa adds NOTHING, not that the session is empty
     before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
     cmd_dqa(args)
-    assert (tmp_path / "out" / "dq_assessment_pizza.csv").exists()
+    assert (tmp_path / "out" / "dq_assessment_mini.csv").exists()
     after = set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
     assert after - before == set(), f"cmd_dqa leaked RDDs {after - before}"
-    # per-vocabulary profile sink (reference utils.py:643-645): same keys
-    # and counts as the committed pizza_owl.json
+
+    data = {}
+    for part in glob.glob(str(tmp_path / "out" / "dq_report_json" / "part-*")):
+        with open(part) as f:
+            for r in map(_json.loads, f):
+                if r["target"] == "data":
+                    data[(r["metric"], r.get("item"), r["score_kind"])] = (
+                        r["measure"], r["num_violations"])
+    ex = MINI_NS
+    # margherita is the only hasBase subject and has two
+    assert data[("FunctionalProperty", f"{ex}hasBase", "ratio")] == (0.0, 1)
+    # odd tops itself; 2 hasTopping subjects
+    assert data[("IrreflexiveProperty", f"{ex}hasTopping", "ratio")] == (0.5, 1)
+    # odd is typed Pizza and Topping: 1 of 3 Pizza instances
+    assert data[("EntitiesDisjointClasses", f"{ex}Pizza|{ex}Topping",
+                 "ratio")] == pytest.approx((1 - 1 / 3, 1))
+    assert data[("SchemaCompletenessClassUsage", f"{ex}Crust",
+                 "binary")] == (0.0, 1)
+    assert data[("SchemaCompletenessClassUsage", None, "meta")] == (0.75, 1)
+    # 6 entities, one of them a blank node
+    assert data[("BlankNodesUsageEntities", None, "ratio")] == (
+        pytest.approx(1 - 1 / 6), 1)
+
+    # per-vocabulary profile sink (reference utils.py:643-645)
+    ours = _json.load(open(
+        tmp_path / "out" / "profile" / "vocabularies" / "mini_owl.json"))
+    assert ours == _json.loads(_json.dumps(
+        vocab_profile_json(mine_vocab(parse_rdfxml(MINI_VOCAB)))))
+
+
+@pytest.mark.skipif(not os.path.exists(PIZZA), reason="reference not mounted")
+def test_cmd_dqa_pizza_vocab_profile_matches_golden(spark, tmp_path):
+    """The per-vocabulary profile sink of a pizza run has the keys and
+    counts of the reference's committed pizza_owl.json."""
     import json as _json
 
+    from main import cmd_dqa
+
+    cmd_dqa(_dqa_args(
+        tmp_path / "out", triples=f"{PIZZA}/data.ttl", triples_format="ttl",
+        vocab=[f"{PIZZA}/pizza.xml"], vocab_names=["pizza_owl"],
+        vocab_formats=["xml"], metadata=f"{PIZZA}/void.ttl",
+        metadata_format="ttl", dataset_name="pizza",
+        base_uri="http://example.org/pizza#"))
     ours = _json.load(open(
         tmp_path / "out" / "profile" / "vocabularies" / "pizza_owl.json"))
-    golden = _json.load(open(
-        "/root/reference/profile/vocabularies/pizza_owl.json"))
+    golden = _json.load(open(os.path.join(
+        PIZZA, "..", "..", "profile", "vocabularies", "pizza_owl.json")))
     assert list(ours.keys()) == list(golden.keys())
     for k, gv in golden.items():
         if isinstance(gv, (list, dict)):
@@ -391,24 +518,14 @@ def test_cmd_dqa_metadata_only(spark, tmp_path):
     """Reference -rm selective run (main.py:22-25 / dq_assessment.py:97-112):
     a metadata-only assessment must run WITHOUT --triples and emit the
     metadata-shaped report rows."""
-    import argparse
     import csv
 
     from main import cmd_dqa
 
-    args = argparse.Namespace(
-        cmd="dqa", config=None, triples=None, triples_format=None,
-        vocab=[], vocab_names=[], vocab_formats=[],
-        metadata="/root/reference/datasets/pizza/void.ttl",
-        metadata_format="ttl", metadata_class=None,
-        output=str(tmp_path / "md_out"), dataset_name="pizza md",
-        base_uri=None, type_property=None,
-        labeling_property=None, description_property=None,
-        interlinking_property=None, uris_max_length=None,
-        master=None, shuffle_partitions=None,
-    )
-    cmd_dqa(args)
-    csv_path = tmp_path / "md_out" / "dq_assessment_pizza_md.csv"
+    mini = _mini_dataset(tmp_path)
+    cmd_dqa(_dqa_args(tmp_path / "md_out", metadata=mini["void"],
+                      metadata_format="ttl", dataset_name="mini md"))
+    csv_path = tmp_path / "md_out" / "dq_assessment_mini_md.csv"
     assert csv_path.exists()
     with open(csv_path) as f:
         rows = list(csv.DictReader(f))
@@ -504,10 +621,10 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     the cluster-shaped equivalent). This test exercises the REAL binary:
     build engine.zip with --make-pyfiles, copy main.py alone into an empty
     directory — so the package is importable ONLY from the zip — and
-    spark-submit a pizza assessment from there. A module missing from the
-    packaging step fails here instead of on a 1000-executor cluster, and
-    the report CSV must be byte-identical to the in-process run."""
-    import argparse
+    spark-submit an assessment of the mini dataset from there. A module
+    missing from the packaging step fails here instead of on a
+    1000-executor cluster, and the report CSV must be byte-identical to
+    the in-process run."""
     import os
     import shutil
     import subprocess
@@ -523,14 +640,14 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     launch.mkdir()
     shutil.copy(mainmod.__file__, launch / "main.py")
 
-    pizza = "/root/reference/datasets/pizza"
+    mini = _mini_dataset(tmp_path)
     argv_tail = [
         "dqa", "--master", "2", "--shuffle-partitions", "4",
-        "--triples", f"{pizza}/data.ttl",
-        "--vocab", f"{pizza}/pizza.xml",
-        "--metadata", f"{pizza}/void.ttl",
-        "--dataset-name", "pizza",
-        "--base-uri", "http://example.org/pizza#",
+        "--triples", mini["data"],
+        "--vocab", mini["vocab"],
+        "--metadata", mini["void"],
+        "--dataset-name", "mini",
+        "--base-uri", MINI_NS,
     ]
     spark_submit = shutil.which("spark-submit")
     assert spark_submit, "spark-submit must be on PATH"
@@ -544,25 +661,17 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
 
-    # in-process reference run on the shared session
+    # in-process reference run on the shared session; the vocab name must
+    # match the CLI path's filename-stem inference ("vocab"), because it
+    # lands in the CSV's vocab rows
     out_ref = tmp_path / "out_ref"
-    # vocab name must match the CLI path's filename-stem inference
-    # ("pizza"), because it lands in the CSV's vocab rows — this test
-    # checks submit==in-process identity; reference parity is
-    # tools/pizza_parity.py's job.
-    cmd_dqa(argparse.Namespace(
-        cmd="dqa", config=None, triples=f"{pizza}/data.ttl",
-        triples_format="ttl", vocab=[f"{pizza}/pizza.xml"],
-        vocab_names=["pizza"], vocab_formats=["xml"],
-        metadata=f"{pizza}/void.ttl", metadata_format="ttl",
-        metadata_class=None, output=str(out_ref), dataset_name="pizza",
-        base_uri="http://example.org/pizza#", type_property=None,
-        labeling_property=None, description_property=None,
-        interlinking_property=None, uris_max_length=None,
-        master=None, shuffle_partitions=None,
-    ))
-    sub_csv = (out_sub / "dq_assessment_pizza.csv").read_bytes()
-    ref_csv = (out_ref / "dq_assessment_pizza.csv").read_bytes()
+    cmd_dqa(_dqa_args(
+        out_ref, triples=mini["data"], triples_format="ttl",
+        vocab=[mini["vocab"]], vocab_names=["vocab"], vocab_formats=["xml"],
+        metadata=mini["void"], metadata_format="ttl", dataset_name="mini",
+        base_uri=MINI_NS))
+    sub_csv = (out_sub / "dq_assessment_mini.csv").read_bytes()
+    ref_csv = (out_ref / "dq_assessment_mini.csv").read_bytes()
     assert sub_csv == ref_csv and len(sub_csv) > 1000
 
 

@@ -4,6 +4,8 @@ state-derivable family — and never rescan old triples."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -38,12 +40,12 @@ DERIVABLE = [
 ]
 
 
-def _fold_in_two(spark, tmp_path, T):
+def _fold_in_two(spark, tmp_path, T, cfg=core.ENTRY_CFG):
     state = IncrementalDQAState.open(spark, str(tmp_path / "state"))
     split = F.abs(F.xxhash64("s")) % 2 == 0
-    apply_delta(state, T.filter(split), core.ENTRY_CFG, core.ENTRY_VOCAB,
+    apply_delta(state, T.filter(split), cfg, core.ENTRY_VOCAB,
                 n_buckets=4, delta_id="d1")
-    apply_delta(state, T.filter(~split), core.ENTRY_CFG, core.ENTRY_VOCAB,
+    apply_delta(state, T.filter(~split), cfg, core.ENTRY_VOCAB,
                 n_buckets=4, delta_id="d2")
     return state
 
@@ -166,28 +168,131 @@ def test_merge_commits_rewrite_only_touched_buckets(spark, tmp_path):
             == big.unionByName(one).count())
 
 
-def test_incremental_scores_match_batch_report(spark, tmp_path):
+# a config that turns on every gated entity-scoped family except the
+# language checks, and an rdfs:subClassOf closure for the sh:class joins
+CUSTOM_CFG = replace(
+    core.ENTRY_CFG, base_uri="urn:order:", uri_regex_pattern="urn:order:1.*",
+    uri_space="urn:cust:", check_languages=False)
+SUBCLASS = [("urn:c:PreferredCustomer", "urn:c:Customer")]
+
+
+def _assert_state_report_matches_batch(spark, tmp_path, cfg, subclass_pairs):
     """score_from_state must reproduce the ENTIRE batch report — every
-    shape row and the meta rollup, scores and violation counts — from
-    state alone (no triple scan)."""
+    shape row and the meta rollup, scores, violation counts and violation
+    samples — from state alone (no triple scan), and its shape list,
+    instantiated from state-derived usage sets, must be the batch plan's."""
+    from shacl_dqa_prototype_spark.plans.constraints import data_shapes
     from shacl_dqa_prototype_spark.plans.dqa import run_data_dqa
     from shacl_dqa_prototype_spark.plans.incremental import score_from_state
 
     T = core._triples(spark, SF)
-    state = _fold_in_two(spark, tmp_path, T)
-    inc = score_from_state(state, core.ENTRY_VOCAB, core.ENTRY_CFG,
-                           disjoint_pairs=core.ENTRY_DISJOINT)
-    batch = run_data_dqa(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT,
-                         core.ENTRY_CFG)
-    cols = ["target", "dimension", "metric", "item", "score_kind",
-            "measure", "num_violations"]
+    state = _fold_in_two(spark, tmp_path, T, cfg)
+    inc = score_from_state(state, core.ENTRY_VOCAB, cfg,
+                           disjoint_pairs=core.ENTRY_DISJOINT,
+                           subclass_pairs=subclass_pairs)
+    plan = compile_data_constraints(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT,
+                                    cfg, subclass_pairs=subclass_pairs)
+    plan.violations = plan.violations.cache()
+    try:
+        batch = run_data_dqa(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg,
+                             plan=plan)
+        batch_rows = batch.collect()
+    finally:
+        plan.unpersist()
+
+    used_props = {r["p"] for r in state.ps_counts.read().collect()}
+    used_classes = {r["cls"] for r in state.cls_pairs.read().collect()}
+    assert data_shapes(core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg,
+                       used_props, used_classes) == plan.shapes
+
     def _key(t):
         return tuple((x is None, x) for x in t)
 
-    inc_rows = sorted((tuple(r) for r in inc.select(*cols).collect()), key=_key)
-    batch_rows = sorted((tuple(r) for r in batch.select(*cols).collect()),
-                        key=_key)
-    assert inc_rows == batch_rows
+    inc_rows = sorted((tuple(r) for r in inc.collect()), key=_key)
+    assert inc_rows == sorted((tuple(r) for r in batch_rows), key=_key)
+    metrics = {r[2] for r in inc_rows}
+    gated = {"UsageExternalURIEntities", "URIRegexComplianceEntities",
+             "URISpaceComplianceEntities"}
+    langs = {"DifferentLanguagesLabelsEntities",
+             "DifferentLanguagesDescriptionsEntities"}
+    if cfg is CUSTOM_CFG:
+        assert gated <= metrics and not langs & metrics
+    else:
+        assert langs <= metrics and not gated & metrics
+    # the samples are compared, not vacuous
+    assert any(r[7] for r in inc_rows if r[4] != "meta")
+
+
+def test_incremental_scores_match_batch_report(spark, tmp_path):
+    _assert_state_report_matches_batch(spark, tmp_path, core.ENTRY_CFG, None)
+
+
+def test_incremental_scores_match_batch_report_custom_cfg(spark, tmp_path):
+    _assert_state_report_matches_batch(spark, tmp_path, CUSTOM_CFG, SUBCLASS)
+
+
+def _cache_entries(spark) -> int:
+    """Number of CacheManager entries (the list is private: read it
+    reflectively)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
+    """score_from_state and score_plan neither cache nor persist anything:
+    no DataFrame.cache/persist call while they run, and no persistent RDD
+    or CacheManager entry left after them."""
+    from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan
+    from shacl_dqa_prototype_spark.plans.incremental import score_from_state
+    from shacl_dqa_prototype_spark.plans.profile import GraphProfile
+    from shacl_dqa_prototype_spark.plans.scoring import score_plan
+
+    T = core._triples(spark, SF)
+    state = _fold_in_two(spark, tmp_path, T)
+    prof = profile_from_state(state)
+    row = prof["scalars"].first()
+    profile = GraphProfile(
+        **{k: row[k] or 0 for k in (
+            "num_triples", "num_classes", "num_entities", "num_properties",
+            "num_entities_interlinking", "num_entities_label",
+            "num_entities_description")},
+        triples_per_property=prof["triples_per_property"],
+        subjects_per_property=prof["subjects_per_property"],
+        entities_per_class=prof["entities_per_class"])
+    batch_plan = compile_data_constraints(
+        T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT, core.ENTRY_CFG)
+    batch_plan.unpersist()
+    plan = ConstraintPlan(
+        violations=violations_from_state(
+            state, core.ENTRY_VOCAB, core.ENTRY_CFG,
+            disjoint_pairs=core.ENTRY_DISJOINT),
+        shapes=batch_plan.shapes)
+
+    entries_before = _cache_entries(spark)
+    rdds_before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    calls = []
+    # the session's concrete DataFrame class overrides the API base class
+    df_class = type(T)
+    for name in ("cache", "persist"):
+        orig = getattr(df_class, name)
+
+        def spy(self, *a, _orig=orig, _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(df_class, name, spy)
+
+    reports = [
+        score_from_state(state, core.ENTRY_VOCAB, core.ENTRY_CFG,
+                         disjoint_pairs=core.ENTRY_DISJOINT),
+        score_plan(spark, plan, profile),
+    ]
+    assert all(r.count() > 0 for r in reports)
+    assert calls == []
+    assert _cache_entries(spark) == entries_before
+    assert set(dict(spark.sparkContext._jsc.getPersistentRDDs())) == rdds_before
 
 
 def test_vacuum_bounds_state_and_preserves_idempotence(spark, tmp_path):
