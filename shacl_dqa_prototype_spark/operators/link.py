@@ -108,6 +108,11 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     # (the candidates exceed the storage pool) and the eviction taxed the
     # wide configs hardest: the 8-thread link stage ran 1.7× slower than
     # with recompute, and at 10^12 docs pinning the fan-out is a non-starter.
+    # The cheap second pass assumes ``mentions`` reads a snapshot, as in
+    # the construction pipeline. A caller that passes a live extraction
+    # plan (e.g. the kg_link_entities contract entry in entry_ext.py) pays
+    # a second run of the pandas-UDF extraction; persist or snapshot the
+    # mentions first where that matters.
     # E4 — skew-safe popularity feature (two small shuffles, broadcast back)
     popularity = salted_docs_per_entity(cands)
 

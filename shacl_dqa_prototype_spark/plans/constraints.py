@@ -3,16 +3,35 @@
 Replaces the reference's Jinja2-template → pySHACL-interpretation stack
 (/root/reference/shacl_shape_builder.py + dq_assessment/shapes/
 data_shapes.template.ttl) with a driver-side planner that compiles every
-shape family to ONE fused DataFrame job (filters, semi/anti joins, hash
-aggregates over the triple table T), emitting a uniform violations
-DataFrame V(metric, item, focus, value). The instantiated shape list — one
-ShapeSpec per report row — is data_shapes, plain Python over the same
-inputs, so a caller that only needs the list builds no plan.
+shape family to DataFrame jobs (filters, semi/anti joins, hash aggregates
+over the triple table T), emitting a uniform violations DataFrame
+V(metric, item, focus, value). The instantiated shape list — one ShapeSpec
+per report row — is data_shapes, plain Python over the same inputs, so a
+caller that only needs the list builds no plan.
+
+Every family is written once, in one of two tiers:
+  * row tier (row_violations): the families whose violations are decided
+    per triple against broadcast vocab dims — C1, C14, C17-C22, C31 and the
+    datatype/nodeKind CorrectRange + MalformedLiteral. They are
+    append-monotone: the violations of a set of triples are the union of
+    the violations of its parts, and no later triple retracts one.
+  * state tier (state_violations): every other family, evaluated over six
+    mergeable aggregates of the triples (state_aggregates: per-subject
+    flags, (p, s) counts, typing pairs, and the IFP / class-domain /
+    class-range + asymmetric slices). A later triple can create or retract
+    these violations, so they are decided on the aggregates of ALL triples.
+
+Batch DQA is one delta folded into empty, in-memory state:
+compile_data_constraints = row_violations(T) ∪
+state_violations(state_aggregates(T)). The incremental engine
+(plans/incremental.py) merges state_aggregates(delta) into persisted
+snapshots, appends row_violations(delta) to a log, and evaluates
+state_violations over the snapshot reads — the same code on both paths.
 
 Key semantics preserved from the reference (citations per family below):
   * the sh:or exemption wrapper — focus nodes typed rdfs:Class /
     rdf:Property / owl:NamedIndividual are exempt from entity-scoped shapes
-    (data_shapes.template.ttl:16-33) → one reusable anti-join set X;
+    (data_shapes.template.ttl:16-33) → the is_exempt subject flag;
   * shape pruning by usage — per-property shapes only for vocab properties
     actually used in the data (shacl_shape_builder.py:318,345,370,…);
   * sh:datatype = datatype-IRI match AND well-formed lexical form;
@@ -20,9 +39,10 @@ Key semantics preserved from the reference (citations per family below):
     instantiates both (CorrectRange+MalformedLiteral, SelfDescriptiveFormat
     +BlankNodesUsage).
 
-Scale notes: T is the only big input; every vocab dim is broadcast; every
-family is a single scan+join/agg so the whole plan is O(#families) jobs,
-not O(#shapes) — the reference's 344 pizza shapes compile to ~20 jobs.
+Scale notes: T is the only big input; every vocab dim is broadcast; the
+per-triple and per-subject families are one fused scan each, so the whole
+plan is O(#families) jobs, not O(#shapes) — the reference's 344 pizza
+shapes compile to ~20 jobs.
 """
 
 from __future__ import annotations
@@ -46,7 +66,6 @@ from shacl_dqa_prototype_spark.functions.terms import (
     XSD,
 )
 from shacl_dqa_prototype_spark.functions.xsd import ill_formed_literal
-from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
 
 
 @dataclass
@@ -96,49 +115,29 @@ class VocabTerm:
 class ConstraintPlan:
     violations: DataFrame
     shapes: list[ShapeSpec] = field(default_factory=list)
-    # intermediate DataFrames compile cached (e.g. the exempt-entity set);
-    # long-lived sessions call unpersist() once scoring results are
-    # materialized — per-job drivers can ignore it
-    cached: list[DataFrame] = field(default_factory=list)
     # the union's branches, for per-family plan auditing/attribution
     # (tools/plan_audit-style timing) — evaluation always goes through
     # `violations`, never through these
     parts: list[DataFrame] = field(default_factory=list)
-    # metrics each branch can emit (parallel to `parts`): callers that
-    # need a metric SUBSET (e.g. the incremental monotone tier) union only
-    # the branches that can contribute, skipping e.g. the per-subject
-    # flags aggregation entirely
+    # metrics each branch can emit (parallel to `parts`)
     part_metrics: list[frozenset] = field(default_factory=list)
 
-    def violations_for(self, metrics) -> DataFrame:
-        """Union of only the branches that can emit `metrics`, filtered —
-        branch pruning the optimizer can't do through the fused explode."""
-        want = frozenset(metrics)
-        keep = [part.filter(F.col("metric").isin(list(want)))
-                for part, ms in zip(self.parts, self.part_metrics)
-                if ms & want]
-        if not keep:
-            return self.violations.sparkSession.createDataFrame(
-                [], VIOLATIONS_SCHEMA)
-        return reduce(DataFrame.unionByName, keep)
-
     def unpersist(self) -> None:
-        for df in [self.violations, *self.cached]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        try:
+            self.violations.unpersist()
+        except Exception:
+            pass
 
 
-def _v(df: DataFrame, metric: str, item: Column | str | None,
-       focus: Column, value: Column | None = None) -> DataFrame:
-    item_col = (
-        F.lit(None).cast("string") if item is None
-        else (F.lit(item) if isinstance(item, str) else item)
-    )
+# one union branch of a tier and the metrics it can emit
+Branch = tuple[DataFrame, frozenset]
+
+
+def _v(df: DataFrame, metric: str, item: Column, focus: Column,
+       value: Column | None = None) -> DataFrame:
     return df.select(
         F.lit(metric).alias("metric"),
-        item_col.alias("item"),
+        item.cast("string").alias("item"),
         focus.cast("string").alias("focus"),
         (value if value is not None else F.lit(None)).cast("string").alias("value"),
     )
@@ -179,8 +178,8 @@ def subject_flags(T: DataFrame, cfg: DQAConfig) -> DataFrame:
 
 def flag_families(cfg: DQAConfig) -> list[tuple]:
     """The entity-scoped families as fused-scan entries (metric, item,
-    focus, value, condition) over subject_flags rows. The batch plan and
-    the incremental state both emit them with ONE fused_scan."""
+    focus, value, condition) over subject_flags rows, emitted by
+    state_violations with ONE fused_scan."""
     s = F.col("s")
     null = F.lit(None).cast("string")
     bnode = s.startswith("_:")
@@ -271,6 +270,7 @@ class _Terms:
     asym: list[str]
     irr: list[str]
     dom_terms: list[VocabTerm]
+    dom_cls: list[VocabTerm]        # sh:class domain anti-join
     rng_terms: list[VocabTerm]
     rng_dt: list[VocabTerm]         # sh:datatype + MalformedLiteral
     rng_cls: list[VocabTerm]        # sh:class anti-join
@@ -317,6 +317,9 @@ def _select_terms(
             # owl:Thing and rdfs:Resource. nodeKind routing applies to
             # object_property terms only (builder:330-336).
             rng_cls.append(t)
+    # owl:Thing domain → nodeKind BlankNodeOrIRI, structurally satisfied
+    # for RDF subjects (C27): shape instantiated, no violation to compute
+    dom_terms = [t for t in live if t.domain and t.term in used_props]
     pairs = set(disjoint_pairs) | {(b, a) for (a, b) in disjoint_pairs}
     return _Terms(
         classes=[t.term for t in vocab_terms
@@ -336,7 +339,8 @@ def _select_terms(
         fp=sorted({t.term for t in live if t.functional} & used_props),
         asym=sorted({t.term for t in props if t.asymmetric} & used_props),
         irr=sorted({t.term for t in props if t.irreflexive} & used_props),
-        dom_terms=[t for t in live if t.domain and t.term in used_props],
+        dom_terms=dom_terms,
+        dom_cls=[t for t in dom_terms if t.domain != OWL_THING],
         rng_terms=rng_terms, rng_dt=rng_dt, rng_cls=rng_cls,
         rng_nk_literal=rng_nk_literal, rng_nk_bi=rng_nk_bi,
         dpairs=sorted((a, b) for (a, b) in pairs if a in used_classes),
@@ -401,76 +405,23 @@ def data_shapes(
     shapes += [per_prop("FunctionalProperty", p) for p in t.fp]
     shapes += [per_prop("AsymmetricProperty", p) for p in t.asym]
     shapes += [per_prop("IrreflexiveProperty", p) for p in t.irr]
-    # owl:Thing domain → nodeKind BlankNodeOrIRI, structurally satisfied for
-    # RDF subjects (C27) — shape still instantiated, score 1
     shapes += [per_prop("CorrectDomain", x.term) for x in t.dom_terms]
     shapes += [per_prop("CorrectRange", x.term) for x in t.rng_terms]
     shapes += [per_prop("MalformedLiteral", x.term) for x in t.rng_dt]
     return shapes
 
 
-def compile_data_constraints(
-    T: DataFrame,
-    vocab_terms: list[VocabTerm],
-    disjoint_pairs: list[tuple[str, str]],
-    cfg: DQAConfig,
-    used_props: set[str] | None = None,
-    used_classes: set[str] | None = None,
-    subclass_pairs: list[tuple[str, str]] | None = None,
-) -> ConstraintPlan:
-    """Compile + evaluate all data shapes. Returns the violations DF
-    (lazy; caller caches before scoring) and the instantiated shape list
-    (data_shapes).
-
-    ``used_props``/``used_classes`` override the usage-pruning sets — the
-    reference prunes by the PRE-TBox-merge data profile
-    (shacl_shape_builder.py reads graph_profile) while shapes validate the
-    merged graph, so callers that merge pass the raw-graph sets here.
-    ``subclass_pairs`` is the transitive (descendant, ancestor) closure of
-    rdfs:subClassOf — sh:class in SHACL matches instances of subclasses,
-    so domain/range/disjoint checks extend the typing table through it
-    (broadcast join; the closure is TBox-small)."""
+def row_violations(T: DataFrame, terms: _Terms, cfg: DQAConfig) -> list[Branch]:
+    """The row tier: every append-monotone family, as one fused scan of T
+    plus the C17 branch. Batch evaluates it over T, the incremental engine
+    over each delta (its violation log)."""
     spark = T.sparkSession
     p, s, o = F.col("p"), F.col("s"), F.col("o")
-
-    # ---- shared sub-plans (each used by several families) ----------------
-    typing = T.filter(p == cfg.type_property).select("s", "o")
-    subj = subject_flags(T, cfg).cache()
-
-    # sh:class semantics: SHACL instance = typed as the class OR any
-    # rdfs:subClassOf descendant — extend typing through the closure dim.
-    if subclass_pairs:
-        closure = spark.createDataFrame(subclass_pairs, ["o", "anc"])
-        typing_ext = typing.unionByName(
-            typing.join(F.broadcast(closure), "o").select("s", F.col("anc").alias("o"))
-        ).distinct()
-    else:
-        typing_ext = typing
-
-    if used_props is None or used_classes is None:
-        # usage pruning inputs (tiny: O(#properties), O(#classes)) — ONE
-        # fused aggregation job for both sets, shared with the raw-graph
-        # pruning path so the usage semantics can never desynchronize
-        from shacl_dqa_prototype_spark.plans.vocab import raw_usage_sets
-
-        props_set, classes_set = raw_usage_sets(T, cfg.type_property)
-        used_props = props_set if used_props is None else used_props
-        used_classes = classes_set if used_classes is None else used_classes
-
-    terms = _select_terms(vocab_terms, disjoint_pairs, used_props, used_classes)
-    parts: list[DataFrame] = []
-    part_metrics: list[frozenset] = []
-
-    def branch(df: DataFrame, metric: str) -> None:
-        parts.append(df)
-        part_metrics.append(frozenset({metric}))
-
     # fused single-scan families over the triple table: (metric, item_col,
     # focus_col, value_col, condition). Every per-row filter family joins
     # this list and is emitted by ONE scan + explode (fused_scan) instead of
     # one union branch per family — at 100 TB that is 1 pass over the
-    # triple table instead of ~8. The per-subject families are
-    # flag_families over subj, fused the same way.
+    # triple table instead of ~8.
     row_fams: list[tuple] = []
     _null = F.lit(None).cast("string")
 
@@ -481,50 +432,10 @@ def compile_data_constraints(
         row_fams.append(("UsageExternalURIEntities", F.lit(ilp), s, o,
                          (p == ilp) & o.startswith(cfg.base_uri)))
 
-    # ---- C7 SchemaCompletenessClassUsage (template:134-154) ---------------
-    # Per vocab class: >=1 instance that is not the NamedIndividual IRI.
-    # ONE job for all classes: classes-with-real-instances, anti-joined.
-    if terms.classes:
-        cls_df = spark.createDataFrame([(c,) for c in terms.classes], ["cls"])
-        # qualifying instance = one NOT typed owl:NamedIndividual (the
-        # NotNamedIndividualShape is a property shape on rdf:type —
-        # template:136-140)
-        ni_typed = typing.filter(o == OWL_NAMED_INDIVIDUAL).select("s").distinct()
-        with_instances = (
-            typing.join(ni_typed, "s", "left_anti")
-            .select(F.col("o").alias("cls")).distinct()
-        )
-        # hint the BUILD (right) side: a left-anti join can only broadcast
-        # its right input — with_instances is #distinct-classes small
-        missing = cls_df.join(F.broadcast(with_instances), "cls", "left_anti")
-        branch(_v(missing, "SchemaCompletenessClassUsage",
-                  F.col("cls"), F.col("cls")), "SchemaCompletenessClassUsage")
-
     # ---- C14 SelfDescriptiveFormatProperties (310-316): per used property --
     # targetObjectsOf <prop>: object must be IRI.
     row_fams.append(("SelfDescriptiveFormatProperties", p, o, _null,
                      F.col("o_kind") != "iri"))
-
-    # ---- C16 EntitiesDisjointClasses (342-350): directed pairs ------------
-    if terms.dpairs:
-        pair_df = spark.createDataFrame(terms.dpairs, ["class_a", "class_b"])
-        # sh:targetClass / sh:class follow rdfs:subClassOf → closure typing
-        ta = typing_ext.withColumnsRenamed({"o": "class_a"})
-        tb = typing_ext.withColumnsRenamed({"o": "class_b"})
-        both = ta.join(tb, "s").join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
-        branch(_v(both, "EntitiesDisjointClasses",
-                  F.concat_ws("|", "class_a", "class_b"), F.col("s")),
-               "EntitiesDisjointClasses")
-
-    # ---- C17 MisplacedProperties (352-361): prop IRI used as a class ------
-    if terms.props:
-        prop_df = spark.createDataFrame([(t,) for t in terms.props], ["term"])
-        misplaced_p = (
-            typing.select(F.col("o").alias("term")).distinct()
-            .join(F.broadcast(prop_df), "term", "semi")
-        )
-        branch(_v(misplaced_p, "MisplacedProperties", F.col("term"), F.col("term")),
-               "MisplacedProperties")
 
     # ---- C18 MisplacedClasses (363-386): class IRI used as predicate ------
     if terms.classes:
@@ -549,54 +460,14 @@ def compile_data_constraints(
         row_fams.append(("DeprecatedProperties", p, s, _null,
                          p.isin(terms.depr_props)))
 
-    # ---- C23 InverseFunctionalPropertyUniqueness (462-471) ----------------
-    if terms.ifp:
-        shared = (
-            T.filter(p.isin(terms.ifp))
-            .groupBy("p", "o").agg(F.countDistinct("s").alias("n"))
-            .filter(F.col("n") > 1)
-        )
-        branch(_v(shared, "InverseFunctionalPropertyUniqueness", p, o),
-               "InverseFunctionalPropertyUniqueness")
-
-    # ---- C24 FunctionalProperty (473-482): maxCount 1 per subject ---------
-    if terms.fp:
-        multi = (
-            T.filter(p.isin(terms.fp))
-            .groupBy("p", "s").agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1)
-        )
-        branch(_v(multi, "FunctionalProperty", p, s), "FunctionalProperty")
-
-    # ---- C25 AsymmetricProperty (484-493): pair-swap semi self-join -------
-    if terms.asym:
-        R = T.filter(p.isin(terms.asym)).select("p", "s", "o")
-        Rswap = R.select(F.col("p").alias("p2"), F.col("o").alias("s2"),
-                         F.col("s").alias("o2"))
-        mutual = R.join(
-            Rswap,
-            (R.p == Rswap.p2) & (R.s == Rswap.s2) & (R.o == Rswap.o2),
-            "semi",
-        )
-        branch(_v(mutual, "AsymmetricProperty", p, s, o), "AsymmetricProperty")
-
     # ---- C31 IrreflexiveProperty (573-579): s==o loops ---------------------
     if terms.irr:
         row_fams.append(("IrreflexiveProperty", p, s, _null,
                          p.isin(terms.irr) & (s == o)))
 
-    # ---- C26/C27 CorrectDomain (495-509) -----------------------------------
-    dom_class = [t for t in terms.dom_terms if t.domain != OWL_THING]
-    if dom_class:
-        dom_df = spark.createDataFrame(
-            [(t.term, t.domain) for t in dom_class], ["p", "domain"])
-        subj_prop = T.join(F.broadcast(dom_df), "p").select("p", "s", "domain").distinct()
-        typed_as = typing_ext.withColumnsRenamed({"o": "domain"})
-        bad_dom = subj_prop.join(typed_as, ["s", "domain"], "left_anti")
-        branch(_v(bad_dom, "CorrectDomain", p, s), "CorrectDomain")
-
-    # ---- C28/C29/C30/C32 CorrectRange + MalformedLiteral (511-590) --------
-    # routed by term kind in _select_terms
+    # ---- C28/C30/C32 CorrectRange + MalformedLiteral (511-590) ------------
+    # routed by term kind in _select_terms; the sh:class ranges (C29) are
+    # retractable and live in the state tier
     if terms.rng_dt:
         # per-row range lookup as a chained CASE instead of a broadcast
         # join — the dt-prop list is TBox-small, and CASE keeps the branch
@@ -635,23 +506,201 @@ def compile_data_constraints(
         bi_terms = sorted(t.term for t in terms.rng_nk_bi)
         row_fams.append(("CorrectRange", p, s, o,
                          p.isin(bi_terms) & (F.col("o_kind") == "literal")))
-    if terms.rng_cls:
-        cls_rng_df = spark.createDataFrame(
-            [(t.term, t.range) for t in terms.rng_cls], ["p", "range"])
-        vals_c = T.join(F.broadcast(cls_rng_df), "p").select("p", "s", "o", "range")
-        typed_obj = typing_ext.select(F.col("s").alias("o"), F.col("o").alias("range"))
-        bad_rng_cls = vals_c.join(typed_obj, ["o", "range"], "left_anti")
-        branch(_v(bad_rng_cls, "CorrectRange", p, s, o), "CorrectRange")
 
-    # ---- emit the fused single-scan parts ---------------------------------
+    out = [(fused_scan(T, row_fams), frozenset(f[0] for f in row_fams))]
+
+    # ---- C17 MisplacedProperties (352-361): prop IRI used as a class ------
+    # one row per distinct misplaced term of T
+    if terms.props:
+        prop_df = spark.createDataFrame([(t,) for t in terms.props], ["term"])
+        misplaced_p = (
+            T.filter(p == cfg.type_property).select(o.alias("term")).distinct()
+            .join(F.broadcast(prop_df), "term", "semi")
+        )
+        out.append((_v(misplaced_p, "MisplacedProperties", F.col("term"),
+                       F.col("term")), frozenset({"MisplacedProperties"})))
+    return out
+
+
+def state_aggregates(T: DataFrame, cfg: DQAConfig,
+                     terms: _Terms) -> dict[str, DataFrame]:
+    """The six aggregates of T the state tier reads, keyed by the
+    incremental state table each one is merged into:
+
+      subj_flags  (s, *SUBJECT_FLAGS)
+      ps_counts   (p, s, n)
+      cls_pairs   (cls, s)     typing
+      po_pairs    (p, o, s)    IFP props
+      dom_pairs   (p, s)       class-domain props
+      spo_pairs   (p, s, o)    class-range + asymmetric props
+
+    Batch passes them straight to state_violations; apply_delta merges a
+    delta's into the snapshots."""
+    p = F.col("p")
+    spo = sorted({t.term for t in terms.rng_cls} | set(terms.asym))
+    return {
+        "subj_flags": subject_flags(T, cfg),
+        "ps_counts": T.groupBy("p", "s").agg(F.count("*").alias("n")),
+        "cls_pairs": T.filter(p == cfg.type_property)
+                      .select(F.col("o").alias("cls"), "s"),
+        "po_pairs": T.filter(p.isin(terms.ifp)).select("p", "o", "s"),
+        "dom_pairs": T.filter(p.isin([t.term for t in terms.dom_cls]))
+                      .select("p", "s").distinct(),
+        "spo_pairs": T.filter(p.isin(spo)).select("p", "s", "o").distinct(),
+    }
+
+
+def state_violations(
+    dims: dict[str, DataFrame],
+    terms: _Terms,
+    cfg: DQAConfig,
+    subclass_pairs: list[tuple[str, str]] | None = None,
+) -> list[Branch]:
+    """The state tier: every family a later triple can create or retract,
+    evaluated over the six state_aggregates DataFrames in ``dims`` — never
+    over triples. ``subclass_pairs`` is the transitive (descendant,
+    ancestor) rdfs:subClassOf closure (see compile_data_constraints)."""
+    spark = dims["cls_pairs"].sparkSession
+    p, s, o = F.col("p"), F.col("s"), F.col("o")
+    # entity-scoped families C2-C6/C8-C13/C15: one fused scan of the
+    # per-subject flags
     flag_fams = flag_families(cfg)
-    parts.append(fused_scan(subj, flag_fams))
-    part_metrics.append(frozenset(f[0] for f in flag_fams))
-    parts.append(fused_scan(T, row_fams))
-    part_metrics.append(frozenset(f[0] for f in row_fams))
+    out = [(fused_scan(dims["subj_flags"], flag_fams),
+            frozenset(f[0] for f in flag_fams))]
 
+    def branch(df: DataFrame, metric: str, item: Column, focus: Column,
+               value: Column | None = None) -> None:
+        out.append((_v(df, metric, item, focus, value), frozenset({metric})))
+
+    # ---- C24 FunctionalProperty (473-482): maxCount 1 per subject ---------
+    # the p IN filter is pushed below the (p, s) count
+    if terms.fp:
+        branch(dims["ps_counts"].filter(p.isin(terms.fp) & (F.col("n") > 1)),
+               "FunctionalProperty", p, s)
+
+    # ---- C23 InverseFunctionalPropertyUniqueness (462-471) ----------------
+    if terms.ifp:
+        shared = (
+            dims["po_pairs"].filter(p.isin(terms.ifp))
+            .groupBy("p", "o").agg(F.countDistinct("s").alias("n"))
+            .filter(F.col("n") > 1)
+        )
+        branch(shared, "InverseFunctionalPropertyUniqueness", p, o)
+
+    # sh:class semantics: SHACL instance = typed as the class OR any
+    # rdfs:subClassOf descendant — extend typing through the closure dim
+    # (broadcast join; the closure is TBox-small)
+    cls = dims["cls_pairs"]
+    typed = cls.select("s", F.col("cls").alias("o"))
+    if subclass_pairs:
+        closure = spark.createDataFrame(subclass_pairs, ["o", "anc"])
+        typed = typed.unionByName(
+            typed.join(F.broadcast(closure), "o").select("s", F.col("anc").alias("o"))
+        ).distinct()
+
+    # ---- C26 CorrectDomain (495-509): (p, s) pairs without a matching
+    # (s, domain) typing row; owl:Thing domains (C27) never violate
+    if terms.dom_cls:
+        dom_df = spark.createDataFrame(
+            [(t.term, t.domain) for t in terms.dom_cls], ["p", "domain"])
+        subj_prop = dims["dom_pairs"].join(F.broadcast(dom_df), "p")
+        typed_as = typed.withColumnsRenamed({"o": "domain"})
+        branch(subj_prop.join(typed_as, ["s", "domain"], "left_anti"),
+               "CorrectDomain", p, s)
+
+    # ---- C29 CorrectRange (class, 511-590): (p, s, o) whose object lacks
+    # the range typing
+    if terms.rng_cls:
+        rng_df = spark.createDataFrame(
+            [(t.term, t.range) for t in terms.rng_cls], ["p", "range"])
+        vals_c = dims["spo_pairs"].join(F.broadcast(rng_df), "p")
+        typed_obj = typed.select(F.col("s").alias("o"), F.col("o").alias("range"))
+        branch(vals_c.join(typed_obj, ["o", "range"], "left_anti"),
+               "CorrectRange", p, s, o)
+
+    # ---- C25 AsymmetricProperty (484-493): pair-swap semi self-join -------
+    if terms.asym:
+        R = dims["spo_pairs"].filter(p.isin(terms.asym))
+        Rswap = R.select(F.col("p").alias("p2"), F.col("o").alias("s2"),
+                         F.col("s").alias("o2"))
+        mutual = R.join(
+            Rswap,
+            (R.p == Rswap.p2) & (R.s == Rswap.s2) & (R.o == Rswap.o2),
+            "semi",
+        )
+        branch(mutual, "AsymmetricProperty", p, s, o)
+
+    # ---- C16 EntitiesDisjointClasses (342-350): directed pairs whose first
+    # class has a direct instance; sh:targetClass / sh:class follow the
+    # closure typing
+    if terms.dpairs:
+        pair_df = spark.createDataFrame(terms.dpairs, ["class_a", "class_b"]).join(
+            cls.select(F.col("cls").alias("class_a")), "class_a", "semi")
+        ta = typed.withColumnsRenamed({"o": "class_a"})
+        tb = typed.withColumnsRenamed({"o": "class_b"})
+        both = ta.join(tb, "s").join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
+        branch(both, "EntitiesDisjointClasses",
+               F.concat_ws("|", "class_a", "class_b"), s)
+
+    # ---- C7 SchemaCompletenessClassUsage (template:134-154) ---------------
+    # Per vocab class: >=1 instance that is not the NamedIndividual IRI.
+    # ONE job for all classes: classes-with-real-instances, anti-joined.
+    if terms.classes:
+        cls_df = spark.createDataFrame([(c,) for c in terms.classes], ["cls"])
+        # qualifying instance = one NOT typed owl:NamedIndividual (the
+        # NotNamedIndividualShape is a property shape on rdf:type —
+        # template:136-140)
+        ni_typed = cls.filter(F.col("cls") == OWL_NAMED_INDIVIDUAL).select("s").distinct()
+        with_instances = cls.join(ni_typed, "s", "left_anti").select("cls").distinct()
+        # hint the BUILD (right) side: a left-anti join can only broadcast
+        # its right input — with_instances is #distinct-classes small
+        missing = cls_df.join(F.broadcast(with_instances), "cls", "left_anti")
+        branch(missing, "SchemaCompletenessClassUsage",
+               F.col("cls"), F.col("cls"))
+    return out
+
+
+def union_branches(branches: list[Branch]) -> DataFrame:
+    return reduce(DataFrame.unionByName, [df for df, _ in branches])
+
+
+def compile_data_constraints(
+    T: DataFrame,
+    vocab_terms: list[VocabTerm],
+    disjoint_pairs: list[tuple[str, str]],
+    cfg: DQAConfig,
+    used_props: set[str] | None = None,
+    used_classes: set[str] | None = None,
+    subclass_pairs: list[tuple[str, str]] | None = None,
+) -> ConstraintPlan:
+    """Compile all data shapes: T folded as one delta into empty state,
+    i.e. row_violations(T) ∪ state_violations(state_aggregates(T)).
+    Returns the violations DF (lazy; caller caches before scoring) and the
+    instantiated shape list (data_shapes).
+
+    ``used_props``/``used_classes`` override the usage-pruning sets — the
+    reference prunes by the PRE-TBox-merge data profile
+    (shacl_shape_builder.py reads graph_profile) while shapes validate the
+    merged graph, so callers that merge pass the raw-graph sets here.
+    ``subclass_pairs`` is the transitive (descendant, ancestor) closure of
+    rdfs:subClassOf — sh:class in SHACL matches instances of subclasses,
+    so domain/range/disjoint checks extend the typing table through it."""
+    if used_props is None or used_classes is None:
+        # usage pruning inputs (tiny: O(#properties), O(#classes)) — ONE
+        # fused aggregation job for both sets, shared with the raw-graph
+        # pruning path so the usage semantics can never desynchronize
+        from shacl_dqa_prototype_spark.plans.vocab import raw_usage_sets
+
+        props_set, classes_set = raw_usage_sets(T, cfg.type_property)
+        used_props = props_set if used_props is None else used_props
+        used_classes = classes_set if used_classes is None else used_classes
+
+    terms = _select_terms(vocab_terms, disjoint_pairs, used_props, used_classes)
+    branches = row_violations(T, terms, cfg) + state_violations(
+        state_aggregates(T, cfg, terms), terms, cfg, subclass_pairs)
     return ConstraintPlan(
-        violations=reduce(DataFrame.unionByName, parts),
+        violations=union_branches(branches),
         shapes=data_shapes(vocab_terms, disjoint_pairs, cfg,
                            used_props, used_classes),
-        cached=[subj], parts=parts, part_metrics=part_metrics)
+        parts=[df for df, _ in branches],
+        part_metrics=[ms for _, ms in branches])

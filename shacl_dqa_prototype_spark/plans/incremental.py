@@ -2,64 +2,42 @@
 family across snapshot APPENDs, without rescanning old triples.
 
 At 100 TB a corpus grows by appends; re-running the whole DQA per append
-re-reads everything. Incremental coverage comes in TWO tiers that
-together cover all families — no family re-scans historical triples:
+re-reads everything. The constraint compiler (plans/constraints.py) writes
+each family once, in one of two tiers, and batch DQA is "fold T as one
+delta into empty state". This module keeps that state on disk:
 
-1. Mergeable state (classic incremental-view-maintenance aggregates) —
-   each merge is ONE co-partitioned shuffle of (delta-aggregate ∪ touched
-   state buckets), never a scan of historical triples:
-
-     subj_flags  (s, is_entity, is_exempt, has_label, has_ilp, has_desc,
-                  is_prolix, lbl_nolang, dsc_nolang)
-                 [constraints.subject_flags]     merge: groupBy(s) bool-max
-     ps_counts   (p, s, n)                       merge: groupBy(p,s) sum
-     cls_pairs   (cls, s)                        merge: union-distinct
-     po_pairs    (p, o, s)  [IFP props only]     merge: union-distinct
-     dom_pairs   (p, s)    [class-domain props]  merge: union-distinct
-     spo_pairs   (p, s, o) [class-range + asymmetric props]
-                                                 merge: union-distinct
+1. State tier — the six state_aggregates of each delta are merged into
+   one SnapshotTable each (STATE_MERGES: bool-max, sum or distinct), as
+   classic incremental-view-maintenance aggregates. Each merge is ONE
+   co-partitioned shuffle of (delta-aggregate ∪ touched state buckets),
+   never a scan of historical triples. dom_pairs is bucketed by s and
+   spo_pairs by o to co-partition with cls_pairs(s) for the CorrectDomain
+   / CorrectRange anti-joins.
 
    Commits are BUCKET-PRUNED (SnapshotTable.commit_merge_buckets): only
    the hash buckets the delta touches are rewritten; untouched buckets
    are carried by reference. Appending 1k triples to a 10⁹-subject state
    rewrites O(1k-rows-worth of buckets), not the whole table.
+   violations_from_state evaluates state_violations over the six reads.
 
-2. Append-monotone filter families (delta_monotone_violations): families
-   whose violations are decided per-triple against broadcast vocab dims —
-   Misuse/Misplaced/Deprecated/Irreflexive/CorrectRange(datatype+nodeKind)
-   /MalformedLiteral/UsageExternalURIEntities/SelfDescriptiveFormat-
-   Properties. A delta's violations are FINAL (no later triple can create
-   or retract them), so they are evaluated on the delta alone and
-   commit_append-ed to a violations log — zero state, zero rewrite.
+2. Row tier — row_violations of each delta are FINAL (no later triple can
+   create or retract them), so they are commit_append-ed to a violations
+   log (mono_violations) — zero state, zero rewrite.
 
-Derived EXACTLY from tier-1 state (parity asserted in
-tests/test_incremental.py):
-  * profile: num_triples / num_properties / triples_per_property (sums
-    over ps_counts), subjects_per_property (row counts), num_entities /
-    label/ilp coverage (subj_flags), entities_per_class (cls_pairs);
-  * entity-scoped families C2-C6/C8-C13/C15 (the batch compiler's
-    flag_families, one fused scan of subj_flags);
-  * C24 FunctionalProperty (ps_counts n > 1 for functional props);
-  * C23 IFP uniqueness (po_pairs grouped, >1 distinct subject);
-  * the RETRACTABLE anti-join families — a later type-triple can retract
-    their violations, so they can't be monotone, but the anti-join only
-    needs (pair-state, typing-state), both maintained:
-      C26 CorrectDomain(class)   dom_pairs anti-join cls_pairs on s
-      C29 CorrectRange(class)    spo_pairs anti-join cls_pairs on o
-      C25 AsymmetricProperty     spo_pairs self-join pair swap
-      C16 EntitiesDisjointClasses cls_pairs self-join on s
-      C7  SchemaCompletenessClassUsage  vocab classes anti-join cls_pairs
-    (dom_pairs is bucketed by s and spo_pairs by o to co-partition with
-    cls_pairs(s) for the anti-joins.)
+Both tiers take their property lists from the same term selection as
+batch, with nothing pruned by usage (_state_terms): a property or class
+unused so far simply matches no rows. The profile is derived from the
+same state (ps_counts, cls_pairs, subj_flags); parity with batch is
+asserted in tests/test_incremental.py.
 
 score_from_state re-scores the report from this state: the O(state) work
 (violation counts, one read per state dimension) runs as concurrent Spark
 jobs, everything O(#shapes) on the driver (scoring.score_rows).
 
-State emits violations per DISTINCT (item, focus[, value]) — duplicate
-raw triples don't produce duplicate violation rows the way a batch scan
-does. Scoring is unaffected (it distincts focus nodes), and the parity
-tests compare distinct sets.
+State emits violations per DISTINCT (item, focus[, value]) across deltas
+where a batch scan of duplicated raw triples would repeat a row. Scoring
+is unaffected (it distincts focus nodes), and the parity tests compare
+distinct sets.
 
 Input contract: apply_delta dedups WITHIN each delta (matching the batch
 path's dropDuplicates at read), but a triple RE-ASSERTED in a later
@@ -81,8 +59,8 @@ re-running the same delta (same scheme as the streaming sink's
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, replace
-from functools import reduce
+from dataclasses import dataclass
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,15 +73,16 @@ from pyspark.sql.types import (
 )
 
 from shacl_dqa_prototype_spark.plans.constraints import (
-    OWL_THING,
     SUBJECT_FLAGS,
     DQAConfig,
     VocabTerm,
-    compile_data_constraints,
+    _select_terms,
+    _Terms,
     data_shapes,
-    flag_families,
-    fused_scan,
-    subject_flags,
+    row_violations,
+    state_aggregates,
+    state_violations,
+    union_branches,
 )
 from shacl_dqa_prototype_spark.plans.scoring import (
     collect_concurrently,
@@ -112,7 +91,6 @@ from shacl_dqa_prototype_spark.plans.scoring import (
 )
 from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA, VIOLATIONS_SCHEMA
 from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
-from shacl_dqa_prototype_spark.functions.terms import OWL_NAMED_INDIVIDUAL, RDFS
 
 SUBJ_FLAGS_SCHEMA = StructType(
     [StructField("s", StringType(), False)]
@@ -142,53 +120,33 @@ SPO_PAIRS_SCHEMA = StructType([
     StructField("o", StringType(), False),
 ])
 
-# Families whose violations are decided per-triple against broadcast vocab
-# dims only — append-monotone: a delta's violations are final and complete.
-MONOTONE_METRICS = (
-    "UsageExternalURIEntities",
-    "SelfDescriptiveFormatProperties",
-    "MisplacedProperties",
-    "MisplacedClasses",
-    "MisuseOwlObjectProperties",
-    "MisuseOwlDatatypeProperties",
-    "DeprecatedClasses",
-    "DeprecatedProperties",
-    "IrreflexiveProperty",
-    "CorrectRange",
-    "MalformedLiteral",
-)
+# state table → (bucket column, merge of its touched buckets ∪ the delta's
+# state_aggregates row set)
+STATE_MERGES = {
+    "subj_flags": ("s", lambda df: df.groupBy("s").agg(
+        *[F.max(f).alias(f) for f in SUBJECT_FLAGS])),
+    "ps_counts": ("s", lambda df: df.groupBy("p", "s").agg(
+        F.sum("n").cast("long").alias("n"))),
+    "cls_pairs": ("s", DataFrame.distinct),
+    "po_pairs": ("o", DataFrame.distinct),
+    "dom_pairs": ("s", DataFrame.distinct),
+    "spo_pairs": ("o", DataFrame.distinct),
+}
 
 
-def _dom_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
-    """prop → class domain, for the props whose CorrectDomain branch is the
-    sh:class anti-join (constraints.py dom_class routing; owl:Thing domains
-    are the vacuous nodeKind shape — no violations, no state)."""
-    return {t.term: t.domain for t in vocab_terms
-            if t.term_kind != "class" and t.domain and not t.deprecated
-            and t.domain != OWL_THING}
-
-
-def _rng_class_props(vocab_terms: list[VocabTerm]) -> dict[str, str]:
-    """prop → class range, for the props whose CorrectRange branch is the
-    sh:class anti-join — same per-term-kind routing as the batch compiler
-    (object_property: Thing/Resource → nodeKind, monotone tier;
-    rdf_property: class-kind range ALWAYS sh:class, reference parity)."""
-    out = {}
-    for t in vocab_terms:
-        if t.term_kind == "class" or not t.range or t.deprecated:
-            continue
-        if (t.term_kind == "object_property"
-                and t.range not in (OWL_THING, f"{RDFS}Resource")):
-            out[t.term] = t.range
-        elif t.term_kind == "rdf_property" and t.range_kind != "literal":
-            out[t.term] = t.range
-    return out
-
-
-def _asym_props(vocab_terms: list[VocabTerm]) -> list[str]:
-    # batch parity: asymmetric harvesting does NOT exclude deprecated
-    return [t.term for t in vocab_terms
-            if t.term_kind != "class" and t.asymmetric]
+def _state_terms(vocab_terms: list[VocabTerm],
+                 disjoint_pairs: list[tuple[str, str]] | None = None) -> _Terms:
+    """The term selection both tiers read on state: every vocabulary
+    property and every disjoint class counts as used — a term unused so
+    far matches no triple and no state row, and pruning by usage would need
+    a profile job per delta. The disjoint pairs are still pruned to those
+    whose first class has a direct instance, by a semi-join in
+    state_violations."""
+    disjoint_pairs = disjoint_pairs or []
+    return _select_terms(
+        vocab_terms, disjoint_pairs,
+        used_props={t.term for t in vocab_terms if t.term_kind != "class"},
+        used_classes={c for pair in disjoint_pairs for c in pair})
 
 
 @dataclass
@@ -266,50 +224,6 @@ class IncrementalDQAState:
         return deleted
 
 
-def delta_monotone_violations(
-    delta: DataFrame, vocab_terms: list[VocabTerm], cfg: DQAConfig,
-) -> DataFrame:
-    """Violations of the append-monotone families for ONE delta batch.
-
-    Reuses the batch compiler on the delta so the per-triple predicates
-    (incl. the CorrectRange datatype/lexical-form logic) cannot drift from
-    batch semantics, with two adjustments that make the evaluation
-    delta-safe:
-      * class-kind range info is stripped from object/rdf-property terms —
-        the sh:class range branch is an anti-join against the FULL typing
-        table and is NOT monotone (a later type-triple retracts the
-        violation), so those stay with the batch re-evaluation tier;
-      * usage pruning is bypassed (used_props = all vocab props): a prop
-        unused in this delta simply matches no triples, and pruning by
-        delta-local usage would need a profile job per append.
-    The surviving branches are pure per-triple filters against broadcast
-    dims, so union-over-deltas == batch-over-union (asserted in
-    tests/test_incremental.py)."""
-    safe = []
-    for t in vocab_terms:
-        nonmono_range = t.range is not None and (
-            (t.term_kind == "object_property"
-             and t.range not in (OWL_THING, f"{RDFS}Resource"))
-            or (t.term_kind == "rdf_property" and t.range_kind != "literal")
-        )
-        safe.append(replace(t, range=None, range_kind=None)
-                    if nonmono_range else t)
-    plan = compile_data_constraints(
-        delta, safe, [], cfg,
-        used_props={t.term for t in safe if t.term_kind != "class"},
-        used_classes=set(),
-    )
-    # violations_for unions ONLY the branches that can emit monotone
-    # metrics — the per-subject flags aggregation and the anti-join
-    # branches are never executed for a delta. Unpersist the plan's
-    # never-materialized caches immediately: compile registers the subj
-    # aggregate with the CacheManager eagerly, and a long-running
-    # streaming job would otherwise leak one entry per microbatch.
-    out = plan.violations_for(MONOTONE_METRICS)
-    plan.unpersist()
-    return out
-
-
 def _changed_buckets(df: DataFrame, key: str, n_buckets: int) -> list[int]:
     """Distinct hash buckets the delta aggregate touches (≤ n_buckets rows
     collected — same bucket expression SnapshotTable._write_data uses)."""
@@ -334,9 +248,9 @@ def apply_delta(
     Each mergeable state table gets ONE bucket-pruned merge snapshot =
     merge(touched state buckets, delta aggregate); untouched buckets are
     carried by reference — the parquet write is O(|touched buckets|), not
-    O(|state|). The monotone-family violations of the delta are appended
-    to the violations log (append-only, no merge at all). Historical
-    triples are never re-read.
+    O(|state|). The row-tier violations of the delta are appended to the
+    violations log (append-only, no merge at all). Historical triples are
+    never re-read.
 
     The seven table folds are mutually INDEPENDENT (disjoint state dirs
     and logs, all reading the one persisted delta), so they are submitted
@@ -364,116 +278,27 @@ def apply_delta(
             or delta_id in (s.get("applied_delta_ids") or ())
             for s in table.snapshots())
 
-    def _fold_flags() -> None:
-        # subj_flags: bool-max merge, bucketed by s so successive merges
-        # and downstream per-subject work share the layout
-        if _already(state.subj_flags):
+    def _fold(name: str, agg: DataFrame) -> None:
+        # merge(touched state buckets, delta aggregate), bucket-pruned; a
+        # delta that touches no bucket commits nothing
+        table = getattr(state, name)
+        if _already(table):
             return
-        d_flags = subject_flags(delta, cfg)
-        bs = _changed_buckets(d_flags, "s", n_buckets)
-        merged_flags = (
-            state.subj_flags.read_buckets(bs)
-            .unionByName(d_flags)
-            .groupBy("s")
-            .agg(*[F.max(f).alias(f) for f in SUBJECT_FLAGS])
-        )
-        state.subj_flags.commit_merge_buckets(
-            merged_flags, bs, bucket_col="s", n_buckets=n_buckets,
-            extra=extra)
-
-    def _fold_ps() -> None:
-        if _already(state.ps_counts):
-            return
-        d_ps = delta.groupBy("p", "s").agg(F.count("*").alias("n"))
-        bs = _changed_buckets(d_ps, "s", n_buckets)
-        merged_ps = (
-            state.ps_counts.read_buckets(bs)
-            .unionByName(d_ps)
-            .groupBy("p", "s").agg(F.sum("n").cast("long").alias("n"))
-        )
-        state.ps_counts.commit_merge_buckets(
-            merged_ps, bs, bucket_col="s", n_buckets=n_buckets, extra=extra)
-
-    def _fold_cls() -> None:
-        if _already(state.cls_pairs):
-            return
-        d_cls = (delta.filter(F.col("p") == cfg.type_property)
-                 .select(F.col("o").alias("cls"), "s"))
-        bs = _changed_buckets(d_cls, "s", n_buckets)
+        bucket_col, merge = STATE_MERGES[name]
+        bs = _changed_buckets(agg, bucket_col, n_buckets)
         if bs:
-            merged_cls = (
-                state.cls_pairs.read_buckets(bs)
-                .unionByName(d_cls).distinct()
-            )
-            state.cls_pairs.commit_merge_buckets(
-                merged_cls, bs, bucket_col="s", n_buckets=n_buckets,
-                extra=extra)
-
-    def _fold_po() -> None:
-        ifp = [t.term for t in vocab_terms
-               if t.inverse_functional and not t.deprecated]
-        if _already(state.po_pairs):
-            return
-        d_po = delta.filter(F.col("p").isin(ifp)).select("p", "o", "s")
-        bs = _changed_buckets(d_po, "o", n_buckets)
-        if bs:
-            merged_po = (
-                state.po_pairs.read_buckets(bs)
-                .unionByName(d_po).distinct()
-            )
-            state.po_pairs.commit_merge_buckets(
-                merged_po, bs, bucket_col="o", n_buckets=n_buckets,
-                extra=extra)
-
-    def _fold_dom() -> None:
-        # (p, s) pairs of class-domain props — CorrectDomain anti-joins
-        # them against cls_pairs; bucketed by s so that join co-partitions
-        dom_props = sorted(_dom_class_props(vocab_terms))
-        if not dom_props or _already(state.dom_pairs):
-            return
-        d_dom = (delta.filter(F.col("p").isin(dom_props))
-                 .select("p", "s").distinct())
-        bs = _changed_buckets(d_dom, "s", n_buckets)
-        if bs:
-            merged_dom = (
-                state.dom_pairs.read_buckets(bs)
-                .unionByName(d_dom).distinct()
-            )
-            state.dom_pairs.commit_merge_buckets(
-                merged_dom, bs, bucket_col="s", n_buckets=n_buckets,
-                extra=extra)
-
-    def _fold_spo() -> None:
-        # (p, s, o) pairs of class-range + asymmetric props — range
-        # anti-joins on o against cls_pairs (hence bucketed by o);
-        # asymmetric self-joins within the (small) per-prop slice
-        spo_props = sorted(set(_rng_class_props(vocab_terms))
-                           | set(_asym_props(vocab_terms)))
-        if not spo_props or _already(state.spo_pairs):
-            return
-        d_spo = (delta.filter(F.col("p").isin(spo_props))
-                 .select("p", "s", "o").distinct())
-        bs = _changed_buckets(d_spo, "o", n_buckets)
-        if bs:
-            merged_spo = (
-                state.spo_pairs.read_buckets(bs)
-                .unionByName(d_spo).distinct()
-            )
-            state.spo_pairs.commit_merge_buckets(
-                merged_spo, bs, bucket_col="o", n_buckets=n_buckets,
-                extra=extra)
+            table.commit_merge_buckets(
+                merge(table.read_buckets(bs).unionByName(agg)), bs,
+                bucket_col=bucket_col, n_buckets=n_buckets, extra=extra)
 
     def _fold_mono() -> None:
-        # monotone families: violations of THIS delta are final — plain
-        # append, nothing merged, nothing rewritten
+        # row tier: violations of THIS delta are final — plain append,
+        # nothing merged, nothing rewritten
         if _already(state.mono_violations):
             return
         state.mono_violations.commit_append(
-            delta_monotone_violations(delta, vocab_terms, cfg),
-            extra=extra)
+            union_branches(row_violations(delta, terms, cfg)), extra=extra)
 
-    folds = (_fold_flags, _fold_ps, _fold_cls, _fold_po, _fold_dom,
-             _fold_spo, _fold_mono)
     # RDF is SET-semantic and the batch path dropDuplicates() the triple
     # table at read (main.py) — a duplicate triple WITHIN one delta must
     # not inflate the sum-merged ps_counts (false FunctionalProperty
@@ -481,6 +306,9 @@ def apply_delta(
     # the batch semantics. Re-assertion ACROSS deltas remains the caller's
     # contract (see module docstring): deltas carry set-new triples.
     delta = delta.dropDuplicates().persist()
+    terms = _state_terms(vocab_terms)
+    folds = [partial(_fold, name, agg) for name, agg
+             in state_aggregates(delta, cfg, terms).items()] + [_fold_mono]
     try:
         # materialize the shared input ONCE so concurrent folds read the
         # cache instead of racing to compute the same partitions
@@ -553,121 +381,19 @@ def violations_from_state(
     disjoint_pairs: list[tuple[str, str]] | None = None,
     subclass_pairs: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """Violations for ALL constraint families from state + the monotone
-    log, same (metric, item, focus, value) shape as
-    compile_data_constraints emits (rows per distinct item/focus — see
-    module docstring). ``disjoint_pairs``/``subclass_pairs`` mirror the
-    batch compiler's arguments.
+    """Violations for ALL constraint families: state_violations over the
+    six state reads ∪ the row-tier log, same (metric, item, focus, value)
+    shape as compile_data_constraints emits (rows per distinct item/focus
+    — see module docstring). ``disjoint_pairs``/``subclass_pairs`` mirror
+    the batch compiler's arguments.
 
-    Builds a plan only; no job runs until the result is evaluated. The
-    batch compiler's usage pruning needs no collect here: the pair states
-    hold pairs of used properties only, so pruning the class-domain,
-    class-range and asymmetric branches by usage changes nothing, and the
-    disjoint pairs are pruned by a semi-join with the typed classes."""
-    spark = state.subj_flags.spark
-    # entity-scoped families C2-C6/C8-C13/C15: the batch compiler's flag
-    # families, in one fused scan of subj_flags
-    parts = [fused_scan(state.subj_flags.read(), flag_families(cfg))]
-
-    def _v(df, metric, item_col, focus_col, value_col=None):
-        parts.append(df.select(
-            F.lit(metric).alias("metric"),
-            F.col(item_col).alias("item"),
-            F.col(focus_col).alias("focus"),
-            (F.col(value_col) if value_col
-             else F.lit(None).cast("string")).alias("value")))
-
-    fp = sorted(t.term for t in vocab_terms if t.functional and not t.deprecated)
-    if fp:
-        multi = state.ps_counts.read().filter(
-            F.col("p").isin(fp) & (F.col("n") > 1))
-        _v(multi, "FunctionalProperty", "p", "s")
-
-    ifp = sorted(t.term for t in vocab_terms
-                 if t.inverse_functional and not t.deprecated)
-    if ifp:
-        shared = (
-            state.po_pairs.read().filter(F.col("p").isin(ifp))
-            .groupBy("p", "o").agg(F.countDistinct("s").alias("ns"))
-            .filter(F.col("ns") > 1)
-        )
-        _v(shared, "InverseFunctionalPropertyUniqueness", "p", "o")
-
-    # ---- retractable anti-join families: state ⋈ state, no triple scan ----
-    cls = state.cls_pairs.read()
-    # typing extended through the rdfs:subClassOf closure (broadcast dim)
-    typed = cls.select("s", F.col("cls").alias("o"))
-    if subclass_pairs:
-        closure = spark.createDataFrame(subclass_pairs, ["o", "anc"])
-        typed = typed.unionByName(
-            typed.join(F.broadcast(closure), "o")
-            .select("s", F.col("anc").alias("o"))
-        ).distinct()
-
-    # C26 CorrectDomain(class): dom_pairs without a matching (s, domain)
-    # typing row — both sides bucketed by s
-    dom = _dom_class_props(vocab_terms)
-    if dom:
-        dom_df = spark.createDataFrame(list(dom.items()), ["p", "domain"])
-        subj_prop = state.dom_pairs.read().join(F.broadcast(dom_df), "p")
-        typed_as = typed.withColumnsRenamed({"o": "domain"})
-        _v(subj_prop.join(typed_as, ["s", "domain"], "left_anti"),
-           "CorrectDomain", "p", "s")
-
-    # C29 CorrectRange(class): spo_pairs whose object lacks the range
-    # typing — spo_pairs bucketed by o to co-partition with cls_pairs(s)
-    rng = _rng_class_props(vocab_terms)
-    if rng:
-        rng_df = spark.createDataFrame(list(rng.items()), ["p", "range"])
-        vals_c = state.spo_pairs.read().join(F.broadcast(rng_df), "p")
-        typed_obj = typed.select(F.col("s").alias("o"),
-                                 F.col("o").alias("range"))
-        _v(vals_c.join(typed_obj, ["o", "range"], "left_anti"),
-           "CorrectRange", "p", "s", "o")
-
-    # C25 AsymmetricProperty: pair-swap semi self-join within state
-    asym = sorted(_asym_props(vocab_terms))
-    if asym:
-        R = state.spo_pairs.read().filter(F.col("p").isin(asym))
-        Rswap = R.select(F.col("p").alias("p2"), F.col("o").alias("s2"),
-                         F.col("s").alias("o2"))
-        mutual = R.join(
-            Rswap,
-            (R.p == Rswap.p2) & (R.s == Rswap.s2) & (R.o == Rswap.o2),
-            "semi")
-        _v(mutual, "AsymmetricProperty", "p", "s", "o")
-
-    # C16 EntitiesDisjointClasses: directed pairs over the typing state,
-    # pruned (as the batch compiler) to pairs whose first class has a
-    # direct instance
-    if disjoint_pairs:
-        directed = sorted(set(disjoint_pairs)
-                          | {(b, a) for (a, b) in disjoint_pairs})
-        pair_df = spark.createDataFrame(directed, ["class_a", "class_b"]).join(
-            cls.select(F.col("cls").alias("class_a")), "class_a", "semi")
-        ta = typed.withColumnsRenamed({"o": "class_a"})
-        tb = typed.withColumnsRenamed({"o": "class_b"})
-        both = (ta.join(tb, "s")
-                .join(F.broadcast(pair_df), ["class_a", "class_b"], "semi")
-                .withColumn("pair", F.concat_ws("|", "class_a", "class_b")))
-        _v(both, "EntitiesDisjointClasses", "pair", "s")
-
-    # C7 SchemaCompletenessClassUsage: vocab classes with no instance that
-    # isn't typed owl:NamedIndividual
-    vclasses = [t.term for t in vocab_terms
-                if t.term_kind == "class" and not t.deprecated]
-    if vclasses:
-        cls_df = spark.createDataFrame([(c,) for c in vclasses], ["cls"])
-        ni = cls.filter(F.col("cls") == OWL_NAMED_INDIVIDUAL) \
-                .select("s").distinct()
-        with_instances = (cls.join(ni, "s", "left_anti")
-                          .select("cls").distinct())
-        missing = cls_df.join(F.broadcast(with_instances), "cls", "left_anti")
-        _v(missing, "SchemaCompletenessClassUsage", "cls", "cls")
-
-    # monotone families come straight off the append-only log. Per-triple
-    # rows are naturally disjoint across deltas; MisplacedProperties emits
-    # one row per DISTINCT misplaced term per delta, so it alone needs a
+    Builds a plan only; no job runs until the result is evaluated."""
+    dims = {name: getattr(state, name).read() for name in STATE_MERGES}
+    parts = [df for df, _ in state_violations(
+        dims, _state_terms(vocab_terms, disjoint_pairs), cfg, subclass_pairs)]
+    # row-tier rows come straight off the append-only log. Per-triple rows
+    # are naturally disjoint across deltas; MisplacedProperties emits one
+    # row per DISTINCT misplaced term per delta, so it alone needs a
     # distinct to match batch row semantics.
     mono = state.mono_violations.read()
     parts.append(mono.filter(F.col("metric") != "MisplacedProperties"))
@@ -707,6 +433,7 @@ def score_from_state(
     spp, epc = dict(map(tuple, props)), dict(map(tuple, classes))
     shapes = data_shapes(vocab_terms, disjoint_pairs or [], cfg,
                          set(spp), set(epc))
-    rows = score_rows(shapes, counts, ent["num_entities"] or 0, spp, epc,
-                      target="data")
+    rows = score_rows(shapes, counts, {
+        "entities": ent["num_entities"] or 0,
+        "subjects_per_property": spp, "entities_per_class": epc})
     return state.subj_flags.spark.createDataFrame(rows, REPORT_SCHEMA)

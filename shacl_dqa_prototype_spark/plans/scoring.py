@@ -127,9 +127,7 @@ def collect_concurrently(*dfs: DataFrame) -> list[list[Row]]:
 def score_rows(
     shapes: list[ShapeSpec],
     counts: list[tuple],
-    num_entities: int,
-    subjects_per_property: dict[str, int],
-    entities_per_class: dict[str, int],
+    denominators: dict[str, int | dict[str, int]],
     target: str = "data",
 ) -> list[tuple]:
     """The report rows (REPORT_SCHEMA order) for ``shapes``: one per shape,
@@ -137,11 +135,11 @@ def score_rows(
 
     ``counts`` holds the collected violation_counts rows as (metric, item,
     num_violations, violations); a shape without a row has no violations.
-    The denominator of a count metric is ``num_entities`` or the shape's
-    denom_key looked up in the per-property / per-class dims."""
+    ``denominators`` maps a shape's denom family to the denominator of its
+    count metric: a number (entities, vocab_classes, vocab_properties) or
+    a dict the shape's denom_key is looked up in (subjects_per_property,
+    entities_per_class)."""
     found = {(m, i): (n, v) for m, i, n, v in counts}
-    dims = {"subjects_per_property": subjects_per_property,
-            "entities_per_class": entities_per_class}
     rows = []
     for sp in shapes:
         n, sample = found.get((sp.metric, sp.item), (0, None))
@@ -158,8 +156,9 @@ def score_rows(
             # mirroring the reference (utils.py:869-871 reads the same
             # profile dict and defaults a missing class to 1, flooring the
             # measure to 0). A missing or zero denominator floors to 0.0.
-            denom = (num_entities if sp.denom == "entities"
-                     else dims.get(sp.denom, {}).get(sp.denom_key))
+            denom = denominators.get(sp.denom)
+            if isinstance(denom, dict):
+                denom = denom.get(sp.denom_key)
             measure = max(0.0, 1.0 - n / denom) if denom else 0.0
         rows.append((target, DIMENSIONS.get(sp.metric), sp.metric, sp.item,
                      "binary" if sp.denom == "binary" else "ratio",
@@ -194,6 +193,8 @@ def score_plan(
         violation_counts(plan.violations),
         profile.subjects_per_property.select("p", "num_subjects"),
         profile.entities_per_class.select("cls", "num_instances"))
-    rows = score_rows(plan.shapes, counts, profile.num_entities,
-                      dict(map(tuple, spp)), dict(map(tuple, epc)), target)
+    rows = score_rows(plan.shapes, counts, {
+        "entities": profile.num_entities,
+        "subjects_per_property": dict(map(tuple, spp)),
+        "entities_per_class": dict(map(tuple, epc))}, target)
     return spark.createDataFrame(rows, REPORT_SCHEMA)

@@ -12,14 +12,14 @@ from the data profile.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from shacl_dqa_prototype_spark.plans.constraints import (
     ConstraintPlan,
     ShapeSpec,
     VocabTerm,
 )
-from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
+from shacl_dqa_prototype_spark.plans.scoring import score_rows
+from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA, VIOLATIONS_SCHEMA
 
 
 def compile_vocab_constraints(
@@ -72,12 +72,8 @@ def compile_vocab_constraints(
             rows.append(("UndefinedProperty", p, p, None))
         shapes.append(ShapeSpec("UndefinedProperty", p, "binary"))
 
-    violations = (
-        spark.createDataFrame(rows, VIOLATIONS_SCHEMA)
-        if rows
-        else spark.createDataFrame([], VIOLATIONS_SCHEMA)
-    )
-    return ConstraintPlan(violations=violations, shapes=shapes)
+    return ConstraintPlan(
+        violations=spark.createDataFrame(rows, VIOLATIONS_SCHEMA), shapes=shapes)
 
 
 def score_vocab_plan(
@@ -87,71 +83,18 @@ def score_vocab_plan(
     n_classes: int,
     n_properties: int,
 ) -> DataFrame:
-    """Vocab-shape scoring: LabelFor* are ratios over term counts; the
-    Undefined* families are binary per term + meta rollups."""
-    from shacl_dqa_prototype_spark.plans.scoring import DIMENSIONS
-
-    per = plan.violations.groupBy("metric", "item").agg(
-        F.countDistinct("focus").alias("num_violations"),
-        F.concat_ws("; ", F.array_sort(F.collect_set("focus"))).alias("violations"),
-    )
-    shapes_df = spark.createDataFrame(
-        [(s.metric, s.item, s.denom) for s in plan.shapes],
-        "metric string, item string, denom string",
-    )
-    joined = (
-        shapes_df.alias("sp")
-        .join(
-            per.alias("pv"),
-            (F.col("sp.metric") == F.col("pv.metric"))
-            & F.col("sp.item").eqNullSafe(F.col("pv.item")),
-            "left",
-        )
-        .select("sp.*", "pv.num_violations", "pv.violations")
-        .fillna({"num_violations": 0})
-    )
-    denominator = (
-        F.when(F.col("denom") == "vocab_classes", F.lit(n_classes))
-        .when(F.col("denom") == "vocab_properties", F.lit(n_properties))
-    )
-    measure = (
-        F.when(F.col("denom") == "binary",
-               (F.col("num_violations") == 0).cast("double"))
-        # zero violations → 1.0 even with an empty denominator family
-        # (greatest() would swallow the NULL ratio into 0.0 otherwise)
-        .when(F.col("num_violations") == 0, F.lit(1.0))
-        .otherwise(
-            F.greatest(F.lit(0.0),
-                       1.0 - F.col("num_violations") / F.nullif(denominator, F.lit(0)))
-        )
-    )
-    dim_expr = F.lit(None).cast("string")
-    for metric, dim in DIMENSIONS.items():
-        dim_expr = F.when(F.col("metric") == metric, F.lit(dim)).otherwise(dim_expr)
-
-    base = joined.select(
-        F.lit(f"vocab:{vocab}").alias("target"),
-        dim_expr.alias("dimension"),
-        "metric",
-        "item",
-        F.when(F.col("denom") == "binary", "binary").otherwise("ratio").alias("score_kind"),
-        F.coalesce(measure, F.lit(1.0)).alias("measure"),
-        F.col("num_violations").cast("long").alias("num_violations"),
-        "violations",
-    )
-    meta = (
-        base.filter(F.col("item").isNotNull())
-        .groupBy("target", "dimension", "metric")
-        .agg(
-            F.avg((F.col("measure") == 1.0).cast("double")).alias("measure"),
-            F.sum("num_violations").cast("long").alias("num_violations"),
-        )
-        .select(
-            "target", "dimension", "metric",
-            F.lit(None).cast("string").alias("item"),
-            F.lit("meta").alias("score_kind"),
-            "measure", "num_violations",
-            F.lit(None).cast("string").alias("violations"),
-        )
-    )
-    return base.unionByName(meta)
+    """Vocab-shape scoring through the shared score rule (score_rows):
+    LabelFor* are ratios over the vocab's class/property count; the
+    Undefined* families are binary per term + meta rollups. The violations
+    are a local relation of rows built in Python, so their per-shape counts
+    are taken in Python too; the sample lists every distinct focus node
+    (no cap)."""
+    foci: dict[tuple, set[str]] = {}
+    for metric, item, focus, _ in plan.violations.collect():
+        foci.setdefault((metric, item), set()).add(focus)
+    counts = [(m, i, len(fs), "; ".join(sorted(fs)))
+              for (m, i), fs in foci.items()]
+    rows = score_rows(plan.shapes, counts, {"vocab_classes": n_classes,
+                                            "vocab_properties": n_properties},
+                      target=f"vocab:{vocab}")
+    return spark.createDataFrame(rows, REPORT_SCHEMA)

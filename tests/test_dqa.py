@@ -281,6 +281,66 @@ def test_vocab_scoring_empty_denominator(spark):
     assert rows[("UndefinedClass", CLASS_A)] == 1.0
 
 
+def test_vocab_scoring_hand_computed(spark):
+    """Every report row of two vocabularies against hand-computed values:
+    LabelFor* ratios (one with n_classes=0), Undefined* binary rows, their
+    meta rollups, and the '; '-joined samples, which are not capped."""
+    from shacl_dqa_prototype_spark.plans.vocab_shapes import (
+        compile_vocab_constraints,
+        score_vocab_plan,
+    )
+
+    V = "urn:v:"
+    c1, c2, c3, p1, p2 = (f"{V}{x}" for x in ("C1", "C2", "C3", "P1", "P2"))
+    plan = compile_vocab_constraints(
+        spark, "v", V,
+        [VocabTerm(c1, "class"), VocabTerm(c2, "class"),
+         VocabTerm(c3, "class"), VocabTerm(p1, "object_property"),
+         VocabTerm(p2, "datatype_property")],
+        term_labels={c1: True, p2: True},
+        used_classes={c1, f"{V}Cx", "urn:other:Z"},
+        used_props={p1, f"{V}Py", f"{V}Pz"})
+    rep = score_vocab_plan(spark, "v", plan, n_classes=4, n_properties=2)
+
+    def _sorted(rows):
+        return sorted((tuple(r) for r in rows),
+                      key=lambda t: tuple((x is None, x) for x in t[:5]))
+
+    U, Un, I = "Understandability", "UndefinedClass", "Interpretability"
+    assert _sorted(rep.collect()) == _sorted([
+        # 1 − 2/4 and 1 − 1/2
+        ("vocab:v", U, "LabelForClasses", None, "ratio", 0.5, 2,
+         "urn:v:C2; urn:v:C3"),
+        ("vocab:v", U, "LabelForProperties", None, "ratio", 0.5, 1,
+         "urn:v:P1"),
+        ("vocab:v", I, Un, c1, "binary", 1.0, 0, None),
+        ("vocab:v", I, Un, f"{V}Cx", "binary", 0.0, 1, "urn:v:Cx"),
+        ("vocab:v", I, "UndefinedProperty", p1, "binary", 1.0, 0, None),
+        ("vocab:v", I, "UndefinedProperty", f"{V}Py", "binary", 0.0, 1,
+         "urn:v:Py"),
+        ("vocab:v", I, "UndefinedProperty", f"{V}Pz", "binary", 0.0, 1,
+         "urn:v:Pz"),
+        # share of items scoring 1, and their violations summed
+        ("vocab:v", I, Un, None, "meta", 0.5, 1, None),
+        ("vocab:v", I, "UndefinedProperty", None, "meta", 1 / 3, 2, None),
+    ])
+
+    # a property-only vocabulary: n_classes=0, and 120 unlabeled
+    # properties, more than the data report's 100-sample cap
+    W = "urn:w:"
+    props = [f"{W}p{i:03d}" for i in range(120)]
+    plan = compile_vocab_constraints(
+        spark, "w", W, [VocabTerm(p, "object_property") for p in props],
+        term_labels={}, used_classes=set(), used_props=set())
+    rep = score_vocab_plan(spark, "w", plan, n_classes=0, n_properties=150)
+    assert _sorted(rep.collect()) == [
+        ("vocab:w", U, "LabelForClasses", None, "ratio", 1.0, 0, None),
+        # 1 − 120/150
+        ("vocab:w", U, "LabelForProperties", None, "ratio",
+         pytest.approx(0.2), 120, "; ".join(props)),
+    ]
+
+
 def test_apply_ini_overlay(tmp_path):
     """A reference-format INI (config/*.ini keys, dq_assessment.py:40-86)
     fills the dqa args; explicit CLI flags win; root-relative paths
@@ -940,3 +1000,31 @@ def test_check_oracle_rejects_bad_selections():
         capture_output=True, text=True, env=env, timeout=120)
     assert bad_dir.returncode == 2
     assert "not a directory" in bad_dir.stdout
+
+
+def test_uncovered_contract_lists_missing_entries(tmp_path):
+    """tools/uncovered_contract.py prints, in queries() order, exactly the
+    contract entries a correctness snapshot lacks — ready to pass on to
+    check_oracle.py — and ignores snapshot names no longer in queries()."""
+    import json
+    import subprocess
+    import sys as _sys
+
+    import __spark_entry__ as entrymod
+
+    REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = list(entrymod.queries())
+    snap = tmp_path / "CORRECTNESS_rXX.json"
+    snap.write_text(json.dumps(
+        {names[0]: {"rows_match": True}, names[5]: {"rows_match": False},
+         "retired_entry": {"rows_match": True}}))
+    out = subprocess.run(
+        [_sys.executable, os.path.join(REPO, "tools", "uncovered_contract.py"),
+         str(snap)], capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == [n for i, n in enumerate(names)
+                                  if i not in (0, 5)]
+    usage = subprocess.run(
+        [_sys.executable, os.path.join(REPO, "tools", "uncovered_contract.py")],
+        capture_output=True, text=True, timeout=120)
+    assert usage.returncode == 2

@@ -231,6 +231,61 @@ def test_incremental_scores_match_batch_report_custom_cfg(spark, tmp_path):
     _assert_state_report_matches_batch(spark, tmp_path, CUSTOM_CFG, SUBCLASS)
 
 
+def test_tiers_partition_the_shapes(spark):
+    """Every shape data_shapes instantiates is scored by exactly one tier:
+    each metric is emitted by exactly one of row_violations and
+    state_violations, except CorrectRange, which the tiers split by
+    property (class ranges are retractable, so state), and the row tier
+    never emits a class-range CorrectRange row."""
+    from shacl_dqa_prototype_spark.plans.constraints import (
+        _select_terms,
+        data_shapes,
+        row_violations,
+        state_aggregates,
+        state_violations,
+        union_branches,
+    )
+    from shacl_dqa_prototype_spark.plans.vocab import raw_usage_sets
+
+    T = core._triples(spark, SF)
+    # a literal object of a class-range property: a row-tier leak of the
+    # class ranges (e.g. into the nodeKind check) would emit it
+    T = T.unionByName(spark.createDataFrame(
+        [("urn:order:1", "urn:p:hasCustomer", "not-an-iri", "literal",
+          None, None)], T.schema))
+    for cfg, subclass_pairs in ((core.ENTRY_CFG, None),
+                                (CUSTOM_CFG, SUBCLASS)):
+        used_props, used_classes = raw_usage_sets(T, cfg.type_property)
+        terms = _select_terms(core.ENTRY_VOCAB, core.ENTRY_DISJOINT,
+                              used_props, used_classes)
+        tiers = {
+            "row": row_violations(T, terms, cfg),
+            "state": state_violations(state_aggregates(T, cfg, terms),
+                                      terms, cfg, subclass_pairs),
+        }
+        emits = {name: set().union(*(ms for _, ms in branches))
+                 for name, branches in tiers.items()}
+        cls_range = {t.term for t in terms.rng_cls}
+        assert cls_range, "the class-range routing must be exercised"
+        for sp in data_shapes(core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg,
+                              used_props, used_classes):
+            owners = [name for name, ms in emits.items() if sp.metric in ms]
+            if sp.metric == "CorrectRange":
+                owners = [name for name in owners
+                          if (name == "state") == (sp.item in cls_range)]
+            assert len(owners) == 1, (sp, owners)
+        assert emits["row"] & emits["state"] == {"CorrectRange"}
+
+        def range_items(tier):
+            return {r["item"] for r in union_branches(tiers[tier])
+                    .filter(F.col("metric") == "CorrectRange")
+                    .select("item").distinct().collect()}
+
+        row_items, state_items = range_items("row"), range_items("state")
+        assert row_items and not row_items & cls_range
+        assert state_items and state_items <= cls_range
+
+
 def _cache_entries(spark) -> int:
     """Number of CacheManager entries (the list is private: read it
     reflectively)."""
@@ -241,9 +296,11 @@ def _cache_entries(spark) -> int:
 
 
 def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
-    """score_from_state and score_plan neither cache nor persist anything:
-    no DataFrame.cache/persist call while they run, and no persistent RDD
-    or CacheManager entry left after them."""
+    """compile_data_constraints, score_from_state and score_plan neither
+    cache nor persist anything: no DataFrame.cache/persist call while they
+    run, and no persistent RDD or CacheManager entry left after them. A
+    fold (apply_delta) persists its delta while it runs and leaves nothing
+    behind either."""
     from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan
     from shacl_dqa_prototype_spark.plans.incremental import score_from_state
     from shacl_dqa_prototype_spark.plans.profile import GraphProfile
@@ -261,14 +318,6 @@ def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
         triples_per_property=prof["triples_per_property"],
         subjects_per_property=prof["subjects_per_property"],
         entities_per_class=prof["entities_per_class"])
-    batch_plan = compile_data_constraints(
-        T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT, core.ENTRY_CFG)
-    batch_plan.unpersist()
-    plan = ConstraintPlan(
-        violations=violations_from_state(
-            state, core.ENTRY_VOCAB, core.ENTRY_CFG,
-            disjoint_pairs=core.ENTRY_DISJOINT),
-        shapes=batch_plan.shapes)
 
     entries_before = _cache_entries(spark)
     rdds_before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
@@ -284,13 +333,30 @@ def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
 
         monkeypatch.setattr(df_class, name, spy)
 
+    batch_plan = compile_data_constraints(
+        T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT, core.ENTRY_CFG)
+    plan = ConstraintPlan(
+        violations=violations_from_state(
+            state, core.ENTRY_VOCAB, core.ENTRY_CFG,
+            disjoint_pairs=core.ENTRY_DISJOINT),
+        shapes=batch_plan.shapes)
     reports = [
         score_from_state(state, core.ENTRY_VOCAB, core.ENTRY_CFG,
                          disjoint_pairs=core.ENTRY_DISJOINT),
         score_plan(spark, plan, profile),
+        score_plan(spark, batch_plan, profile),
     ]
     assert all(r.count() > 0 for r in reports)
     assert calls == []
+    assert _cache_entries(spark) == entries_before
+    assert set(dict(spark.sparkContext._jsc.getPersistentRDDs())) == rdds_before
+
+    delta = spark.createDataFrame(
+        [("urn:s:new", "urn:p:hasSupplier", "urn:o:1", "iri", None, None)],
+        T.schema)
+    apply_delta(state, delta, core.ENTRY_CFG, core.ENTRY_VOCAB,
+                n_buckets=4, delta_id="d3")
+    assert calls == ["persist"]
     assert _cache_entries(spark) == entries_before
     assert set(dict(spark.sparkContext._jsc.getPersistentRDDs())) == rdds_before
 

@@ -52,8 +52,13 @@ SPP = {"p:a": 4}
 EPC = {"c:B": 4}
 
 
+def _denoms(num_entities):
+    return {"entities": num_entities, "subjects_per_property": SPP,
+            "entities_per_class": EPC}
+
+
 def test_score_rows_hand_computed():
-    got = _by_key(score_rows(SHAPES, COUNTS, 12, SPP, EPC, target="data"))
+    got = _by_key(score_rows(SHAPES, COUNTS, _denoms(12), target="data"))
     C = "Consistency"
     assert got == {
         # binary: any violation → 0, none → 1
@@ -91,12 +96,12 @@ def test_score_rows_hand_computed():
 def test_score_rows_without_entities():
     """num_entities == 0: a violated entity-scoped shape floors to 0, an
     unviolated one scores 1."""
-    got = _by_key(score_rows(SHAPES, COUNTS, 0, SPP, EPC, target="data"))
+    got = _by_key(score_rows(SHAPES, COUNTS, _denoms(0), target="data"))
     assert got[("LabelForEntities", None, "ratio")][2:4] == (0.0, 3)
     assert got[("ProlixFeatures", None, "ratio")][2:4] == (1.0, 0)
 
 
 def test_score_rows_measure_types():
     """Measures are floats and counts ints, as REPORT_SCHEMA needs them."""
-    for row in score_rows(SHAPES, COUNTS, 12, SPP, EPC):
+    for row in score_rows(SHAPES, COUNTS, _denoms(12)):
         assert type(row[5]) is float and type(row[6]) is int, row
