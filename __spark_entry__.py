@@ -220,8 +220,8 @@ _PROFILE_CACHE: dict[tuple[int, str], object] = {}
 
 
 def _profile(spark: SparkSession, sf_dir: str):
-    """Profile scalars are eager driver values — compute once per
-    (session, sf_dir) so dqa_scores doesn't re-run the scan per call."""
+    """One profile per (session, sf_dir): it keeps its scalars once read,
+    so the profile entries don't re-run the scalar job per call."""
     key = (id(spark), sf_dir)
     if key not in _PROFILE_CACHE:
         _PROFILE_CACHE[key] = profile_graph(

@@ -398,15 +398,19 @@ def _scaling_sample(method: str, level: str, corpus_dir: str,
     - "shared" (default; the prescribed sandbox proxy): local[2] vs
       local[8] task threads, both configs sequentially in THIS python
       process/JVM (24g heap, JIT-warm for both) — the same-job,
-      two-parallelism-levels, same-input comparison. Symmetric by
-      construction; measures how the engine's plans scale with cores.
+      two-parallelism-levels, same-input comparison. Not symmetric in
+      memory: with the one equal heap, the 8-thread config gets ¼ of the
+      per-task execution memory of the 2-thread one, which biases the
+      efficiency down once a stage spills (at 16M docs the link stage
+      turns superlinear and the job reads 0.656, scaling16m_r5).
     - "isolated": per-config child JVMs, heap 4g+4g/core,
       ActiveProcessorCount=cores. Stricter isolation but asymmetric in
       practice: each fresh JVM re-pays JIT warmup (a larger fraction of
       the shorter hi run) and the small config free-rides host CPUs
       (python UDF workers run beside the 2 task threads: ~2.6 busy
-      cores measured for local[2] vs ~8.8 for local[8]), so it
-      understates efficiency (0.70 vs shared 0.85, bench_r5_scaling12).
+      cores measured for local[2] vs ~8.8 for local[8]), so it reads
+      lower: 0.697 isolated (bench_r5_scaling12) vs 0.734 shared
+      (linkfix_probe_r5), both measured on the post-link-fix engine.
     - "lc": REAL multi-executor clusters — local-cluster with 2 vs 8
       single-core 6g executor JVMs. The most faithful rendering of
       "N and 4N executors", but per-job latency (executor round trips,

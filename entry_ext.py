@@ -443,10 +443,10 @@ def ext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- C37-C40 vocabulary shapes ----------------------------------------
     def vocab_dqa(spark, sf_dir):
-        T2 = _t2(spark, sf_dir)
-        used_classes = {r["o"] for r in
-                        T2.filter(F.col("p") == "rdf:type").select("o").distinct().collect()}
-        used_props = {r["p"] for r in T2.select("p").distinct().collect()}
+        used_props, used_classes = profile_graph(
+            _t2(spark, sf_dir), CFG2.type_property, CFG2.labeling_property,
+            CFG2.description_property,
+            CFG2.interlinking_property).usage_sets()
         c2_terms = [t for t in ENTRY_VOCAB2 if t.term.startswith("urn:c2:")]
         p2_terms = [t for t in ENTRY_VOCAB2 if t.term.startswith("urn:p2:")]
         plan_c2 = compile_vocab_constraints(
@@ -1409,7 +1409,7 @@ def ext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         state.vacuum(orphan_grace_s=0.0)
         assert all(len(t.snapshots()) <= 1
                    for t in state.tables().values())
-        return profile_from_state(state)["triples_per_property"].select(
+        return profile_from_state(state).triples_per_property.select(
             "p", F.col("num_triples").cast("long"))
     q["incremental_dqa_vacuum"] = inc_vacuum
 

@@ -235,7 +235,6 @@ def cmd_dqa(args) -> None:
     from shacl_dqa_prototype_spark.plans.vocab import (
         mine_vocab,
         profile_to_vocab_terms,
-        raw_usage_sets,
         subclass_closure,
         tbox_merge_rows,
         vocab_profile_json,
@@ -285,16 +284,20 @@ def cmd_dqa(args) -> None:
                          if args.uris_max_length is not None else 80),
         base_uri=args.base_uri,
     )
+    # the profile of the RAW graph, before the TBox merge (reference
+    # semantics): its keys are the usage sets that prune the data and
+    # vocabulary shapes, its tables the data-shape denominators
     profile = None
+    used_props = used_classes = None
     if T_raw is not None:
         profile = profile_graph(
             T_raw, cfg.type_property, cfg.labeling_property,
             cfg.description_property, cfg.interlinking_property)
+        used_props, used_classes = profile.usage_sets()
 
     terms, disjoint = [], []
     sub_pairs = None
     T = T_raw
-    used_props = used_classes = None
     vocab_graphs: list[tuple[str, list[tuple]]] = []
     vocab_profiles: dict[str, object] = {}
     if args.vocab:
@@ -323,11 +326,8 @@ def cmd_dqa(args) -> None:
             merged = tbox_merge_rows(vocab_rows, prof_v.classes)
             T = T_raw.unionByName(
                 spark.createDataFrame(merged, TRIPLES_SCHEMA)).dropDuplicates()
+        # sh:class follows the vocab subClassOf closure
         sub_pairs = subclass_closure(vocab_rows) or None
-    # usage pruning stays on the RAW graph (reference semantics);
-    # sh:class follows the vocab subClassOf closure
-    if T_raw is not None:
-        used_props, used_classes = raw_usage_sets(T_raw, cfg.type_property)
 
     reports = []
     if args.metadata:
@@ -355,10 +355,8 @@ def cmd_dqa(args) -> None:
     plan = None
     if run_data and T is not None:
         t0 = time.time()
-        plan = compile_data_constraints(
-            T, terms, disjoint, cfg, used_props=used_props,
-            used_classes=used_classes, subclass_pairs=sub_pairs)
-        plan.violations = plan.violations.cache()
+        plan = compile_data_constraints(T, terms, disjoint, cfg,
+                                        subclass_pairs=sub_pairs)
         reports.append(score_plan(spark, plan, profile, target="data"))
     if not reports:
         raise SystemExit("nothing to run: every stage was skipped")
@@ -438,13 +436,13 @@ def cmd_dqa(args) -> None:
         "data_shapes_elapsed_time": timings.get("data_shapes_elapsed_time", 0.0),
         "metadata_shapes_elapsed_time": timings.get(
             "metadata_shapes_elapsed_time", 0.0),
-        "num_inst_shapes": len(plan.shapes) if plan is not None else 0,
+        "num_inst_shapes": sum(r["target"] == "data"
+                               and r["score_kind"] != "meta"
+                               for r in report_rows),
         "graph_profile": profile.as_dict() if profile is not None else {},
     }
     with open(run_info_path, "w", encoding="utf-8") as f:
         json.dump(run_info, f, indent=4)
-    if plan is not None:
-        plan.unpersist()  # outputs are materialized; release executor memory
     print(json.dumps({
         "report_rows": len(report_rows), "output": args.output,
         "profile": profile.as_dict() if profile is not None else {}}))

@@ -5,9 +5,11 @@ Replaces the reference's Jinja2-template → pySHACL-interpretation stack
 data_shapes.template.ttl) with a driver-side planner that compiles every
 shape family to DataFrame jobs (filters, semi/anti joins, hash aggregates
 over the triple table T), emitting a uniform violations DataFrame
-V(metric, item, focus, value). The instantiated shape list — one ShapeSpec
-per report row — is data_shapes, plain Python over the same inputs, so a
-caller that only needs the list builds no plan.
+V(metric, item, focus, value). The branches cover every vocabulary term;
+the instantiated shape list — one ShapeSpec per report row — is
+data_shapes, plain Python over the same inputs plus the usage sets of the
+graph profile the plan is scored with (scoring.score_plan), so a term
+unused in the data matches no row and gets no shape.
 
 Every family is written once, in one of two tiers:
   * row tier (row_violations): the families whose violations are decided
@@ -33,7 +35,9 @@ Key semantics preserved from the reference (citations per family below):
     rdf:Property / owl:NamedIndividual are exempt from entity-scoped shapes
     (data_shapes.template.ttl:16-33) → the is_exempt subject flag;
   * shape pruning by usage — per-property shapes only for vocab properties
-    actually used in the data (shacl_shape_builder.py:318,345,370,…);
+    actually used in the profiled graph (shacl_shape_builder.py:318,345,
+    370,…), decided at scoring from the profile's per-property and
+    per-class keys;
   * sh:datatype = datatype-IRI match AND well-formed lexical form;
   * one physical job fanned out to two metrics where the reference
     instantiates both (CorrectRange+MalformedLiteral, SelfDescriptiveFormat
@@ -114,19 +118,17 @@ class VocabTerm:
 @dataclass
 class ConstraintPlan:
     violations: DataFrame
-    shapes: list[ShapeSpec] = field(default_factory=list)
+    # the inputs data_shapes instantiates the shape list from, once
+    # score_plan has collected the usage sets of the scoring profile
+    vocab_terms: list[VocabTerm]
+    disjoint_pairs: list[tuple[str, str]]
+    cfg: DQAConfig
     # the union's branches, for per-family plan auditing/attribution
     # (tools/plan_audit-style timing) — evaluation always goes through
     # `violations`, never through these
     parts: list[DataFrame] = field(default_factory=list)
     # metrics each branch can emit (parallel to `parts`)
     part_metrics: list[frozenset] = field(default_factory=list)
-
-    def unpersist(self) -> None:
-        try:
-            self.violations.unpersist()
-        except Exception:
-            pass
 
 
 # one union branch of a tier and the metrics it can emit
@@ -347,6 +349,21 @@ def _select_terms(
     )
 
 
+def _state_terms(vocab_terms: list[VocabTerm],
+                 disjoint_pairs: list[tuple[str, str]] | None = None) -> _Terms:
+    """The term selection every violation branch reads, batch and state
+    alike: every vocabulary property and every disjoint class counts as
+    used — a term unused in the data matches no triple and no state row,
+    and pruning by usage would need a profile job per compile or delta.
+    The disjoint pairs are still pruned to those whose first class has a
+    direct instance, by a semi-join in state_violations."""
+    disjoint_pairs = disjoint_pairs or []
+    return _select_terms(
+        vocab_terms, disjoint_pairs,
+        used_props={t.term for t in vocab_terms if t.term_kind != "class"},
+        used_classes={c for pair in disjoint_pairs for c in pair})
+
+
 def data_shapes(
     vocab_terms: list[VocabTerm],
     disjoint_pairs: list[tuple[str, str]],
@@ -355,10 +372,10 @@ def data_shapes(
     used_classes: set[str],
 ) -> list[ShapeSpec]:
     """The instantiated data shapes — one ShapeSpec per (metric, item)
-    report row — of the plan compile_data_constraints builds over the same
-    inputs. Pure Python: the incremental path instantiates it from
-    state-derived usage sets without building a plan. Each shape's denom
-    follows const.py:33-104 (DeprecatedProperties: const.py:76-86)."""
+    report row — pruned by the usage sets of the profiled graph (the keys
+    of its per-property and per-class tables). Pure Python, called by
+    score_plan once those keys are collected. Each shape's denom follows
+    const.py:33-104 (DeprecatedProperties: const.py:76-86)."""
     t = _select_terms(vocab_terms, disjoint_pairs, used_props, used_classes)
 
     def ent(metric: str) -> ShapeSpec:
@@ -522,6 +539,18 @@ def row_violations(T: DataFrame, terms: _Terms, cfg: DQAConfig) -> list[Branch]:
     return out
 
 
+def profile_aggregates(T: DataFrame, cfg: DQAConfig) -> dict[str, DataFrame]:
+    """The three state_aggregates the graph profile (B1-B8,
+    profile.GraphProfile) is derived from — subj_flags, ps_counts and
+    cls_pairs — needing only the four profile properties of ``cfg``."""
+    return {
+        "subj_flags": subject_flags(T, cfg),
+        "ps_counts": T.groupBy("p", "s").agg(F.count("*").alias("n")),
+        "cls_pairs": T.filter(F.col("p") == cfg.type_property)
+                      .select(F.col("o").alias("cls"), "s"),
+    }
+
+
 def state_aggregates(T: DataFrame, cfg: DQAConfig,
                      terms: _Terms) -> dict[str, DataFrame]:
     """The six aggregates of T the state tier reads, keyed by the
@@ -539,10 +568,7 @@ def state_aggregates(T: DataFrame, cfg: DQAConfig,
     p = F.col("p")
     spo = sorted({t.term for t in terms.rng_cls} | set(terms.asym))
     return {
-        "subj_flags": subject_flags(T, cfg),
-        "ps_counts": T.groupBy("p", "s").agg(F.count("*").alias("n")),
-        "cls_pairs": T.filter(p == cfg.type_property)
-                      .select(F.col("o").alias("cls"), "s"),
+        **profile_aggregates(T, cfg),
         "po_pairs": T.filter(p.isin(terms.ifp)).select("p", "o", "s"),
         "dom_pairs": T.filter(p.isin([t.term for t in terms.dom_cls]))
                       .select("p", "s").distinct(),
@@ -669,38 +695,24 @@ def compile_data_constraints(
     vocab_terms: list[VocabTerm],
     disjoint_pairs: list[tuple[str, str]],
     cfg: DQAConfig,
-    used_props: set[str] | None = None,
-    used_classes: set[str] | None = None,
     subclass_pairs: list[tuple[str, str]] | None = None,
 ) -> ConstraintPlan:
     """Compile all data shapes: T folded as one delta into empty state,
-    i.e. row_violations(T) ∪ state_violations(state_aggregates(T)).
-    Returns the violations DF (lazy; caller caches before scoring) and the
-    instantiated shape list (data_shapes).
-
-    ``used_props``/``used_classes`` override the usage-pruning sets — the
-    reference prunes by the PRE-TBox-merge data profile
-    (shacl_shape_builder.py reads graph_profile) while shapes validate the
-    merged graph, so callers that merge pass the raw-graph sets here.
+    i.e. row_violations(T) ∪ state_violations(state_aggregates(T)), over
+    the unpruned term selection (_state_terms). Returns the lazy violations
+    DF, which scoring reads once, and the inputs of the shape list, which
+    score_plan instantiates from the scoring profile's usage sets — so a
+    caller that merges a TBox into T but profiles the raw graph gets the
+    reference's raw-graph pruning (shacl_shape_builder.py reads
+    graph_profile while shapes validate the merged graph).
     ``subclass_pairs`` is the transitive (descendant, ancestor) closure of
     rdfs:subClassOf — sh:class in SHACL matches instances of subclasses,
     so domain/range/disjoint checks extend the typing table through it."""
-    if used_props is None or used_classes is None:
-        # usage pruning inputs (tiny: O(#properties), O(#classes)) — ONE
-        # fused aggregation job for both sets, shared with the raw-graph
-        # pruning path so the usage semantics can never desynchronize
-        from shacl_dqa_prototype_spark.plans.vocab import raw_usage_sets
-
-        props_set, classes_set = raw_usage_sets(T, cfg.type_property)
-        used_props = props_set if used_props is None else used_props
-        used_classes = classes_set if used_classes is None else used_classes
-
-    terms = _select_terms(vocab_terms, disjoint_pairs, used_props, used_classes)
+    terms = _state_terms(vocab_terms, disjoint_pairs)
     branches = row_violations(T, terms, cfg) + state_violations(
         state_aggregates(T, cfg, terms), terms, cfg, subclass_pairs)
     return ConstraintPlan(
         violations=union_branches(branches),
-        shapes=data_shapes(vocab_terms, disjoint_pairs, cfg,
-                           used_props, used_classes),
+        vocab_terms=vocab_terms, disjoint_pairs=disjoint_pairs, cfg=cfg,
         parts=[df for df, _ in branches],
         part_metrics=[ms for _, ms in branches])

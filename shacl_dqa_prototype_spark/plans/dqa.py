@@ -33,10 +33,10 @@ def run_data_dqa(
 ) -> DataFrame:
     """Full data-shape assessment over the triple table → report DF.
 
-    Pass `plan` (a ConstraintPlan from compile_data_constraints, ideally
-    with .violations already cached) to score an already-compiled plan
-    instead of re-evaluating every constraint — scoring is cheap, the
-    violation scan is not."""
+    Pass `profile` to score against another graph's profile (its keys
+    prune the shapes, its tables give the denominators), and `plan` (a
+    ConstraintPlan from compile_data_constraints) to reuse a compiled plan.
+    Scoring reads the plan's violations once, so nothing is cached."""
     if profile is None:
         profile = profile_graph(
             T, cfg.type_property, cfg.labeling_property,
@@ -44,7 +44,6 @@ def run_data_dqa(
         )
     if plan is None:
         plan = compile_data_constraints(T, vocab_terms, disjoint_pairs, cfg)
-        plan.violations = plan.violations.cache()
     return score_plan(T.sparkSession, plan, profile, target="data")
 
 

@@ -16,8 +16,11 @@ delta into empty state". This module keeps that state on disk:
 
    Commits are BUCKET-PRUNED (SnapshotTable.commit_merge_buckets): only
    the hash buckets the delta touches are rewritten; untouched buckets
-   are carried by reference. Appending 1k triples to a 10⁹-subject state
-   rewrites O(1k-rows-worth of buckets), not the whole table.
+   are carried by reference, so a commit costs O(touched buckets). That
+   is small only when a delta has far fewer distinct keys than there are
+   buckets: k keys hashed into 32 buckets leave an expected 32·(31/32)^k
+   untouched, 1.3 at k = 100 and ~5·10⁻¹³ at k = 1,000, so a delta of a
+   few hundred subjects already rewrites nearly the whole table.
    violations_from_state evaluates state_violations over the six reads.
 
 2. Row tier — row_violations of each delta are FINAL (no later triple can
@@ -26,13 +29,12 @@ delta into empty state". This module keeps that state on disk:
 
 Both tiers take their property lists from the same term selection as
 batch, with nothing pruned by usage (_state_terms): a property or class
-unused so far simply matches no rows. The profile is derived from the
-same state (ps_counts, cls_pairs, subj_flags); parity with batch is
-asserted in tests/test_incremental.py.
-
-score_from_state re-scores the report from this state: the O(state) work
-(violation counts, one read per state dimension) runs as concurrent Spark
-jobs, everything O(#shapes) on the driver (scoring.score_rows).
+unused so far simply matches no rows. profile_from_state is the batch
+GraphProfile over the reads of subj_flags, ps_counts and cls_pairs, and
+score_from_state is the batch scorer (scoring.score_plan) over
+violations_from_state and that profile: the O(state) work runs as
+concurrent Spark jobs, everything O(#shapes) on the driver. Parity with
+batch is asserted in tests/test_incremental.py.
 
 State emits violations per DISTINCT (item, focus[, value]) across deltas
 where a batch scan of duplicated raw triples would repeat a row. Scoring
@@ -74,22 +76,18 @@ from pyspark.sql.types import (
 
 from shacl_dqa_prototype_spark.plans.constraints import (
     SUBJECT_FLAGS,
+    ConstraintPlan,
     DQAConfig,
     VocabTerm,
-    _select_terms,
-    _Terms,
-    data_shapes,
+    _state_terms,
     row_violations,
     state_aggregates,
     state_violations,
     union_branches,
 )
-from shacl_dqa_prototype_spark.plans.scoring import (
-    collect_concurrently,
-    score_rows,
-    violation_counts,
-)
-from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA, VIOLATIONS_SCHEMA
+from shacl_dqa_prototype_spark.plans.profile import GraphProfile
+from shacl_dqa_prototype_spark.plans.scoring import score_plan
+from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
 from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
 
 SUBJ_FLAGS_SCHEMA = StructType(
@@ -132,21 +130,6 @@ STATE_MERGES = {
     "dom_pairs": ("s", DataFrame.distinct),
     "spo_pairs": ("o", DataFrame.distinct),
 }
-
-
-def _state_terms(vocab_terms: list[VocabTerm],
-                 disjoint_pairs: list[tuple[str, str]] | None = None) -> _Terms:
-    """The term selection both tiers read on state: every vocabulary
-    property and every disjoint class counts as used — a term unused so
-    far matches no triple and no state row, and pruning by usage would need
-    a profile job per delta. The disjoint pairs are still pruned to those
-    whose first class has a direct instance, by a semi-join in
-    state_violations."""
-    disjoint_pairs = disjoint_pairs or []
-    return _select_terms(
-        vocab_terms, disjoint_pairs,
-        used_props={t.term for t in vocab_terms if t.term_kind != "class"},
-        used_classes={c for pair in disjoint_pairs for c in pair})
 
 
 @dataclass
@@ -247,8 +230,10 @@ def apply_delta(
 
     Each mergeable state table gets ONE bucket-pruned merge snapshot =
     merge(touched state buckets, delta aggregate); untouched buckets are
-    carried by reference — the parquet write is O(|touched buckets|), not
-    O(|state|). The row-tier violations of the delta are appended to the
+    carried by reference — the parquet write is O(|touched buckets|),
+    which is below O(|state|) only when the delta has far fewer distinct
+    keys than ``n_buckets`` (see the module docstring). The row-tier
+    violations of the delta are appended to the
     violations log (append-only, no merge at all). Historical triples are
     never re-read.
 
@@ -335,43 +320,11 @@ def apply_delta(
 # derivations from state (all O(state), no triple scans)
 # ---------------------------------------------------------------------------
 
-def _state_dims(state: IncrementalDQAState
-                ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One read per state dimension, shared by every derivation:
-    (p, num_triples, num_subjects) per property from ps_counts,
-    (cls, num_instances) per class from cls_pairs, and the one-row entity
-    counts from subj_flags. The property and class keys are also the
-    usage-pruning sets."""
-    per_p = state.ps_counts.read().groupBy("p").agg(
-        F.sum("n").cast("long").alias("num_triples"),
-        F.count("*").alias("num_subjects"))
-    per_cls = state.cls_pairs.read().groupBy("cls").agg(
-        F.countDistinct("s").alias("num_instances"))
-    # B8 counts cover ALL subjects carrying the property (profile_graph
-    # semantics), not just typed entities
-    entities = state.subj_flags.read().agg(
-        F.sum(F.col("is_entity").cast("long")).alias("num_entities"),
-        F.sum(F.col("has_label").cast("long")).alias("num_entities_label"),
-        F.sum(F.col("has_ilp").cast("long")).alias("num_entities_interlinking"),
-        F.sum(F.col("has_desc").cast("long")).alias("num_entities_description"),
-    )
-    return per_p, per_cls, entities
-
-
-def profile_from_state(state: IncrementalDQAState) -> dict[str, DataFrame]:
-    """The profile aggregates (B1-B8) re-expressed over the state tables."""
-    per_p, per_cls, entities = _state_dims(state)
-    scalars = per_p.agg(
-        F.sum("num_triples").cast("long").alias("num_triples"),
-        F.count("*").alias("num_properties"),
-    ).crossJoin(entities).crossJoin(
-        per_cls.agg(F.count("*").alias("num_classes")))
-    return {
-        "scalars": scalars,
-        "triples_per_property": per_p.select("p", "num_triples"),
-        "subjects_per_property": per_p.select("p", "num_subjects"),
-        "entities_per_class": per_cls,
-    }
+def profile_from_state(state: IncrementalDQAState) -> GraphProfile:
+    """The graph profile (B1-B8) over the reads of the three profile state
+    tables — the same GraphProfile constructor profile_graph uses over T."""
+    return GraphProfile(state.subj_flags.read(), state.ps_counts.read(),
+                        state.cls_pairs.read())
 
 
 def violations_from_state(
@@ -415,25 +368,13 @@ def score_from_state(
     This closes the loop: appends fold into state (apply_delta /
     start_streaming_dqa) and the report is re-scored without a triple scan.
 
-    Spark runs only O(state) work, as four concurrent jobs: the
-    violation_counts of violations_from_state, and one read per state
-    dimension (_state_dims) — ps_counts per property gives the used
-    properties and subjects_per_property, cls_pairs per class the used
-    classes and entities_per_class, subj_flags the entity count.
-    Everything O(#shapes) runs on the driver: data_shapes instantiates the
-    shape list from the usage sets, score_rows scores it, and the report
-    comes back as one local relation. Nothing is cached."""
-    per_p, per_cls, entities = _state_dims(state)
-    violations = violations_from_state(
-        state, vocab_terms, cfg,
-        disjoint_pairs=disjoint_pairs, subclass_pairs=subclass_pairs)
-    counts, props, classes, (ent,) = collect_concurrently(
-        violation_counts(violations), per_p.select("p", "num_subjects"),
-        per_cls, entities.select("num_entities"))
-    spp, epc = dict(map(tuple, props)), dict(map(tuple, classes))
-    shapes = data_shapes(vocab_terms, disjoint_pairs or [], cfg,
-                         set(spp), set(epc))
-    rows = score_rows(shapes, counts, {
-        "entities": ent["num_entities"] or 0,
-        "subjects_per_property": spp, "entities_per_class": epc})
-    return state.subj_flags.spark.createDataFrame(rows, REPORT_SCHEMA)
+    It is score_plan over violations_from_state and profile_from_state:
+    Spark runs only O(state) work, as four concurrent jobs (the violation
+    counts and one read per profile table), everything O(#shapes) runs on
+    the driver, and nothing is cached."""
+    plan = ConstraintPlan(
+        violations_from_state(state, vocab_terms, cfg,
+                              disjoint_pairs=disjoint_pairs,
+                              subclass_pairs=subclass_pairs),
+        vocab_terms=vocab_terms, disjoint_pairs=disjoint_pairs or [], cfg=cfg)
+    return score_plan(state.subj_flags.spark, plan, profile_from_state(state))

@@ -1,46 +1,93 @@
 """B1–B9 — graph profiling: the reference's profile_graph
-(/root/reference/utils.py:62-135) as ONE multi-aggregate Spark job plus two
-small per-key aggregate tables.
+(reference utils.py:62-135), derived from the same three aggregates
+that batch and incremental DQA keep as state.
 
-The scalar counts (B1–B4, B8) fuse into a single conditional-aggregation
-pass over T — one scan, one (partial-agg, final-agg) stage pair — instead of
-eight separate jobs. The per-property/per-class tables (B5–B7) are the
-denominator dims for all ratio metrics (utils.py:866-871); they stay
-DataFrames and are broadcast into scoring.
+GraphProfile is built from subj_flags (s, *SUBJECT_FLAGS), ps_counts
+(p, s, n) and cls_pairs (cls, s): profile_graph takes them as lazy
+expressions over T (constraints.profile_aggregates), and
+incremental.profile_from_state as reads of the persisted snapshots. So the
+B1-B8 semantics are written once, here, for both paths.
+
+Its three tables stay lazy DataFrames: per property (p, num_triples,
+num_subjects), per class (cls, num_instances) and the one-row entity
+counts. Their keys are the usage sets that prune shape instantiation and
+their values every ratio denominator (utils.py:849-871); score_plan
+collects them beside the violation counts. The seven scalars are one
+aggregation job over the three tables, run the first time one is read.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shacl_dqa_prototype_spark.plans.constraints import (
+    DQAConfig,
+    profile_aggregates,
+)
 
-@dataclass
+SCALARS = ("num_triples", "num_classes", "num_entities", "num_properties",
+           "num_entities_interlinking", "num_entities_label",
+           "num_entities_description")
+
+
 class GraphProfile:
-    num_triples: int
-    num_classes: int
-    num_entities: int
-    num_properties: int
-    num_entities_interlinking: int
-    num_entities_label: int
-    num_entities_description: int
-    # denominator dims (small: O(#properties), O(#classes))
-    triples_per_property: DataFrame = field(repr=False, default=None)
-    subjects_per_property: DataFrame = field(repr=False, default=None)
-    entities_per_class: DataFrame = field(repr=False, default=None)
+    """The graph profile (B1-B8) of the graph the three aggregates cover.
+    The scalars in SCALARS read as attributes (``profile.num_entities``)."""
+
+    def __init__(self, subj_flags: DataFrame, ps_counts: DataFrame,
+                 cls_pairs: DataFrame):
+        self.per_property = ps_counts.groupBy("p").agg(
+            F.sum("n").cast("long").alias("num_triples"),
+            F.count("*").alias("num_subjects"))
+        self.entities_per_class = cls_pairs.groupBy("cls").agg(
+            F.countDistinct("s").alias("num_instances"))
+        # B8 counts cover ALL subjects carrying the property, not just
+        # typed entities
+        self.entity_counts = subj_flags.agg(*[
+            F.sum(F.col(flag).cast("long")).alias(name) for name, flag in (
+                ("num_entities", "is_entity"),
+                ("num_entities_interlinking", "has_ilp"),
+                ("num_entities_label", "has_label"),
+                ("num_entities_description", "has_desc"))])
+
+    @property
+    def triples_per_property(self) -> DataFrame:
+        return self.per_property.select("p", "num_triples")
+
+    @property
+    def subjects_per_property(self) -> DataFrame:
+        return self.per_property.select("p", "num_subjects")
+
+    @cached_property
+    def _scalars(self) -> dict[str, int]:
+        row = self.per_property.agg(
+            F.sum("num_triples").cast("long").alias("num_triples"),
+            F.count("*").alias("num_properties"),
+        ).crossJoin(self.entity_counts).crossJoin(
+            self.entities_per_class.agg(F.count("*").alias("num_classes"))
+        ).first()
+        # a sum over an empty graph is NULL
+        return {k: row[k] or 0 for k in SCALARS}
+
+    def __getattr__(self, name: str) -> int:
+        if name in SCALARS:
+            return self._scalars[name]
+        raise AttributeError(name)
 
     def as_dict(self) -> dict:
-        return {
-            "num_triples": self.num_triples,
-            "num_classes": self.num_classes,
-            "num_entities": self.num_entities,
-            "num_properties": self.num_properties,
-            "num_entities_interlinking": self.num_entities_interlinking,
-            "num_entities_label": self.num_entities_label,
-            "num_entities_description": self.num_entities_description,
-        }
+        return dict(self._scalars)
+
+    def usage_sets(self) -> tuple[set[str], set[str]]:
+        """(used properties, used classes): the keys of the per-property
+        and per-class tables."""
+        from shacl_dqa_prototype_spark.plans.scoring import collect_concurrently
+
+        props, classes = collect_concurrently(
+            self.per_property.select("p"), self.entities_per_class.select("cls"))
+        return {r[0] for r in props}, {r[0] for r in classes}
 
 
 def profile_graph(
@@ -50,40 +97,13 @@ def profile_graph(
     description_property: str,
     interlinking_property: str,
 ) -> GraphProfile:
-    """One fused scan for scalars (B1-B4, B8); two hash-agg jobs for the
-    denominator dims (B5/B6 share a scan via grouping on p)."""
-    p, s, o = F.col("p"), F.col("s"), F.col("o")
-    scalars = T.agg(
-        F.count("*").alias("num_triples"),
-        F.countDistinct(F.when(p == type_property, o)).alias("num_classes"),
-        F.countDistinct(F.when(p == type_property, s)).alias("num_entities"),
-        F.countDistinct(p).alias("num_properties"),
-        F.countDistinct(F.when(p == interlinking_property, s)).alias("n_ilp"),
-        F.countDistinct(F.when(p == labeling_property, s)).alias("n_lbl"),
-        F.countDistinct(F.when(p == description_property, s)).alias("n_dsc"),
-    ).first()
-
-    per_property = T.groupBy("p").agg(
-        F.count("*").alias("num_triples"),
-        F.countDistinct("s").alias("num_subjects"),
-    )
-    entities_per_class = (
-        T.filter(p == type_property)
-        .groupBy(o.alias("cls"))
-        .agg(F.countDistinct("s").alias("num_instances"))
-    )
-    return GraphProfile(
-        num_triples=scalars["num_triples"],
-        num_classes=scalars["num_classes"],
-        num_entities=scalars["num_entities"],
-        num_properties=scalars["num_properties"],
-        num_entities_interlinking=scalars["n_ilp"],
-        num_entities_label=scalars["n_lbl"],
-        num_entities_description=scalars["n_dsc"],
-        triples_per_property=per_property.select("p", "num_triples"),
-        subjects_per_property=per_property.select("p", "num_subjects"),
-        entities_per_class=entities_per_class,
-    )
+    """The profile of T, over the lazy profile aggregates of T; no job runs
+    until a table is collected or a scalar is read."""
+    cfg = DQAConfig(type_property=type_property,
+                    labeling_property=labeling_property,
+                    description_property=description_property,
+                    interlinking_property=interlinking_property)
+    return GraphProfile(**profile_aggregates(T, cfg))
 
 
 def infer_namespace(T: DataFrame) -> str:

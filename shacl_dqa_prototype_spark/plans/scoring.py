@@ -9,15 +9,19 @@ const.py:33-104):
     (dq_assessment.py:577-586);
   * violations stringified '; '-joined (dq_assessment.py:566-568).
 
-Spark does only the O(violations) part: ONE aggregation of the violations
-DF to (metric, item) → distinct-focus count + sorted sample
-(violation_counts), collected. Everything after it is O(#shapes) and runs
-on the driver in plain Python (score_rows): the shape list supplies the
-zero-violation rows, the denominator dims are looked up in dicts, the
-measure rule and the meta rollup are applied row by row, and the report
-comes back as one local relation. No shape-spec join, denominator
-broadcast or rollup aggregate runs in Spark, and nothing is cached or
-checkpointed.
+Batch (dqa.run_data_dqa) and incremental (incremental.score_from_state)
+DQA both score through score_plan, over a ConstraintPlan and a
+GraphProfile. Spark does only the O(violations + profile) part, as four
+concurrent collects: ONE aggregation of the violations DF to (metric,
+item) → distinct-focus count + sorted sample (violation_counts), and the
+profile's per-property, per-class and entity-count tables. Everything
+after them is O(#shapes) and runs on the driver in plain Python: the
+shape list is instantiated from the collected property and class keys
+(constraints.data_shapes), and score_rows supplies the zero-violation
+rows, looks the denominators up in dicts, applies the measure rule and the
+meta rollup row by row, and the report comes back as one local relation.
+No shape-spec join, denominator broadcast or rollup aggregate runs in
+Spark, and nothing is cached or checkpointed.
 """
 
 from __future__ import annotations
@@ -27,7 +31,11 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan, ShapeSpec
+from shacl_dqa_prototype_spark.plans.constraints import (
+    ConstraintPlan,
+    ShapeSpec,
+    data_shapes,
+)
 from shacl_dqa_prototype_spark.plans.profile import GraphProfile
 from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA
 
@@ -182,19 +190,22 @@ def score_plan(
     profile: GraphProfile,
     target: str = "data",
 ) -> DataFrame:
-    """Violations + shape specs + denominators → per-shape report rows +
-    meta-rollup rows (score_kind='meta'), as one local relation.
+    """Violations + profile → per-shape report rows + meta-rollup rows
+    (score_kind='meta'), as one local relation.
 
-    The violation counts and the two denominator dims are collected as
-    concurrent jobs; the rest is score_rows on the driver. Driver memory is
-    O(#shapes + #properties + #classes): the per-shape rows carry at most
-    MAX_VIOLATION_SAMPLES focus nodes each, at any corpus scale."""
-    counts, spp, epc = collect_concurrently(
+    The violation counts and the profile's three tables are collected as
+    concurrent jobs; the shape list comes from the collected property and
+    class keys, and score_rows does the rest on the driver. Driver memory
+    is O(#shapes + #properties + #classes): the per-shape rows carry at
+    most MAX_VIOLATION_SAMPLES focus nodes each, at any corpus scale."""
+    counts, props, classes, (ent,) = collect_concurrently(
         violation_counts(plan.violations),
-        profile.subjects_per_property.select("p", "num_subjects"),
-        profile.entities_per_class.select("cls", "num_instances"))
-    rows = score_rows(plan.shapes, counts, {
-        "entities": profile.num_entities,
-        "subjects_per_property": dict(map(tuple, spp)),
-        "entities_per_class": dict(map(tuple, epc))}, target)
+        profile.subjects_per_property, profile.entities_per_class,
+        profile.entity_counts.select("num_entities"))
+    spp, epc = dict(map(tuple, props)), dict(map(tuple, classes))
+    shapes = data_shapes(plan.vocab_terms, plan.disjoint_pairs, plan.cfg,
+                         set(spp), set(epc))
+    rows = score_rows(shapes, counts, {
+        "entities": ent["num_entities"] or 0,
+        "subjects_per_property": spp, "entities_per_class": epc}, target)
     return spark.createDataFrame(rows, REPORT_SCHEMA)

@@ -4,8 +4,9 @@ The reference materializes its shapes graphs next to the results
 (dq_assessment.py:156-159 metadata, 212-218 vocabulary, 255-258 data)
 as a debugging/parity artifact. This module re-expresses the shape
 templates (dq_assessment/shapes/*.template.ttl) as plain f-string
-instantiation over the SAME inputs `compile_data_constraints` walks, so
-the emitted graph always names exactly the shapes the engine evaluates.
+instantiation over the SAME inputs `scoring.score_plan` instantiates
+the data shapes from (the plan's terms plus the profile's usage sets), so
+the emitted graph always names exactly the shapes the engine scores.
 
 Output is template-shaped Turtle (the reference round-trips through
 rdflib, which reformats but preserves the triples); shape indices are a
@@ -68,10 +69,10 @@ def data_shapes_ttl(
     used_props: set[str],
     used_classes: set[str],
 ) -> str:
-    """The data shapes graph for the plan `compile_data_constraints`
-    evaluates over the same (vocab_terms, disjoint_pairs, cfg, usage)
-    inputs. One shape per ShapeSpec family member, same pruning rules
-    (constraints.py:163-497; reference shacl_shape_builder.py:48-583)."""
+    """The data shapes graph score_plan scores for the same
+    (vocab_terms, disjoint_pairs, cfg, usage) inputs. One shape per
+    ShapeSpec family member, same pruning rules (constraints.data_shapes;
+    reference shacl_shape_builder.py:48-583)."""
     out = [PREFIXES]
     pc = cc = 0  # property / class shape counters (builder.py:27-46)
 

@@ -364,16 +364,3 @@ def subclass_closure(vocab_rows: list[tuple]) -> list[tuple[str, str]]:
             stack.extend(direct.get(anc, ()))
     return sorted(pairs)
 
-
-def raw_usage_sets(T_raw, type_property: str) -> tuple[set[str], set[str]]:
-    """(used properties, used classes) from the PRE-TBox-merge graph —
-    the reference's shape instantiation prunes on raw-graph usage
-    (shacl_shape_builder.py; see pizza-parity notes)."""
-    from pyspark.sql import functions as F
-
-    usage = T_raw.agg(
-        F.collect_set("p").alias("props"),
-        F.collect_set(
-            F.when(F.col("p") == type_property, F.col("o"))).alias("classes"),
-    ).first()
-    return set(usage["props"]), set(usage["classes"])

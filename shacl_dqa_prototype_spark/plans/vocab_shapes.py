@@ -11,15 +11,19 @@ from the data profile.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 
-from shacl_dqa_prototype_spark.plans.constraints import (
-    ConstraintPlan,
-    ShapeSpec,
-    VocabTerm,
-)
+from shacl_dqa_prototype_spark.plans.constraints import ShapeSpec, VocabTerm
 from shacl_dqa_prototype_spark.plans.scoring import score_rows
 from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA, VIOLATIONS_SCHEMA
+
+
+@dataclass
+class VocabPlan:
+    violations: DataFrame
+    shapes: list[ShapeSpec]
 
 
 def compile_vocab_constraints(
@@ -30,7 +34,7 @@ def compile_vocab_constraints(
     term_labels: dict[str, bool],
     used_classes: set[str],
     used_props: set[str],
-) -> ConstraintPlan:
+) -> VocabPlan:
     """Evaluate the four vocabulary shape families for one vocabulary.
 
     term_labels: term → has rdfs:label in the vocab graph (drives C37/C38).
@@ -72,14 +76,14 @@ def compile_vocab_constraints(
             rows.append(("UndefinedProperty", p, p, None))
         shapes.append(ShapeSpec("UndefinedProperty", p, "binary"))
 
-    return ConstraintPlan(
+    return VocabPlan(
         violations=spark.createDataFrame(rows, VIOLATIONS_SCHEMA), shapes=shapes)
 
 
 def score_vocab_plan(
     spark: SparkSession,
     vocab: str,
-    plan: ConstraintPlan,
+    plan: VocabPlan,
     n_classes: int,
     n_properties: int,
 ) -> DataFrame:

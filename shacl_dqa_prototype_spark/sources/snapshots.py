@@ -498,10 +498,12 @@ class SnapshotTable:
         (path-level pruning, see read_buckets), the anti-join runs
         against that slice alone, and commit_merge_buckets rewrites only
         those buckets while carrying every untouched bucket by reference.
-        Upserting 1k rows into a 10⁹-row, 32-bucket table therefore
-        touches ~1/32nd of the data files and rewrites nothing else —
-        the same pruning discipline as the incremental-DQA state commits
-        (plans/incremental.py).
+        The rewrite is O(touched buckets), which is small only when the
+        update has far fewer distinct keys than there are buckets: k keys
+        spread over 32 buckets leave an expected 32·(31/32)^k untouched,
+        1.3 at k = 100 and ~5·10⁻¹³ at k = 1,000, so upserting 1k rows
+        rewrites essentially every bucket. Same pruning discipline as the
+        incremental-DQA state commits (plans/incremental.py).
 
         Concurrency: the whole read-modify-write is SNAPSHOT-ISOLATED —
         the buckets are read AT the snapshot validated here, and the
@@ -554,8 +556,9 @@ class SnapshotTable:
         Scale shape: identical pruning discipline to merge_upsert — the
         delete-key bucket set is computed first, only those ``_bucket=k``
         leaf dirs are read and anti-joined, and only they are rewritten;
-        untouched buckets are carried by reference. Deleting 1k rows from
-        a 10⁹-row table rewrites ~1/n_buckets of the files. The old
+        untouched buckets are carried by reference. The rewrite is
+        O(touched buckets), small only when the delete keys are far fewer
+        than ``n_buckets`` (see merge_upsert). The old
         snapshot stays readable (time travel shows pre-delete state until
         expire_snapshots vacuums it — run it promptly when the delete is
         a compliance erasure)."""

@@ -20,6 +20,7 @@ from shacl_dqa_prototype_spark.plans.constraints import (
     VocabTerm,
     compile_data_constraints,
 )
+from shacl_dqa_prototype_spark.plans.dqa import run_data_dqa
 from shacl_dqa_prototype_spark.plans.profile import profile_graph
 from shacl_dqa_prototype_spark.plans.scoring import score_plan
 from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
@@ -232,6 +233,35 @@ def test_scores(spark, plan_and_profile):
     assert meta["measure"] == pytest.approx(0.5)  # 1 of 2 properties clean
 
 
+def test_profile_hand_computed(plan_and_profile):
+    """Every B1-B8 scalar and all three per-key tables of FIXTURE, counted
+    by hand from its 31 triples."""
+    _, _, profile = plan_and_profile
+    assert profile.as_dict() == {
+        "num_triples": 31,
+        # A, B, rdf:Bag, knows (e8), DeprClass, owl:NamedIndividual
+        "num_classes": 6,
+        # the 11 typed subjects; e3 is typed twice
+        "num_entities": 11,
+        "num_properties": 10,
+        "num_entities_interlinking": 2,     # e1, e5
+        "num_entities_label": 3,            # e1, e2, e5
+        "num_entities_description": 0,
+    }
+    # (property, triples, distinct subjects)
+    per_property = {
+        RDF_TYPE: (12, 11), RDFS_LABEL: (3, 3), OWL_SAME_AS: (2, 2),
+        PARTNER: (3, 2), AGE: (3, 3), EMAIL: (2, 2), KNOWS: (3, 2),
+        OLD: (1, 1), CLASS_B: (1, 1), PARENT: (1, 1)}
+    assert dict(map(tuple, profile.triples_per_property.collect())) == {
+        p: n for p, (n, _) in per_property.items()}
+    assert dict(map(tuple, profile.subjects_per_property.collect())) == {
+        p: n for p, (_, n) in per_property.items()}
+    assert dict(map(tuple, profile.entities_per_class.collect())) == {
+        CLASS_A: 6, CLASS_B: 2, f"{RDF}Bag": 1, KNOWS: 1, DEPR_CLASS: 1,
+        OWL_NAMED_INDIVIDUAL: 1}
+
+
 def test_deprecated_functional_excluded(spark):
     """Reference parity (utils.py:313-318): deprecated terms are skipped
     when harvesting functional / inverse-functional property sets, so a
@@ -258,8 +288,9 @@ def test_deprecated_functional_excluded(spark):
     assert focus_set(plan, "InverseFunctionalPropertyUniqueness") == set()
     assert focus_set(plan, "DeprecatedProperties", DFP) == {E1}
     # and the shapes are not even instantiated for the deprecated terms
-    assert not [sp for sp in plan.shapes if sp.metric in
-                ("FunctionalProperty", "InverseFunctionalPropertyUniqueness")]
+    report = run_data_dqa(T, vocab, [], CFG, plan=plan)
+    assert not report.filter(F.col("metric").isin(
+        "FunctionalProperty", "InverseFunctionalPropertyUniqueness")).count()
 
 
 def test_vocab_scoring_empty_denominator(spark):

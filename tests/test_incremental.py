@@ -58,21 +58,17 @@ def test_incremental_profile_matches_batch(spark, tmp_path):
                           core.ENTRY_CFG.labeling_property,
                           core.ENTRY_CFG.description_property,
                           core.ENTRY_CFG.interlinking_property)
-    row = prof["scalars"].first()
-    assert row["num_triples"] == batch.num_triples
-    assert row["num_properties"] == batch.num_properties
-    assert row["num_entities"] == batch.num_entities
-    assert row["num_classes"] == batch.num_classes
-    assert row["num_entities_label"] == batch.num_entities_label
-    assert row["num_entities_interlinking"] == batch.num_entities_interlinking
-    assert row["num_entities_description"] == batch.num_entities_description
-    for key, batch_df in [
-        ("triples_per_property", batch.triples_per_property),
-        ("subjects_per_property", batch.subjects_per_property),
-        ("entities_per_class", batch.entities_per_class),
-    ]:
-        inc = sorted(map(tuple, prof[key].collect()))
-        ref = sorted(map(tuple, batch_df.collect()))
+    assert prof.num_triples == batch.num_triples
+    assert prof.num_properties == batch.num_properties
+    assert prof.num_entities == batch.num_entities
+    assert prof.num_classes == batch.num_classes
+    assert prof.num_entities_label == batch.num_entities_label
+    assert prof.num_entities_interlinking == batch.num_entities_interlinking
+    assert prof.num_entities_description == batch.num_entities_description
+    for key in ("triples_per_property", "subjects_per_property",
+                "entities_per_class"):
+        inc = sorted(map(tuple, getattr(prof, key).collect()))
+        ref = sorted(map(tuple, getattr(batch, key).collect()))
         assert inc == ref, key
 
     # state itself is snapshot-versioned: the pre-second-delta state is
@@ -180,7 +176,8 @@ def _assert_state_report_matches_batch(spark, tmp_path, cfg, subclass_pairs):
     """score_from_state must reproduce the ENTIRE batch report — every
     shape row and the meta rollup, scores, violation counts and violation
     samples — from state alone (no triple scan), and its shape list,
-    instantiated from state-derived usage sets, must be the batch plan's."""
+    instantiated from state-derived usage sets, must be the shapes of the
+    batch report."""
     from shacl_dqa_prototype_spark.plans.constraints import data_shapes
     from shacl_dqa_prototype_spark.plans.dqa import run_data_dqa
     from shacl_dqa_prototype_spark.plans.incremental import score_from_state
@@ -192,18 +189,14 @@ def _assert_state_report_matches_batch(spark, tmp_path, cfg, subclass_pairs):
                            subclass_pairs=subclass_pairs)
     plan = compile_data_constraints(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT,
                                     cfg, subclass_pairs=subclass_pairs)
-    plan.violations = plan.violations.cache()
-    try:
-        batch = run_data_dqa(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg,
-                             plan=plan)
-        batch_rows = batch.collect()
-    finally:
-        plan.unpersist()
+    batch_rows = run_data_dqa(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg,
+                              plan=plan).collect()
 
     used_props = {r["p"] for r in state.ps_counts.read().collect()}
     used_classes = {r["cls"] for r in state.cls_pairs.read().collect()}
-    assert data_shapes(core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg,
-                       used_props, used_classes) == plan.shapes
+    assert [(sp.metric, sp.item) for sp in data_shapes(
+        core.ENTRY_VOCAB, core.ENTRY_DISJOINT, cfg, used_props,
+        used_classes)] == [(r[2], r[3]) for r in batch_rows if r[4] != "meta"]
 
     def _key(t):
         return tuple((x is None, x) for x in t)
@@ -245,8 +238,6 @@ def test_tiers_partition_the_shapes(spark):
         state_violations,
         union_branches,
     )
-    from shacl_dqa_prototype_spark.plans.vocab import raw_usage_sets
-
     T = core._triples(spark, SF)
     # a literal object of a class-range property: a row-tier leak of the
     # class ranges (e.g. into the nodeKind check) would emit it
@@ -255,7 +246,9 @@ def test_tiers_partition_the_shapes(spark):
           None, None)], T.schema))
     for cfg, subclass_pairs in ((core.ENTRY_CFG, None),
                                 (CUSTOM_CFG, SUBCLASS)):
-        used_props, used_classes = raw_usage_sets(T, cfg.type_property)
+        used_props, used_classes = profile_graph(
+            T, cfg.type_property, cfg.labeling_property,
+            cfg.description_property, cfg.interlinking_property).usage_sets()
         terms = _select_terms(core.ENTRY_VOCAB, core.ENTRY_DISJOINT,
                               used_props, used_classes)
         tiers = {
@@ -296,28 +289,19 @@ def _cache_entries(spark) -> int:
 
 
 def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
-    """compile_data_constraints, score_from_state and score_plan neither
-    cache nor persist anything: no DataFrame.cache/persist call while they
-    run, and no persistent RDD or CacheManager entry left after them. A
-    fold (apply_delta) persists its delta while it runs and leaves nothing
-    behind either."""
+    """compile_data_constraints, score_from_state, score_plan and
+    run_data_dqa neither cache nor persist anything: no
+    DataFrame.cache/persist call while they run, and no persistent RDD or
+    CacheManager entry left after them. A fold (apply_delta) persists its
+    delta while it runs and leaves nothing behind either."""
     from shacl_dqa_prototype_spark.plans.constraints import ConstraintPlan
+    from shacl_dqa_prototype_spark.plans.dqa import run_data_dqa
     from shacl_dqa_prototype_spark.plans.incremental import score_from_state
-    from shacl_dqa_prototype_spark.plans.profile import GraphProfile
     from shacl_dqa_prototype_spark.plans.scoring import score_plan
 
     T = core._triples(spark, SF)
     state = _fold_in_two(spark, tmp_path, T)
-    prof = profile_from_state(state)
-    row = prof["scalars"].first()
-    profile = GraphProfile(
-        **{k: row[k] or 0 for k in (
-            "num_triples", "num_classes", "num_entities", "num_properties",
-            "num_entities_interlinking", "num_entities_label",
-            "num_entities_description")},
-        triples_per_property=prof["triples_per_property"],
-        subjects_per_property=prof["subjects_per_property"],
-        entities_per_class=prof["entities_per_class"])
+    profile = profile_from_state(state)
 
     entries_before = _cache_entries(spark)
     rdds_before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
@@ -339,12 +323,15 @@ def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
         violations=violations_from_state(
             state, core.ENTRY_VOCAB, core.ENTRY_CFG,
             disjoint_pairs=core.ENTRY_DISJOINT),
-        shapes=batch_plan.shapes)
+        vocab_terms=core.ENTRY_VOCAB, disjoint_pairs=core.ENTRY_DISJOINT,
+        cfg=core.ENTRY_CFG)
     reports = [
         score_from_state(state, core.ENTRY_VOCAB, core.ENTRY_CFG,
                          disjoint_pairs=core.ENTRY_DISJOINT),
         score_plan(spark, plan, profile),
         score_plan(spark, batch_plan, profile),
+        run_data_dqa(T, core.ENTRY_VOCAB, core.ENTRY_DISJOINT,
+                     core.ENTRY_CFG),
     ]
     assert all(r.count() > 0 for r in reports)
     assert calls == []
@@ -430,7 +417,7 @@ def test_apply_delta_dedups_within_delta(spark, tmp_path):
         "o_dtype string, o_lang string")
     apply_delta(state, delta, cfg, terms, n_buckets=4, delta_id="d1")
     prof = profile_from_state(state)
-    assert prof["scalars"].first()["num_triples"] == 1
+    assert prof.num_triples == 1
     v = violations_from_state(state, terms, cfg)
     assert v.filter(v.metric.contains("Functional")).count() == 0
 
@@ -519,8 +506,7 @@ def test_incremental_matches_batch_on_random_splits(spark, data):
             state, core.ENTRY_VOCAB, core.ENTRY_CFG,
             disjoint_pairs=core.ENTRY_DISJOINT)
         assert _vset(inc_v) == _vset(batch_plan.violations), (rows, assign)
-        n_inc = profile_from_state(state)["scalars"].first()["num_triples"]
-        assert (n_inc or 0) == len(rows), (rows, assign)
+        assert profile_from_state(state).num_triples == len(rows), (
+            rows, assign)
     finally:
-        batch_plan.unpersist()
         shutil.rmtree(state_dir, ignore_errors=True)

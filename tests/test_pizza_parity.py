@@ -26,8 +26,8 @@ def test_pizza_full_parity(spark):
         vocab_report,
     )
 
-    report, md_report, (vocab_rows, prof_v, T_raw) = build_report(spark)
-    vrep = vocab_report(spark, vocab_rows, prof_v, T_raw)
+    report, md_report, (vocab_rows, prof_v, raw_profile) = build_report(spark)
+    vrep = vocab_report(spark, vocab_rows, prof_v, raw_profile)
     errors = compare(report, md_report, vrep)
     errors += compare_csv(report, md_report, vrep)
     errors += compare_vocab_profile(prof_v)

@@ -13,6 +13,7 @@ from shacl_dqa_prototype_spark.plans.constraints import (
     DQAConfig,
     compile_data_constraints,
 )
+from shacl_dqa_prototype_spark.plans.dqa import run_data_dqa
 from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
 from shacl_dqa_prototype_spark.sources.rdf import (
     parse_rdfxml,
@@ -123,8 +124,8 @@ def test_contextual_uri_shapes(spark):
     assert regex_bad == {"http://other.org/bad"}
     assert space_bad == {"http://other.org/bad"}
     # ungated when metadata absent
-    plan2 = compile_data_constraints(T, [], [], DQAConfig(type_property=f"{RDF_NS}type"))
-    metrics = {s.metric for s in plan2.shapes}
+    report = run_data_dqa(T, [], [], DQAConfig(type_property=f"{RDF_NS}type"))
+    metrics = {r["metric"] for r in report.collect()}
     assert "URIRegexComplianceEntities" not in metrics
     assert "URISpaceComplianceEntities" not in metrics
 

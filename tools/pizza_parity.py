@@ -17,8 +17,6 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F
-
 from shacl_dqa_prototype_spark.functions.terms import OWL, RDF, RDFS, VOID
 from shacl_dqa_prototype_spark.plans.constraints import DQAConfig, VocabTerm
 from shacl_dqa_prototype_spark.plans.dqa import (
@@ -74,32 +72,25 @@ def build_report(spark):
     metadata = spark.createDataFrame(void_rows, TRIPLES_SCHEMA)
     cfg = contextual_config_from_metadata(metadata, CFG)
 
-    # usage pruning sets come from the RAW graph (the reference's profile
-    # drives shape instantiation); sh:class closure from vocab subClassOf.
-    used_props = {r[1] for r in data_rows}
-    used_classes = {r[2] for r in data_rows if r[1] == RDF_TYPE}
-    sub_pairs = subclass_closure(vocab_rows)
-
     from shacl_dqa_prototype_spark.plans.constraints import compile_data_constraints
     from shacl_dqa_prototype_spark.plans.scoring import score_plan
 
+    # the raw-graph profile prunes the shapes (the reference's profile
+    # drives shape instantiation); sh:class closure from vocab subClassOf
     plan = compile_data_constraints(
-        T, terms, disjoint, cfg, used_props=used_props,
-        used_classes=used_classes, subclass_pairs=sub_pairs)
-    plan.violations = plan.violations.cache()
+        T, terms, disjoint, cfg, subclass_pairs=subclass_closure(vocab_rows))
     report = score_plan(spark, plan, profile, target="data")
     md_report = run_metadata_dqa(spark, metadata)
-    return report, md_report, (vocab_rows, prof_v, T_raw)
+    return report, md_report, (vocab_rows, prof_v, profile)
 
 
-def vocab_report(spark, vocab_rows, prof_v, T_raw):
+def vocab_report(spark, vocab_rows, prof_v, raw_profile):
     """C37-C40 against the self-typed vocab graph, mirroring
-    dq_assessment.py:171-229 (namespace routing + derived typing)."""
+    dq_assessment.py:171-229 (namespace routing + derived typing); the
+    used classes and properties are the raw-graph profile's keys."""
     from shacl_dqa_prototype_spark.plans.dqa import run_vocab_dqa
 
-    used_classes = {r["o"] for r in T_raw.filter(F.col("p") == RDF_TYPE)
-                    .select("o").distinct().collect()}
-    used_props = {r["p"] for r in T_raw.select("p").distinct().collect()}
+    used_props, used_classes = raw_profile.usage_sets()
     return run_vocab_dqa(spark, "pizza_owl", vocab_rows,
                          used_classes, used_props)
 
@@ -345,8 +336,8 @@ def compare_vocab_profile(prof_v) -> list[str]:
 
 def main() -> int:
     spark = get_spark("pizza-parity", cores=8, shuffle_partitions=8)
-    report, md_report, (vocab_rows, prof_v, T_raw) = build_report(spark)
-    vrep = vocab_report(spark, vocab_rows, prof_v, T_raw)
+    report, md_report, (vocab_rows, prof_v, raw_profile) = build_report(spark)
+    vrep = vocab_report(spark, vocab_rows, prof_v, raw_profile)
     errors = compare(report, md_report, vrep)
     errors += compare_csv(report, md_report, vrep)
     errors += compare_vocab_profile(prof_v)
