@@ -20,8 +20,7 @@ streaming-DQA drain rate (triple file stream folded into incremental
 state per microbatch); `--curate` to measure end-to-end corpus-curation
 throughput (gate → source filter → LSH keep-best dedup → redact);
 `--incremental` to measure the incremental-DQA cost curve (seconds per
-fixed-size delta as the state grows — the bucket-pruned O(delta)
-evidence); `--novelty-stream` to measure the novelty-at-ingest drain
+fixed-size delta as the state grows — the O(delta) fold evidence); `--novelty-stream` to measure the novelty-at-ingest drain
 rate (id-ordered epoch files scored against the accumulated n-gram
 index, result asserted equal to batch ngram_novelty); the default run
 reports queries + construction.
@@ -792,8 +791,8 @@ def main() -> None:
         # Streaming-DQA drain rate: the constructed triple table arrives
         # as a file stream (16 files per microbatch) and is folded into
         # incremental state epoch by epoch; the timed section is the full
-        # drain, so the rate includes every bucket-pruned state merge and
-        # the monotone-violation appends.
+        # drain, so the rate includes every state-level append, the
+        # compactions and the monotone-violation appends.
         n_sd = int(os.environ.get("SPARK_GRAFT_STREAM_DOCS", 200_000))
         sd_corpus, sd_cfg = _materialize_corpus(n_sd)
         from pyspark.sql import SparkSession
@@ -992,9 +991,11 @@ def main() -> None:
     if "--incremental" in sys.argv:
         # Incremental-state cost curve: fold K fixed-size triple deltas
         # into a GROWING DQA state and report seconds per delta vs state
-        # size — the evidence for the bucket-pruned O(delta) commit claim
-        # (plans/incremental.py tier-1 state). A flat curve = cost tracks
-        # the delta, not the accumulated state.
+        # size — the evidence for the O(delta) fold claim (plans/
+        # incremental.py: each fold appends one level per state table;
+        # reads merge base ∪ levels, and a table past 16 dirs is
+        # compacted). A flat curve = cost tracks the delta, not the
+        # accumulated state.
         n_in = int(os.environ.get("SPARK_GRAFT_INC_DOCS", 1_000_000))
         k_deltas = int(os.environ.get("SPARK_GRAFT_INC_DELTAS", 10))
         in_corpus, in_cfg = _materialize_corpus(n_in)

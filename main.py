@@ -363,10 +363,10 @@ def cmd_dqa(args) -> None:
 
     from functools import reduce
 
-    # cache: the CSV write, the JSON write, and the collect below are
-    # three actions over the same unioned scoring plan — without the
-    # cache the aggregations re-execute per action
-    report = reduce(lambda a, b: a.unionByName(b), reports).cache()
+    # every stage report is a local relation of driver rows
+    # (scoring.report_frame), so the CSV write, the JSON write and the
+    # collect below re-run no aggregation and need no cache
+    report = reduce(lambda a, b: a.unionByName(b), reports)
     os.makedirs(args.output, exist_ok=True)
     write_report_csv(report, os.path.join(args.output, "dq_report_csv"))
     write_report_json(report, os.path.join(args.output, "dq_report_json"))
@@ -377,7 +377,6 @@ def cmd_dqa(args) -> None:
     )
 
     report_rows = report.collect()
-    report.unpersist()  # third and last action on the cached union
     if plan is not None:
         timings["data_shapes_elapsed_time"] = time.time() - t0
 
@@ -451,11 +450,11 @@ def cmd_dqa(args) -> None:
 def cmd_dqa_append(args) -> None:
     """Incremental DQA as a spark-submit surface: fold an appended triple
     delta (parquet dir or RDF file) into a persistent state directory —
-    bucket-pruned mergeable-state commits, idempotent per --delta-id —
-    and optionally emit the fully scored report re-derived from STATE
-    ALONE (zero historical-triple scans; plans/incremental.py). Repeated
-    appends to the same --state keep the report exactly equal to a batch
-    `dqa` run over the union of all deltas (asserted in tests)."""
+    one appended merge-on-read level per state table, idempotent per
+    --delta-id — and optionally emit the fully scored report re-derived
+    from STATE ALONE (zero historical-triple scans; plans/incremental.py).
+    Repeated appends to the same --state keep the report exactly equal to
+    a batch `dqa` run over the union of all deltas (asserted in tests)."""
     from shacl_dqa_prototype_spark.functions.terms import OWL, RDF, RDFS
     from shacl_dqa_prototype_spark.plans.constraints import DQAConfig
     from shacl_dqa_prototype_spark.plans.incremental import (

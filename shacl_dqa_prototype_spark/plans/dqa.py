@@ -19,7 +19,11 @@ from shacl_dqa_prototype_spark.plans.constraints import (
 )
 from shacl_dqa_prototype_spark.plans.metadata import evaluate_metadata
 from shacl_dqa_prototype_spark.plans.profile import GraphProfile, profile_graph
-from shacl_dqa_prototype_spark.plans.scoring import DIMENSIONS, score_plan
+from shacl_dqa_prototype_spark.plans.scoring import (
+    DIMENSIONS,
+    report_frame,
+    score_plan,
+)
 from shacl_dqa_prototype_spark.functions.terms import VOID
 
 
@@ -64,11 +68,7 @@ def run_metadata_dqa(
         )
         for r in results
     ]
-    return spark.createDataFrame(
-        rows,
-        "target string, dimension string, metric string, item string, "
-        "score_kind string, measure double, num_violations long, violations string",
-    )
+    return report_frame(spark, rows)
 
 
 def run_vocab_dqa(

@@ -6,22 +6,26 @@ re-reads everything. The constraint compiler (plans/constraints.py) writes
 each family once, in one of two tiers, and batch DQA is "fold T as one
 delta into empty state". This module keeps that state on disk:
 
-1. State tier — the six state_aggregates of each delta are merged into
-   one SnapshotTable each (STATE_MERGES: bool-max, sum or distinct), as
-   classic incremental-view-maintenance aggregates. Each merge is ONE
-   co-partitioned shuffle of (delta-aggregate ∪ touched state buckets),
-   never a scan of historical triples. dom_pairs is bucketed by s and
-   spo_pairs by o to co-partition with cls_pairs(s) for the CorrectDomain
-   / CorrectRange anti-joins.
+1. State tier — each delta's six state_aggregates are appended to one
+   SnapshotTable each as a new LEVEL: one small unbucketed data dir per
+   table per fold, with no read of old state, no bucket probe and no
+   rewrite (the fold into an empty table writes the BASE instead,
+   bucketed by the table's STATE_MERGES column). Reads merge:
+   IncrementalDQAState.merged applies the table's STATE_MERGES rule
+   (bool-max, sum or distinct) over base ∪ levels. Every rule is
+   associative and commutative, so merging when the table is read gives
+   the rows a merge at write time would have stored — the LSM /
+   Iceberg-v2 merge-on-read trade: a fold writes O(delta), a read merges
+   O(state + levels). Never a scan of historical triples.
 
-   Commits are BUCKET-PRUNED (SnapshotTable.commit_merge_buckets): only
-   the hash buckets the delta touches are rewritten; untouched buckets
-   are carried by reference, so a commit costs O(touched buckets). That
-   is small only when a delta has far fewer distinct keys than there are
-   buckets: k keys hashed into 32 buckets leave an expected 32·(31/32)^k
-   untouched, 1.3 at k = 100 and ~5·10⁻¹³ at k = 1,000, so a delta of a
-   few hundred subjects already rewrites nearly the whole table.
-   violations_from_state evaluates state_violations over the six reads.
+   Compaction bounds the levels: once a table's current snapshot holds
+   more than SnapshotTable.compact's default of 16 dirs, the fold that
+   crossed it rewrites base ∪ levels, merged by the same rule, as one base
+   bucketed by the STATE_MERGES column (IncrementalDQAState.compact, also
+   what vacuum and the streaming maintenance step run). The overwrite is
+   pinned to the snapshot it read: a fold racing it wins, and a later fold
+   compacts. violations_from_state evaluates state_violations over the
+   six merged reads.
 
 2. Row tier — row_violations of each delta are FINAL (no later triple can
    create or retract them), so they are commit_append-ed to a violations
@@ -30,11 +34,12 @@ delta into empty state". This module keeps that state on disk:
 Both tiers take their property lists from the same term selection as
 batch, with nothing pruned by usage (_state_terms): a property or class
 unused so far simply matches no rows. profile_from_state is the batch
-GraphProfile over the reads of subj_flags, ps_counts and cls_pairs, and
-score_from_state is the batch scorer (scoring.score_plan) over
-violations_from_state and that profile: the O(state) work runs as
+GraphProfile over the merged reads of subj_flags, ps_counts and
+cls_pairs, and score_from_state is the batch scorer (scoring.score_plan)
+over violations_from_state and that profile: the O(state) work runs as
 concurrent Spark jobs, everything O(#shapes) on the driver. Parity with
-batch is asserted in tests/test_incremental.py.
+batch is asserted in tests/test_incremental.py and, for keys that span
+levels and across compactions, tests/test_state_levels.py.
 
 State emits violations per DISTINCT (item, focus[, value]) across deltas
 where a batch scan of duplicated raw triples would repeat a row. Scoring
@@ -88,7 +93,10 @@ from shacl_dqa_prototype_spark.plans.constraints import (
 from shacl_dqa_prototype_spark.plans.profile import GraphProfile
 from shacl_dqa_prototype_spark.plans.scoring import score_plan
 from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
-from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
+from shacl_dqa_prototype_spark.sources.snapshots import (
+    CommitConflictError,
+    SnapshotTable,
+)
 
 SUBJ_FLAGS_SCHEMA = StructType(
     [StructField("s", StringType(), False)]
@@ -118,8 +126,8 @@ SPO_PAIRS_SCHEMA = StructType([
     StructField("o", StringType(), False),
 ])
 
-# state table → (bucket column, merge of its touched buckets ∪ the delta's
-# state_aggregates row set)
+# state table → (bucket column of its base, merge rule applied over
+# base ∪ levels when the table is read or compacted)
 STATE_MERGES = {
     "subj_flags": ("s", lambda df: df.groupBy("s").agg(
         *[F.max(f).alias(f) for f in SUBJECT_FLAGS])),
@@ -170,12 +178,29 @@ class IncrementalDQAState:
             "mono_violations": self.mono_violations,
         }
 
+    def merged(self, name: str) -> DataFrame:
+        """State table ``name`` as of its current snapshot: its
+        STATE_MERGES rule over base ∪ levels (see the module docstring).
+        Builds a plan only."""
+        return STATE_MERGES[name][1](getattr(self, name).read())
+
+    def compact(self, name: str, **kw) -> str | None:
+        """SnapshotTable.compact of table ``name`` (``kw`` passes through)
+        with the table's STATE_MERGES rule: base ∪ levels are rewritten,
+        merged, as one base in the base's bucket layout, committed as an
+        overwrite pinned to the snapshot it read (CommitConflictError when
+        another commit landed meanwhile). The row-tier log has no rule and
+        is rewritten as it is."""
+        rule = STATE_MERGES.get(name)
+        return getattr(self, name).compact(merge=rule and rule[1], **kw)
+
     def vacuum(self, keep_last: int = 1,
                orphan_grace_s: float = 3600.0) -> dict[str, int]:
-        """Periodic maintenance for long streaming runs (r4 verdict item
-        7): every epoch appends one merge commit per state table, so a
-        many-epoch drain grows each table's dir chain and log without
-        bound. vacuum() folds each chain back (compact) and drops the
+        """Periodic maintenance for long streaming runs: every epoch
+        appends one level per state table and one entry to the row-tier
+        log, so a many-epoch drain grows each table's dir chain and log
+        without bound. vacuum() compacts each table into one base
+        (compact: the same merge rule the reads apply) and drops the
         history no longer needed for time travel (expire_snapshots) —
         Iceberg's rewrite_data_files + expire_snapshots maintenance pair.
         Returns dirs-deleted per table; the before/after state-dir file
@@ -198,23 +223,13 @@ class IncrementalDQAState:
             # record must carry the full applied-id set before expire
             # removes the per-delta records
             if len(t.snapshots()) > keep_last:
-                t.compact(
-                    max_dirs=0,
+                self.compact(
+                    name, max_dirs=0,
                     extra={"applied_delta_ids": sorted(seen)} if seen
                     else None)
             deleted[name] = len(t.expire_snapshots(
                 keep_last=keep_last, orphan_grace_s=orphan_grace_s))
         return deleted
-
-
-def _changed_buckets(df: DataFrame, key: str, n_buckets: int) -> list[int]:
-    """Distinct hash buckets the delta aggregate touches (≤ n_buckets rows
-    collected — same bucket expression SnapshotTable._write_data uses)."""
-    return [
-        r["b"] for r in df.select(
-            F.pmod(F.xxhash64(key), F.lit(n_buckets)).alias("b")
-        ).distinct().collect()
-    ]
 
 
 def apply_delta(
@@ -228,23 +243,23 @@ def apply_delta(
 ) -> None:
     """Fold one appended triple batch into the DQA state.
 
-    Each mergeable state table gets ONE bucket-pruned merge snapshot =
-    merge(touched state buckets, delta aggregate); untouched buckets are
-    carried by reference — the parquet write is O(|touched buckets|),
-    which is below O(|state|) only when the delta has far fewer distinct
-    keys than ``n_buckets`` (see the module docstring). The row-tier
-    violations of the delta are appended to the
-    violations log (append-only, no merge at all). Historical triples are
+    Each state table gets ONE append of the delta's aggregate as a new
+    level — O(|delta|) written, no read of old state, no rewrite; the
+    fold into an empty table writes the base, bucketed by the table's
+    STATE_MERGES column into ``n_buckets``. A table whose current
+    snapshot then holds more than 16 dirs is compacted into one base
+    (IncrementalDQAState.compact); a compaction that loses a race to
+    another commit is left to a later fold. The row-tier violations of
+    the delta are appended to the violations log. Historical triples are
     never re-read.
 
     The seven table folds are mutually INDEPENDENT (disjoint state dirs
     and logs, all reading the one persisted delta), so they are submitted
     from a thread pool (``parallelism``; Spark schedules concurrent jobs
-    fine) — the per-delta floor is the SLOWEST table's
-    bucket-probe + merge-write, not the SUM of seven driver-synchronized
-    round trips. The delta is materialized once before forking so
-    concurrent jobs never race to compute the same cached partitions.
-    Pass ``parallelism=1`` to fold sequentially.
+    fine) — the per-delta floor is the SLOWEST table's write, not the SUM
+    of seven driver-synchronized round trips. The delta is materialized
+    once before forking so concurrent jobs never race to compute the same
+    cached partitions. Pass ``parallelism=1`` to fold sequentially.
 
     Pass ``delta_id`` (any stable string — a snapshot id, an epoch) to
     make the apply IDEMPOTENT: every table commit records it, and a retry
@@ -264,17 +279,19 @@ def apply_delta(
             for s in table.snapshots())
 
     def _fold(name: str, agg: DataFrame) -> None:
-        # merge(touched state buckets, delta aggregate), bucket-pruned; a
-        # delta that touches no bucket commits nothing
         table = getattr(state, name)
         if _already(table):
             return
-        bucket_col, merge = STATE_MERGES[name]
-        bs = _changed_buckets(agg, bucket_col, n_buckets)
-        if bs:
-            table.commit_merge_buckets(
-                merge(table.read_buckets(bs).unionByName(agg)), bs,
-                bucket_col=bucket_col, n_buckets=n_buckets, extra=extra)
+        # the first fold writes the bucketed base: compaction keeps the
+        # base's layout
+        base = table.current() is None
+        table.commit_append(
+            agg, bucket_col=STATE_MERGES[name][0] if base else None,
+            n_buckets=n_buckets, extra=extra)
+        try:
+            state.compact(name)
+        except CommitConflictError:
+            pass  # a racing commit won; the next fold compacts
 
     def _fold_mono() -> None:
         # row tier: violations of THIS delta are final — plain append,
@@ -321,10 +338,11 @@ def apply_delta(
 # ---------------------------------------------------------------------------
 
 def profile_from_state(state: IncrementalDQAState) -> GraphProfile:
-    """The graph profile (B1-B8) over the reads of the three profile state
-    tables — the same GraphProfile constructor profile_graph uses over T."""
-    return GraphProfile(state.subj_flags.read(), state.ps_counts.read(),
-                        state.cls_pairs.read())
+    """The graph profile (B1-B8) over the merged reads of the three
+    profile state tables — the same GraphProfile constructor profile_graph
+    uses over T."""
+    return GraphProfile(state.merged("subj_flags"), state.merged("ps_counts"),
+                        state.merged("cls_pairs"))
 
 
 def violations_from_state(
@@ -335,13 +353,13 @@ def violations_from_state(
     subclass_pairs: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Violations for ALL constraint families: state_violations over the
-    six state reads ∪ the row-tier log, same (metric, item, focus, value)
+    six merged state reads ∪ the row-tier log, same (metric, item, focus, value)
     shape as compile_data_constraints emits (rows per distinct item/focus
     — see module docstring). ``disjoint_pairs``/``subclass_pairs`` mirror
     the batch compiler's arguments.
 
     Builds a plan only; no job runs until the result is evaluated."""
-    dims = {name: getattr(state, name).read() for name in STATE_MERGES}
+    dims = {name: state.merged(name) for name in STATE_MERGES}
     parts = [df for df, _ in state_violations(
         dims, _state_terms(vocab_terms, disjoint_pairs), cfg, subclass_pairs)]
     # row-tier rows come straight off the append-only log. Per-triple rows

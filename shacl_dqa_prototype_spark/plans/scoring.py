@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -208,4 +209,14 @@ def score_plan(
     rows = score_rows(shapes, counts, {
         "entities": ent["num_entities"] or 0,
         "subjects_per_property": spp, "entities_per_class": epc}, target)
-    return spark.createDataFrame(rows, REPORT_SCHEMA)
+    return report_frame(spark, rows)
+
+
+def report_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Report rows (REPORT_SCHEMA order) as a local relation: handed to
+    Spark as one Arrow table, so the plan is a LocalTableScan and actions
+    on it (the report writes, a collect) run no tasks. An empty ``rows``
+    gives an empty, typed report."""
+    return spark.createDataFrame(pa.table({
+        name: [r[i] for r in rows]
+        for i, name in enumerate(REPORT_SCHEMA.fieldNames())}), REPORT_SCHEMA)

@@ -16,8 +16,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from shacl_dqa_prototype_spark.plans.constraints import ShapeSpec, VocabTerm
-from shacl_dqa_prototype_spark.plans.scoring import score_rows
-from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA, VIOLATIONS_SCHEMA
+from shacl_dqa_prototype_spark.plans.scoring import report_frame, score_rows
+from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
 
 
 @dataclass
@@ -101,4 +101,4 @@ def score_vocab_plan(
     rows = score_rows(plan.shapes, counts, {"vocab_classes": n_classes,
                                             "vocab_properties": n_properties},
                       target=f"vocab:{vocab}")
-    return spark.createDataFrame(rows, REPORT_SCHEMA)
+    return report_frame(spark, rows)

@@ -63,6 +63,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Narrow triple rows → pack more rows per input split at scale.
         .config("spark.sql.files.maxPartitionBytes", str(256 * 1024 * 1024))
+        # A snapshot-table read names every leaf dir it serves (32 bucket
+        # dirs of a base plus one dir per appended level, sources/
+        # snapshots.py); past 32 paths Spark would list them in a Spark
+        # job per read instead of on the driver.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Quiet progress bars in test output
         .config("spark.ui.showConsoleProgress", "false")

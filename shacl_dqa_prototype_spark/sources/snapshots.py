@@ -40,7 +40,9 @@ Scale note: the log grows one line per commit and is read driver-side —
 O(#commits), never O(data). Data files are only ever appended, superseded
 bucket-by-bucket, or dropped whole-directory (expire) — no commit ever
 rewrites existing data files. compact() folds a long dir chain back into
-one dir when the driver-side path list grows past a threshold.
+one dir when the driver-side path list grows past a threshold, optionally
+applying a merge rule on the way (merge-on-read tables: a base plus
+appended levels, see plans/incremental.py).
 
 Concurrency contract (r5 — Iceberg-parity optimistic concurrency):
 every commit is a compare-and-swap on the log tail, serialized by an
@@ -64,6 +66,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -502,8 +505,7 @@ class SnapshotTable:
         update has far fewer distinct keys than there are buckets: k keys
         spread over 32 buckets leave an expected 32·(31/32)^k untouched,
         1.3 at k = 100 and ~5·10⁻¹³ at k = 1,000, so upserting 1k rows
-        rewrites essentially every bucket. Same pruning discipline as the
-        incremental-DQA state commits (plans/incremental.py).
+        rewrites essentially every bucket.
 
         Concurrency: the whole read-modify-write is SNAPSHOT-ISOLATED —
         the buckets are read AT the snapshot validated here, and the
@@ -601,12 +603,20 @@ class SnapshotTable:
 
     def compact(self, max_dirs: int = 16,
                 sort_cols: list[str] | None = None,
-                extra: dict | None = None) -> str | None:
+                extra: dict | None = None,
+                merge: Callable[[DataFrame], DataFrame] | None = None,
+                ) -> str | None:
         """If the current snapshot references more than ``max_dirs`` data
-        dirs, fold everything into ONE overwrite commit (keeping the
-        current bucket layout). Bounds driver-side path resolution and
-        file counts on long append chains; returns the new snapshot id or
-        None if no compaction was needed.
+        dirs, fold everything into ONE overwrite commit, written with the
+        bucket layout of the snapshot's first (base) dir. Bounds
+        driver-side path resolution and file counts on long append chains;
+        returns the new snapshot id or None if no compaction was needed.
+
+        ``merge`` (DataFrame → DataFrame) is applied to the rows read
+        before they are rewritten — a merge-on-read table (plans/
+        incremental.py: a base plus appended levels, merged by a per-table
+        rule when read) passes its rule, so the compacted base holds the
+        merged rows and reads back the same.
 
         ``sort_cols`` additionally clusters the rewrite within each
         partition (sortWithinPartitions) — Iceberg's sort-ordered rewrite:
@@ -618,12 +628,18 @@ class SnapshotTable:
         snap = self.current()
         if snap is None or len(snap["dirs"]) <= max_dirs:
             return None
+        base = snap["dirs"][0]
+        bucket_col = (snap.get("dir_layouts") or {}).get(
+            base, snap.get("bucket_col"))
+        n_buckets = (snap.get("dir_nbuckets") or {}).get(
+            base, snap.get("n_buckets")) or 32
+        rows = self.read(snap["snapshot_id"])
         # the rewrite is derived from `snap`, so the commit is PINNED to
         # it: a concurrent append must win over the compaction (which the
         # caller just re-runs later), never be clobbered by it
         return self._commit(
-            self.read(snap["snapshot_id"]), "overwrite",
-            snap.get("bucket_col"), snap.get("n_buckets") or 32,
+            merge(rows) if merge else rows, "overwrite",
+            bucket_col, n_buckets,
             extra={"compacted_from": len(snap["dirs"]),
                    **({"sort_cols": sort_cols} if sort_cols else {}),
                    **(extra or {})},

@@ -278,15 +278,17 @@ def start_streaming_dqa(
     by the retry skipping tables whose snapshot log already carries the
     delta id. Draining the same checkpoint twice is a no-op end-to-end.
 
-    Scale shape is the incremental tier's: per batch, one bucket-pruned
-    merge per state table (shuffle = delta + touched buckets only) and one
-    plain append of the monotone-family violations.
+    Scale shape is the incremental tier's: per batch, one appended level
+    per state table (O(batch) written, no read of old state) and one plain
+    append of the monotone-family violations; reads merge base ∪ levels,
+    and a fold compacts a table once it holds more than 16 dirs.
 
     Maintenance: every ``maintain_every`` epochs each state table is
-    compacted (dirs folded once past ``compact_max_dirs``) and its history
-    expired to the last ``keep_snapshots`` snapshots — without this an
-    unbounded stream accretes one commit + data dir per table per epoch,
-    and log parsing / path resolution would grow with stream age. A Spark
+    compacted by its merge rule (``IncrementalDQAState.compact``, dirs
+    folded once past ``compact_max_dirs``) and its history expired to the
+    last ``keep_snapshots`` snapshots — without this an unbounded stream
+    accretes one commit + data dir per table per epoch, and log parsing /
+    path resolution would grow with stream age. A Spark
     restart replays at most the last epoch, whose delta id always survives
     a ``keep_snapshots`` ≥ 2 window, so idempotence is unaffected. Pass
     ``maintain_every=None`` to keep FULL time-travel history instead
@@ -294,16 +296,13 @@ def start_streaming_dqa(
     from shacl_dqa_prototype_spark.plans.incremental import apply_delta
 
     run_id = _run_token(checkpoint_dir)
-    tables = (state.subj_flags, state.ps_counts, state.cls_pairs,
-              state.po_pairs, state.dom_pairs, state.spo_pairs,
-              state.mono_violations)
 
     def _fold(batch_df, epoch_id: int) -> None:
         apply_delta(state, batch_df, cfg, vocab_terms, n_buckets=n_buckets,
                     delta_id=f"{run_id}#{epoch_id}")
         if maintain_every and epoch_id % maintain_every == maintain_every - 1:
-            for t in tables:
-                t.compact(max_dirs=compact_max_dirs)
+            for name, t in state.tables().items():
+                state.compact(name, max_dirs=compact_max_dirs)
                 t.expire_snapshots(keep_last=keep_snapshots)
 
     writer = (
