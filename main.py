@@ -387,6 +387,7 @@ def cmd_dqa(args) -> None:
         metadata_shapes_ttl,
         vocabulary_shapes_ttl,
     )
+    from shacl_dqa_prototype_spark.plans.vocab_shapes import namespace_terms
 
     shapes_dir = os.path.join(args.output, "shapes")
     os.makedirs(shapes_dir, exist_ok=True)
@@ -407,8 +408,8 @@ def cmd_dqa(args) -> None:
                     shapes_dir, f"vocabulary_shapes_{name}.ttl"), "w") as f:
                 f.write(vocabulary_shapes_ttl(
                     cfg.labeling_property, cfg.type_property,
-                    sorted(c for c in used_classes if c and c.startswith(ns)),
-                    sorted(p for p in used_props if p.startswith(ns))))
+                    namespace_terms(ns, used_classes),
+                    namespace_terms(ns, used_props)))
 
     # reference file naming: dq_assessment_<dataset>.csv with the name
     # lowercased and spaces underscored (dq_assessment.py:61-62, 1280)

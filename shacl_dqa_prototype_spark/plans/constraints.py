@@ -17,8 +17,8 @@ Every family is written once, in one of two tiers:
     datatype/nodeKind CorrectRange + MalformedLiteral. They are
     append-monotone: the violations of a set of triples are the union of
     the violations of its parts, and no later triple retracts one.
-  * state tier (state_violations): every other family, evaluated over six
-    mergeable aggregates of the triples (state_aggregates: per-subject
+  * state tier (state_violations): every other family, evaluated over up
+    to six mergeable aggregates of the triples (state_aggregates: per-subject
     flags, (p, s) counts, typing pairs, and the IFP / class-domain /
     class-range + asymmetric slices). A later triple can create or retract
     these violations, so they are decided on the aggregates of ALL triples.
@@ -254,6 +254,38 @@ def fused_scan(base: DataFrame, fams: list[tuple]) -> DataFrame:
 OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
 
 
+def range_form(t: VocabTerm) -> str:
+    """How the CorrectRange shape of property ``t`` checks its range —
+    the instantiation rules differ BY TERM KIND (shacl_shape_builder.py):
+
+      * "datatype": sh:datatype(range) + a MalformedLiteral shape. Every
+        datatype_property (builder:340-362), including range rdfs:Literal,
+        which no literal satisfies, so every value violates; and an
+        rdf_property whose literal-kind range is not rdfs:Literal
+        (builder:433-455);
+      * "literal": nodeKind Literal, an rdf_property ranged rdfs:Literal;
+      * "iri": nodeKind BlankNodeOrIRI, an object_property ranged owl:Thing
+        (builder:330-336);
+      * "resource": both nodeKinds (vacuous), an object_property ranged
+        rdfs:Resource;
+      * "class": sh:class(range), every other range. Reference parity
+        (builder:450-455): the rdf_property branch compares info['range']
+        (a dict) to the owl:Thing / rdfs:Resource strings — always false —
+        so a class-kind rdf_property range is ALWAYS sh:class, owl:Thing
+        and rdfs:Resource included.
+
+    _select_terms routes the scored shapes and shapes_ttl renders them by
+    this one function."""
+    if t.term_kind == "datatype_property":
+        return "datatype"
+    if t.term_kind == "object_property":
+        return {OWL_THING: "iri", f"{RDFS}Resource": "resource"}.get(
+            t.range, "class")
+    if t.range_kind == "literal":  # rdf_property
+        return "literal" if t.range == f"{RDFS}Literal" else "datatype"
+    return "class"
+
+
 @dataclass(frozen=True)
 class _Terms:
     """The vocabulary terms each family instantiates shapes for, after
@@ -289,36 +321,11 @@ def _select_terms(
 ) -> _Terms:
     props = [t for t in vocab_terms if t.term_kind != "class"]
     live = [t for t in props if not t.deprecated]
-    # CorrectRange instantiation rules differ BY TERM KIND
-    # (shacl_shape_builder.py):
-    #   * datatype_property (builder:340-362): ALWAYS sh:datatype(range) +
-    #     MalformedLiteral(range) — including range rdfs:Literal (which no
-    #     literal satisfies, so every value violates);
-    #   * object_property (builder:330-336): owl:Thing → nodeKind
-    #     BlankNodeOrIRI; rdfs:Resource → both (vacuous); else sh:class;
-    #   * rdf_property (builder:433-455): literal-kind range != rdfs:Literal
-    #     → sh:datatype + MalformedLiteral; == rdfs:Literal → nodeKind
-    #     Literal; class-kind → sh:class (see below).
     rng_terms = [t for t in live if t.range and t.term in used_props]
-    rng_dt, rng_cls, rng_nk_literal, rng_nk_bi = [], [], [], []
-    for t in rng_terms:
-        if t.term_kind == "datatype_property":
-            rng_dt.append(t)
-        elif t.term_kind == "object_property":
-            if t.range == OWL_THING:
-                rng_nk_bi.append(t)
-            elif t.range != f"{RDFS}Resource":
-                rng_cls.append(t)
-        elif t.range_kind == "literal":  # rdf_property
-            (rng_nk_literal if t.range == f"{RDFS}Literal" else rng_dt).append(t)
-        else:
-            # Reference parity (shacl_shape_builder.py:450-455): the
-            # rdf_property branch compares info['range'] (a dict) to the
-            # owl:Thing / rdfs:Resource strings — always false — so it
-            # ALWAYS emits sh:class for class-kind ranges, including
-            # owl:Thing and rdfs:Resource. nodeKind routing applies to
-            # object_property terms only (builder:330-336).
-            rng_cls.append(t)
+
+    def routed(form: str) -> list[VocabTerm]:
+        return [t for t in rng_terms if range_form(t) == form]
+
     # owl:Thing domain → nodeKind BlankNodeOrIRI, structurally satisfied
     # for RDF subjects (C27): shape instantiated, no violation to compute
     dom_terms = [t for t in live if t.domain and t.term in used_props]
@@ -343,8 +350,9 @@ def _select_terms(
         irr=sorted({t.term for t in props if t.irreflexive} & used_props),
         dom_terms=dom_terms,
         dom_cls=[t for t in dom_terms if t.domain != OWL_THING],
-        rng_terms=rng_terms, rng_dt=rng_dt, rng_cls=rng_cls,
-        rng_nk_literal=rng_nk_literal, rng_nk_bi=rng_nk_bi,
+        rng_terms=rng_terms, rng_dt=routed("datatype"),
+        rng_cls=routed("class"), rng_nk_literal=routed("literal"),
+        rng_nk_bi=routed("iri"),
         dpairs=sorted((a, b) for (a, b) in pairs if a in used_classes),
     )
 
@@ -553,8 +561,8 @@ def profile_aggregates(T: DataFrame, cfg: DQAConfig) -> dict[str, DataFrame]:
 
 def state_aggregates(T: DataFrame, cfg: DQAConfig,
                      terms: _Terms) -> dict[str, DataFrame]:
-    """The six aggregates of T the state tier reads, keyed by the
-    incremental state table each one is merged into:
+    """The aggregates of T the state tier reads, keyed by the incremental
+    state table each one is merged into:
 
       subj_flags  (s, *SUBJECT_FLAGS)
       ps_counts   (p, s, n)
@@ -563,17 +571,23 @@ def state_aggregates(T: DataFrame, cfg: DQAConfig,
       dom_pairs   (p, s)       class-domain props
       spo_pairs   (p, s, o)    class-range + asymmetric props
 
+    The last three filter T by a term list; a table whose list is empty is
+    empty by construction and left out, so a fold commits no empty level
+    for it (state_violations reads each under the same term-list guard).
     Batch passes them straight to state_violations; apply_delta merges a
     delta's into the snapshots."""
     p = F.col("p")
+    aggs = profile_aggregates(T, cfg)
+    if terms.ifp:
+        aggs["po_pairs"] = T.filter(p.isin(terms.ifp)).select("p", "o", "s")
+    if terms.dom_cls:
+        aggs["dom_pairs"] = (T.filter(p.isin([t.term for t in terms.dom_cls]))
+                             .select("p", "s").distinct())
     spo = sorted({t.term for t in terms.rng_cls} | set(terms.asym))
-    return {
-        **profile_aggregates(T, cfg),
-        "po_pairs": T.filter(p.isin(terms.ifp)).select("p", "o", "s"),
-        "dom_pairs": T.filter(p.isin([t.term for t in terms.dom_cls]))
-                      .select("p", "s").distinct(),
-        "spo_pairs": T.filter(p.isin(spo)).select("p", "s", "o").distinct(),
-    }
+    if spo:
+        aggs["spo_pairs"] = (T.filter(p.isin(spo))
+                             .select("p", "s", "o").distinct())
+    return aggs
 
 
 def state_violations(
@@ -583,7 +597,7 @@ def state_violations(
     subclass_pairs: list[tuple[str, str]] | None = None,
 ) -> list[Branch]:
     """The state tier: every family a later triple can create or retract,
-    evaluated over the six state_aggregates DataFrames in ``dims`` — never
+    evaluated over the state_aggregates DataFrames in ``dims`` — never
     over triples. ``subclass_pairs`` is the transitive (descendant,
     ancestor) rdfs:subClassOf closure (see compile_data_constraints)."""
     spark = dims["cls_pairs"].sparkSession

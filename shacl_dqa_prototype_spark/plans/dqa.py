@@ -19,11 +19,8 @@ from shacl_dqa_prototype_spark.plans.constraints import (
 )
 from shacl_dqa_prototype_spark.plans.metadata import evaluate_metadata
 from shacl_dqa_prototype_spark.plans.profile import GraphProfile, profile_graph
-from shacl_dqa_prototype_spark.plans.scoring import (
-    DIMENSIONS,
-    report_frame,
-    score_plan,
-)
+from shacl_dqa_prototype_spark.plans.report_csv import METRIC_IDS
+from shacl_dqa_prototype_spark.plans.scoring import report_frame, score_plan
 from shacl_dqa_prototype_spark.functions.terms import VOID
 
 
@@ -58,7 +55,7 @@ def run_metadata_dqa(
     rows = [
         (
             "metadata",
-            DIMENSIONS.get(r.metric),
+            METRIC_IDS[r.metric][0],
             r.metric,
             None,
             "binary",

@@ -6,11 +6,14 @@ re-reads everything. The constraint compiler (plans/constraints.py) writes
 each family once, in one of two tiers, and batch DQA is "fold T as one
 delta into empty state". This module keeps that state on disk:
 
-1. State tier — each delta's six state_aggregates are appended to one
+1. State tier — each delta's state_aggregates are appended to one
    SnapshotTable each as a new LEVEL: one small unbucketed data dir per
    table per fold, with no read of old state, no bucket probe and no
    rewrite (the fold into an empty table writes the BASE instead,
-   bucketed by the table's STATE_MERGES column). Reads merge:
+   bucketed by the table's STATE_MERGES column). A table whose term list
+   is empty (dom_pairs without a class-domain property, say) is empty by
+   construction and gets no level; never written, it reads back as an
+   empty table. Reads merge:
    IncrementalDQAState.merged applies the table's STATE_MERGES rule
    (bool-max, sum or distinct) over base ∪ levels. Every rule is
    associative and commutative, so merging when the table is read gives
@@ -250,8 +253,9 @@ def apply_delta(
     snapshot then holds more than 16 dirs is compacted into one base
     (IncrementalDQAState.compact); a compaction that loses a race to
     another commit is left to a later fold. The row-tier violations of
-    the delta are appended to the violations log. Historical triples are
-    never re-read.
+    the delta are appended to the violations log. A table
+    state_aggregates leaves out (its term list is empty) is not folded.
+    Historical triples are never re-read.
 
     The seven table folds are mutually INDEPENDENT (disjoint state dirs
     and logs, all reading the one persisted delta), so they are submitted

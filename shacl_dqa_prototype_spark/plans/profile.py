@@ -11,16 +11,18 @@ B1-B8 semantics are written once, here, for both paths.
 Its three tables stay lazy DataFrames: per property (p, num_triples,
 num_subjects), per class (cls, num_instances) and the one-row entity
 counts. Their keys are the usage sets that prune shape instantiation and
-their values every ratio denominator (utils.py:849-871); score_plan
-collects them beside the violation counts. The seven scalars are one
-aggregation job over the three tables, run the first time one is read.
+their values every ratio denominator (utils.py:849-871). They are
+collected once, as concurrent jobs, the first time the profile is read
+(GraphProfile.collected): the usage sets, the seven scalars and
+score_plan's denominators all read that one collect.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from shacl_dqa_prototype_spark.plans.constraints import (
@@ -31,6 +33,14 @@ from shacl_dqa_prototype_spark.plans.constraints import (
 SCALARS = ("num_triples", "num_classes", "num_entities", "num_properties",
            "num_entities_interlinking", "num_entities_label",
            "num_entities_description")
+
+
+def collect_concurrently(*dfs: DataFrame) -> list[list[Row]]:
+    """Collect independent DataFrames as concurrent Spark jobs, so that
+    small driver-bound collects overlap the large one instead of queueing
+    behind it."""
+    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
+        return list(ex.map(DataFrame.collect, dfs))
 
 
 class GraphProfile:
@@ -62,32 +72,34 @@ class GraphProfile:
         return self.per_property.select("p", "num_subjects")
 
     @cached_property
-    def _scalars(self) -> dict[str, int]:
-        row = self.per_property.agg(
-            F.sum("num_triples").cast("long").alias("num_triples"),
-            F.count("*").alias("num_properties"),
-        ).crossJoin(self.entity_counts).crossJoin(
-            self.entities_per_class.agg(F.count("*").alias("num_classes"))
-        ).first()
-        # a sum over an empty graph is NULL
-        return {k: row[k] or 0 for k in SCALARS}
+    def collected(self) -> tuple[dict[str, tuple[int, int]], dict[str, int],
+                                 dict[str, int]]:
+        """The three tables, collected once as concurrent jobs:
+        {p: (num_triples, num_subjects)}, {cls: num_instances} and the
+        entity counts by name (a sum over an empty graph is NULL: 0)."""
+        props, classes, (ents,) = collect_concurrently(
+            self.per_property, self.entities_per_class, self.entity_counts)
+        return ({r["p"]: (r["num_triples"], r["num_subjects"]) for r in props},
+                dict(map(tuple, classes)),
+                {k: v or 0 for k, v in ents.asDict().items()})
 
     def __getattr__(self, name: str) -> int:
         if name in SCALARS:
-            return self._scalars[name]
+            return self.as_dict()[name]
         raise AttributeError(name)
 
-    def as_dict(self) -> dict:
-        return dict(self._scalars)
+    def as_dict(self) -> dict[str, int]:
+        props, classes, ents = self.collected
+        scalars = {"num_triples": sum(n for n, _ in props.values()),
+                   "num_classes": len(classes),
+                   "num_properties": len(props), **ents}
+        return {k: scalars[k] for k in SCALARS}
 
     def usage_sets(self) -> tuple[set[str], set[str]]:
         """(used properties, used classes): the keys of the per-property
         and per-class tables."""
-        from shacl_dqa_prototype_spark.plans.scoring import collect_concurrently
-
-        props, classes = collect_concurrently(
-            self.per_property.select("p"), self.entities_per_class.select("cls"))
-        return {r[0] for r in props}, {r[0] for r in classes}
+        props, classes, _ = self.collected
+        return set(props), set(classes)
 
 
 def profile_graph(

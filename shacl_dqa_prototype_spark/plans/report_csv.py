@@ -33,7 +33,8 @@ CSV_COLUMNS = [
     "violations", "violation_text", "num_violations", "vocab",
 ]
 
-# metric → (dimension, metric_id, metric_type) — reference const.py:148-341
+# metric → (dimension, metric_id, metric_type) — reference const.py:148-341;
+# every report row takes its dimension from here
 METRIC_IDS: dict[str, tuple[str, str, str]] = {
     "AsymmetricProperty": ("Consistency", "CN10", "count"),
     "AuthenticityOfDataset": ("Security", "S2", "binary"),
@@ -70,6 +71,8 @@ METRIC_IDS: dict[str, tuple[str, str, str]] = {
     "URIRegexPressence": ("Understandability", "U3", "binary"),
     "URISpaceComplianceEntities": ("Understandability", "U3", "count"),
     "URISpacePressence": ("Understandability", "U3", "binary"),
+    "URIsLengthEntities": ("Representational Conciseness", "RC1", "count"),
+    "URIsParametersEntities": ("Representational Conciseness", "RC1", "count"),
     "UndefinedClass": ("Interpretability", "ITP3", "count"),
     "UndefinedProperty": ("Interpretability", "ITP3", "count"),
     "UsageExternalURIEntities": ("Interlinking", "I2", "count"),
@@ -79,9 +82,6 @@ METRIC_IDS: dict[str, tuple[str, str, str]] = {
 
 # metric → CSV family-row shape_name when it differs from '<metric>Shape'
 CSV_NAME_OVERRIDES = {"MalformedLiteral": "MalformedDatatypeShape"}
-
-METRIC_IDS["URIsParametersEntities"] = ("Representational Conciseness", "RC1", "count")
-METRIC_IDS["URIsLengthEntities"] = ("Representational Conciseness", "RC1", "count")
 
 # Reference CSV row order. The reference appends rows in three passes
 # (metadata, data, per-vocab), each emitting per-shape singles in

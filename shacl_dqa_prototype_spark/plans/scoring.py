@@ -14,7 +14,9 @@ DQA both score through score_plan, over a ConstraintPlan and a
 GraphProfile. Spark does only the O(violations + profile) part, as four
 concurrent collects: ONE aggregation of the violations DF to (metric,
 item) → distinct-focus count + sorted sample (violation_counts), and the
-profile's per-property, per-class and entity-count tables. Everything
+profile's per-property, per-class and entity-count tables, which a
+profile collects once (GraphProfile.collected), so a profile read before
+scoring adds no job here. Everything
 after them is O(#shapes) and runs on the driver in plain Python: the
 shape list is instantiated from the collected property and class keys
 (constraints.data_shapes), and score_rows supplies the zero-violation
@@ -29,7 +31,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shacl_dqa_prototype_spark.plans.constraints import (
@@ -38,53 +40,8 @@ from shacl_dqa_prototype_spark.plans.constraints import (
     data_shapes,
 )
 from shacl_dqa_prototype_spark.plans.profile import GraphProfile
+from shacl_dqa_prototype_spark.plans.report_csv import METRIC_IDS
 from shacl_dqa_prototype_spark.schemas import REPORT_SCHEMA
-
-# metric → dimension (reference metrics_templates/*.json + const.py:148-341)
-DIMENSIONS: dict[str, str] = {
-    "UsageExternalURIEntities": "Interlinking",
-    "UsageHashURIsEntities": "Performance",
-    "LabelForEntities": "Understandability",
-    "URIRegexComplianceEntities": "Understandability",
-    "URISpaceComplianceEntities": "Understandability",
-    "URIsParametersEntities": "Representational Conciseness",
-    "URIsLengthEntities": "Representational Conciseness",
-    "ProlixFeatures": "Representational Conciseness",
-    "DifferentLanguagesLabelsEntities": "Versatility",
-    "DifferentLanguagesDescriptionsEntities": "Versatility",
-    "SelfDescriptiveFormat": "Interpretability",
-    "BlankNodesUsageEntities": "Interpretability",
-    "InterlinkingCompleteness": "Completeness",
-    "SchemaCompletenessClassUsage": "Completeness",
-    "MisplacedProperties": "Consistency",
-    "MisplacedClasses": "Consistency",
-    "EntitiesDisjointClasses": "Consistency",
-    "MisuseOwlObjectProperties": "Consistency",
-    "MisuseOwlDatatypeProperties": "Consistency",
-    "DeprecatedProperties": "Consistency",
-    "DeprecatedClasses": "Consistency",
-    "CorrectRange": "Consistency",
-    "CorrectDomain": "Consistency",
-    "IrreflexiveProperty": "Consistency",
-    "InverseFunctionalPropertyUniqueness": "Consistency",
-    "FunctionalProperty": "Consistency",
-    "AsymmetricProperty": "Consistency",
-    "MalformedLiteral": "Syntactic Validity",
-    "SelfDescriptiveFormatProperties": "Interpretability",
-    "UndefinedProperty": "Interpretability",
-    "UndefinedClass": "Interpretability",
-    "LabelForClasses": "Understandability",
-    "LabelForProperties": "Understandability",
-    "AvailabilityDump": "Availability",
-    "MachineReadableLicense": "Licensing",
-    "AuthenticityOfDataset": "Security",
-    "PresenceMetadata": "Understandability",
-    "ExemplaryResources": "Understandability",
-    "URIRegexPressence": "Understandability",
-    "URISpacePressence": "Understandability",
-    "VocabularyExistence": "Understandability",
-    "SerializationFormats": "Versatility",
-}
 
 MAX_VIOLATION_SAMPLES = 100  # cap the '; '-joined list (CSV stays small)
 
@@ -125,14 +82,6 @@ def violation_counts(violations: DataFrame) -> DataFrame:
     )
 
 
-def collect_concurrently(*dfs: DataFrame) -> list[list[Row]]:
-    """Collect independent DataFrames as concurrent Spark jobs, so that
-    small driver-bound collects overlap the large one instead of queueing
-    behind it."""
-    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-        return list(ex.map(DataFrame.collect, dfs))
-
-
 def score_rows(
     shapes: list[ShapeSpec],
     counts: list[tuple],
@@ -169,7 +118,7 @@ def score_rows(
             if isinstance(denom, dict):
                 denom = denom.get(sp.denom_key)
             measure = max(0.0, 1.0 - n / denom) if denom else 0.0
-        rows.append((target, DIMENSIONS.get(sp.metric), sp.metric, sp.item,
+        rows.append((target, METRIC_IDS[sp.metric][0], sp.metric, sp.item,
                      "binary" if sp.denom == "binary" else "ratio",
                      measure, n, sample))
 
@@ -179,7 +128,7 @@ def score_rows(
         if r[3] is not None:
             per_metric.setdefault(r[2], []).append(r)
     for metric, items in per_metric.items():
-        rows.append((target, DIMENSIONS.get(metric), metric, None, "meta",
+        rows.append((target, METRIC_IDS[metric][0], metric, None, "meta",
                      sum(r[5] == 1.0 for r in items) / len(items),
                      sum(r[6] for r in items), None))
     return rows
@@ -194,21 +143,22 @@ def score_plan(
     """Violations + profile → per-shape report rows + meta-rollup rows
     (score_kind='meta'), as one local relation.
 
-    The violation counts and the profile's three tables are collected as
-    concurrent jobs; the shape list comes from the collected property and
-    class keys, and score_rows does the rest on the driver. Driver memory
-    is O(#shapes + #properties + #classes): the per-shape rows carry at
-    most MAX_VIOLATION_SAMPLES focus nodes each, at any corpus scale."""
-    counts, props, classes, (ent,) = collect_concurrently(
-        violation_counts(plan.violations),
-        profile.subjects_per_property, profile.entities_per_class,
-        profile.entity_counts.select("num_entities"))
-    spp, epc = dict(map(tuple, props)), dict(map(tuple, classes))
+    The violation counts are collected beside the profile's one collect
+    (GraphProfile.collected; no job when the profile was read before);
+    the shape list comes from the collected property and class keys, and
+    score_rows does the rest on the driver. Driver memory is
+    O(#shapes + #properties + #classes): the per-shape rows carry at most
+    MAX_VIOLATION_SAMPLES focus nodes each, at any corpus scale."""
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        counts = ex.submit(violation_counts(plan.violations).collect)
+        props, classes, ents = profile.collected
+        counts = counts.result()
     shapes = data_shapes(plan.vocab_terms, plan.disjoint_pairs, plan.cfg,
-                         set(spp), set(epc))
+                         set(props), set(classes))
     rows = score_rows(shapes, counts, {
-        "entities": ent["num_entities"] or 0,
-        "subjects_per_property": spp, "entities_per_class": epc}, target)
+        "entities": ents["num_entities"],
+        "subjects_per_property": {p: n for p, (_, n) in props.items()},
+        "entities_per_class": classes}, target)
     return report_frame(spark, rows)
 
 

@@ -2,26 +2,34 @@
 
 The reference materializes its shapes graphs next to the results
 (dq_assessment.py:156-159 metadata, 212-218 vocabulary, 255-258 data)
-as a debugging/parity artifact. This module re-expresses the shape
-templates (dq_assessment/shapes/*.template.ttl) as plain f-string
-instantiation over the SAME inputs `scoring.score_plan` instantiates
-the data shapes from (the plan's terms plus the profile's usage sets), so
-the emitted graph always names exactly the shapes the engine scores.
+as a debugging/parity artifact. This module renders the shape templates
+(dq_assessment/shapes/*.template.ttl) as plain f-strings. The data shapes
+graph is rendered from the ShapeSpec list constraints.data_shapes
+instantiates, the list score_plan scores, so the emitted graph names
+exactly the shapes the engine scores; the vocabulary graph takes its
+Undefined* terms from vocab_shapes.namespace_terms, the routing the
+vocabulary scorer uses.
 
 Output is template-shaped Turtle (the reference round-trips through
-rdflib, which reformats but preserves the triples); shape indices are a
-running counter whose absolute values depend on instantiation order and
-are NOT reproducible across engines — tools/pizza_parity.py compares
-shape multisets with indices normalized.
+rdflib, which reformats but preserves the triples); the _N suffix of a
+shape name counts the shapes of its family in instantiation order, and
+the reference's indices are NOT reproducible across engines —
+tools/pizza_parity.py and tests/test_shapes_ttl.py compare shape
+multisets with indices normalized.
 """
 
 from __future__ import annotations
 
-from shacl_dqa_prototype_spark.functions.terms import RDFS
+from collections import Counter
 
-from .constraints import DQAConfig, VocabTerm
-
-OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
+from .constraints import (
+    OWL_THING,
+    DQAConfig,
+    VocabTerm,
+    _select_terms,
+    data_shapes,
+    range_form,
+)
 
 PREFIXES = """\
 @prefix ex: <https://www.example.org/> .
@@ -53,13 +61,35 @@ def _ttl_escape(s: str) -> str:
     return s.replace("\\", "\\\\").replace('"', '\\"')
 
 
-def _or_shape(name: str, target: str, last_branch: str) -> str:
-    return (
-        f"ex:{name}\n    a sh:NodeShape ;\n"
-        f"    sh:targetSubjectsOf <{target}> ;\n"
-        f"    sh:or (\n{_EXEMPT_BRANCHES}        [\n{last_branch}"
-        f"        ]\n    ).\n\n"
-    )
+def _msg(text: str) -> str:
+    return f'sh:message "{text}"'
+
+
+def _bnode(*lines: str, depth: int = 1) -> str:
+    """A [ … ] blank node of predicate-object lines, closed at indent
+    level ``depth``."""
+    pad = "    " * depth
+    return f"[\n{pad}    " + f" ;\n{pad}    ".join(lines) + f"\n{pad}]"
+
+
+def _shape(name: str, *lines: str) -> str:
+    """Node shape ex:<name> with the given predicate-object lines."""
+    return (f"ex:{name}\n    a sh:NodeShape ;\n    "
+            + " ;\n    ".join(lines) + " .\n\n")
+
+
+def _prop_shape(name: str, target: str, *lines: str) -> str:
+    """Node shape ex:<name> over ``target`` with one sh:property block."""
+    return _shape(name, target, "sh:property " + _bnode(*lines))
+
+
+def _or_shape(name: str, target: str, *branch: str) -> str:
+    """An entity-scoped shape over the subjects of ``target``: exempt
+    focus nodes satisfy the first three sh:or branches, the rest
+    ``branch``."""
+    return _shape(name, f"sh:targetSubjectsOf <{target}>",
+                  f"sh:or (\n{_EXEMPT_BRANCHES}        "
+                  f"{_bnode(*branch, depth=2)}\n    )")
 
 
 def data_shapes_ttl(
@@ -70,311 +100,211 @@ def data_shapes_ttl(
     used_classes: set[str],
 ) -> str:
     """The data shapes graph score_plan scores for the same
-    (vocab_terms, disjoint_pairs, cfg, usage) inputs. One shape per
-    ShapeSpec family member, same pruning rules (constraints.data_shapes;
-    reference shacl_shape_builder.py:48-583)."""
-    out = [PREFIXES]
-    pc = cc = 0  # property / class shape counters (builder.py:27-46)
+    (vocab_terms, disjoint_pairs, cfg, usage) inputs: one Turtle shape per
+    ShapeSpec of constraints.data_shapes, plus the NotNamedIndividualShape
+    its SchemaCompletenessClassUsage shapes reference. Which shapes exist
+    is decided there alone; this function holds the templates (reference
+    shacl_shape_builder.py:48-583) and looks a shape's domain or range up
+    by its item."""
+    tp = cfg.type_property
+    ranged = {t.term: t for t in vocab_terms if t.domain or t.range}
+    depr_classes = " ".join(f"<{c}>" for c in _select_terms(
+        vocab_terms, disjoint_pairs, used_props, used_classes).depr_classes)
 
-    def prop_shape(body: str) -> None:
-        # ONE shared counter across property-shape families, matching the
-        # reference builder's running index (builder.py:27-46)
-        nonlocal pc
-        out.append(body.replace("{i}", str(pc)))
-        pc += 1
+    def entities(name: str, *branch: str):
+        return lambda x, i: _or_shape(f"{name}Shape", tp, *branch)
 
-    def class_shape(body: str) -> None:
-        nonlocal cc
-        out.append(body.replace("{i}", str(cc)))
-        cc += 1
+    def disjoint(x: str, i: int) -> str:
+        a, b = x.split("|", 1)
+        return _shape(
+            f"EntitiesDisjointClassesShape_{i}", f"sh:targetClass <{a}>",
+            "sh:not " + _bnode(
+                f"sh:class <{b}>",
+                _msg(f"EntitiesDisjointClasses_{i} - There are instances of "
+                     f"the class {a} that are instances of the disjoint "
+                     f"class {b}")))
 
-    tp, lp, dp, ilp = (cfg.type_property, cfg.labeling_property,
-                       cfg.description_property, cfg.interlinking_property)
-
-    # ---- accessibility (builder:48-56) ----------------------------------
-    if cfg.base_uri:
-        out.append(
-            f"ex:UsageExternalURIEntitiesShape\n    a sh:NodeShape ;\n"
-            f"    sh:targetSubjectsOf <{ilp}> ;\n"
-            f"    sh:property [\n        sh:path <{ilp}> ;\n"
-            f'        sh:pattern "^(?!{_ttl_escape(cfg.base_uri)})" ;\n'
-            f'        sh:message "UsageExternalURIEntities - The dataset '
-            f'doesn\'t contain links to external sources"\n    ].\n\n')
-    out.append(_or_shape(
-        "UsageHashURIsEntitiesShape", tp,
-        '            sh:pattern "^[^#]*$" ;\n'
-        '            sh:message "UsageHashURIsEntities - It\'s is '
-        'recommended the usage of slash URIs";\n'))
-
-    # ---- contextual (builder:58-79) -------------------------------------
-    out.append(_or_shape(
-        "LabelForEntitiesShape", tp,
-        f"            sh:path <{lp}> ;\n            sh:minCount 1 ;\n"
-        '            sh:message "LabelForEntities - All entities should '
-        'be tagged with a label.";\n'))
-    if cfg.uri_regex_pattern:
-        out.append(_or_shape(
-            "URIRegexComplianceEntitiesShape", tp,
-            f'            sh:pattern "{_ttl_escape(cfg.uri_regex_pattern)}" ;\n'
-            '            sh:message "URIRegexComplianceEntities - URIs '
-            'should match the regex pattern provided in '
-            'void:uriRegexPattern" ;\n'))
-    if cfg.uri_space:
-        out.append(_or_shape(
-            "URISpaceComplianceEntitiesShape", tp,
-            f'            sh:pattern "^{_ttl_escape(cfg.uri_space)}" ;\n'
-            '            sh:message "URISpaceComplianceEntities - URIs '
-            'should match the URI space provided in void:uriSpace" ;\n'))
-
-    # ---- representational (builder:82-114) -------------------------------
-    out.append(_or_shape(
-        "URIsLengthEntitiesShape", tp,
-        f"            sh:maxLength {cfg.uris_max_length} ;\n"
-        '            sh:message "URIsLengthEntities - URIs should have a '
-        f'length of less than {cfg.uris_max_length}";\n'))
-    out.append(_or_shape(
-        "URIsParametersEntitiesShape", tp,
-        '            sh:not[ sh:pattern "\\\\?.+=.*" ; ] ;\n'
-        '            sh:message "URIsParametersEntities - URIs shouldn\'t '
-        'use parameters";\n'))
-    out.append(_or_shape(
-        "ProlixFeaturesShape", tp,
-        "            sh:not[\n                sh:or(\n"
-        "                    [ sh:class rdf:Statement; ]\n"
-        "                    [ sh:class rdf:List; ]\n"
-        "                    [ sh:class rdf:Seq; ]\n"
-        "                    [ sh:class rdf:Bag; ]\n"
-        "                    [ sh:class rdf:Alt; ]\n                );\n"
-        '                sh:message "ProlixFeatures - Prolix features '
-        'shouldn\'t be used (Lists, Containers)";\n            ]\n'))
-    if cfg.check_languages and lp:
-        out.append(_or_shape(
-            "DifferentLanguagesLabelsEntitiesShape", lp,
-            f"            sh:path <{lp}> ;\n"
-            "            sh:datatype rdf:langString;\n"
-            '            sh:message "DifferentLanguagesLabelsEntities - '
-            'Entities should provide labels with language tags";\n'))
-    if cfg.check_languages and dp:
-        out.append(_or_shape(
-            "DifferentLanguagesDescriptionsEntitiesShape", dp,
-            f"            sh:path <{dp}> ;\n"
-            "            sh:datatype rdf:langString ;\n"
-            '            sh:message "DifferentLanguagesDescriptionsEntities'
-            ' - Entities should provide descriptions with language '
-            'tags";\n'))
-    out.append(_or_shape(
-        "SelfDescriptiveFormatShape", tp,
-        "            sh:nodeKind sh:IRI ;\n"
-        '            sh:message "SelfDescriptiveFormat - Entities should '
-        'be identified by URIs" ;\n'))
-    out.append(_or_shape(
-        "BlankNodesUsageEntitiesShape", tp,
-        "            sh:not [ sh:nodeKind sh:BlankNode] ;\n"
-        '            sh:message "BlankNodesUsageEntities - The dataset '
-        'should not use blank nodes to identify entities" ;\n'))
-    # per-property (builder:100-114): local counter starting at 0
-    for i, prop in enumerate(sorted(used_props)):
-        out.append(
-            f"ex:SelfDescriptiveFormatPropertiesShape_{i}\n"
-            f"    a sh:NodeShape ;\n    sh:targetObjectsOf <{prop}> ;\n"
-            f'    sh:message "SelfDescriptiveFormatProperties_{i} - The '
-            f'property {prop} uses literals or blank nodes as values";\n'
-            f"    sh:nodeKind sh:IRI .\n\n")
-
-    # ---- intrinsic (builder:260-583) -------------------------------------
-    out.append(_or_shape(
-        "InterlinkingCompletenessShape", tp,
-        f"            sh:path <{ilp}> ;\n            sh:minCount 1;\n"
-        '            sh:message "InterlinkingCompleteness - Entities '
-        'should be interlinked." ;\n'))
-
-    classes = [t for t in vocab_terms if t.term_kind == "class" and not t.deprecated]
-    depr_classes = [t.term for t in vocab_terms
-                    if t.term_kind == "class" and t.deprecated]
-    props = [t for t in vocab_terms if t.term_kind != "class"]
-    if classes:
-        out.append(
-            "ex:NotNamedIndividualShape\n    a sh:NodeShape;\n"
-            f"    sh:property [\n            sh:path <{tp}> ;\n"
-            "            sh:not [ sh:hasValue owl:NamedIndividual ] ;\n"
-            "    ].\n\n")
-    for c in classes:
-        class_shape(
-            "ex:SchemaCompletenessClassUsageShape_{i}\n    a sh:NodeShape ;\n"
-            f"    sh:targetNode <{c.term}> ;\n    sh:property [\n"
-            f"        sh:path [ sh:inversePath <{tp}> ] ;\n"
-            "        sh:minCount 1 ;\n        sh:qualifiedValueShape [\n"
-            "            sh:node ex:NotNamedIndividualShape ;\n        ];\n"
-            "        sh:qualifiedMinCount 1 ;\n"
-            '        sh:message "SchemaCompletenessClassUsage_{i} - The '
-            'target class is defined in the vocabulary but isn\'t used in '
-            'the dataset";\n    ].\n\n')
-        class_shape(_or_shape(
-            "MisplacedClassesShape_{i}", tp,
-            f"            sh:path  <{c.term}> ;\n"
-            "            sh:maxCount 0;\n"
-            '            sh:message "MisplacedClasses_{i} - The class '
-            f'{c.term} is being used as a property" ;\n'))
-    dpairs = sorted(
-        (a, b) for (a, b) in
-        ({(a, b) for (a, b) in disjoint_pairs}
-         | {(b, a) for (a, b) in disjoint_pairs})
-        if a in used_classes)
-    for a, b in dpairs:
-        class_shape(
-            "ex:EntitiesDisjointClassesShape_{i}\n    a sh:NodeShape ;\n"
-            f"    sh:targetClass <{a}> ;\n    sh:not [\n"
-            f"        sh:class <{b}>;\n"
-            '        sh:message "EntitiesDisjointClasses_{i} - There are '
-            f"instances of the class {a} that are instances of the "
-            f'disjoint class {b}";\n    ].\n\n')
-    for t in props:
-        prop_shape(
-            "ex:MisplacedPropertiesShape_{i}\n    a sh:NodeShape ;\n"
-            f"    sh:targetNode <{t.term}> ;\n    sh:property [\n"
-            f"        sh:path [ sh:inversePath <{tp}> ] ;\n"
-            "        sh:maxCount 0;\n"
-            '        sh:message "MisplacedProperties_{i} - The property '
-            f'{t.term} is being used as a class" ;\n    ].\n\n')
-
-    def domain_shape(t: VocabTerm) -> None:
-        if t.domain != OWL_THING:
-            prop_shape(
-                "ex:CorrectDomainShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n"
-                '    sh:message "CorrectDomain_{i} - The property '
-                f'{t.term} is used with an incorrect domain" ;\n'
-                f"    sh:class <{t.domain}> .\n\n")
-        else:  # owl:Thing → nodeKind (builder:325-328)
-            prop_shape(
-                "ex:CorrectDomainShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n"
-                "    sh:nodeKind sh:BlankNodeOrIRI ;\n"
-                '    sh:message "CorrectDomain_{i} - The property '
-                f'{t.term} is used with an incorrect domain" .\n\n')
-
-    def range_prop_shape(t: VocabTerm, body: str) -> None:
-        prop_shape(
-            "ex:CorrectRangeShape_{i}\n    a sh:NodeShape ;\n"
-            f"    sh:targetSubjectsOf <{t.term}>;\n    sh:property [\n"
-            f"        sh:path <{t.term}> ;\n{body}    ].\n\n")
-
-    _range_msg = ('        sh:message "CorrectRange_{i} - The property '
-                  '%s is used with an incorrect range"')
-
-    def range_shapes(t: VocabTerm) -> None:
-        """Range routing, mirroring constraints.py:429-497 (which itself
-        mirrors builder:330-362 and the rdf_property branch 433-455
-        including its always-sh:class quirk for class-kind ranges)."""
-        msg = _range_msg % t.term
-        if t.term_kind == "datatype_property" or (
-                t.term_kind == "rdf_property" and t.range_kind == "literal"
-                and t.range != f"{RDFS}Literal"):
-            range_prop_shape(t, msg + f" ;\n        sh:datatype <{t.range}>\n")
-            prop_shape(
-                "ex:MalformedLiteralShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n    sh:property [\n"
-                f"        sh:path <{t.term}> ;\n"
-                f"        sh:datatype <{t.range}>;\n"
-                '        sh:message "MalformedLiteral_{i} - The property '
-                f'{t.term} is used with an incompatible datatype or an '
-                'il-typed literal" ;\n    ].\n\n')
-        elif t.term_kind == "rdf_property" and t.range_kind == "literal":
-            range_prop_shape(t, "        sh:nodeKind sh:Literal ;\n" + msg + "\n")
-        elif t.term_kind == "object_property" and t.range == OWL_THING:
-            range_prop_shape(
-                t, "        sh:nodeKind sh:BlankNodeOrIRI ;\n" + msg + "\n")
-        elif t.term_kind == "object_property" and t.range == f"{RDFS}Resource":
-            range_prop_shape(
-                t,
-                "        sh:or (\n            [\n"
-                "                sh:nodeKind sh:BlankNodeOrIRI ;\n        "
-                + msg + "]\n            [\n"
-                "                sh:nodeKind sh:Literal ;\n        "
-                + msg + "\n            ]\n        );\n")
+    def ranges(x: str, i: int) -> str:
+        t = ranged[x]
+        msg = _msg(f"CorrectRange_{i} - The property {x} is used with an "
+                   "incorrect range")
+        form = range_form(t)
+        if form == "resource":  # either node kind: vacuous
+            check = ["sh:or ( " + " ".join(
+                _bnode(f"sh:nodeKind sh:{kind}", msg, depth=2)
+                for kind in ("BlankNodeOrIRI", "Literal")) + " )"]
         else:
-            range_prop_shape(t, msg + f" ;\n        sh:class <{t.range}> \n")
+            check = [{"datatype": f"sh:datatype <{t.range}>",
+                      "literal": "sh:nodeKind sh:Literal",
+                      "iri": "sh:nodeKind sh:BlankNodeOrIRI",
+                      "class": f"sh:class <{t.range}>"}[form], msg]
+        return _prop_shape(f"CorrectRangeShape_{i}",
+                           f"sh:targetSubjectsOf <{x}>", f"sh:path <{x}>",
+                           *check)
 
-    for t in props:
-        if t.term not in used_props:
-            continue
-        # misuse/domain/range shapes exclude deprecated terms, and so do
-        # the IFP/functional characteristic shapes (constraints.py C23/C24
-        # filter `... and not t.deprecated`); irreflexive/asymmetric do
-        # NOT (constraints.py:433,449) — this emission mirrors the
-        # compiler family by family so the artifact names exactly the
-        # shapes the engine evaluates
-        if not t.deprecated and t.term_kind == "object_property":
-            prop_shape(
-                "ex:MisuseOwlObjectPropertiesShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n    sh:property [\n"
-                f"        sh:path <{t.term}>;\n"
-                "        sh:nodeKind sh:BlankNodeOrIRI;\n"
-                '        sh:message "MisuseOwlObjectProperties_{i} - The '
-                f'object property {t.term} is being used with Literals"\n'
-                "    ].\n\n")
-        elif not t.deprecated and t.term_kind == "datatype_property":
-            prop_shape(
-                "ex:MisuseOwlDatatypePropertiesShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n    sh:property [\n"
-                f"        sh:path <{t.term}> ;\n"
-                "        sh:nodeKind sh:Literal ;\n"
-                '        sh:message "MisuseOwlDatatypeProperties_{i} - The '
-                f'datatype property {t.term} is being used with '
-                'Resources" ;\n    ].\n\n')
-        if t.domain and not t.deprecated:
-            domain_shape(t)
-        if t.range and not t.deprecated:
-            range_shapes(t)
-        if t.irreflexive:
-            prop_shape(
-                "ex:IrreflexivePropertyShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n"
-                '    sh:message "IrreflexiveProperty_{i} - The irreflexive '
-                f'constraint for the property {t.term} is not enforced " ;\n'
-                f"    sh:disjoint <{t.term}> .\n\n")
-        if t.inverse_functional and not t.deprecated:
-            prop_shape(
-                "ex:InverseFunctionalPropertyUniquenessShape_{i}\n"
-                "    a sh:NodeShape ;\n"
-                f"    sh:targetObjectsOf <{t.term}> ;\n    sh:property [\n"
-                f"        sh:path [ sh:inversePath <{t.term}> ] ;\n"
-                "        sh:maxCount 1 ;\n"
-                '        sh:message "InverseFunctionalPropertyUniqueness_{i}'
-                ' - The uniqueness characteristic of the inverse functional '
-                'property is not enforced" ;\n    ].\n\n')
-        if t.functional and not t.deprecated:
-            prop_shape(
-                "ex:FunctionalPropertyShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n    sh:property [\n"
-                f"        sh:path <{t.term}> ;\n        sh:maxCount 1 ;\n"
-                '        sh:message "FunctionalProperty_{i} - The property '
-                f'{t.term} is used with more than one value for the same '
-                'node" ;\n    ].\n\n')
-        if t.asymmetric:
-            prop_shape(
-                "ex:AsymmetricPropertyShape_{i}\n    a sh:NodeShape ;\n"
-                f"    sh:targetSubjectsOf <{t.term}> ;\n    sh:property [\n"
-                f"        sh:path [sh:inversePath <{t.term}>];\n"
-                f"        sh:disjoint <{t.term}> ;\n"
-                '        sh:message "AsymmetricProperty_{i} - The property '
-                f'{t.term} is used incorrectly (asymmetric)" ;\n    ].\n\n')
-    if depr_classes:
-        classes_list = " ".join(f"<{v}>" for v in depr_classes)
-        out.append(_or_shape(
-            "DeprecatedClassesShape", tp,
-            f"            sh:path <{tp}> ;\n            sh:not [\n"
-            f"                sh:in ( {classes_list} );\n"
-            '                sh:message "DeprecatedClasses - Deprecated '
-            'classes are being used in the dataset";\n            ];\n'))
-    for t in props:
-        if t.deprecated:
-            prop_shape( _or_shape(
-                "DeprecatedPropertiesShape_{i}", tp,
-                f"            sh:path <{t.term}> ;\n"
-                "            sh:maxCount 0;\n"
-                '            sh:message "DeprecatedProperties_{i} - '
-                'Deprecated properties are being used in the dataset";\n'))
+    templates = {
+        # ---- accessibility (builder:48-56) ------------------------------
+        "UsageExternalURIEntities": lambda x, i: _prop_shape(
+            "UsageExternalURIEntitiesShape", f"sh:targetSubjectsOf <{x}>",
+            f"sh:path <{x}>",
+            f'sh:pattern "^(?!{_ttl_escape(cfg.base_uri)})"',
+            _msg("UsageExternalURIEntities - The dataset doesn't contain "
+                 "links to external sources")),
+        "UsageHashURIsEntities": entities(
+            "UsageHashURIsEntities", 'sh:pattern "^[^#]*$"',
+            _msg("UsageHashURIsEntities - It's is recommended the usage of "
+                 "slash URIs")),
+        # ---- contextual (builder:58-79) ---------------------------------
+        "LabelForEntities": entities(
+            "LabelForEntities", f"sh:path <{cfg.labeling_property}>",
+            "sh:minCount 1",
+            _msg("LabelForEntities - All entities should be tagged with a "
+                 "label.")),
+        "URIRegexComplianceEntities": lambda x, i: _or_shape(
+            "URIRegexComplianceEntitiesShape", tp,
+            f'sh:pattern "{_ttl_escape(cfg.uri_regex_pattern)}"',
+            _msg("URIRegexComplianceEntities - URIs should match the regex "
+                 "pattern provided in void:uriRegexPattern")),
+        "URISpaceComplianceEntities": lambda x, i: _or_shape(
+            "URISpaceComplianceEntitiesShape", tp,
+            f'sh:pattern "^{_ttl_escape(cfg.uri_space)}"',
+            _msg("URISpaceComplianceEntities - URIs should match the URI "
+                 "space provided in void:uriSpace")),
+        "InterlinkingCompleteness": entities(
+            "InterlinkingCompleteness",
+            f"sh:path <{cfg.interlinking_property}>", "sh:minCount 1",
+            _msg("InterlinkingCompleteness - Entities should be "
+                 "interlinked.")),
+        # ---- representational (builder:82-114) --------------------------
+        "URIsLengthEntities": entities(
+            "URIsLengthEntities", f"sh:maxLength {cfg.uris_max_length}",
+            _msg("URIsLengthEntities - URIs should have a length of less "
+                 f"than {cfg.uris_max_length}")),
+        "URIsParametersEntities": entities(
+            "URIsParametersEntities", 'sh:not [ sh:pattern "\\\\?.+=.*" ]',
+            _msg("URIsParametersEntities - URIs shouldn't use parameters")),
+        "ProlixFeatures": entities(
+            "ProlixFeatures", "sh:not " + _bnode(
+                "sh:or ( " + " ".join(
+                    f"[ sh:class rdf:{c} ]"
+                    for c in ("Statement", "List", "Seq", "Bag", "Alt"))
+                + " )",
+                _msg("ProlixFeatures - Prolix features shouldn't be used "
+                     "(Lists, Containers)"), depth=3)),
+        "DifferentLanguagesLabelsEntities": lambda x, i: _or_shape(
+            "DifferentLanguagesLabelsEntitiesShape", x, f"sh:path <{x}>",
+            "sh:datatype rdf:langString",
+            _msg("DifferentLanguagesLabelsEntities - Entities should "
+                 "provide labels with language tags")),
+        "DifferentLanguagesDescriptionsEntities": lambda x, i: _or_shape(
+            "DifferentLanguagesDescriptionsEntitiesShape", x,
+            f"sh:path <{x}>", "sh:datatype rdf:langString",
+            _msg("DifferentLanguagesDescriptionsEntities - Entities should "
+                 "provide descriptions with language tags")),
+        "SelfDescriptiveFormat": entities(
+            "SelfDescriptiveFormat", "sh:nodeKind sh:IRI",
+            _msg("SelfDescriptiveFormat - Entities should be identified by "
+                 "URIs")),
+        "BlankNodesUsageEntities": entities(
+            "BlankNodesUsageEntities", "sh:not [ sh:nodeKind sh:BlankNode ]",
+            _msg("BlankNodesUsageEntities - The dataset should not use "
+                 "blank nodes to identify entities")),
+        "SelfDescriptiveFormatProperties": lambda x, i: _shape(
+            f"SelfDescriptiveFormatPropertiesShape_{i}",
+            f"sh:targetObjectsOf <{x}>",
+            _msg(f"SelfDescriptiveFormatProperties_{i} - The property {x} "
+                 "uses literals or blank nodes as values"),
+            "sh:nodeKind sh:IRI"),
+        # ---- intrinsic (builder:260-583) --------------------------------
+        "SchemaCompletenessClassUsage": lambda x, i: _prop_shape(
+            f"SchemaCompletenessClassUsageShape_{i}", f"sh:targetNode <{x}>",
+            f"sh:path [ sh:inversePath <{tp}> ]", "sh:minCount 1",
+            "sh:qualifiedValueShape [ sh:node ex:NotNamedIndividualShape ]",
+            "sh:qualifiedMinCount 1",
+            _msg(f"SchemaCompletenessClassUsage_{i} - The target class is "
+                 "defined in the vocabulary but isn't used in the dataset")),
+        "MisplacedClasses": lambda x, i: _or_shape(
+            f"MisplacedClassesShape_{i}", tp, f"sh:path <{x}>",
+            "sh:maxCount 0",
+            _msg(f"MisplacedClasses_{i} - The class {x} is being used as a "
+                 "property")),
+        "EntitiesDisjointClasses": disjoint,
+        "MisplacedProperties": lambda x, i: _prop_shape(
+            f"MisplacedPropertiesShape_{i}", f"sh:targetNode <{x}>",
+            f"sh:path [ sh:inversePath <{tp}> ]", "sh:maxCount 0",
+            _msg(f"MisplacedProperties_{i} - The property {x} is being used "
+                 "as a class")),
+        "MisuseOwlObjectProperties": lambda x, i: _prop_shape(
+            f"MisuseOwlObjectPropertiesShape_{i}",
+            f"sh:targetSubjectsOf <{x}>", f"sh:path <{x}>",
+            "sh:nodeKind sh:BlankNodeOrIRI",
+            _msg(f"MisuseOwlObjectProperties_{i} - The object property {x} "
+                 "is being used with Literals")),
+        "MisuseOwlDatatypeProperties": lambda x, i: _prop_shape(
+            f"MisuseOwlDatatypePropertiesShape_{i}",
+            f"sh:targetSubjectsOf <{x}>", f"sh:path <{x}>",
+            "sh:nodeKind sh:Literal",
+            _msg(f"MisuseOwlDatatypeProperties_{i} - The datatype property "
+                 f"{x} is being used with Resources")),
+        "DeprecatedClasses": entities(
+            "DeprecatedClasses", f"sh:path <{tp}>", "sh:not " + _bnode(
+                f"sh:in ( {depr_classes} )",
+                _msg("DeprecatedClasses - Deprecated classes are being used "
+                     "in the dataset"), depth=3)),
+        "DeprecatedProperties": lambda x, i: _or_shape(
+            f"DeprecatedPropertiesShape_{i}", tp, f"sh:path <{x}>",
+            "sh:maxCount 0",
+            _msg(f"DeprecatedProperties_{i} - Deprecated properties are "
+                 "being used in the dataset")),
+        "InverseFunctionalPropertyUniqueness": lambda x, i: _prop_shape(
+            f"InverseFunctionalPropertyUniquenessShape_{i}",
+            f"sh:targetObjectsOf <{x}>", f"sh:path [ sh:inversePath <{x}> ]",
+            "sh:maxCount 1",
+            _msg(f"InverseFunctionalPropertyUniqueness_{i} - The uniqueness "
+                 "characteristic of the inverse functional property is not "
+                 "enforced")),
+        "FunctionalProperty": lambda x, i: _prop_shape(
+            f"FunctionalPropertyShape_{i}", f"sh:targetSubjectsOf <{x}>",
+            f"sh:path <{x}>", "sh:maxCount 1",
+            _msg(f"FunctionalProperty_{i} - The property {x} is used with "
+                 "more than one value for the same node")),
+        "AsymmetricProperty": lambda x, i: _prop_shape(
+            f"AsymmetricPropertyShape_{i}", f"sh:targetSubjectsOf <{x}>",
+            f"sh:path [ sh:inversePath <{x}> ]", f"sh:disjoint <{x}>",
+            _msg(f"AsymmetricProperty_{i} - The property {x} is used "
+                 "incorrectly (asymmetric)")),
+        "IrreflexiveProperty": lambda x, i: _shape(
+            f"IrreflexivePropertyShape_{i}", f"sh:targetSubjectsOf <{x}>",
+            _msg(f"IrreflexiveProperty_{i} - The irreflexive constraint for "
+                 f"the property {x} is not enforced "),
+            f"sh:disjoint <{x}>"),
+        # an owl:Thing domain is nodeKind BlankNodeOrIRI (builder:325-328)
+        "CorrectDomain": lambda x, i: _shape(
+            f"CorrectDomainShape_{i}", f"sh:targetSubjectsOf <{x}>",
+            _msg(f"CorrectDomain_{i} - The property {x} is used with an "
+                 "incorrect domain"),
+            "sh:nodeKind sh:BlankNodeOrIRI" if ranged[x].domain == OWL_THING
+            else f"sh:class <{ranged[x].domain}>"),
+        "CorrectRange": ranges,
+        "MalformedLiteral": lambda x, i: _prop_shape(
+            f"MalformedLiteralShape_{i}", f"sh:targetSubjectsOf <{x}>",
+            f"sh:path <{x}>", f"sh:datatype <{ranged[x].range}>",
+            _msg(f"MalformedLiteral_{i} - The property {x} is used with an "
+                 "incompatible datatype or an il-typed literal")),
+    }
+
+    out = [PREFIXES]
+    index: Counter = Counter()
+    for sp in data_shapes(vocab_terms, disjoint_pairs, cfg, used_props,
+                          used_classes):
+        m = sp.metric
+        if m == "SchemaCompletenessClassUsage" and not index[m]:
+            out.append(_shape(
+                "NotNamedIndividualShape", "sh:property " + _bnode(
+                    f"sh:path <{tp}>",
+                    "sh:not [ sh:hasValue owl:NamedIndividual ]")))
+        out.append(templates[m](sp.item, index[m]))
+        index[m] += 1
     return "".join(out)
 
 

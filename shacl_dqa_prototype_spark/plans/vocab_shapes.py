@@ -20,6 +20,16 @@ from shacl_dqa_prototype_spark.plans.scoring import report_frame, score_rows
 from shacl_dqa_prototype_spark.schemas import VIOLATIONS_SCHEMA
 
 
+def namespace_terms(namespace: str, used: set[str]) -> list[str]:
+    """The terms of ``used`` routed to the vocabulary with ``namespace``
+    by prefix (dq_assessment.py:176-199), sorted: the items of its
+    Undefined{Class,Property} shapes. An empty namespace (all-bnode or
+    URN vocabulary) routes nothing: startswith('') is True for EVERY term,
+    which would flag every used term of the dataset as Undefined — the
+    same bool(ns) guard as mine_vocab."""
+    return sorted(u for u in used if namespace and u.startswith(namespace))
+
+
 @dataclass
 class VocabPlan:
     violations: DataFrame
@@ -60,18 +70,11 @@ def compile_vocab_constraints(
     # within this vocab's namespace must be defined by the vocab.
     defined_classes = {t.term for t in classes}
     defined_props = {t.term for t in props}
-    # empty namespace (all-bnode or empty vocab): startswith('') is True
-    # for EVERYTHING, which would flag every used term in the dataset as
-    # Undefined — mirror mine_vocab's bool(ns) guard and scope nothing
-    ns_used_classes = sorted(
-        c for c in used_classes if namespace and c.startswith(namespace))
-    ns_used_props = sorted(
-        p for p in used_props if namespace and p.startswith(namespace))
-    for c in ns_used_classes:
+    for c in namespace_terms(namespace, used_classes):
         if c not in defined_classes:
             rows.append(("UndefinedClass", c, c, None))
         shapes.append(ShapeSpec("UndefinedClass", c, "binary"))
-    for p in ns_used_props:
+    for p in namespace_terms(namespace, used_props):
         if p not in defined_props:
             rows.append(("UndefinedProperty", p, p, None))
         shapes.append(ShapeSpec("UndefinedProperty", p, "binary"))

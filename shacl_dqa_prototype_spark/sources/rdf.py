@@ -914,9 +914,3 @@ def parse_rdfxml(text: str) -> list[tuple]:
     for child in root:
         walk_node(child)
     return rows
-
-
-def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
-    with open(path, encoding="utf-8") as f:
-        rows = parse_rdfxml(f.read())
-    return spark.createDataFrame(rows, TRIPLES_SCHEMA)

@@ -166,21 +166,6 @@ def start_incremental_extraction_snapshots(
     return writer.start()
 
 
-def streaming_doc_counts(
-    spark: SparkSession, input_dir: str, window: str = "1 minute"
-) -> DataFrame:
-    """Windowed per-source counts with a watermark — the late-data pattern
-    for monitoring an ingest feed (returns a streaming DF; caller attaches
-    a sink)."""
-    docs = stream_documents(spark, input_dir)
-    with_ts = docs.withColumn("ingest_ts", F.current_timestamp())
-    return (
-        with_ts.withWatermark("ingest_ts", "2 minutes")
-        .groupBy(F.window("ingest_ts", window))
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
 def start_streaming_dedup(
     spark: SparkSession,
     input_dir: str,
