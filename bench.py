@@ -2,28 +2,36 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "construction": {...}, "scaling": {...}}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+   "query_min": {...}, "sf": ..., "construction": {...}, ...}
 
-The headline metric is end-to-end wall time over the query suite; the
-`construction` block reports KG-construction throughput (triples/sec) on a
-synthesized interleaved corpus, and `scaling` evidences the N→4N criterion
-by running the same end-to-end job at two parallelism levels — local[2]
-vs local[8]; see the rationale at the `do_scaling` block
-(BASELINE.json north_rule; see BASELINE.md).
+The default run reports the headline suite (setup + per-query medians,
+with each query's raw samples and min), KG-construction throughput
+(triples/sec) on a synthesized interleaved corpus, and the long-doc
+fingerprint kernel micro-benchmark. Each flag adds one block:
 
-Run `python bench.py --scaling` to include the (slower) two-parallelism
-scaling measurement; `--dqa-throughput` to measure the assessment half
-alone over a large constructed KG (the number comparable to the
-reference's ≈3 h drugbank run); `--streaming` to measure the
-streaming-DQA drain rate (triple file stream folded into incremental
-state per microbatch); `--curate` to measure end-to-end corpus-curation
-throughput (gate → source filter → LSH keep-best dedup → redact);
-`--incremental` to measure the incremental-DQA cost curve (seconds per
-fixed-size delta as the state grows — the O(delta) fold evidence); `--novelty-stream` to measure the novelty-at-ingest drain
-rate (id-ordered epoch files scored against the accumulated n-gram
-index, result asserted equal to batch ngram_novelty); the default run
-reports queries + construction.
+  --dqa-throughput  the assessment half alone over a large constructed
+                    KG (the number comparable to the reference's ≈3 h
+                    drugbank run)
+  --streaming       streaming-DQA drain rate (triple file stream folded
+                    into incremental state per microbatch) + vacuum
+  --novelty-stream  novelty-at-ingest drain rate (id-ordered epoch files
+                    scored against the accumulated n-gram index, result
+                    asserted equal to batch ngram_novelty)
+  --curate          corpus-curation throughput (gate → source filter →
+                    LSH keep-best dedup → redact)
+  --incremental     incremental-DQA cost curve (seconds per fixed-size
+                    delta as the state grows — the O(delta) fold
+                    evidence)
+  --weak-scaling    4× docs on 4× parallelism, end to end
+  --ann-recall      recall@10 and scan fraction of the two ANN operators
+  --skew            skew mitigation (salting, AQE skew joins) measured
+  --scaling         N→4N strong scaling of the end-to-end job, same input
+                    (BASELINE.json north_rule; see BASELINE.md)
+
+Both scaling modes run the construct + DQA job at local[2] and local[8],
+interleaved hi, lo, hi, lo in this one JVM, best run per level
+(_sample_levels).
 """
 
 from __future__ import annotations
@@ -34,6 +42,7 @@ import shutil
 import sys
 import tempfile
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,22 +54,10 @@ from shacl_dqa_prototype_spark.datagen import (
 )
 from shacl_dqa_prototype_spark.plans.construction import run_construction
 from shacl_dqa_prototype_spark.session import get_spark
+from shacl_dqa_prototype_spark.sources.sinks import read_triples
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# The scaling/throughput modes run an 8M-doc (~29M-triple) end-to-end job;
-# at the library's 8g default heap that job is memory-MARGINAL — depending
-# on task scheduling it either GC-thrashes (one 2026-08-20 run measured the
-# hi config 26% slow purely from eviction pressure) or dies outright
-# (java.lang.OutOfMemoryError, log retained in bench_r5_scaling9b.json).
-# An OOM-thrashing JVM measures the collector, not the engine, so the big
-# modes get a corpus-sized heap. Must be decided BEFORE the first session:
-# local-mode pyspark launches ONE JVM per python process, and later
-# spark.driver.memory configs are silently ignored.
-if any(m in sys.argv for m in ("--scaling", "--weak-scaling",
-                               "--dqa-throughput")):
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 
 # Headline suite: one per operator family (profiling, constraints, scoring,
 # dedup, similarity, text, analytics). Trimmed to queries whose runtime is
@@ -184,40 +181,75 @@ def _timed(f) -> float:
     return time.time() - t0
 
 
-def _materialize_corpus(n_docs: int) -> tuple[str, "GenConfig"]:
-    """Write the synthetic corpus to disk ONCE — the measured job reads the
-    materialized table (generation is fixture prep, not the job)."""
-    corpus_dir = tempfile.mkdtemp(prefix="bench_corpus_")
-    spark = get_spark("bench-gen", cores=CPUS)
-    cfg = GenConfig(n_docs=n_docs, n_entities=max(100, n_docs // 20))
-    generate_documents(spark, cfg, partitions=max(16, CPUS * 2)).write.mode(
-        "overwrite").parquet(os.path.join(corpus_dir, "documents.parquet"))
-    spark.stop()
-    return corpus_dir, cfg
+@contextmanager
+def _session(tag: str, *dirs: str, cores: int = CPUS,
+             extra_conf: dict | None = None):
+    """Every bench session's lifecycle: stop whatever session is active
+    (get_spark would hand it back instead of a fresh one), start
+    ``bench-<tag>`` on local[cores] with the engine defaults, and on
+    every way out, normal or raised, stop it and remove ``dirs``."""
+    from pyspark.sql import SparkSession
+
+    try:
+        active = SparkSession.getActiveSession()
+        if active is not None:
+            active.stop()
+        spark = get_spark(f"bench-{tag}", cores=cores, extra_conf=extra_conf)
+        try:
+            yield spark
+        finally:
+            spark.stop()
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
 
-def _materialize_flat_corpus(n_docs: int) -> str:
-    """Flat (doc_id, text, source) corpus for the curation bench — the
-    interleaved datagen docs flattened to their text spans with a
-    deterministic source domain, written once as fixture prep."""
+@contextmanager
+def _corpus(n_docs: int, flat: bool = False):
+    """Write the synthetic corpus to disk ONCE, in its own session, and
+    yield (documents parquet path, GenConfig): the measured job reads the
+    materialized table (generation is fixture prep, not the job). With
+    ``flat`` the interleaved docs are flattened to (doc_id, text, source):
+    their text spans with a deterministic source domain. The corpus is
+    removed on exit."""
     from pyspark.sql import functions as F
 
-    corpus_dir = tempfile.mkdtemp(prefix="bench_flat_")
-    spark = get_spark("bench-gen-flat", cores=CPUS)
     cfg = GenConfig(n_docs=n_docs, n_entities=max(100, n_docs // 20))
-    docs = generate_documents(spark, cfg, partitions=max(16, CPUS * 2))
-    flat = docs.select(
-        "doc_id",
-        F.concat_ws(" ", F.transform(
-            F.filter("spans", lambda s: s["kind"] == "text"),
-            lambda s: s["text"])).alias("text"),
-        F.concat(F.lit("src"), F.pmod(F.xxhash64("doc_id"), F.lit(64))
-                 .cast("string")).alias("source"),
-    )
-    flat.write.mode("overwrite").parquet(
-        os.path.join(corpus_dir, "documents.parquet"))
-    spark.stop()
-    return corpus_dir
+    with tempfile.TemporaryDirectory(prefix="bench_corpus_",
+                                     ignore_cleanup_errors=True) as d:
+        path = os.path.join(d, "documents.parquet")
+        with _session("gen") as spark:
+            docs = generate_documents(spark, cfg, partitions=max(16, CPUS * 2))
+            if flat:
+                docs = docs.select(
+                    "doc_id",
+                    F.concat_ws(" ", F.transform(
+                        F.filter("spans", lambda s: s["kind"] == "text"),
+                        lambda s: s["text"])).alias("text"),
+                    F.concat(F.lit("src"), F.pmod(F.xxhash64("doc_id"),
+                                                  F.lit(64))
+                             .cast("string")).alias("source"))
+            docs.write.mode("overwrite").parquet(path)
+        yield path, cfg
+
+
+@contextmanager
+def _kg(tag: str, corpus: tuple[str, GenConfig], cores: int = CPUS):
+    """A fresh session holding the KG constructed from ``corpus`` (as
+    _corpus yields it) in a temp workdir: yields (spark, workdir,
+    n_triples, construction seconds, per-stage seconds). The triple count
+    is outside the timer; the workdir goes with the session."""
+    docs_path, cfg = corpus
+    wd = tempfile.mkdtemp(prefix=f"bench_{tag}_")
+    with _session(f"{tag}-{cores}", wd, cores=cores) as spark:
+        docs = spark.read.parquet(docs_path)
+        dictionary = entity_dictionary(spark, cfg)
+        t0 = time.time()
+        # fixed bucket count so different-parallelism runs do identical work
+        res = run_construction(spark, docs, dictionary, wd, n_buckets=32)
+        sec = time.time() - t0
+        n_triples = read_triples(spark, res.triples_path).count()
+        yield spark, wd, n_triples, sec, res.stage_seconds
 
 
 def _datagen_vocab_cfg():
@@ -252,7 +284,6 @@ def _run_dqa(spark, triples_path: str, report_path: str) -> None:
     """The DQA half alone: profile + compiled constraint evaluation +
     scoring + report write over an existing triple table."""
     from shacl_dqa_prototype_spark.plans.dqa import run_data_dqa
-    from shacl_dqa_prototype_spark.sources.sinks import read_triples
 
     T = read_triples(spark, triples_path)
     vocab, dqa_cfg = _datagen_vocab_cfg()
@@ -260,177 +291,342 @@ def _run_dqa(spark, triples_path: str, report_path: str) -> None:
         report_path)
 
 
-def _construction_run(cores: int | str, corpus_dir: str, cfg: GenConfig,
-                      with_dqa: bool = False,
-                      extra_conf: dict | None = None,
-                      shuffle_partitions: int | None = None) -> tuple[float, int]:
+def _construction_run(cores: int, corpus: tuple[str, GenConfig],
+                      with_dqa: bool = False) -> dict:
     """Construction job (read corpus → extract → link → CC → materialize)
-    at the given parallelism (int → local[n]; string → full master, e.g.
-    a local-cluster spec); with_dqa=True appends the full DQA half
-    (profile → compiled constraints → scoring → report write), i.e. the
-    BASELINE.json end-to-end job. Fresh session per run."""
-    from pyspark.sql import SparkSession
+    on local[cores] in a fresh session; with_dqa=True appends the full DQA
+    half (profile → compiled constraints → scoring → report write), i.e.
+    the BASELINE.json end-to-end job. Returns {"sec", "n_triples",
+    "phases"}; the phase split shows where non-scaling (serial/driver)
+    time sits at each parallelism level, down to the construction stage
+    (extract/link/canonicalize/materialize)."""
+    with _kg("construct", corpus, cores) as (spark, wd, n, t_construct,
+                                             stages):
+        t0 = time.time()
+        if with_dqa:
+            _run_dqa(spark, os.path.join(wd, "triples.parquet"),
+                     os.path.join(wd, "report"))
+        t_dqa = time.time() - t0
+    return {"sec": t_construct + t_dqa, "n_triples": n,
+            "phases": {"construct_sec": round(t_construct, 2),
+                       "dqa_sec": round(t_dqa, 2), "stages": stages}}
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = get_spark(f"bench-construct-{cores}", cores=cores,
-                      extra_conf=extra_conf,
-                      shuffle_partitions=shuffle_partitions)
-    docs = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
-    dictionary = entity_dictionary(spark, cfg)
-    wd = tempfile.mkdtemp(prefix="bench_kg_")
-    t0 = time.time()
-    # fixed bucket count so different-parallelism runs do identical work
-    res = run_construction(spark, docs, dictionary, wd, n_buckets=32)
-    t_construct = time.time() - t0
-    if with_dqa:
-        _run_dqa(spark, res.triples_path, os.path.join(wd, "report"))
-    dt = time.time() - t0
-    # phase split for the scaling report: shows where non-scaling
-    # (serial/driver) time sits at each parallelism level, down to the
-    # construction stage (extract/link/canonicalize/materialize)
-    _construction_run.last_phases = {
-        "construct_sec": round(t_construct, 2),
-        "dqa_sec": round(dt - t_construct, 2),
-        "stages": res.stage_seconds,
+
+LEVEL_CORES = {"lo": 2, "hi": 8}
+
+
+def _sample_levels(corpus_of: dict) -> dict[str, list[dict]]:
+    """The one scaling sampler: the end-to-end job (construct + DQA) at
+    each level of LEVEL_CORES over ``corpus_of[level]``, run hi, lo, hi,
+    lo so a host-noise spike can't bias the efficiency either way; the
+    caller takes the best run per level.
+
+    Both levels run sequentially in THIS python process and JVM (24g
+    heap, JIT-warm for both) — the same-job, two-parallelism-levels
+    comparison. 2 vs 8 task threads rather than 8 vs 32 because this
+    host is shared (external tenants push loadavg to 10-18, so wider
+    levels measure the neighbours, not the engine). Not symmetric in
+    memory: with the one equal heap, the 8-thread level gets ¼ of the
+    per-task execution memory of the 2-thread one, which biases the
+    efficiency down once a stage spills (at 16M docs the link stage turns
+    superlinear and the job reads 0.656, scaling16m_r5)."""
+    runs: dict[str, list[dict]] = {"hi": [], "lo": []}
+    for level in ("hi", "lo", "hi", "lo"):
+        runs[level].append(_construction_run(
+            LEVEL_CORES[level], corpus_of[level], with_dqa=True))
+    return runs
+
+
+def _level_block(runs: list[dict]) -> tuple[float, list[float], list]:
+    """(best seconds, rounded samples, phases) of one level's runs."""
+    return (min(r["sec"] for r in runs), [round(r["sec"], 2) for r in runs],
+            [r["phases"] for r in runs])
+
+
+def _scaling() -> dict:
+    """Strong scaling: the SAME input at both levels, efficiency =
+    (t_lo / t_hi) / 4. The corpus is 8M docs (~29M triples) so compute
+    dominates fixed per-stage overhead. Takes ~45 min."""
+    n_docs = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", 8_000_000))
+    with _corpus(n_docs) as corpus:
+        runs = _sample_levels({"hi": corpus, "lo": corpus})
+    hi, samples_hi, phases_hi = _level_block(runs["hi"])
+    lo, samples_lo, phases_lo = _level_block(runs["lo"])
+    n = runs["hi"][0]["n_triples"]
+    return {
+        "mode": ("strong end-to-end (construct+DQA), same input, "
+                 "N vs 4N parallelism, hi/lo interleaved x2, best "
+                 "per config"),
+        "docs": n_docs,
+        "sec_lo": round(lo, 2),
+        "sec_hi": round(hi, 2),
+        "triples_per_sec_lo": round(n / lo, 1),
+        "triples_per_sec_hi": round(n / hi, 1),
+        "efficiency": round((lo / hi) / 4, 3),
+        "samples_hi": samples_hi,
+        "samples_lo": samples_lo,
+        "phases_hi": phases_hi,
+        "phases_lo": phases_lo,
     }
-    n_triples = spark.read.parquet(
-        os.path.join(wd, "triples.parquet")).count()
-    shutil.rmtree(wd, ignore_errors=True)
-    spark.stop()
-    return dt, n_triples
 
 
-def _construction_child() -> None:
-    """Entry point for ONE isolated scaling run (spawned by
-    _isolated_construction_run): its own python process means its own
-    driver JVM, so heap/GC/JIT state is never shared across configs.
-    argv: --_construction-child <spec> <corpus_dir> <n_docs> <out_json>
-    where <spec> is either an int ("8" → local[8], thread-parallelism
-    proxy) or "lc:<n_executors>:<cores_each>:<mem_mb>" → a
-    local-cluster master with that many REAL executor JVMs."""
-    spec = sys.argv[2]
-    corpus_dir = sys.argv[3]
-    n_docs = int(sys.argv[4])
-    out_path = sys.argv[5]
-    # same derivation as _materialize_corpus, so the dictionary matches
-    cfg = GenConfig(n_docs=n_docs, n_entities=max(100, n_docs // 20))
-    if spec.startswith("lc:"):
-        n_exec, cores_each, mem_mb = map(int, spec.split(":")[1:])
-        master = f"local-cluster[{n_exec},{cores_each},{mem_mb}]"
-        total = n_exec * cores_each
-        # identical per-executor JVMs in every config — the ratio between
-        # cluster sizes is then apples-to-apples; only the driver heap is
-        # config-independent (the driver node is the same machine however
-        # many executors attach to it)
-        dt, n = _construction_run(
-            master, corpus_dir, cfg, with_dqa=True,
-            shuffle_partitions=4 * total)
-    else:
-        cores = int(spec)
-        # ActiveProcessorCount makes the JVM size GC/JIT/netty pools to
-        # the simulated core count (a real N-core executor's JVM sees N
-        # procs, not the whole host) — honored at JVM launch like driver
-        # memory.
-        dt, n = _construction_run(
-            cores, corpus_dir, cfg, with_dqa=True,
-            extra_conf={"spark.driver.extraJavaOptions":
-                        f"-XX:ActiveProcessorCount={cores}"})
-    with open(out_path, "w") as f:
-        json.dump({"sec": dt, "n_triples": n,
-                   "phases": _construction_run.last_phases}, f)
+def _weak_scaling() -> dict:
+    """Weak scaling: 4× the docs at 4× the parallelism, efficiency =
+    t_lo / t_hi — the regime that matches the 100 TB design goal (you
+    add executors BECAUSE data grew; the job count stays constant while
+    per-stage data scales, so the fixed driver/job overhead that bounds
+    strong scaling on a FIXED input amortizes away)."""
+    n_lo = int(os.environ.get("SPARK_GRAFT_WEAK_DOCS_LO", 2_000_000))
+    n_hi = n_lo * 4
+    with _corpus(n_lo) as lo_corpus, _corpus(n_hi) as hi_corpus:
+        runs = _sample_levels({"hi": hi_corpus, "lo": lo_corpus})
+    block = {"mode": ("weak end-to-end (construct+DQA): 4x docs on 4x "
+                      "parallelism, hi/lo interleaved, best per config")}
+    best = {}
+    for level, n_docs in (("lo", n_lo), ("hi", n_hi)):
+        best[level], sec_runs, phases = _level_block(runs[level])
+        block[level] = {"docs": n_docs,
+                        "triples": runs[level][0]["n_triples"],
+                        "sec_runs": sec_runs, "phases": phases}
+    block["efficiency_wall"] = round(best["lo"] / best["hi"], 3)
+    return block
 
 
-def _isolated_construction_run(spec: int | str, corpus_dir: str,
-                               n_docs: int) -> dict:
-    """Run the end-to-end job in a fresh subprocess at the parallelism
-    described by `spec`.
-
-    spec = "lc:<n_executors>:<cores_each>:<mem_mb>" — a local-cluster
-    master spawns that many REAL executor JVMs, each with its own heap,
-    GC, shuffle server, and python UDF workers, talking to one driver
-    over loopback netty. Per-executor resources are IDENTICAL across
-    cluster sizes by construction, so the N vs 4N ratio measures
-    genuine cluster losses (driver serialization, barriers, stragglers,
-    shuffle) — not JVM-sizing artifacts.
-
-    spec = int n — the local[n] thread proxy in a child process (heap
-    4g+4g/core, JVM pools sized via ActiveProcessorCount). Note its
-    measured asymmetries before trusting ratios across specs: the
-    process tree floats over all host CPUs and the overshoot differs by
-    config (local[2] burns ~2.6 cores — JVM helpers + out-of-band
-    python workers — vs ~8.8 for local[8]: bench_r5_scaling12), and
-    taskset-pinning would serialize the JVM↔python Arrow pipeline that
-    a real executor overlaps (pinned extract burned 3.4× the
-    CPU-seconds at 8 cores vs 2: pinned_probe_r5).
-
-    See _scaling_sample for which proxy each scaling method uses.
-
-    JVM startup is outside the timed window (the child times the job
-    only)."""
-    import subprocess
-
-    fd, out_path = tempfile.mkstemp(suffix=".json", prefix="bench_iso_")
-    os.close(fd)
-    if isinstance(spec, int):
-        env = dict(os.environ, SPARK_DRIVER_MEM=f"{4 + 4 * spec}g")
-    else:
-        # the driver node is the same machine whatever the cluster size
-        env = dict(os.environ, SPARK_DRIVER_MEM="8g")
-    cmd = [sys.executable, os.path.abspath(__file__),
-           "--_construction-child", str(spec), corpus_dir,
-           str(n_docs), out_path]
-    try:
-        subprocess.run(cmd, check=True, env=env)
-        with open(out_path) as f:
-            return json.load(f)
-    finally:
-        os.unlink(out_path)
+def _dqa_throughput() -> dict:
+    """Assessment-only throughput on a large KG — the number directly
+    comparable to the reference's ≈3 h drugbank DQA run: construct once
+    (untimed fixture), then time ONLY profile + compiled constraint
+    evaluation + scoring + report write."""
+    n_docs = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", 8_000_000))
+    with _corpus(n_docs) as corpus, \
+            _kg("dqa", corpus) as (spark, wd, n_t, *_):
+        t0 = time.time()
+        _run_dqa(spark, os.path.join(wd, "triples.parquet"),
+                 os.path.join(wd, "report"))
+        sec = time.time() - t0
+    return {
+        "cores": CPUS,
+        "n_triples": n_t,
+        "sec": round(sec, 2),
+        "triples_per_sec": round(n_t / sec, 1),
+    }
 
 
-def _scaling_sample(method: str, level: str, corpus_dir: str,
-                    n_docs: int) -> dict:
-    """One end-to-end run at `level` ∈ {lo, hi} under the chosen
-    measurement method (SPARK_GRAFT_SCALING_METHOD):
+def _streaming() -> dict:
+    """Streaming-DQA drain rate: the constructed triple table arrives as a
+    file stream (4 files per microbatch) and is folded into incremental
+    state epoch by epoch; the timed section is the full drain, so the rate
+    includes every state-level append, the compactions and the
+    monotone-violation appends. Then vacuum hygiene (r4 verdict item 7):
+    a many-epoch drain grows every state table's dir chain + commit log;
+    the state dir is measured before/after the periodic compact+expire
+    maintenance, and the vacuum is checked to preserve contents."""
+    from shacl_dqa_prototype_spark.plans.incremental import (
+        IncrementalDQAState,
+    )
+    from shacl_dqa_prototype_spark.streaming.ingest import start_streaming_dqa
 
-    - "shared" (default; the prescribed sandbox proxy): local[2] vs
-      local[8] task threads, both configs sequentially in THIS python
-      process/JVM (24g heap, JIT-warm for both) — the same-job,
-      two-parallelism-levels, same-input comparison. Not symmetric in
-      memory: with the one equal heap, the 8-thread config gets ¼ of the
-      per-task execution memory of the 2-thread one, which biases the
-      efficiency down once a stage spills (at 16M docs the link stage
-      turns superlinear and the job reads 0.656, scaling16m_r5).
-    - "isolated": per-config child JVMs, heap 4g+4g/core,
-      ActiveProcessorCount=cores. Stricter isolation but asymmetric in
-      practice: each fresh JVM re-pays JIT warmup (a larger fraction of
-      the shorter hi run) and the small config free-rides host CPUs
-      (python UDF workers run beside the 2 task threads: ~2.6 busy
-      cores measured for local[2] vs ~8.8 for local[8]), so it reads
-      lower: 0.697 isolated (bench_r5_scaling12) vs 0.734 shared
-      (linkfix_probe_r5), both measured on the post-link-fix engine.
-    - "lc": REAL multi-executor clusters — local-cluster with 2 vs 8
-      single-core 6g executor JVMs. The most faithful rendering of
-      "N and 4N executors", but per-job latency (executor round trips,
-      torrent broadcasts, netty shuffle) adds a fixed floor per stage
-      that only amortizes at corpus sizes beyond this sandbox's quiet
-      windows (at 1M docs the link stage reads ~58s at BOTH sizes).
-      Kept for methodology comparison at small scale.
-    """
-    if method == "shared":
-        cores = {"lo": 2, "hi": 8}[level]
-        cfg = GenConfig(n_docs=n_docs, n_entities=max(100, n_docs // 20))
-        dt, n = _construction_run(cores, corpus_dir, cfg, with_dqa=True)
-        return {"sec": dt, "n_triples": n,
-                "phases": _construction_run.last_phases}
-    if method == "isolated":
-        return _isolated_construction_run({"lo": 2, "hi": 8}[level],
-                                          corpus_dir, n_docs)
-    if method == "lc":
-        spec = {"lo": "lc:2:1:6144", "hi": "lc:8:1:6144"}[level]
-        return _isolated_construction_run(spec, corpus_dir, n_docs)
-    raise ValueError(f"unknown scaling method {method!r}")
+    def _dir_stats(root):
+        n_files = n_bytes = 0
+        for dp, _, fns in os.walk(root):
+            for fn in fns:
+                n_files += 1
+                n_bytes += os.path.getsize(os.path.join(dp, fn))
+        return n_files, n_bytes
+
+    n_docs = int(os.environ.get("SPARK_GRAFT_STREAM_DOCS", 200_000))
+    with _corpus(n_docs) as corpus, \
+            _kg("stream", corpus) as (spark, wd, n_t, *_):
+        vocab, dqa_cfg = _datagen_vocab_cfg()
+        state_dir = os.path.join(wd, "state")
+        state = IncrementalDQAState.open(spark, state_dir)
+        t0 = time.time()
+        start_streaming_dqa(
+            spark, os.path.join(wd, "triples.parquet"), state, dqa_cfg,
+            vocab, checkpoint_dir=os.path.join(wd, "ckpt"), n_buckets=32,
+            max_files_per_trigger=4,
+        ).awaitTermination()
+        sd_sec = time.time() - t0
+        n_epochs = len(state.ps_counts.snapshots())
+
+        rows_before = {n: t.read().count()
+                       for n, t in state.tables().items()}
+        files_b, bytes_b = _dir_stats(state_dir)
+        t0 = time.time()
+        state.vacuum()
+        vac_sec = time.time() - t0
+        files_a, bytes_a = _dir_stats(state_dir)
+        rows_after = {n: t.read().count()
+                      for n, t in state.tables().items()}
+        assert rows_after == rows_before, (rows_before, rows_after)
+        return {
+            "cores": CPUS,
+            "n_triples": n_t,
+            "epochs": n_epochs,
+            "sec": round(sd_sec, 2),
+            "triples_per_sec": round(n_t / sd_sec, 1),
+            "vacuum": {
+                "sec": round(vac_sec, 2),
+                "state_files_before": files_b,
+                "state_files_after": files_a,
+                "state_mb_before": round(bytes_b / 1e6, 1),
+                "state_mb_after": round(bytes_a / 1e6, 1),
+                "snapshots_per_table_before": n_epochs,
+                "snapshots_per_table_after": len(
+                    state.ps_counts.snapshots()),
+                "rows_preserved": True,
+            },
+        }
+
+
+def _novelty_stream() -> dict:
+    """Novelty-at-ingest drain rate: a flat corpus arrives as K id-ordered
+    epoch files; every batch is scored against the accumulated
+    bucket-pruned n-gram index and folded in. The timed section is the
+    full drain (all index reads + both snapshot commits per epoch); the
+    result set is then asserted EQUAL to batch ngram_novelty over the same
+    corpus — throughput with the correctness proof attached, not instead
+    of it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from shacl_dqa_prototype_spark.operators.dedup import ngram_novelty
+    from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
+    from shacl_dqa_prototype_spark.streaming.ingest import (
+        start_streaming_novelty,
+        write_ordered_epochs,
+    )
+
+    n_nv = int(os.environ.get("SPARK_GRAFT_NOVELTY_DOCS", 200_000))
+    n_epochs = int(os.environ.get("SPARK_GRAFT_NOVELTY_EPOCHS", 8))
+    with _corpus(n_nv, flat=True) as (docs_path, _):
+        wd = tempfile.mkdtemp(prefix="bench_novelty_")
+        with _session(f"novelty-{CPUS}", wd) as spark:
+            docs = spark.read.parquet(docs_path).select("doc_id", "text")
+            in_dir = os.path.join(wd, "in")
+            # datagen ids are zero-padded strings (doc_000000042): their
+            # lexicographic order IS the numeric order, so id-ordered
+            # epochs split on the extracted numeric suffix and
+            # min(doc_id) agrees between the stream and the batch operator
+            per = (n_nv + n_epochs - 1) // n_epochs
+            num = F.regexp_extract("doc_id", r"(\d+)$", 1).cast("long")
+            write_ordered_epochs(
+                [docs.filter((num >= i * per) & (num < (i + 1) * per))
+                 for i in range(n_epochs)], in_dir)
+            idx = SnapshotTable(spark, os.path.join(wd, "idx"), StructType([
+                StructField("ng", LongType(), True),
+                StructField("first_doc", StringType(), True)]))
+            res_t = SnapshotTable(spark, os.path.join(wd, "res"), StructType([
+                StructField("doc_id", StringType(), True),
+                StructField("n_distinct", LongType(), False),
+                StructField("novel", LongType(), False),
+                StructField("novel_frac", DoubleType(), False)]))
+            t0 = time.time()
+            start_streaming_novelty(
+                spark, in_dir + "/*", idx, res_t,
+                os.path.join(wd, "ckpt"), n=8, schema=docs.schema,
+                max_files_per_trigger=1, n_buckets=32,
+            ).awaitTermination()
+            nv_sec = time.time() - t0
+            got = res_t.read().distinct()
+            exp = ngram_novelty(docs, n=8)
+            mismatches = got.unionByName(exp).groupBy(
+                "doc_id", "n_distinct", "novel", "novel_frac"
+            ).count().filter("count <> 2").count()
+            assert mismatches == 0, f"{mismatches} rows differ from batch"
+            return {
+                "cores": CPUS,
+                "n_docs": n_nv,
+                "epochs": n_epochs,
+                "sec": round(nv_sec, 2),
+                "docs_per_sec": round(n_nv / nv_sec, 1),
+                "index_ngrams": idx.read().count(),
+                "matches_batch": True,
+            }
+
+
+def _curate() -> dict:
+    """End-to-end curation throughput: documents parquet → quality gate
+    → source filter → LSH keep-best near-dedup → PII redaction → curated
+    parquet (the main.py curate job, xxhash64 fast path). The corpus
+    write is fixture prep; the timed section is the whole pipeline
+    including the output write."""
+    from shacl_dqa_prototype_spark.plans.curate import curate_corpus
+
+    n_cu = int(os.environ.get("SPARK_GRAFT_CURATE_DOCS", 2_000_000))
+    with _corpus(n_cu, flat=True) as (docs_path, _):
+        out_dir = tempfile.mkdtemp(prefix="bench_curated_")
+        with _session(f"curate-{CPUS}", out_dir) as spark:
+            out_path = os.path.join(out_dir, "curated.parquet")
+            t0 = time.time()
+            res = curate_corpus(spark.read.parquet(docs_path),
+                                collect_stats=False)
+            res.survivors.write.mode("overwrite").parquet(out_path)
+            cu_sec = time.time() - t0
+            n_out = spark.read.parquet(out_path).count()
+    return {
+        "cores": CPUS,
+        "n_docs_in": n_cu,
+        "n_docs_out": n_out,
+        "sec": round(cu_sec, 2),
+        "docs_per_sec": round(n_cu / cu_sec, 1),
+    }
+
+
+def _incremental() -> dict:
+    """Incremental-state cost curve: fold K fixed-size triple deltas into
+    a GROWING DQA state and report seconds per delta vs state size — the
+    evidence for the O(delta) fold claim (plans/incremental.py: each fold
+    appends one level per state table; reads merge base ∪ levels, and a
+    table past 16 dirs is compacted). A flat curve = cost tracks the
+    delta, not the accumulated state."""
+    from pyspark.sql import functions as F
+
+    from shacl_dqa_prototype_spark.plans.incremental import (
+        IncrementalDQAState,
+        apply_delta,
+    )
+
+    n_in = int(os.environ.get("SPARK_GRAFT_INC_DOCS", 1_000_000))
+    k_deltas = int(os.environ.get("SPARK_GRAFT_INC_DELTAS", 10))
+    with _corpus(n_in) as corpus, \
+            _kg("inc", corpus) as (spark, wd, n_t, *_):
+        T = read_triples(spark, os.path.join(wd, "triples.parquet"))
+        vocab, dqa_cfg = _datagen_vocab_cfg()
+        state = IncrementalDQAState.open(spark, os.path.join(wd, "state"))
+        slot = F.pmod(F.xxhash64("s", "p", "o"), F.lit(k_deltas))
+        per_delta = []
+        cum = 0
+        for i in range(k_deltas):
+            delta = T.filter(slot == i)
+            n_d = delta.count()  # fixture accounting, outside the timer
+            t0 = time.time()
+            apply_delta(state, delta, dqa_cfg, vocab, n_buckets=32,
+                        delta_id=f"bench-{i}")
+            dt = time.time() - t0
+            cum += n_d
+            per_delta.append({
+                "delta": i, "delta_triples": n_d,
+                "state_triples_after": cum, "sec": round(dt, 2),
+            })
+    first, last = per_delta[0]["sec"], per_delta[-1]["sec"]
+    return {
+        "cores": CPUS,
+        "n_triples_total": n_t,
+        "k_deltas": k_deltas,
+        "per_delta": per_delta,
+        "sec_first_delta": first,
+        "sec_last_delta": last,
+        # <1 means the final delta (vs a k×-larger state) costs no
+        # more than the first — the O(delta) evidence
+        "last_over_first": round(last / first, 3),
+    }
 
 
 def _ann_recall(n_vecs: int = 100_000, dim: int = 64,
@@ -447,7 +643,6 @@ def _ann_recall(n_vecs: int = 100_000, dim: int = 64,
     import math
 
     import numpy as np
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from shacl_dqa_prototype_spark.operators.similarity import (
@@ -458,93 +653,90 @@ def _ann_recall(n_vecs: int = 100_000, dim: int = 64,
         query_signature,
     )
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = get_spark("bench-ann", cores=CPUS)
-    # clustered corpus: 16 gaussian clusters so near-neighbor structure
-    # exists (i.i.d. gaussian vectors are pairwise near-orthogonal at
-    # dim=64 and recall@k would measure noise ranking, not ANN quality)
-    rng = np.random.RandomState(7)
-    centers = rng.standard_normal((16, dim)) * 1.5
-    center_arr = F.element_at(
-        F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centers]),
-        (F.col("id") % 16 + 1).cast("int"))
-    noise = F.array(*[F.randn(seed=100 + j) for j in range(dim)])
-    corpus = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"),
-                F.zip_with(center_arr, noise,
-                           lambda a, b: a + b).alias("embedding"))
-        .cache())
-    corpus.count()
-    queries = [list(r["embedding"]) for r in corpus.filter(
-        F.col("vec_id") % (n_vecs // n_queries) == 3).limit(n_queries)
-        .collect()]
+    with _session("ann") as spark:
+        # clustered corpus: 16 gaussian clusters so near-neighbor structure
+        # exists (i.i.d. gaussian vectors are pairwise near-orthogonal at
+        # dim=64 and recall@k would measure noise ranking, not ANN quality)
+        rng = np.random.RandomState(7)
+        centers = rng.standard_normal((16, dim)) * 1.5
+        center_arr = F.element_at(
+            F.array(*[F.array(*[F.lit(float(x)) for x in c])
+                      for c in centers]),
+            (F.col("id") % 16 + 1).cast("int"))
+        noise = F.array(*[F.randn(seed=100 + j) for j in range(dim)])
+        corpus = (
+            spark.range(n_vecs)
+            .select(F.col("id").alias("vec_id"),
+                    F.zip_with(center_arr, noise,
+                               lambda a, b: a + b).alias("embedding"))
+            .cache())
+        corpus.count()
+        queries = [list(r["embedding"]) for r in corpus.filter(
+            F.col("vec_id") % (n_vecs // n_queries) == 3).limit(n_queries)
+            .collect()]
 
-    # shared cost accounting: LSH bucket sizes + IVF cell sizes, one pass
-    n_planes, seed, n_cells = 12, 42, 16
-    sig_sizes = {r["lsh_sig"]: r["n"] for r in lsh_signatures(
-        corpus, dim, n_planes, seed).groupBy("lsh_sig")
-        .agg(F.count("*").alias("n")).collect()}
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+        # shared cost accounting: LSH bucket sizes + IVF cell sizes, one pass
+        n_planes, seed, n_cells = 12, 42, 16
+        sig_sizes = {r["lsh_sig"]: r["n"] for r in lsh_signatures(
+            corpus, dim, n_planes, seed).groupBy("lsh_sig")
+            .agg(F.count("*").alias("n")).collect()}
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
 
-    feat = corpus.withColumn(
-        "features", array_to_vector(F.col("embedding").cast("array<double>")))
-    km = KMeans(k=n_cells, seed=seed, maxIter=5).fit(feat)
-    cell_sizes = {r["prediction"]: r["n"] for r in km.transform(feat)
-                  .groupBy("prediction").agg(F.count("*").alias("n"))
-                  .collect()}
+        feat = corpus.withColumn(
+            "features",
+            array_to_vector(F.col("embedding").cast("array<double>")))
+        km = KMeans(k=n_cells, seed=seed, maxIter=5).fit(feat)
+        cell_sizes = {r["prediction"]: r["n"] for r in km.transform(feat)
+                      .groupBy("prediction").agg(F.count("*").alias("n"))
+                      .collect()}
 
-    def lsh_scanned(q, h):
-        from itertools import combinations
-        qsig = query_signature(q, n_planes, seed)
-        sigs = [qsig ^ sum(1 << b for b in flip)
-                for hh in range(h + 1)
-                for flip in combinations(range(n_planes), hh)]
-        return sum(sig_sizes.get(s, 0) for s in sigs)
+        def lsh_scanned(q, h):
+            from itertools import combinations
+            qsig = query_signature(q, n_planes, seed)
+            sigs = [qsig ^ sum(1 << b for b in flip)
+                    for hh in range(h + 1)
+                    for flip in combinations(range(n_planes), hh)]
+            return sum(sig_sizes.get(s, 0) for s in sigs)
 
-    def ivf_scanned(q, p):
-        def cos(a, b):
-            num = sum(x * y for x, y in zip(a, b))
-            na = math.sqrt(sum(x * x for x in a)) or 1.0
-            nb = math.sqrt(sum(float(y) ** 2 for y in b)) or 1.0
-            return num / (na * nb)
-        cells = sorted(range(n_cells),
-                       key=lambda i: -cos(q, km.clusterCenters()[i]))[:p]
-        return sum(cell_sizes.get(c, 0) for c in cells)
+        def ivf_scanned(q, p):
+            def cos(a, b):
+                num = sum(x * y for x, y in zip(a, b))
+                na = math.sqrt(sum(x * x for x in a)) or 1.0
+                nb = math.sqrt(sum(float(y) ** 2 for y in b)) or 1.0
+                return num / (na * nb)
+            cells = sorted(range(n_cells),
+                           key=lambda i: -cos(q, km.clusterCenters()[i]))[:p]
+            return sum(cell_sizes.get(c, 0) for c in cells)
 
-    exact = [set(r["vec_id"] for r in
-                 cosine_topk(corpus, q, k).collect()) for q in queries]
-    res: dict = {"n_vecs": n_vecs, "dim": dim, "k": k,
-                 "n_queries": n_queries, "lsh": {}, "ivf": {}}
-    for h in (0, 1, 2):
-        rec, frac = [], []
-        for q, ex in zip(queries, exact):
-            ids = {r["vec_id"] for r in ann_topk(
-                corpus, q, k, n_planes=n_planes, seed=seed,
-                probe_hamming=h).collect()}
-            rec.append(len(ids & ex) / k)
-            frac.append(lsh_scanned(q, h) / n_vecs)
-        res["lsh"][f"probe_hamming={h}"] = {
-            "recall_at_10": round(sum(rec) / len(rec), 3),
-            "scan_fraction": round(sum(frac) / len(frac), 4),
-            "default": h == 2}
-    for p in (1, 2, 4):
-        rec, frac = [], []
-        for q, ex in zip(queries, exact):
-            ids = {r["vec_id"] for r in ivf_topk(
-                corpus, q, k, n_cells=n_cells, n_probe=p,
-                seed=seed).collect()}
-            rec.append(len(ids & ex) / k)
-            frac.append(ivf_scanned(q, p) / n_vecs)
-        res["ivf"][f"n_probe={p}"] = {
-            "recall_at_10": round(sum(rec) / len(rec), 3),
-            "scan_fraction": round(sum(frac) / len(frac), 4),
-            "default": p == 2}
-    corpus.unpersist()
-    spark.stop()
+        exact = [set(r["vec_id"] for r in
+                     cosine_topk(corpus, q, k).collect()) for q in queries]
+        res: dict = {"n_vecs": n_vecs, "dim": dim, "k": k,
+                     "n_queries": n_queries, "lsh": {}, "ivf": {}}
+        for h in (0, 1, 2):
+            rec, frac = [], []
+            for q, ex in zip(queries, exact):
+                ids = {r["vec_id"] for r in ann_topk(
+                    corpus, q, k, n_planes=n_planes, seed=seed,
+                    probe_hamming=h).collect()}
+                rec.append(len(ids & ex) / k)
+                frac.append(lsh_scanned(q, h) / n_vecs)
+            res["lsh"][f"probe_hamming={h}"] = {
+                "recall_at_10": round(sum(rec) / len(rec), 3),
+                "scan_fraction": round(sum(frac) / len(frac), 4),
+                "default": h == 2}
+        for p in (1, 2, 4):
+            rec, frac = [], []
+            for q, ex in zip(queries, exact):
+                ids = {r["vec_id"] for r in ivf_topk(
+                    corpus, q, k, n_cells=n_cells, n_probe=p,
+                    seed=seed).collect()}
+                rec.append(len(ids & ex) / k)
+                frac.append(ivf_scanned(q, p) / n_vecs)
+            res["ivf"][f"n_probe={p}"] = {
+                "recall_at_10": round(sum(rec) / len(rec), 3),
+                "scan_fraction": round(sum(frac) / len(frac), 4),
+                "default": p == 2}
     return res
 
 
@@ -574,8 +766,9 @@ def _skew_bench(n_edges: int = 4_000_000, hub_frac: float = 0.3,
     the dedup distincts, not the skewed join.
 
     Each measurement best-of-2 interleaved (this host's documented
-    run-to-run variance)."""
-    from pyspark.sql import SparkSession
+    run-to-run variance). The fixture spans every session, so it lives
+    in one temp dir removed on exit."""
+    from pyspark.sql import functions as F
 
     from shacl_dqa_prototype_spark.operators.connected_components import (
         connected_components,
@@ -584,128 +777,149 @@ def _skew_bench(n_edges: int = 4_000_000, hub_frac: float = 0.3,
         salted_docs_per_entity,
     )
 
-    fixture = tempfile.mkdtemp(prefix="bench_skew_")
-    epath = os.path.join(fixture, "edges")
-    cpath = os.path.join(fixture, "cands")
-    hub_pct = int(hub_frac * 100)
+    with tempfile.TemporaryDirectory(prefix="bench_skew_",
+                                     ignore_cleanup_errors=True) as fixture:
+        epath = os.path.join(fixture, "edges")
+        cpath = os.path.join(fixture, "cands")
+        hub_pct = int(hub_frac * 100)
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = get_spark("bench-skew-gen", cores=CPUS)
-    from pyspark.sql import functions as F
+        with _session("skew-gen") as spark:
+            spark.range(n_edges).select(
+                F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < hub_pct,
+                       F.lit("HUB"))
+                .otherwise(F.concat(F.lit("n"), F.pmod(
+                    F.xxhash64("id", F.lit(1)), F.lit(n_nodes)))
+                ).alias("src"),
+                F.concat(F.lit("n"), F.pmod(
+                    F.xxhash64("id", F.lit(2)), F.lit(n_nodes))).alias("dst"),
+            ).write.mode("overwrite").parquet(epath)
+            spark.range(n_edges).select(
+                F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < hub_pct,
+                       F.lit("urn:hub"))
+                .otherwise(F.concat(F.lit("urn:e"), F.pmod(
+                    F.xxhash64("id", F.lit(3)), F.lit(200_000)))
+                ).alias("candidate"),
+                F.pmod(F.xxhash64("id", F.lit(4)), F.lit(500_000)
+                       ).alias("doc_id"),
+            ).write.mode("overwrite").parquet(cpath)
 
-    spark.range(n_edges).select(
-        F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < hub_pct, F.lit("HUB"))
-        .otherwise(F.concat(F.lit("n"), F.pmod(
-            F.xxhash64("id", F.lit(1)), F.lit(n_nodes)))).alias("src"),
-        F.concat(F.lit("n"), F.pmod(
-            F.xxhash64("id", F.lit(2)), F.lit(n_nodes))).alias("dst"),
-    ).write.mode("overwrite").parquet(epath)
-    spark.range(n_edges).select(
-        F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < hub_pct,
-               F.lit("urn:hub"))
-        .otherwise(F.concat(F.lit("urn:e"), F.pmod(
-            F.xxhash64("id", F.lit(3)), F.lit(200_000)))).alias("candidate"),
-        F.pmod(F.xxhash64("id", F.lit(4)), F.lit(500_000)).alias("doc_id"),
-    ).write.mode("overwrite").parquet(cpath)
+            # linking popularity: salted vs naive, interleaved best-of-2
+            cands = spark.read.parquet(cpath)
 
-    # linking popularity: salted vs naive, interleaved best-of-2
-    cands = spark.read.parquet(cpath)
+            def run_salted():
+                salted_docs_per_entity(cands).write.format("noop") \
+                    .mode("overwrite").save()
 
-    def run_salted():
-        salted_docs_per_entity(cands).write.format("noop") \
-            .mode("overwrite").save()
+            def run_naive():
+                cands.groupBy("candidate").agg(
+                    F.count_distinct("doc_id").alias("popularity")
+                ).write.format("noop").mode("overwrite").save()
 
-    def run_naive():
-        cands.groupBy("candidate").agg(
-            F.count_distinct("doc_id").alias("popularity")
-        ).write.format("noop").mode("overwrite").save()
+            t_salt = min(_timed(run_salted), _timed(run_salted))
+            t_naive = min(_timed(run_naive), _timed(run_naive))
 
-    t_salt = min(_timed(run_salted), _timed(run_salted))
-    t_naive = min(_timed(run_naive), _timed(run_naive))
-    spark.stop()
+        res: dict = {
+            "n_edges": n_edges, "hub_fraction": hub_frac, "n_nodes": n_nodes,
+            "popularity_salted_sec": round(t_salt, 2),
+            "popularity_naive_countdistinct_sec": round(t_naive, 2),
+            "popularity_note": (
+                "parity expected: Spark rewrites count_distinct as a "
+                "two-phase aggregate whose first shuffle keys on (candidate, "
+                "doc_id), spreading the hot key like the explicit salt does; "
+                "the salted form keeps the per-reducer bound explicit and "
+                "engine-version-independent"),
+        }
 
-    res: dict = {
-        "n_edges": n_edges, "hub_fraction": hub_frac, "n_nodes": n_nodes,
-        "popularity_salted_sec": round(t_salt, 2),
-        "popularity_naive_countdistinct_sec": round(t_naive, 2),
-        "popularity_note": (
-            "parity expected: Spark rewrites count_distinct as a two-phase "
-            "aggregate whose first shuffle keys on (candidate, doc_id), "
-            "spreading the hot key like the explicit salt does; the salted "
-            "form keeps the per-reducer bound explicit and engine-version-"
-            "independent"),
-    }
+        # isolated skewed-join mechanism: hub partition must EXCEED AQE's
+        # default skewedPartitionThresholdInBytes (256 MB) to be split
+        n_big = 48_000_000
+        with _session("skew-gen2") as spark:
+            big = spark.range(n_big).select(
+                F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < 50,
+                       F.lit("HUB"))
+                .otherwise(F.concat(F.lit("n"), F.pmod(
+                    F.xxhash64("id", F.lit(1)), F.lit(2_000_000)))
+                ).alias("src"),
+                F.concat(F.lit("n"), F.pmod(
+                    F.xxhash64("id", F.lit(2)), F.lit(2_000_000))
+                ).alias("dst"))
+            big.write.mode("overwrite").parquet(os.path.join(fixture, "big"))
+            spark.read.parquet(os.path.join(fixture, "big")).groupBy(
+                "src").agg(F.min("dst").alias("mn")).write.mode(
+                "overwrite").parquet(os.path.join(fixture, "mins"))
 
-    # isolated skewed-join mechanism: hub partition must EXCEED AQE's
-    # default skewedPartitionThresholdInBytes (256 MB) to be split
-    n_big = 48_000_000
-    spark = get_spark("bench-skew-gen2", cores=CPUS)
-    big = spark.range(n_big).select(
-        F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < 50, F.lit("HUB"))
-        .otherwise(F.concat(F.lit("n"), F.pmod(
-            F.xxhash64("id", F.lit(1)), F.lit(2_000_000)))).alias("src"),
-        F.concat(F.lit("n"), F.pmod(
-            F.xxhash64("id", F.lit(2)), F.lit(2_000_000))).alias("dst"))
-    big.write.mode("overwrite").parquet(os.path.join(fixture, "big"))
-    spark.read.parquet(os.path.join(fixture, "big")).groupBy("src").agg(
-        F.min("dst").alias("mn")).write.mode("overwrite").parquet(
-        os.path.join(fixture, "mins"))
-    spark.stop()
+        def star_join_run(skew_on: bool) -> float:
+            with _session(f"skewjoin-{skew_on}", extra_conf={
+                    "spark.sql.autoBroadcastJoinThreshold": "-1",
+                    "spark.sql.adaptive.skewJoin.enabled":
+                        str(skew_on).lower()}) as spark:
+                e = spark.read.parquet(os.path.join(fixture, "big"))
+                mins = spark.read.parquet(os.path.join(fixture, "mins"))
+                t0 = time.time()
+                e.join(mins, "src").select(
+                    F.xxhash64("dst", "mn").alias("h")
+                ).write.format("noop").mode("overwrite").save()
+                return time.time() - t0
 
-    def star_join_run(skew_on: bool) -> float:
-        spark = get_spark(f"bench-skewjoin-{skew_on}", cores=CPUS,
-                          extra_conf={
-                              "spark.sql.autoBroadcastJoinThreshold": "-1",
-                              "spark.sql.adaptive.skewJoin.enabled":
-                                  str(skew_on).lower()})
-        e = spark.read.parquet(os.path.join(fixture, "big"))
-        mins = spark.read.parquet(os.path.join(fixture, "mins"))
-        t0 = time.time()
-        e.join(mins, "src").select(
-            F.xxhash64("dst", "mn").alias("h")
-        ).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        spark.stop()
-        return dt
+        sj = {True: [], False: []}
+        for _ in range(2):
+            for on in (True, False):
+                sj[on].append(star_join_run(on))
+        res["star_join_48m_half_hub"] = {
+            "sec_skewjoin_on": round(min(sj[True]), 2),
+            "sec_skewjoin_off": round(min(sj[False]), 2),
+            "speedup": round(min(sj[False]) / min(sj[True]), 2),
+        }
+        configs = {
+            "mitigated": {},
+            "plain_smj": {"spark.sql.autoBroadcastJoinThreshold": "-1",
+                          "spark.sql.adaptive.skewJoin.enabled": "false"},
+        }
+        times = {k: [] for k in configs}
+        for _ in range(2):  # interleaved: a load spike can't bias one config
+            for label, conf in configs.items():
+                with _session(f"skew-{label}", extra_conf=conf) as spark:
+                    edges = spark.read.parquet(epath)
+                    t0 = time.time()
+                    mapping = connected_components(edges, driver_threshold=0)
+                    n_mapped = mapping.count()
+                    times[label].append(time.time() - t0)
+        for label, ts in times.items():
+            res[f"cc_sec_{label}"] = round(min(ts), 2)
+        res["cc_nodes_mapped"] = n_mapped
+        res["cc_speedup_from_mitigation"] = round(
+            res["cc_sec_plain_smj"] / res["cc_sec_mitigated"], 2)
+        return res
 
-    sj = {True: [], False: []}
-    for _ in range(2):
-        for on in (True, False):
-            sj[on].append(star_join_run(on))
-    res["star_join_48m_half_hub"] = {
-        "sec_skewjoin_on": round(min(sj[True]), 2),
-        "sec_skewjoin_off": round(min(sj[False]), 2),
-        "speedup": round(min(sj[False]) / min(sj[True]), 2),
-    }
-    configs = {
-        "mitigated": {},
-        "plain_smj": {"spark.sql.autoBroadcastJoinThreshold": "-1",
-                      "spark.sql.adaptive.skewJoin.enabled": "false"},
-    }
-    times = {k: [] for k in configs}
-    for _ in range(2):  # interleaved: a load spike can't bias one config
-        for label, conf in configs.items():
-            spark = get_spark(f"bench-skew-{label}", cores=CPUS,
-                              extra_conf=conf)
-            edges = spark.read.parquet(epath)
-            t0 = time.time()
-            mapping = connected_components(edges, driver_threshold=0)
-            n_mapped = mapping.count()
-            times[label].append(time.time() - t0)
-            spark.stop()
-    for label, ts in times.items():
-        res[f"cc_sec_{label}"] = round(min(ts), 2)
-    res["cc_nodes_mapped"] = n_mapped
-    res["cc_speedup_from_mitigation"] = round(
-        res["cc_sec_plain_smj"] / res["cc_sec_mitigated"], 2)
-    shutil.rmtree(fixture, ignore_errors=True)
-    return res
+
+# flag → (JSON key, mode), in run order
+MODES = {
+    "--dqa-throughput": ("dqa_throughput", _dqa_throughput),
+    "--streaming": ("streaming_dqa", _streaming),
+    "--novelty-stream": ("novelty_stream", _novelty_stream),
+    "--curate": ("curate", _curate),
+    "--incremental": ("incremental", _incremental),
+    "--weak-scaling": ("weak_scaling", _weak_scaling),
+    "--ann-recall": ("ann_recall", _ann_recall),
+    "--skew": ("skew", _skew_bench),
+    "--scaling": ("scaling", _scaling),
+}
 
 
 def main() -> None:
-    do_scaling = "--scaling" in sys.argv
+    # The scaling/throughput modes run an 8M-doc (~29M-triple) end-to-end
+    # job; at the library's 8g default heap that job is memory-MARGINAL —
+    # depending on task scheduling it either GC-thrashes (one 2026-08-20
+    # run measured the hi config 26% slow purely from eviction pressure)
+    # or dies outright (java.lang.OutOfMemoryError, log retained in
+    # bench_r5_scaling9b.json). An OOM-thrashing JVM measures the
+    # collector, not the engine, so the big modes get a corpus-sized heap.
+    # Must be decided BEFORE the first session: local-mode pyspark
+    # launches ONE JVM per python process, and later spark.driver.memory
+    # configs are silently ignored.
+    if any(m in sys.argv for m in ("--scaling", "--weak-scaling",
+                                   "--dqa-throughput")):
+        os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
 
     # The triple store is PERSISTENT across bench runs: a real deployment
@@ -722,24 +936,17 @@ def main() -> None:
                      "bench_logs", "store_cache"))
     store_cached = os.path.exists(os.path.join(
         entrymod._triple_store_path(store_base, SF_DIR), "_SUCCESS"))
-    spark = get_spark("bench", cores=CPUS)
-    times, samples, setup = _run_queries(spark)
+    with _session("queries") as spark:
+        times, samples, setup = _run_queries(spark)
     # headline value = one-time setup + the suite at its per-query
     # medians (NOT raw wall across all interleaved passes — that would
     # triple-count every query)
     total = round(setup + sum(times.values()), 3)
-    spark.stop()
 
     # Construction throughput on a pre-materialized corpus.
     n_docs = int(100000 * max(sf / 0.1, 0.05))
-    corpus_dir, cfg = _materialize_corpus(n_docs)
-    c_sec, n_triples = _construction_run(CPUS, corpus_dir, cfg)
-    construction = {
-        "n_docs": n_docs,
-        "n_triples": n_triples,
-        "sec": round(c_sec, 2),
-        "triples_per_sec": round(n_triples / c_sec, 1),
-    }
+    with _corpus(n_docs) as corpus:
+        c = _construction_run(CPUS, corpus)
 
     out = {
         "metric": "headline suite wall time (setup + per-query medians, "
@@ -747,404 +954,25 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": times,
+        # the floor attributable to the engine, beside the median
+        "query_min": {n: min(v) for n, v in samples.items()},
         "query_samples": samples,
         "setup_sec": setup,
         "store_cached": store_cached,
         "sf": sf,
-        "construction": construction,
+        "construction": {
+            "n_docs": n_docs,
+            "n_triples": c["n_triples"],
+            "sec": round(c["sec"], 2),
+            "triples_per_sec": round(c["n_triples"] / c["sec"], 1),
+        },
         "fingerprint_longdoc": _fingerprint_micro(),
     }
-
-    if "--dqa-throughput" in sys.argv:
-        # Assessment-only throughput on a large KG — the number directly
-        # comparable to the reference's ≈3 h drugbank DQA run: construct
-        # once (untimed fixture), then time ONLY profile + compiled
-        # constraint evaluation + scoring + report write.
-        n_dq = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", 8_000_000))
-        dq_corpus, dq_cfg = _materialize_corpus(n_dq)
-        from pyspark.sql import SparkSession
-
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.stop()
-        spark = get_spark(f"bench-dqa-{CPUS}", cores=CPUS)
-        docs = spark.read.parquet(
-            os.path.join(dq_corpus, "documents.parquet"))
-        wd = tempfile.mkdtemp(prefix="bench_dqa_")
-        res = run_construction(spark, docs, entity_dictionary(spark, dq_cfg),
-                               wd, n_buckets=32)
-        n_t = spark.read.parquet(os.path.join(wd, "triples.parquet")).count()
-        t0 = time.time()
-        _run_dqa(spark, res.triples_path, os.path.join(wd, "report"))
-        dq_sec = time.time() - t0
-        out["dqa_throughput"] = {
-            "cores": CPUS,
-            "n_triples": n_t,
-            "sec": round(dq_sec, 2),
-            "triples_per_sec": round(n_t / dq_sec, 1),
-        }
-        spark.stop()
-        shutil.rmtree(wd, ignore_errors=True)
-        shutil.rmtree(dq_corpus, ignore_errors=True)
-
-    if "--streaming" in sys.argv:
-        # Streaming-DQA drain rate: the constructed triple table arrives
-        # as a file stream (16 files per microbatch) and is folded into
-        # incremental state epoch by epoch; the timed section is the full
-        # drain, so the rate includes every state-level append, the
-        # compactions and the monotone-violation appends.
-        n_sd = int(os.environ.get("SPARK_GRAFT_STREAM_DOCS", 200_000))
-        sd_corpus, sd_cfg = _materialize_corpus(n_sd)
-        from pyspark.sql import SparkSession
-
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.stop()
-        spark = get_spark(f"bench-stream-{CPUS}", cores=CPUS)
-        docs = spark.read.parquet(
-            os.path.join(sd_corpus, "documents.parquet"))
-        wd = tempfile.mkdtemp(prefix="bench_stream_")
-        res = run_construction(spark, docs, entity_dictionary(spark, sd_cfg),
-                               wd, n_buckets=32)
-        n_t = spark.read.parquet(os.path.join(wd, "triples.parquet")).count()
-        from shacl_dqa_prototype_spark.plans.incremental import (
-            IncrementalDQAState,
-        )
-        from shacl_dqa_prototype_spark.streaming.ingest import (
-            start_streaming_dqa,
-        )
-
-        vocab, dqa_cfg = _datagen_vocab_cfg()
-        state = IncrementalDQAState.open(spark, os.path.join(wd, "state"))
-        t0 = time.time()
-        start_streaming_dqa(
-            spark, os.path.join(wd, "triples.parquet"), state, dqa_cfg,
-            vocab, checkpoint_dir=os.path.join(wd, "ckpt"), n_buckets=32,
-            max_files_per_trigger=4,
-        ).awaitTermination()
-        sd_sec = time.time() - t0
-        n_epochs = len(state.ps_counts.snapshots())
-
-        # Vacuum hygiene (r4 verdict item 7): a many-epoch drain grows
-        # every state table's dir chain + commit log; measure the state
-        # dir before/after the periodic compact+expire maintenance, and
-        # prove the vacuum is contents-preserving.
-        def _dir_stats(root):
-            n_files = n_bytes = 0
-            for dp, _, fns in os.walk(root):
-                for fn in fns:
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(dp, fn))
-            return n_files, n_bytes
-
-        state_dir = os.path.join(wd, "state")
-        rows_before = {n: t.read().count()
-                       for n, t in state.tables().items()}
-        files_b, bytes_b = _dir_stats(state_dir)
-        t0 = time.time()
-        state.vacuum()
-        vac_sec = time.time() - t0
-        files_a, bytes_a = _dir_stats(state_dir)
-        rows_after = {n: t.read().count()
-                      for n, t in state.tables().items()}
-        assert rows_after == rows_before, (rows_before, rows_after)
-        out["streaming_dqa"] = {
-            "cores": CPUS,
-            "n_triples": n_t,
-            "epochs": n_epochs,
-            "sec": round(sd_sec, 2),
-            "triples_per_sec": round(n_t / sd_sec, 1),
-            "vacuum": {
-                "sec": round(vac_sec, 2),
-                "state_files_before": files_b,
-                "state_files_after": files_a,
-                "state_mb_before": round(bytes_b / 1e6, 1),
-                "state_mb_after": round(bytes_a / 1e6, 1),
-                "snapshots_per_table_before": n_epochs,
-                "snapshots_per_table_after": len(
-                    state.ps_counts.snapshots()),
-                "rows_preserved": True,
-            },
-        }
-        spark.stop()
-        shutil.rmtree(wd, ignore_errors=True)
-        shutil.rmtree(sd_corpus, ignore_errors=True)
-
-    if "--novelty-stream" in sys.argv:
-        # Novelty-at-ingest drain rate: a flat corpus arrives as K
-        # id-ordered epoch files; every batch is scored against the
-        # accumulated bucket-pruned n-gram index and folded in. The timed
-        # section is the full drain (all index reads + both snapshot
-        # commits per epoch); the result set is then asserted EQUAL to
-        # batch ngram_novelty over the same corpus — throughput with the
-        # correctness proof attached, not instead of it.
-        n_nv = int(os.environ.get("SPARK_GRAFT_NOVELTY_DOCS", 200_000))
-        n_epochs_nv = int(os.environ.get("SPARK_GRAFT_NOVELTY_EPOCHS", 8))
-        nv_corpus = _materialize_flat_corpus(n_nv)
-        from pyspark.sql import SparkSession
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        from shacl_dqa_prototype_spark.operators.dedup import ngram_novelty
-        from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
-        from shacl_dqa_prototype_spark.streaming.ingest import (
-            start_streaming_novelty,
-            write_ordered_epochs,
-        )
-
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.stop()
-        spark = get_spark(f"bench-novelty-{CPUS}", cores=CPUS)
-        docs = spark.read.parquet(
-            os.path.join(nv_corpus, "documents.parquet")
-        ).select("doc_id", "text")
-        wd = tempfile.mkdtemp(prefix="bench_novelty_")
-        in_dir = os.path.join(wd, "in")
-        # datagen ids are zero-padded strings (doc_000000042): their
-        # lexicographic order IS the numeric order, so id-ordered epochs
-        # split on the extracted numeric suffix and min(doc_id) agrees
-        # between the stream and the batch operator
-        per = (n_nv + n_epochs_nv - 1) // n_epochs_nv
-        num = F.regexp_extract("doc_id", r"(\d+)$", 1).cast("long")
-        write_ordered_epochs(
-            [docs.filter((num >= i * per) & (num < (i + 1) * per))
-             for i in range(n_epochs_nv)], in_dir)
-        idx = SnapshotTable(spark, os.path.join(wd, "idx"), StructType([
-            StructField("ng", LongType(), True),
-            StructField("first_doc", StringType(), True)]))
-        res_t = SnapshotTable(spark, os.path.join(wd, "res"), StructType([
-            StructField("doc_id", StringType(), True),
-            StructField("n_distinct", LongType(), False),
-            StructField("novel", LongType(), False),
-            StructField("novel_frac", DoubleType(), False)]))
-        t0 = time.time()
-        start_streaming_novelty(
-            spark, in_dir + "/*", idx, res_t,
-            os.path.join(wd, "ckpt"), n=8, schema=docs.schema,
-            max_files_per_trigger=1, n_buckets=32,
-        ).awaitTermination()
-        nv_sec = time.time() - t0
-        got = res_t.read().distinct()
-        exp = ngram_novelty(docs, n=8)
-        mismatches = got.unionByName(exp).groupBy(
-            "doc_id", "n_distinct", "novel", "novel_frac"
-        ).count().filter("count <> 2").count()
-        out["novelty_stream"] = {
-            "cores": CPUS,
-            "n_docs": n_nv,
-            "epochs": n_epochs_nv,
-            "sec": round(nv_sec, 2),
-            "docs_per_sec": round(n_nv / nv_sec, 1),
-            "index_ngrams": idx.read().count(),
-            "matches_batch": mismatches == 0,
-        }
-        assert mismatches == 0, f"{mismatches} rows differ from batch"
-        spark.stop()
-        shutil.rmtree(wd, ignore_errors=True)
-        shutil.rmtree(nv_corpus, ignore_errors=True)
-
-    if "--curate" in sys.argv:
-        # End-to-end curation throughput: documents parquet → quality gate
-        # → source filter → LSH keep-best near-dedup → PII redaction →
-        # curated parquet (the main.py curate job, xxhash64 fast path).
-        # The corpus write is fixture prep; the timed section is the whole
-        # pipeline including the output write.
-        n_cu = int(os.environ.get("SPARK_GRAFT_CURATE_DOCS", 2_000_000))
-        cu_corpus = _materialize_flat_corpus(n_cu)
-        from pyspark.sql import SparkSession
-
-        from shacl_dqa_prototype_spark.plans.curate import curate_corpus
-
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.stop()
-        spark = get_spark(f"bench-curate-{CPUS}", cores=CPUS)
-        docs = spark.read.parquet(
-            os.path.join(cu_corpus, "documents.parquet"))
-        out_dir = tempfile.mkdtemp(prefix="bench_curated_")
-        t0 = time.time()
-        res = curate_corpus(docs, collect_stats=False)
-        res.survivors.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "curated.parquet"))
-        cu_sec = time.time() - t0
-        n_out = spark.read.parquet(
-            os.path.join(out_dir, "curated.parquet")).count()
-        res.unpersist()
-        out["curate"] = {
-            "cores": CPUS,
-            "n_docs_in": n_cu,
-            "n_docs_out": n_out,
-            "sec": round(cu_sec, 2),
-            "docs_per_sec": round(n_cu / cu_sec, 1),
-        }
-        spark.stop()
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(cu_corpus, ignore_errors=True)
-
-    if "--incremental" in sys.argv:
-        # Incremental-state cost curve: fold K fixed-size triple deltas
-        # into a GROWING DQA state and report seconds per delta vs state
-        # size — the evidence for the O(delta) fold claim (plans/
-        # incremental.py: each fold appends one level per state table;
-        # reads merge base ∪ levels, and a table past 16 dirs is
-        # compacted). A flat curve = cost tracks the delta, not the
-        # accumulated state.
-        n_in = int(os.environ.get("SPARK_GRAFT_INC_DOCS", 1_000_000))
-        k_deltas = int(os.environ.get("SPARK_GRAFT_INC_DELTAS", 10))
-        in_corpus, in_cfg = _materialize_corpus(n_in)
-        from pyspark.sql import SparkSession
-        from pyspark.sql import functions as F
-
-        from shacl_dqa_prototype_spark.plans.incremental import (
-            IncrementalDQAState,
-            apply_delta,
-        )
-        from shacl_dqa_prototype_spark.sources.sinks import read_triples
-
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.stop()
-        spark = get_spark(f"bench-inc-{CPUS}", cores=CPUS)
-        docs = spark.read.parquet(
-            os.path.join(in_corpus, "documents.parquet"))
-        wd = tempfile.mkdtemp(prefix="bench_inc_")
-        run_construction(spark, docs, entity_dictionary(spark, in_cfg),
-                         wd, n_buckets=32)
-        T = read_triples(spark, os.path.join(wd, "triples.parquet"))
-        n_t = T.count()
-        vocab, dqa_cfg = _datagen_vocab_cfg()
-        state = IncrementalDQAState.open(spark, os.path.join(wd, "state"))
-        slot = F.pmod(F.xxhash64("s", "p", "o"), F.lit(k_deltas))
-        per_delta = []
-        cum = 0
-        for i in range(k_deltas):
-            delta = T.filter(slot == i)
-            n_d = delta.count()  # fixture accounting, outside the timer
-            t0 = time.time()
-            apply_delta(state, delta, dqa_cfg, vocab, n_buckets=32,
-                        delta_id=f"bench-{i}")
-            dt = time.time() - t0
-            cum += n_d
-            per_delta.append({
-                "delta": i, "delta_triples": n_d,
-                "state_triples_after": cum, "sec": round(dt, 2),
-            })
-        first, last = per_delta[0]["sec"], per_delta[-1]["sec"]
-        out["incremental"] = {
-            "cores": CPUS,
-            "n_triples_total": n_t,
-            "k_deltas": k_deltas,
-            "per_delta": per_delta,
-            "sec_first_delta": first,
-            "sec_last_delta": last,
-            # <1 means the final delta (vs a k×-larger state) costs no
-            # more than the first — the O(delta) evidence
-            "last_over_first": round(last / first, 3),
-        }
-        spark.stop()
-        shutil.rmtree(wd, ignore_errors=True)
-        shutil.rmtree(in_corpus, ignore_errors=True)
-
-    if "--weak-scaling" in sys.argv:
-        # Weak scaling: 4x cores on 4x corpus — the regime that matches
-        # the 100 TB design goal (you add executors BECAUSE data grew;
-        # the job count stays constant while per-stage data scales, so
-        # the fixed driver/job overhead that bounds strong scaling on a
-        # FIXED input amortizes away). Same isolated per-config JVMs
-        # with cluster-proportional resources as --scaling.
-        method = os.environ.get("SPARK_GRAFT_SCALING_METHOD", "shared")
-        n_lo = int(os.environ.get("SPARK_GRAFT_WEAK_DOCS_LO", 2_000_000))
-        n_hi = n_lo * 4  # 4x docs for 4x parallelism
-        lo_dir, _ = _materialize_corpus(n_lo)
-        hi_dir, _ = _materialize_corpus(n_hi)
-        w_hi1 = _scaling_sample(method, "hi", hi_dir, n_hi)
-        w_lo1 = _scaling_sample(method, "lo", lo_dir, n_lo)
-        w_hi2 = _scaling_sample(method, "hi", hi_dir, n_hi)
-        w_lo2 = _scaling_sample(method, "lo", lo_dir, n_lo)
-        t_hi = min(w_hi1["sec"], w_hi2["sec"])
-        t_lo = min(w_lo1["sec"], w_lo2["sec"])
-        out["weak_scaling"] = {
-            "mode": ("weak end-to-end (construct+DQA): 4x docs on 4x "
-                     "parallelism, hi/lo interleaved, best per config"),
-            "method": method,
-            "lo": {"docs": n_lo,
-                   "triples": w_lo1["n_triples"],
-                   "sec_runs": [round(w_lo1["sec"], 2),
-                                round(w_lo2["sec"], 2)],
-                   "phases": [w_lo1["phases"], w_lo2["phases"]]},
-            "hi": {"docs": n_hi,
-                   "triples": w_hi1["n_triples"],
-                   "sec_runs": [round(w_hi1["sec"], 2),
-                                round(w_hi2["sec"], 2)],
-                   "phases": [w_hi1["phases"], w_hi2["phases"]]},
-            "efficiency_wall": round(t_lo / t_hi, 3),
-        }
-        shutil.rmtree(lo_dir, ignore_errors=True)
-        shutil.rmtree(hi_dir, ignore_errors=True)
-
-    if "--ann-recall" in sys.argv:
-        out["ann_recall"] = _ann_recall()
-
-    if "--skew" in sys.argv:
-        out["skew"] = _skew_bench()
-
-    if do_scaling:
-        # N→4N scaling evidence (BASELINE.json north_rule), sandbox
-        # proxy: the SAME end-to-end job (construct + full DQA +
-        # report) on the SAME input at two parallelism levels,
-        # efficiency = (t_lo / t_hi) / 4. The default method ("shared")
-        # is the prescribed proxy — local[2] vs local[8] task threads,
-        # sequential in one JIT-warm JVM; 2 vs 8 rather than 8 vs 32
-        # because this host is shared (external tenants push loadavg to
-        # 10-18, so wider configs measure the neighbors, not the
-        # engine). SPARK_GRAFT_SCALING_METHOD selects the stricter
-        # per-config-isolated-JVM variant or the real-multi-executor
-        # local-cluster variant; all three are documented with their
-        # measured trade-offs in _scaling_sample. The corpus is 8M docs
-        # (~29M triples) so compute dominates fixed per-stage overhead;
-        # hi/lo/hi/lo interleave, best per config, so host-noise spikes
-        # can't bias the efficiency either way. Takes ~45 min.
-        method = os.environ.get("SPARK_GRAFT_SCALING_METHOD", "shared")
-        n_sc = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", 8_000_000))
-        sc_dir, sc_cfg = _materialize_corpus(n_sc)
-        hi1 = _scaling_sample(method, "hi", sc_dir, n_sc)
-        lo1 = _scaling_sample(method, "lo", sc_dir, n_sc)
-        hi2 = _scaling_sample(method, "hi", sc_dir, n_sc)
-        lo2 = _scaling_sample(method, "lo", sc_dir, n_sc)
-        sc_n = hi1["n_triples"]
-        hi_best = min(hi1["sec"], hi2["sec"])
-        lo_best = min(lo1["sec"], lo2["sec"])
-        out["scaling"] = {
-            "mode": ("strong end-to-end (construct+DQA), same input, "
-                     "N vs 4N parallelism, hi/lo interleaved x2, best "
-                     "per config"),
-            "method": method,
-            "docs": n_sc,
-            "sec_lo": round(lo_best, 2),
-            "sec_hi": round(hi_best, 2),
-            "triples_per_sec_lo": round(sc_n / lo_best, 1),
-            "triples_per_sec_hi": round(sc_n / hi_best, 1),
-            "efficiency": round((lo_best / hi_best) / 4, 3),
-            "samples_hi": [round(hi1["sec"], 2), round(hi2["sec"], 2)],
-            "samples_lo": [round(lo1["sec"], 2), round(lo2["sec"], 2)],
-            "phases_hi": [hi1["phases"], hi2["phases"]],
-            "phases_lo": [lo1["phases"], lo2["phases"]],
-        }
-        shutil.rmtree(sc_dir, ignore_errors=True)
-
-    shutil.rmtree(corpus_dir, ignore_errors=True)
+    for flag, (key, mode) in MODES.items():
+        if flag in sys.argv:
+            out[key] = mode()
     print(json.dumps(out))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--_construction-child":
-        _construction_child()
-    else:
-        main()
+    main()

@@ -69,6 +69,7 @@ re-running the same delta (same scheme as the streaming sink's
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import partial, reduce
 
@@ -242,7 +243,6 @@ def apply_delta(
     vocab_terms: list[VocabTerm],
     n_buckets: int = 32,
     delta_id: str | None = None,
-    parallelism: int = 4,
 ) -> None:
     """Fold one appended triple batch into the DQA state.
 
@@ -259,11 +259,11 @@ def apply_delta(
 
     The seven table folds are mutually INDEPENDENT (disjoint state dirs
     and logs, all reading the one persisted delta), so they are submitted
-    from a thread pool (``parallelism``; Spark schedules concurrent jobs
+    from a four-worker thread pool (Spark schedules concurrent jobs
     fine) — the per-delta floor is the SLOWEST table's write, not the SUM
     of seven driver-synchronized round trips. The delta is materialized
     once before forking so concurrent jobs never race to compute the same
-    cached partitions. Pass ``parallelism=1`` to fold sequentially.
+    cached partitions.
 
     Pass ``delta_id`` (any stable string — a snapshot id, an epoch) to
     make the apply IDEMPOTENT: every table commit records it, and a retry
@@ -319,20 +319,14 @@ def apply_delta(
         # materialize the shared input ONCE so concurrent folds read the
         # cache instead of racing to compute the same partitions
         delta.count()
-        if parallelism > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=parallelism) as ex:
-                futures = [ex.submit(f) for f in folds]
-                # surface the FIRST failure but let every fold finish —
-                # partial commits are healed by the delta_id retry path
-                errs = [f.exception() for f in futures]
-            for e in errs:
-                if e is not None:
-                    raise e
-        else:
-            for f in folds:
-                f()
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            futures = [ex.submit(f) for f in folds]
+            # surface the FIRST failure but let every fold finish —
+            # partial commits are healed by the delta_id retry path
+            errs = [f.exception() for f in futures]
+        for e in errs:
+            if e is not None:
+                raise e
     finally:
         delta.unpersist()
 

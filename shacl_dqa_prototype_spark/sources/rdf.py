@@ -10,7 +10,7 @@ Three formats, matching the reference's ingest surface
   labelled + anonymous blank nodes `[ … ]`, collections `( … )`, short
   and long (triple-quoted) literals in both quote styles with
   @lang / ^^datatype, bare integers/decimals/doubles/booleans):
-  `read_turtle` parses driver-side (fixtures, VoID metadata);
+  `parse_turtle` parses driver-side (fixtures, VoID metadata);
   `read_turtle_distributed` chunks a multi-GB dump into statement-aligned
   byte ranges and parses every chunk in parallel (r5 — closes the one
   reference ingest surface we bounced: a drugbank-size `.ttl` data graph).
@@ -18,7 +18,7 @@ Three formats, matching the reference's ingest surface
   raises ValueError, so unsupported syntax is loud, never silently
   dropped. The one distributed-path restriction is multi-line (long)
   literals — raw newlines inside a token break statement-aligned
-  chunking, so those files are refused with a pointer at `read_turtle`,
+  chunking, so those files are refused with a pointer at `parse_turtle`,
   which does support them.
 * RDF/XML    — driver-side reader for OWL vocabularies (A2). Handles typed
   node elements, rdf:about/resource/ID/nodeID, nested property elements,
@@ -425,12 +425,6 @@ def parse_turtle(text: str, bnode_seed: str = "") -> list[tuple]:
     return rows
 
 
-def read_turtle(spark: SparkSession, path: str) -> DataFrame:
-    with open(path, encoding="utf-8") as f:
-        rows = parse_turtle(f.read())
-    return spark.createDataFrame(rows, TRIPLES_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Turtle (distributed) — byte-range chunking over the same grammar subset
 # ---------------------------------------------------------------------------
@@ -706,7 +700,7 @@ def read_turtle_distributed(
     mapInPandas. ``path`` may be a single ``.ttl`` file or a directory of
     them (e.g. a sharded export); hidden/_-prefixed members are skipped.
 
-    Equivalent to ``read_turtle`` on the supported subset (pytest asserts
+    Equivalent to ``parse_turtle`` on the supported subset (pytest asserts
     set-equality against the driver parser on a multi-MB generated dump,
     chunked small enough to exercise every alignment path)."""
     import os
@@ -772,7 +766,7 @@ def read_turtle_distributed(
                     raise ValueError(
                         "triple-quoted (multi-line) Turtle literals break "
                         "statement-aligned chunking and are not supported "
-                        "by the distributed reader; use read_turtle "
+                        "by the distributed reader; use parse_turtle "
                         "(driver-side, supports them) or convert to "
                         "N-Triples")
                 text = _read_chunk_statements(r.file, r.start, r.end)
@@ -794,7 +788,7 @@ def read_turtle_distributed(
                             raise ValueError(
                                 f"declaration {d.strip()!r} falls outside "
                                 "the header scan window; raise "
-                                "header_scan_bytes or use read_turtle")
+                                "header_scan_bytes or use parse_turtle")
                 # any other declaration is mid-file — it would bind in its
                 # owning chunk but not in later ones (and an identical-text
                 # relative @base redeclaration compounds in the driver
@@ -805,7 +799,7 @@ def read_turtle_distributed(
                         f"@prefix/@base outside the file's leading "
                         f"declaration block ({m.group(0).strip()!r}) is "
                         "not supported by the distributed reader; use "
-                        "read_turtle or move declarations to the header")
+                        "parse_turtle or move declarations to the header")
                 rows = parse_turtle(r.header + "\n" + text,
                                     bnode_seed=str(r.idx))
                 if rows:
