@@ -25,7 +25,7 @@ fingerprint kernel micro-benchmark. Each flag adds one block:
                     evidence)
   --weak-scaling    4× docs on 4× parallelism, end to end
   --ann-recall      recall@10 and scan fraction of the two ANN operators
-  --skew            skew mitigation (salting, AQE skew joins) measured
+  --skew            skew mitigation (AQE skew joins) measured
   --scaling         N→4N strong scaling of the end-to-end job, same input
                     (BASELINE.json north_rule; see BASELINE.md)
 
@@ -742,19 +742,14 @@ def _ann_recall(n_vecs: int = 100_000, dim: int = 64,
 
 def _skew_bench(n_edges: int = 4_000_000, hub_frac: float = 0.3,
                 n_nodes: int = 1_000_000) -> dict:
-    """Skew evidence (r4 verdict item 6): the salting/AQE design for the
-    graph + linking paths, MEASURED instead of asserted. Two comparisons
-    on one hub-heavy fixture (one node on ``hub_frac`` of all edges):
-
-    * connected_components (distributed large-star/small-star forced via
-      driver_threshold=0) under the engine's default config (broadcast
-      joins + AQE skew-join splits) vs a forced plain sort-merge-join
-      config (autoBroadcastJoinThreshold=-1, skewJoin off) — the star
-      rounds join the full edge set on ``src``, where the hub key lands
-      in one reducer without mitigation;
-    * salted_docs_per_entity (two-phase salted distinct count,
-      operators/link.py E4) vs the naive countDistinct aggregate on a
-      30%-hot candidate key.
+    """Skew evidence (r4 verdict item 6): the AQE design for the graph
+    path, MEASURED instead of asserted. connected_components (distributed
+    large-star/small-star forced via driver_threshold=0) on a hub-heavy
+    fixture (one node on ``hub_frac`` of all edges) under the engine's
+    default config (broadcast joins + AQE skew-join splits) vs a forced
+    plain sort-merge-join config (autoBroadcastJoinThreshold=-1, skewJoin
+    off) — the star rounds join the full edge set on ``src``, where the
+    hub key lands in one reducer without mitigation.
 
     Plus the ISOLATED mechanism measurement: the large-star shape's
     ``edges ⋈ per-src-mins`` join on a 48M-row fixture whose hub
@@ -773,14 +768,10 @@ def _skew_bench(n_edges: int = 4_000_000, hub_frac: float = 0.3,
     from shacl_dqa_prototype_spark.operators.connected_components import (
         connected_components,
     )
-    from shacl_dqa_prototype_spark.operators.link import (
-        salted_docs_per_entity,
-    )
 
     with tempfile.TemporaryDirectory(prefix="bench_skew_",
                                      ignore_cleanup_errors=True) as fixture:
         epath = os.path.join(fixture, "edges")
-        cpath = os.path.join(fixture, "cands")
         hub_pct = int(hub_frac * 100)
 
         with _session("skew-gen") as spark:
@@ -793,41 +784,9 @@ def _skew_bench(n_edges: int = 4_000_000, hub_frac: float = 0.3,
                 F.concat(F.lit("n"), F.pmod(
                     F.xxhash64("id", F.lit(2)), F.lit(n_nodes))).alias("dst"),
             ).write.mode("overwrite").parquet(epath)
-            spark.range(n_edges).select(
-                F.when(F.pmod(F.xxhash64("id"), F.lit(100)) < hub_pct,
-                       F.lit("urn:hub"))
-                .otherwise(F.concat(F.lit("urn:e"), F.pmod(
-                    F.xxhash64("id", F.lit(3)), F.lit(200_000)))
-                ).alias("candidate"),
-                F.pmod(F.xxhash64("id", F.lit(4)), F.lit(500_000)
-                       ).alias("doc_id"),
-            ).write.mode("overwrite").parquet(cpath)
-
-            # linking popularity: salted vs naive, interleaved best-of-2
-            cands = spark.read.parquet(cpath)
-
-            def run_salted():
-                salted_docs_per_entity(cands).write.format("noop") \
-                    .mode("overwrite").save()
-
-            def run_naive():
-                cands.groupBy("candidate").agg(
-                    F.count_distinct("doc_id").alias("popularity")
-                ).write.format("noop").mode("overwrite").save()
-
-            t_salt = min(_timed(run_salted), _timed(run_salted))
-            t_naive = min(_timed(run_naive), _timed(run_naive))
 
         res: dict = {
             "n_edges": n_edges, "hub_fraction": hub_frac, "n_nodes": n_nodes,
-            "popularity_salted_sec": round(t_salt, 2),
-            "popularity_naive_countdistinct_sec": round(t_naive, 2),
-            "popularity_note": (
-                "parity expected: Spark rewrites count_distinct as a "
-                "two-phase aggregate whose first shuffle keys on (candidate, "
-                "doc_id), spreading the hot key like the explicit salt does; "
-                "the salted form keeps the per-reducer bound explicit and "
-                "engine-version-independent"),
         }
 
         # isolated skewed-join mechanism: hub partition must EXCEED AQE's

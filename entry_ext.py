@@ -574,13 +574,15 @@ def ext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_cluster_exact"] = dedup_cluster
 
     # --- Structured Streaming ingest: drain-the-backlog extraction over the
-    # same interleaved docs; availableNow makes it deterministic, so it
-    # shares the kg_extract_mentions oracle.
+    # same interleaved docs into a snapshot table; availableNow makes it
+    # deterministic, so it shares the kg_extract_mentions oracle.
     def streaming_extract(spark, sf_dir):
         import tempfile
 
+        from shacl_dqa_prototype_spark.schemas import MENTIONS_SCHEMA
+        from shacl_dqa_prototype_spark.sources.snapshots import SnapshotTable
         from shacl_dqa_prototype_spark.streaming.ingest import (
-            start_incremental_extraction,
+            start_incremental_extraction_snapshots,
         )
 
         # the interleaved input is derived, so it must be materialized once —
@@ -591,11 +593,11 @@ def ext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _interleaved(spark, sf_dir).write.mode("overwrite").parquet(d)
             _STREAM_DIR_CACHE[in_key] = d
         base = tempfile.mkdtemp(prefix="stream_")
-        qy = start_incremental_extraction(
-            spark, _STREAM_DIR_CACHE[in_key], base + "/out", base + "/ckpt",
-            available_now=True)
-        qy.awaitTermination()
-        return spark.read.parquet(base + "/out").select(
+        table = SnapshotTable(spark, base + "/tbl", MENTIONS_SCHEMA)
+        start_incremental_extraction_snapshots(
+            spark, _STREAM_DIR_CACHE[in_key], table, base + "/ckpt",
+        ).awaitTermination()
+        return table.read().select(
             F.col("doc_id").cast("long").alias("doc_id"),
             "subj_surface", "pred", "obj_surface")
     q["kg_streaming_extract"] = streaming_extract

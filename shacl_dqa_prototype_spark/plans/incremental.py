@@ -32,7 +32,8 @@ delta into empty state". This module keeps that state on disk:
 
 2. Row tier — row_violations of each delta are FINAL (no later triple can
    create or retract them), so they are commit_append-ed to a violations
-   log (mono_violations) — zero state, zero rewrite.
+   log (mono_violations) — zero state, no merge rule; past 16 dirs the
+   log is compacted like the state tables, rewritten as it is.
 
 Both tiers take their property lists from the same term selection as
 batch, with nothing pruned by usage (_state_terms): a property or class
@@ -62,8 +63,8 @@ State lives in SnapshotTables, so DQA state itself is atomic, resumable,
 and time-travelable. apply_delta is IDEMPOTENT per delta_id: every table
 commit records the delta id, and a retried apply skips tables whose log
 already carries it — a crash between the seven commits is healed by
-re-running the same delta (same scheme as the streaming sink's
-(run, epoch) key in streaming/ingest.py).
+re-running the same delta (SnapshotTable.has_delta; the streams in
+streaming/ingest.py key each epoch the same way).
 """
 
 from __future__ import annotations
@@ -215,14 +216,10 @@ class IncrementalDQAState:
         ``delta_id`` log records, so before expiring them the compaction
         commit carries every applied id forward as
         ``applied_delta_ids`` (Iceberg's snapshot-summary-properties
-        analog) and _already() consults both."""
+        analog) and SnapshotTable.has_delta consults both."""
         deleted: dict[str, int] = {}
         for name, t in self.tables().items():
-            seen: set[str] = set()
-            for s in t.snapshots():
-                if s.get("delta_id"):
-                    seen.add(s["delta_id"])
-                seen.update(s.get("applied_delta_ids") or [])
+            seen = t.delta_ids()
             # force the fold whenever history will be dropped — the tip
             # record must carry the full applied-id set before expire
             # removes the per-delta records
@@ -253,7 +250,8 @@ def apply_delta(
     snapshot then holds more than 16 dirs is compacted into one base
     (IncrementalDQAState.compact); a compaction that loses a race to
     another commit is left to a later fold. The row-tier violations of
-    the delta are appended to the violations log. A table
+    the delta are appended to the violations log, which is compacted
+    the same way (without a merge rule). A table
     state_aggregates leaves out (its term list is empty) is not folded.
     Historical triples are never re-read.
 
@@ -274,36 +272,19 @@ def apply_delta(
     (time travel / rollback); call expire_snapshots to vacuum."""
     extra = {"delta_id": delta_id} if delta_id is not None else None
 
-    def _already(table: SnapshotTable) -> bool:
-        # per-delta records, plus the applied-id sets a vacuum compaction
-        # carries forward when it expires those records
-        return delta_id is not None and any(
-            s.get("delta_id") == delta_id
-            or delta_id in (s.get("applied_delta_ids") or ())
-            for s in table.snapshots())
-
-    def _fold(name: str, agg: DataFrame) -> None:
+    def _fold(name: str, rows: DataFrame) -> None:
         table = getattr(state, name)
-        if _already(table):
-            return
-        # the first fold writes the bucketed base: compaction keeps the
-        # base's layout
-        base = table.current() is None
+        # the first fold of a state table writes the bucketed base:
+        # compaction keeps the base's layout. The row-tier log has no
+        # merge column and stays unbucketed.
+        base = name in STATE_MERGES and table.current() is None
         table.commit_append(
-            agg, bucket_col=STATE_MERGES[name][0] if base else None,
+            rows, bucket_col=STATE_MERGES[name][0] if base else None,
             n_buckets=n_buckets, extra=extra)
         try:
             state.compact(name)
         except CommitConflictError:
             pass  # a racing commit won; the next fold compacts
-
-    def _fold_mono() -> None:
-        # row tier: violations of THIS delta are final — plain append,
-        # nothing merged, nothing rewritten
-        if _already(state.mono_violations):
-            return
-        state.mono_violations.commit_append(
-            union_branches(row_violations(delta, terms, cfg)), extra=extra)
 
     # RDF is SET-semantic and the batch path dropDuplicates() the triple
     # table at read (main.py) — a duplicate triple WITHIN one delta must
@@ -313,9 +294,17 @@ def apply_delta(
     # contract (see module docstring): deltas carry set-new triples.
     delta = delta.dropDuplicates().persist()
     terms = _state_terms(vocab_terms)
-    folds = [partial(_fold, name, agg) for name, agg
-             in state_aggregates(delta, cfg, terms).items()] + [_fold_mono]
+    # row tier: violations of THIS delta are final — a plain append to
+    # mono_violations, nothing merged. A retried delta skips every table
+    # whose log already holds it, and reads nothing when all do.
+    folds = [partial(_fold, name, rows) for name, rows in {
+        **state_aggregates(delta, cfg, terms),
+        "mono_violations": union_branches(row_violations(delta, terms, cfg)),
+    }.items() if delta_id is None
+        or not getattr(state, name).has_delta(delta_id)]
     try:
+        if not folds:
+            return
         # materialize the shared input ONCE so concurrent folds read the
         # cache instead of racing to compute the same partitions
         delta.count()

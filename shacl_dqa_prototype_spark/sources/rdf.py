@@ -105,6 +105,14 @@ def read_ntriples(
             col[has_esc] = col[has_esc].map(_unescape)
         return col
 
+    def coalesce(first: pd.Series, *rest: pd.Series) -> pd.Series:
+        """First non-null value per row. ``where`` keeps the object dtype,
+        where a ``fillna`` chain would downcast (a deprecated pandas
+        behaviour that warns)."""
+        for col in rest:
+            first = first.where(first.notna(), col)
+        return first
+
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ext = pdf["value"].str.extract(_NT_LINE)
@@ -114,8 +122,8 @@ def read_ntriples(
             o_kind[sub["o_iri"].notna()] = "iri"
             o_kind[sub["o_bn"].notna()] = "bnode"
             # IRIs may carry UCHAR escapes too (N-Triples grammar)
-            o = unesc(sub["o_iri"]).fillna(sub["o_bn"]).fillna(
-                unesc(sub["o_lit"]))
+            o = coalesce(unesc(sub["o_iri"]), sub["o_bn"],
+                         unesc(sub["o_lit"]))
             # lang-tagged literals are rdf:langString (RDF 1.1), mirroring
             # parse_turtle/parse_rdfxml — otherwise a lang-tagged literal
             # loaded from .nt would default to xsd:string downstream and
@@ -124,7 +132,7 @@ def read_ntriples(
             o_dtype = sub["dt"].where(sub["lang"].isna(), f"{RDF_NS}langString")
             out = pd.DataFrame(
                 {
-                    "s": unesc(sub["s_iri"]).fillna(sub["s_bn"]),
+                    "s": coalesce(unesc(sub["s_iri"]), sub["s_bn"]),
                     "p": unesc(sub["p"]),
                     "o": o,
                     "o_kind": o_kind,

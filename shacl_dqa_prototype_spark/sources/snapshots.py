@@ -105,6 +105,23 @@ class SnapshotTable:
         snaps = self.snapshots()
         return snaps[-1] if snaps else None
 
+    def delta_ids(self) -> set[str]:
+        """Every delta id the log records: the ``delta_id`` an idempotent
+        commit carries (``extra={"delta_id": ...}``), plus the
+        ``applied_delta_ids`` a vacuum compaction carries forward when it
+        expires those commits."""
+        ids: set[str] = set()
+        for s in self.snapshots():
+            if s.get("delta_id"):
+                ids.add(s["delta_id"])
+            ids.update(s.get("applied_delta_ids") or ())
+        return ids
+
+    def has_delta(self, delta_id: str) -> bool:
+        """Whether a commit of ``delta_id`` already landed — the replay
+        check of every idempotent writer (apply_delta, the streams)."""
+        return delta_id in self.delta_ids()
+
     def _locked_log(self):
         """Exclusive flock on the LIVE log file. flock binds to the inode,
         not the path, and expire_snapshots atomically replaces the log
@@ -260,8 +277,8 @@ class SnapshotTable:
     def commit_append(self, df: DataFrame, bucket_col: str | None = None,
                       n_buckets: int = 32, extra: dict | None = None) -> str:
         """Append df as a new snapshot; prior data dirs are reused as-is.
-        ``extra`` lands in the log record (e.g. a streaming epoch id, used
-        for replay idempotence)."""
+        ``extra`` lands in the log record (e.g. the ``delta_id`` has_delta
+        checks for replay idempotence)."""
         return self._commit(df, "append", bucket_col, n_buckets, extra)
 
     def commit_overwrite(self, df: DataFrame, bucket_col: str | None = None,
@@ -493,19 +510,51 @@ class SnapshotTable:
         otherwise — Iceberg's ``MERGE INTO`` for the row-level case this
         pipeline needs. ``updates`` must be unique per key (pre-aggregate
         if it isn't; duplicated update keys would make the result
-        order-dependent).
+        order-dependent). Bucket-pruned and snapshot-isolated as
+        ``_merge_keyed`` describes."""
+        return self._merge_keyed(
+            updates, key_col, n_buckets, extra, max_retries, "merge_upsert",
+            lambda current: current.join(
+                updates.select(key_col), key_col, "left_anti"
+            ).unionByName(updates.select(current.columns)))
 
-        Scale shape: the write is BUCKET-PRUNED end to end — the update's
-        bucket set is computed first (one tiny distinct on the update
-        keys), only those ``_bucket=k`` leaf dirs are read back
-        (path-level pruning, see read_buckets), the anti-join runs
+    def merge_delete(
+        self, keys: DataFrame, key_col: str,
+        n_buckets: int = 32, extra: dict | None = None,
+        max_retries: int = 2,
+    ) -> str:
+        """Keyed row-level DELETE: every current row whose ``key_col``
+        value appears in ``keys`` is removed — the right-to-erasure /
+        record-retraction primitive (Iceberg's ``DELETE FROM … WHERE key
+        IN (…)`` for the keyed case). Bucket-pruned and snapshot-isolated
+        as ``_merge_keyed`` describes. The old snapshot stays readable
+        (time travel shows pre-delete state until expire_snapshots
+        vacuums it — run it promptly when the delete is a compliance
+        erasure)."""
+        return self._merge_keyed(
+            keys, key_col, n_buckets, extra, max_retries, "merge_delete",
+            lambda current: current.join(
+                keys.select(key_col).distinct(), key_col, "left_anti"))
+
+    def _merge_keyed(
+        self, keys: DataFrame, key_col: str, n_buckets: int,
+        extra: dict | None, max_retries: int, detail: str,
+        rewrite: Callable[[DataFrame], DataFrame],
+    ) -> str:
+        """The bucket-pruned read-modify-write of the keyed merges:
+        ``rewrite`` maps the current rows of the buckets ``keys`` touch to
+        their new content.
+
+        Scale shape: the bucket set of ``keys`` is computed first (one
+        tiny distinct on the keys), only those ``_bucket=k`` leaf dirs are
+        read back (path-level pruning, see read_buckets), the rewrite runs
         against that slice alone, and commit_merge_buckets rewrites only
         those buckets while carrying every untouched bucket by reference.
-        The rewrite is O(touched buckets), which is small only when the
-        update has far fewer distinct keys than there are buckets: k keys
-        spread over 32 buckets leave an expected 32·(31/32)^k untouched,
-        1.3 at k = 100 and ~5·10⁻¹³ at k = 1,000, so upserting 1k rows
-        rewrites essentially every bucket.
+        The rewrite is O(touched buckets), which is small only when there
+        are far fewer distinct keys than buckets: k keys spread over 32
+        buckets leave an expected 32·(31/32)^k untouched, 1.3 at k = 100
+        and ~5·10⁻¹³ at k = 1,000, so merging 1k keys rewrites
+        essentially every bucket.
 
         Concurrency: the whole read-modify-write is SNAPSHOT-ISOLATED —
         the buckets are read AT the snapshot validated here, and the
@@ -516,84 +565,28 @@ class SnapshotTable:
         last: CommitConflictError | None = None
         for _ in range(max_retries + 1):
             snap = self.current()
-            # exact bucket-layout match up front, same as merge_delete: an
-            # unbucketed table (bucket_col=None) would otherwise read ALL
-            # buckets, run the anti-join, and write data before
-            # commit_merge_buckets finally rejected the layout
+            # exact bucket-layout match up front: an unbucketed table
+            # (bucket_col=None) would otherwise read ALL buckets, run the
+            # anti-join and write data before commit_merge_buckets finally
+            # rejected the layout. A snapshot with NO data dirs (e.g.
+            # evolve_schema before any commit) is not a layout error.
             if (snap is not None and snap["dirs"]
                     and snap.get("bucket_col") != key_col):
                 raise ValueError(
                     f"table is bucketed by {snap.get('bucket_col')!r}, "
-                    f"cannot merge on {key_col!r} (keyed upsert needs the "
-                    "table committed with bucket_col=key_col)")
-            nb = (snap.get("n_buckets") or n_buckets) if snap else n_buckets
-            bucket_of = F.pmod(F.xxhash64(key_col), F.lit(nb))
-            changed = [r[0] for r in
-                       updates.select(bucket_of.alias("b")).distinct().collect()]
-            current = self.read_buckets(
-                changed, snapshot_id=snap["snapshot_id"] if snap else None)
-            merged = (
-                current.join(updates.select(key_col), key_col, "left_anti")
-                .unionByName(updates.select(current.columns))
-            )
-            try:
-                return self.commit_merge_buckets(
-                    merged, changed, bucket_col=key_col, n_buckets=nb,
-                    extra={**(extra or {}), "operation_detail": "merge_upsert"},
-                    expected_parent=snap)
-            except CommitConflictError as e:
-                last = e
-        raise last
-
-    def merge_delete(
-        self, keys: DataFrame, key_col: str,
-        n_buckets: int = 32, extra: dict | None = None,
-        max_retries: int = 2,
-    ) -> str:
-        """Keyed row-level DELETE: every current row whose ``key_col``
-        value appears in ``keys`` is removed — the right-to-erasure /
-        record-retraction primitive (Iceberg's ``DELETE FROM … WHERE key
-        IN (…)`` for the keyed case).
-
-        Scale shape: identical pruning discipline to merge_upsert — the
-        delete-key bucket set is computed first, only those ``_bucket=k``
-        leaf dirs are read and anti-joined, and only they are rewritten;
-        untouched buckets are carried by reference. The rewrite is
-        O(touched buckets), small only when the delete keys are far fewer
-        than ``n_buckets`` (see merge_upsert). The old
-        snapshot stays readable (time travel shows pre-delete state until
-        expire_snapshots vacuums it — run it promptly when the delete is
-        a compliance erasure)."""
-        last: CommitConflictError | None = None
-        for _ in range(max_retries + 1):
-            snap = self.current()
-            # require an exact bucket-layout match up front (r4 advice):
-            # an unbucketed table (bucket_col=None) would read ALL buckets
-            # and run the anti-join before commit_merge_buckets finally
-            # rejected the mismatched parent layout — fail before any job
-            # runs.
-            # same `snap["dirs"]` guard as merge_upsert: a snapshot with
-            # NO data dirs (e.g. evolve_schema before any commit) makes
-            # the delete a no-op, not a layout error
-            if (snap is not None and snap["dirs"]
-                    and snap.get("bucket_col") != key_col):
-                raise ValueError(
-                    f"table is bucketed by {snap.get('bucket_col')!r}, "
-                    f"cannot delete on {key_col!r} (keyed delete needs the "
-                    "table committed with bucket_col=key_col)")
+                    f"cannot {detail} on {key_col!r} (a keyed merge needs "
+                    "the table committed with bucket_col=key_col)")
             nb = (snap.get("n_buckets") or n_buckets) if snap else n_buckets
             bucket_of = F.pmod(F.xxhash64(key_col), F.lit(nb))
             changed = [r[0] for r in
                        keys.select(bucket_of.alias("b")).distinct().collect()]
             current = self.read_buckets(
                 changed, snapshot_id=snap["snapshot_id"] if snap else None)
-            remaining = current.join(
-                keys.select(key_col).distinct(), key_col, "left_anti")
             try:
                 return self.commit_merge_buckets(
-                    remaining, changed, bucket_col=key_col, n_buckets=nb,
-                    extra={**(extra or {}),
-                           "operation_detail": "merge_delete"},
+                    rewrite(current), changed, bucket_col=key_col,
+                    n_buckets=nb,
+                    extra={**(extra or {}), "operation_detail": detail},
                     expected_parent=snap)
             except CommitConflictError as e:
                 last = e

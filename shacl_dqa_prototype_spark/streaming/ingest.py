@@ -1,11 +1,29 @@
-"""Structured Streaming ingest: new document files → incremental triple
-extraction appended to the triple sink.
+"""Structured Streaming ingest: file streams folded into snapshot tables
+one microbatch at a time.
 
 The reference is batch-only (SURVEY.md §2F), so this is a new-engine
-capability: the same extraction plan (explode + vectorized pandas UDF)
-runs unchanged under readStream — Spark's incremental planner handles
-exactly-once file tracking via the checkpoint dir, which complements the
-batch manifest (E7) for continuous corpora.
+capability. Five streams commit to SnapshotTables — extraction
+(``start_incremental_extraction_snapshots``), continuous DQA
+(``start_streaming_dqa``), CDC upsert (``start_streaming_upsert``) and the
+near-dup and novelty indexes (``start_streaming_neardup``,
+``start_streaming_novelty``) — and each is only its fold: the
+exactly-once lifecycle is one epoch driver, ``_start_epochs``.
+
+- Spark's checkpoint tracks which input files each epoch consumed.
+- Each epoch commits under the delta id ``<run token>#<epoch>``, the run
+  token pinned to the checkpoint dir's lifetime (``_run_token``).
+- An epoch every target table already holds (``SnapshotTable.has_delta``)
+  is skipped; a fold that writes several tables skips each table that
+  holds it, so a crash between two commits is healed by the replay.
+- Every ``MAINTAIN_EVERY`` epochs each table is compacted once past
+  ``COMPACT_MAX_DIRS`` dirs and expired to its last ``KEEP_SNAPSHOTS``
+  snapshots, so an unbounded stream does not accrete one commit and one
+  data dir per table per epoch. A restart replays at most the last epoch,
+  whose delta id survives any window of two or more snapshots.
+- The query drains the backlog and stops (``trigger(availableNow=True)``).
+
+``start_streaming_dedup`` is the one parquet-sink stream: its state is
+Spark's own dropDuplicatesWithinWatermark store.
 
 Linking/CC stay batch (they need global state); the streaming leg lands
 *candidate* triples with surface forms, and the batch pipeline
@@ -16,15 +34,29 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from shacl_dqa_prototype_spark.operators.extract import extract_fact_mentions
-from pyspark.sql.types import StructField, StructType, TimestampType
+from shacl_dqa_prototype_spark.schemas import DOCUMENTS_SCHEMA, TRIPLES_SCHEMA
 
-from shacl_dqa_prototype_spark.schemas import DOCUMENTS_SCHEMA
+# the maintenance step of every snapshot-sinked stream (module docstring)
+MAINTAIN_EVERY = 32
+COMPACT_MAX_DIRS = 64
+KEEP_SNAPSHOTS = 8
+
+# what the near-dup and novelty streams read when no schema is given
+_FLAT_DOCS = StructType([StructField("doc_id", StringType(), False),
+                         StructField("text", StringType(), True)])
 
 
 def _run_token(checkpoint_dir: str) -> str:
@@ -54,6 +86,55 @@ def _run_token(checkpoint_dir: str) -> str:
             os.unlink(tmp)
     with open(p) as f:
         return f"{os.path.abspath(checkpoint_dir)}#{f.read().strip()}"
+
+
+def _file_stream(spark: SparkSession, input_dir: str, schema: StructType,
+                 max_files_per_trigger: int = 16) -> DataFrame:
+    """Parquet file source. File sources need an explicit schema, so
+    columns not declared here are invisible."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
+
+
+def _start_epochs(
+    spark: SparkSession,
+    input_dir: str,
+    schema: StructType,
+    checkpoint_dir: str,
+    tables: dict,
+    fold: Callable[[DataFrame, str], None],
+    max_files_per_trigger: int = 16,
+    compact: Callable[..., object] | None = None,
+) -> StreamingQuery:
+    """The epoch driver of every snapshot-sinked stream (module
+    docstring). ``tables`` names the SnapshotTables the stream commits to;
+    ``fold(batch_df, delta_id)`` commits one epoch, every commit carrying
+    ``extra={"delta_id": delta_id}``. ``compact(name, max_dirs=...)``
+    replaces the maintenance step's plain ``SnapshotTable.compact`` (the
+    DQA state passes its merge-rule compaction)."""
+    run_id = _run_token(checkpoint_dir)
+    compact = compact or (lambda name, **kw: tables[name].compact(**kw))
+
+    def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        delta_id = f"{run_id}#{epoch_id}"
+        if all(t.has_delta(delta_id) for t in tables.values()):
+            return  # replayed epoch after restart — already committed
+        fold(batch_df, delta_id)
+        if epoch_id % MAINTAIN_EVERY == MAINTAIN_EVERY - 1:
+            for name, t in tables.items():
+                compact(name, max_dirs=COMPACT_MAX_DIRS)
+                t.expire_snapshots(keep_last=KEEP_SNAPSHOTS)
+
+    return (
+        _file_stream(spark, input_dir, schema, max_files_per_trigger)
+        .writeStream.foreachBatch(_epoch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _check_index_layout(table, bucket_col: str, n_buckets: int) -> None:
@@ -91,79 +172,20 @@ def write_ordered_epochs(epoch_dfs, in_dir: str) -> str:
     return in_dir + "/*"
 
 
-def stream_documents(spark: SparkSession, input_dir: str,
-                     schema=None) -> DataFrame:
-    """File-source document stream. ``schema`` overrides the canonical
-    DOCUMENTS_SCHEMA for feeds that carry extra columns (e.g. an
-    event-time stamp) — file sources need an explicit schema, so extra
-    parquet columns are invisible unless declared here."""
-    return (
-        spark.readStream.schema(schema or DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-
-
-def start_incremental_extraction(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """documents stream → mention extraction → append parquet.
-
-    available_now=True drains the current backlog and stops (test/batch
-    catch-up mode); False runs continuously."""
-    docs = stream_documents(spark, input_dir)
-    mentions = extract_fact_mentions(docs)
-    writer = (
-        mentions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_incremental_extraction_snapshots(
     spark: SparkSession,
     input_dir: str,
     table,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Streaming extraction whose sink is a SnapshotTable: each microbatch
-    commits atomically as ONE snapshot append, so readers never observe a
-    partial batch and the snapshot log records streaming progress
-    (epoch → snapshot) alongside Spark's own checkpoint. On restart Spark
-    may replay the last uncommitted-to-checkpoint epoch — the epoch id in
-    the log makes the commit idempotent (replayed epochs are skipped)."""
-    docs = stream_documents(spark, input_dir)
-    mentions = extract_fact_mentions(docs)
-    # idempotence must key on (checkpoint LIFETIME, epoch), not the epoch
-    # alone: a NEW checkpoint restarts epoch numbering at 0, and keying on
-    # the bare number would silently skip a fresh query's first batches
-    # because some old run also had an epoch 0 (_run_token's nonce also
-    # distinguishes a DELETED-and-recreated checkpoint from a resumed one).
-    run_id = _run_token(checkpoint_dir)
-
-    def _commit_batch(batch_df, epoch_id: int) -> None:
-        if any(s.get("epoch") == epoch_id and s.get("run") == run_id
-               for s in table.snapshots()):
-            return  # replayed epoch after restart — already committed
-        table.commit_append(batch_df, extra={"epoch": epoch_id, "run": run_id})
-
-    writer = (
-        mentions.writeStream.outputMode("append")
-        .foreachBatch(_commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Streaming extraction whose sink is a SnapshotTable: each microbatch's
+    mentions commit atomically as ONE snapshot append, so readers never
+    observe a partial batch and the snapshot log records streaming
+    progress alongside Spark's own checkpoint."""
+    return _start_epochs(
+        spark, input_dir, DOCUMENTS_SCHEMA, checkpoint_dir, {"mentions": table},
+        lambda batch_df, delta_id: table.commit_append(
+            extract_fact_mentions(batch_df), extra={"delta_id": delta_id}))
 
 
 def start_streaming_dedup(
@@ -173,7 +195,6 @@ def start_streaming_dedup(
     checkpoint_dir: str,
     key_cols: list[str] | None = None,
     watermark: str = "1 hour",
-    available_now: bool = True,
     event_time_col: str | None = None,
 ) -> StreamingQuery:
     """Streaming exact dedup: drop re-deliveries of the same document across
@@ -193,12 +214,12 @@ def start_streaming_dedup(
     the r2-documented limitation this parameter closes. The column must
     exist in the feed's parquet files; it is declared on top of the
     canonical document schema (file sources read only declared columns)."""
-    schema = None
+    schema = DOCUMENTS_SCHEMA
     if event_time_col:
         schema = StructType(
             DOCUMENTS_SCHEMA.fields
             + [StructField(event_time_col, TimestampType(), True)])
-    docs = stream_documents(spark, input_dir, schema=schema)
+    docs = _file_stream(spark, input_dir, schema)
     # a NULL event time would make the watermark's lateness predicate NULL
     # and the row would be DISCARDED outright (not just left undeduped) —
     # silent data loss; treat missing event time as arrival time instead
@@ -213,27 +234,16 @@ def start_streaming_dedup(
         keyed.withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(key_cols or ["content_digest"])
     )
-    writer = (
+    return (
         deduped.drop("event_time").writeStream.outputMode("append")
         .format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def stream_triples(spark: SparkSession, input_dir: str,
-                   max_files_per_trigger: int = 16) -> DataFrame:
-    """File-source triple stream (TRIPLES_SCHEMA parquet)."""
-    from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
-
-    return (
-        spark.readStream.schema(TRIPLES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
 
 def start_streaming_dqa(
@@ -244,10 +254,6 @@ def start_streaming_dqa(
     vocab_terms,
     checkpoint_dir: str,
     n_buckets: int = 32,
-    available_now: bool = True,
-    maintain_every: int | None = 32,
-    compact_max_dirs: int = 64,
-    keep_snapshots: int = 8,
     max_files_per_trigger: int = 16,
 ) -> StreamingQuery:
     """Continuous data-quality assessment: a stream of triple appends is
@@ -256,49 +262,25 @@ def start_streaming_dqa(
     corpus grows — no batch re-run, no historical re-read
     (plans/incremental.py semantics, asserted equal to the batch compiler).
 
-    Exactly-once story, layered: Spark's checkpoint tracks which input
-    files each epoch consumed; ``apply_delta`` keyed by
-    (checkpoint lineage, epoch) makes the seven state commits idempotent —
-    a crash between commits, or an epoch replayed after restart, is healed
-    by the retry skipping tables whose snapshot log already carries the
-    delta id. Draining the same checkpoint twice is a no-op end-to-end.
+    ``apply_delta`` keyed by the epoch's delta id makes the seven state
+    commits idempotent — a crash between commits, or an epoch replayed
+    after restart, is healed by the retry skipping tables that already
+    hold the delta id. Draining the same checkpoint twice is a no-op
+    end-to-end.
 
     Scale shape is the incremental tier's: per batch, one appended level
-    per state table (O(batch) written, no read of old state) and one plain
-    append of the monotone-family violations; reads merge base ∪ levels,
-    and a fold compacts a table once it holds more than 16 dirs.
-
-    Maintenance: every ``maintain_every`` epochs each state table is
-    compacted by its merge rule (``IncrementalDQAState.compact``, dirs
-    folded once past ``compact_max_dirs``) and its history expired to the
-    last ``keep_snapshots`` snapshots — without this an unbounded stream
-    accretes one commit + data dir per table per epoch, and log parsing /
-    path resolution would grow with stream age. A Spark
-    restart replays at most the last epoch, whose delta id always survives
-    a ``keep_snapshots`` ≥ 2 window, so idempotence is unaffected. Pass
-    ``maintain_every=None`` to keep FULL time-travel history instead
-    (audit mode — bound it yourself)."""
+    per state table (O(batch) written, no read of old state); reads merge
+    base ∪ levels, and a fold compacts a table once it holds more than 16
+    dirs. The maintenance step compacts by each table's merge rule
+    (``IncrementalDQAState.compact``)."""
     from shacl_dqa_prototype_spark.plans.incremental import apply_delta
 
-    run_id = _run_token(checkpoint_dir)
-
-    def _fold(batch_df, epoch_id: int) -> None:
-        apply_delta(state, batch_df, cfg, vocab_terms, n_buckets=n_buckets,
-                    delta_id=f"{run_id}#{epoch_id}")
-        if maintain_every and epoch_id % maintain_every == maintain_every - 1:
-            for name, t in state.tables().items():
-                state.compact(name, max_dirs=compact_max_dirs)
-                t.expire_snapshots(keep_last=keep_snapshots)
-
-    writer = (
-        stream_triples(spark, input_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_epochs(
+        spark, input_dir, TRIPLES_SCHEMA, checkpoint_dir, state.tables(),
+        lambda batch_df, delta_id: apply_delta(
+            state, batch_df, cfg, vocab_terms, n_buckets=n_buckets,
+            delta_id=delta_id),
+        max_files_per_trigger, compact=state.compact)
 
 
 def start_streaming_upsert(
@@ -310,10 +292,6 @@ def start_streaming_upsert(
     checkpoint_dir: str,
     order_col: str | None = None,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
-    maintain_every: int | None = 32,
-    compact_max_dirs: int = 64,
-    keep_snapshots: int = 8,
 ) -> StreamingQuery:
     """CDC ingestion: a stream of keyed row versions is folded into a
     ``SnapshotTable`` one microbatch at a time via ``merge_upsert`` —
@@ -325,43 +303,17 @@ def start_streaming_upsert(
     it a total order per key, e.g. a change sequence number). Across
     microbatches the later epoch wins, which is CDC arrival order.
     Without ``order_col``, in-batch duplicate keys are an error (the
-    merge's last-writer-wins would be nondeterministic).
+    merge's last-writer-wins would be nondeterministic)."""
 
-    Restart/idempotence: each epoch commits under delta_id
-    ``<checkpoint>#<epoch>``; a replayed epoch (Spark retries foreachBatch
-    after crashes) is skipped when the table's log already carries its id
-    — the same keying the incremental-DQA state uses. Maintenance
-    (compact + expire) bounds log and dir growth exactly as in
-    start_streaming_dqa."""
-    from pyspark.sql import Window
-
-    run_id = _run_token(checkpoint_dir)
-
-    def _fold(batch_df, epoch_id: int) -> None:
-        delta_id = f"{run_id}#{epoch_id}"
-        if any(s.get("delta_id") == delta_id for s in table.snapshots()):
-            return
-        b = batch_df
+    def _fold(batch_df: DataFrame, delta_id: str) -> None:
         if order_col is not None:
             w = Window.partitionBy(key_col).orderBy(F.desc(order_col))
-            b = (b.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn"))
-        table.merge_upsert(b, key_col, extra={"delta_id": delta_id})
-        if maintain_every and epoch_id % maintain_every == maintain_every - 1:
-            table.compact(max_dirs=compact_max_dirs)
-            table.expire_snapshots(keep_last=keep_snapshots)
+            batch_df = (batch_df.withColumn("_rn", F.row_number().over(w))
+                        .filter(F.col("_rn") == 1).drop("_rn"))
+        table.merge_upsert(batch_df, key_col, extra={"delta_id": delta_id})
 
-    writer = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_epochs(spark, input_dir, schema, checkpoint_dir,
+                         {"table": table}, _fold, max_files_per_trigger)
 
 
 def start_streaming_neardup(
@@ -376,13 +328,7 @@ def start_streaming_neardup(
     portable: bool = False,
     n_buckets: int = 32,
     schema=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
-    maintain_every: int | None = 32,
-    compact_max_dirs: int = 64,
-    keep_snapshots: int = 8,
 ) -> StreamingQuery:
     """Online near-duplicate detection at ingest: every document batch is
     MinHash/LSH-bucketed, matched against the ACCUMULATED bucket index
@@ -393,45 +339,33 @@ def start_streaming_neardup(
     (same bands, same buckets), which is how the contract oracles it.
     A document re-delivered by an at-least-once upstream matches its own
     indexed copy; such self-pairs are filtered (the batch operator can
-    never emit them). With ``schema=None`` the stream reads flat
-    (``id_col`` string, ``text_col`` string) rows — pass ``schema`` for
-    any other layout. Maintenance (compact + expire every
-    ``maintain_every`` epochs) bounds both tables' log/dir growth exactly
-    as in start_streaming_dqa.
+    never emit them). The stream reads ``(doc_id, text)`` rows; with
+    ``schema=None`` both are strings.
 
     ``index`` and ``pairs`` are SnapshotTables: (band, bucket, doc_id)
     bucketed BY THE LSH BUCKET id, and (doc_a, doc_b) appends. Per epoch,
     the stored index is read BUCKET-PRUNED — only the table buckets the
     batch's LSH buckets hash into are listed (same path-level pruning as
     merge_upsert), so a small batch against a 10⁹-doc index touches
-    ~|batch buckets|/n_buckets of the index files. Both commits are
-    delta_id-idempotent (pairs first, then index: a replayed epoch skips
-    each table it already reached)."""
+    ~|batch buckets|/n_buckets of the index files. Pairs commit first,
+    then the index; a replayed epoch skips each table it already
+    reached."""
     from shacl_dqa_prototype_spark.operators.dedup import lsh_bucket_rows
 
-    run_id = _run_token(checkpoint_dir)
-
-    def _fold(batch_df, epoch_id: int) -> None:
-        delta_id = f"{run_id}#{epoch_id}"
-        pairs_done = any(
-            s.get("delta_id") == delta_id for s in pairs.snapshots())
-        index_done = any(
-            s.get("delta_id") == delta_id for s in index.snapshots())
-        if pairs_done and index_done:
-            return
+    def _fold(batch_df: DataFrame, delta_id: str) -> None:
         _check_index_layout(index, "bucket", n_buckets)
         # an at-least-once upstream can redeliver a doc WITHIN one trigger
         # (two files in the same batch); its identical bucket rows would
         # land in the index twice and multiply every future join against
         # them — collapse to one row per doc before bucketing
-        batch_df = batch_df.dropDuplicates([id_col])
+        batch_df = batch_df.dropDuplicates(["doc_id"])
         # checkpoint: b feeds up to three jobs (touched-buckets collect,
         # pair join, index append); unpersisted at the end of the epoch so
         # an unbounded stream doesn't accrete one pinned RDD per batch
-        b = lsh_bucket_rows(batch_df, n, num_hashes, bands, id_col,
-                            text_col, portable).localCheckpoint()
+        b = lsh_bucket_rows(batch_df, n, num_hashes, bands,
+                            portable=portable).localCheckpoint()
         try:
-            if not pairs_done:
+            if not pairs.has_delta(delta_id):
                 touched = [r[0] for r in b.select(
                     F.pmod(F.xxhash64("bucket"), F.lit(n_buckets)).alias("tb")
                 ).distinct().collect()]
@@ -455,7 +389,7 @@ def start_streaming_neardup(
                 )
                 pairs.commit_append(cross.unionByName(within).distinct(),
                                     extra={"delta_id": delta_id})
-            if not index_done:
+            if not index.has_delta(delta_id):
                 index.commit_append(b, bucket_col="bucket",
                                     n_buckets=n_buckets,
                                     extra={"delta_id": delta_id})
@@ -463,28 +397,10 @@ def start_streaming_neardup(
             # foreachBatch retries after a failure would otherwise pin one
             # more checkpointed RDD per attempt on a long-running stream
             b.unpersist()
-        if maintain_every and epoch_id % maintain_every == maintain_every - 1:
-            for t in (index, pairs):
-                t.compact(max_dirs=compact_max_dirs)
-                t.expire_snapshots(keep_last=keep_snapshots)
 
-    src_schema = schema
-    if src_schema is None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        src_schema = StructType([StructField(id_col, StringType(), False),
-                                 StructField(text_col, StringType(), True)])
-    writer = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_epochs(spark, input_dir, schema or _FLAT_DOCS,
+                         checkpoint_dir, {"index": index, "pairs": pairs},
+                         _fold, max_files_per_trigger)
 
 
 def start_streaming_novelty(
@@ -497,20 +413,15 @@ def start_streaming_novelty(
     portable: bool = False,
     n_buckets: int = 32,
     schema=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
-    maintain_every: int | None = 32,
-    compact_max_dirs: int = 64,
-    keep_snapshots: int = 8,
 ) -> StreamingQuery:
     """Online n-gram NOVELTY at ingest: every document batch is scored
     against the ACCUMULATED n-gram index (all previous batches) plus
     itself, emitting the same ``(doc_id, n_distinct, novel, novel_frac)``
     rows as the batch ``ngram_novelty`` operator — the moment a doc
     arrives, the pipeline knows how much it still adds to the corpus,
-    without ever re-scanning it.
+    without ever re-scanning it. The stream reads ``(doc_id, text)``
+    rows; with ``schema=None`` both are strings.
 
     Parity contract: when batches arrive in non-decreasing doc-id order
     (each epoch's ids ≥ every earlier epoch's — the natural shape for an
@@ -526,10 +437,10 @@ def start_streaming_novelty(
     (only the table buckets the batch's n-gram hashes land in are listed
     — same path-level pruning as the streaming near-dup index), so a
     small batch against a 10⁹-ngram index touches ~|batch buckets| /
-    n_buckets of its files. Both commits are delta_id-idempotent, and
-    results commits BEFORE index: a crash between them replays against
-    the unchanged index and reproduces identical rows (the reverse order
-    would rescore the replayed batch against its own n-grams).
+    n_buckets of its files. Results commit BEFORE the index: a crash
+    between them replays against the unchanged index and reproduces
+    identical rows (the reverse order would rescore the replayed batch
+    against its own n-grams).
     At-least-once REdelivery of a doc in a later epoch is also stable:
     its n-grams resolve to ``first_doc == doc_id`` in the index, so the
     re-emitted row is identical and collapses under ``distinct()``.
@@ -541,18 +452,7 @@ def start_streaming_novelty(
         distinct_full_ngrams,
     )
 
-    run_id = _run_token(checkpoint_dir)
-
-    def _fold(batch_df, epoch_id: int) -> None:
-        from pyspark.sql import Window
-
-        delta_id = f"{run_id}#{epoch_id}"
-        res_done = any(
-            s.get("delta_id") == delta_id for s in results.snapshots())
-        idx_done = any(
-            s.get("delta_id") == delta_id for s in index.snapshots())
-        if res_done and idx_done:
-            return
+    def _fold(batch_df: DataFrame, delta_id: str) -> None:
         _check_index_layout(index, "ng", n_buckets)
         # a doc redelivered WITHIN one trigger would double its
         # n_distinct/novel counts (distinct_full_ngrams dedups within one
@@ -560,13 +460,13 @@ def start_streaming_novelty(
         # CONFLICTING result row the batch operator can never produce —
         # the cross-epoch redelivery stability documented above only
         # holds if each epoch carries a doc at most once
-        batch_df = batch_df.dropDuplicates([id_col])
+        batch_df = batch_df.dropDuplicates(["doc_id"])
         # ids are unique post-dedup — no second distinct/shuffle needed
-        base = batch_df.select(F.col(id_col).alias("doc_id"))
+        base = batch_df.select("doc_id")
         # checkpoint: b feeds three jobs (touched-buckets collect, the
         # results commit, the index append); released at epoch end
         b = (
-            distinct_full_ngrams(batch_df, n, id_col, text_col)
+            distinct_full_ngrams(batch_df, n)
             .withColumn("ng", _hash60(F.col("shingle"), portable=portable))
             .drop("shingle")
             .localCheckpoint()
@@ -587,7 +487,7 @@ def start_streaming_novelty(
                            F.col("doc_id") == F.col("_min"))
                     .otherwise(F.col("_owner") == F.col("doc_id")))
             )
-            if not res_done:
+            if not results.has_delta(delta_id):
                 per = j.groupBy("doc_id").agg(
                     F.count("*").cast("long").alias("n_distinct"),
                     F.sum(F.col("_novel").cast("int")).cast("long")
@@ -602,7 +502,7 @@ def start_streaming_novelty(
                                 / F.col("n_distinct").cast("double"), 6))
                     .otherwise(0.0).alias("novel_frac"))
                 results.commit_append(rows, extra={"delta_id": delta_id})
-            if not idx_done:
+            if not index.has_delta(delta_id):
                 new_ng = (
                     j.filter(F.col("_owner").isNull()
                              & (F.col("doc_id") == F.col("_min")))
@@ -616,25 +516,7 @@ def start_streaming_novelty(
                                     extra={"delta_id": delta_id})
         finally:
             b.unpersist()
-        if maintain_every and epoch_id % maintain_every == maintain_every - 1:
-            for t in (index, results):
-                t.compact(max_dirs=compact_max_dirs)
-                t.expire_snapshots(keep_last=keep_snapshots)
 
-    src_schema = schema
-    if src_schema is None:
-        from pyspark.sql.types import StringType
-
-        src_schema = StructType([StructField(id_col, StringType(), False),
-                                 StructField(text_col, StringType(), True)])
-    writer = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_epochs(spark, input_dir, schema or _FLAT_DOCS,
+                         checkpoint_dir, {"index": index, "results": results},
+                         _fold, max_files_per_trigger)

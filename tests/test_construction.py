@@ -108,24 +108,6 @@ def test_resume_skips_committed_stages(spark, docs, dictionary, tmp_path):
     assert spark.read.parquet(res.triples_path).count() > 0
 
 
-def test_salted_popularity_matches_naive(spark):
-    """E4 skew mitigation: the two-phase salted distinct aggregate must
-    equal the naive countDistinct(doc_id) per candidate, including on a
-    pathologically hot key (90% of rows on one candidate)."""
-    from shacl_dqa_prototype_spark.operators.link import salted_docs_per_entity
-
-    rows = [("hot", f"doc{i % 700}") for i in range(9000)]   # 700 distinct
-    rows += [(f"c{i % 37}", f"doc{i}") for i in range(1000)]
-    df = spark.createDataFrame(rows, ["candidate", "doc_id"])
-    salted = {r["candidate"]: r["popularity"]
-              for r in salted_docs_per_entity(df, n_salts=8).collect()}
-    naive = {r["candidate"]: r["n"]
-             for r in df.groupBy("candidate")
-             .agg(F.countDistinct("doc_id").alias("n")).collect()}
-    assert salted == naive
-    assert salted["hot"] == 700
-
-
 def test_invariant_empty_spans_doc_passes(spark):
     """A doc with spans=[] vanishes from the exploded side (posexplode
     emits nothing) — the full-join NULL used to read as a violation even

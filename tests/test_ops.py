@@ -286,25 +286,6 @@ def test_multimodal_plumbing(spark):
     assert feats.filter((F.col("kind") == "image") & (F.col("n_frames") != 1)).count() == 0
 
 
-def test_streaming_ingest(spark, tmp_path):
-    from shacl_dqa_prototype_spark.datagen import GenConfig, generate_documents
-    from shacl_dqa_prototype_spark.streaming.ingest import start_incremental_extraction
-
-    in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    docs = generate_documents(spark, GenConfig(n_docs=50, n_entities=10))
-    docs.write.mode("overwrite").parquet(in_dir)
-    q = start_incremental_extraction(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out_dir).count()
-    assert first > 0
-    # incremental: append more files; only the delta is processed
-    generate_documents(spark, GenConfig(n_docs=20, n_entities=10, seed=99)).write.mode(
-        "append").parquet(in_dir)
-    q2 = start_incremental_extraction(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() > first
-
-
 def test_ivf_topk_matches_bruteforce(spark):
     """IVF with full probing (n_probe == n_cells) must equal brute force."""
     import math

@@ -173,20 +173,20 @@ def test_streaming_extraction_into_snapshots(spark, tmp_path):
     q.awaitTermination(120)
     assert t.read().count() == batch.count()
     n_snaps = len(t.snapshots())
-    assert n_snaps >= 1 and all("epoch" in s for s in t.snapshots())
-    # replayed epoch (restart duplicate) is idempotent — no new snapshot
-    first_epoch = t.snapshots()[0]["epoch"]
-    from shacl_dqa_prototype_spark.streaming import ingest as _i
-    before = t.read().count()
-    if not any(s.get("epoch") == first_epoch for s in t.snapshots()):
-        raise AssertionError
-    # simulate the foreachBatch replay path directly
-    def replay():
-        if any(s.get("epoch") == first_epoch for s in t.snapshots()):
-            return
-        t.commit_append(batch, extra={"epoch": first_epoch})
-    replay()
-    assert len(t.snapshots()) == n_snaps and t.read().count() == before
+    assert n_snaps >= 1 and all("delta_id" in s for s in t.snapshots())
+    # replay through the engine: drop the checkpoint's record that the
+    # last epoch committed, so the restarted query re-runs that epoch
+    # under the same delta id — the driver must skip it
+    commits = os.path.join(ck, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in os.listdir(commits):
+        if f in (str(last), f".{last}.crc"):
+            os.remove(os.path.join(commits, f))
+    start_incremental_extraction_snapshots(
+        spark, in_dir, t, ck).awaitTermination(120)
+    assert os.path.exists(os.path.join(commits, str(last)))  # re-ran
+    assert len(t.snapshots()) == n_snaps
+    assert t.read().count() == batch.count()
     # incremental: appending more input files only commits the delta
     generate_documents(spark, GenConfig(n_docs=15, n_entities=10, seed=3)).write.mode(
         "append").parquet(in_dir)
@@ -282,7 +282,8 @@ def test_streaming_snapshot_epoch_keyed_per_run(spark, tmp_path):
     assert t.read().count() == exp1 + exp2
 
 
-def test_streaming_dqa_matches_batch_and_is_drain_idempotent(spark, tmp_path):
+def test_streaming_dqa_matches_batch_and_is_drain_idempotent(
+        spark, tmp_path, monkeypatch):
     """Continuous DQA: a triple stream folded into the incremental state via
     start_streaming_dqa must yield EXACTLY the batch compiler's violations
     for every state-derivable family — and draining the same checkpoint a
@@ -295,6 +296,7 @@ def test_streaming_dqa_matches_batch_and_is_drain_idempotent(spark, tmp_path):
         IncrementalDQAState,
         violations_from_state,
     )
+    from shacl_dqa_prototype_spark.streaming import ingest
     from shacl_dqa_prototype_spark.streaming.ingest import start_streaming_dqa
     from tests.test_incremental import DERIVABLE
 
@@ -307,11 +309,13 @@ def test_streaming_dqa_matches_batch_and_is_drain_idempotent(spark, tmp_path):
     T.filter(split).repartition(10).write.mode("append").parquet(in_dir)
     T.filter(~split).repartition(10).write.mode("append").parquet(in_dir)
 
+    monkeypatch.setattr(ingest, "MAINTAIN_EVERY", 1)
+    monkeypatch.setattr(ingest, "COMPACT_MAX_DIRS", 1)
+    monkeypatch.setattr(ingest, "KEEP_SNAPSHOTS", 2)
     state = IncrementalDQAState.open(spark, str(tmp_path / "state"))
     start_streaming_dqa(
         spark, in_dir, state, core.ENTRY_CFG, core.ENTRY_VOCAB,
         checkpoint_dir=str(tmp_path / "ckpt"), n_buckets=4,
-        maintain_every=1, compact_max_dirs=1, keep_snapshots=2,
     ).awaitTermination(300)
     # maintenance bounds history: every state table's log stays tiny no
     # matter how many epochs ran
@@ -383,11 +387,12 @@ def test_merge_upsert_last_writer_wins_and_prunes(spark, tmp_path):
         t.merge_upsert(spark.createDataFrame([("k1", 0)], schema), "n")
 
 
-def test_streaming_upsert_cdc(spark, tmp_path):
+def test_streaming_upsert_cdc(spark, tmp_path, monkeypatch):
     """CDC stream -> merge_upsert per epoch: latest version per key wins,
     re-draining the same checkpoint is a no-op, history stays bounded."""
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from shacl_dqa_prototype_spark.streaming import ingest
     from shacl_dqa_prototype_spark.streaming.ingest import (
         start_streaming_upsert,
         write_ordered_epochs,
@@ -408,10 +413,12 @@ def test_streaming_upsert_cdc(spark, tmp_path):
 
     tbl = SnapshotTable(spark, str(tmp_path / "tbl"), schema)
     ck = str(tmp_path / "ckpt")
+    monkeypatch.setattr(ingest, "MAINTAIN_EVERY", 1)
+    monkeypatch.setattr(ingest, "COMPACT_MAX_DIRS", 1)
+    monkeypatch.setattr(ingest, "KEEP_SNAPSHOTS", 2)
     start_streaming_upsert(
         spark, in_dir + "/*", tbl, "k", schema, ck, order_col="seq",
-        max_files_per_trigger=1, maintain_every=1, compact_max_dirs=1,
-        keep_snapshots=2,
+        max_files_per_trigger=1,
     ).awaitTermination(180)
     got = {r["k"]: (r["n"], r["seq"]) for r in tbl.read().collect()}
     assert len(got) == 9
@@ -1237,3 +1244,70 @@ def test_streaming_recreated_checkpoint_reprocesses(spark, tmp_path):
         schema)
     assert ({tuple(r) for r in got.collect()}
             == {tuple(r) for r in ngram_novelty(docs, n=3).collect()})
+
+
+def test_streaming_crash_between_commits_heals_on_replay(spark, tmp_path):
+    """A novelty epoch whose results commit lands but whose index commit
+    raises fails the query; restarting it on the same checkpoint re-runs
+    that epoch under the same delta id. Each table then holds exactly one
+    commit per delta id, and both hold the rows of an uncrashed run."""
+    from collections import Counter
+
+    import pytest
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+    from shacl_dqa_prototype_spark.streaming.ingest import (
+        start_streaming_novelty,
+        write_ordered_epochs,
+    )
+
+    schema = StructType([StructField("doc_id", LongType(), False),
+                         StructField("text", StringType(), False)])
+    in_dir = str(tmp_path / "in")
+    write_ordered_epochs([spark.createDataFrame(rows, schema) for rows in (
+        [(1, "alpha beta gamma delta"), (2, "totally different words here")],
+        [(3, "alpha beta gamma later"), (4, "epsilon zeta eta theta")],
+    )], in_dir)
+
+    def run(name, crash_at=None):
+        idx = SnapshotTable(spark, str(tmp_path / name / "idx"), StructType([
+            StructField("ng", LongType(), True),
+            StructField("first_doc", LongType(), True)]))
+        res = SnapshotTable(spark, str(tmp_path / name / "res"), StructType([
+            StructField("doc_id", LongType(), True),
+            StructField("n_distinct", LongType(), False),
+            StructField("novel", LongType(), False),
+            StructField("novel_frac", DoubleType(), False)]))
+        start = lambda: start_streaming_novelty(  # noqa: E731
+            spark, in_dir + "/*", idx, res, str(tmp_path / name / "ck"),
+            n=3, schema=schema, max_files_per_trigger=1, n_buckets=4)
+        if crash_at is not None:
+            real = idx.commit_append
+
+            def crashing(*a, **kw):
+                if len(idx.snapshots()) == crash_at:
+                    raise RuntimeError("injected crash before index commit")
+                return real(*a, **kw)
+
+            idx.commit_append = crashing
+            with pytest.raises(Exception, match="injected crash"):
+                start().awaitTermination(180)
+            del idx.commit_append
+            # the second epoch's results landed, its index commit did not
+            assert len(res.snapshots()) == crash_at + 1
+            assert len(idx.snapshots()) == crash_at
+        start().awaitTermination(180)
+        return idx, res
+
+    ref_idx, ref_res = run("ref")
+    idx, res = run("crashed", crash_at=1)
+    for t in (idx, res):
+        per_delta = Counter(s["delta_id"] for s in t.snapshots())
+        assert len(per_delta) == 2 and set(per_delta.values()) == {1}
+    assert sorted(res.read().collect()) == sorted(ref_res.read().collect())
+    assert sorted(idx.read().collect()) == sorted(ref_idx.read().collect())
