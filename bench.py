@@ -443,7 +443,7 @@ def _streaming() -> dict:
         t0 = time.time()
         start_streaming_dqa(
             spark, os.path.join(wd, "triples.parquet"), state, dqa_cfg,
-            vocab, checkpoint_dir=os.path.join(wd, "ckpt"), n_buckets=32,
+            vocab, checkpoint_dir=os.path.join(wd, "ckpt"),
             max_files_per_trigger=4,
         ).awaitTermination()
         sd_sec = time.time() - t0
@@ -607,8 +607,7 @@ def _incremental() -> dict:
             delta = T.filter(slot == i)
             n_d = delta.count()  # fixture accounting, outside the timer
             t0 = time.time()
-            apply_delta(state, delta, dqa_cfg, vocab, n_buckets=32,
-                        delta_id=f"bench-{i}")
+            apply_delta(state, delta, dqa_cfg, vocab, delta_id=f"bench-{i}")
             dt = time.time() - t0
             cum += n_d
             per_delta.append({

@@ -1465,7 +1465,7 @@ def _streaming_dqa_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         state = IncrementalDQAState.open(spark, os.path.join(base, "state"))
         start_streaming_dqa(
             spark, in_dir, state, core.ENTRY_CFG, core.ENTRY_VOCAB,
-            checkpoint_dir=os.path.join(base, "ckpt"), n_buckets=8,
+            checkpoint_dir=os.path.join(base, "ckpt"),
         ).awaitTermination()
         _SDQA_CACHE[key] = violations_from_state(
             state, core.ENTRY_VOCAB, core.ENTRY_CFG,
@@ -1501,10 +1501,8 @@ def _inc_state(spark: SparkSession, sf_dir: str, which: str) -> tuple:
         state = IncrementalDQAState.open(
             spark, tempfile.mkdtemp(prefix=f"incdqa_{which}_"))
         split = F.abs(F.xxhash64("s")) % 2 == 0
-        apply_delta(state, T.filter(split), cfg, vocab,
-                    n_buckets=8, delta_id="d1")
-        apply_delta(state, T.filter(~split), cfg, vocab,
-                    n_buckets=8, delta_id="d2")
+        apply_delta(state, T.filter(split), cfg, vocab, delta_id="d1")
+        apply_delta(state, T.filter(~split), cfg, vocab, delta_id="d2")
         _INC_STATE_CACHE[key] = (state, cfg, vocab, disjoint)
     return _INC_STATE_CACHE[key]
 

@@ -500,8 +500,7 @@ def cmd_dqa_append(args) -> None:
     )
     state = IncrementalDQAState.open(spark, args.state)
     t0 = time.time()
-    apply_delta(state, delta, cfg, terms, n_buckets=args.buckets,
-                delta_id=args.delta_id)
+    apply_delta(state, delta, cfg, terms, delta_id=args.delta_id)
     out = {"state": args.state, "apply_sec": round(time.time() - t0, 2)}
     if args.report:
         from shacl_dqa_prototype_spark.plans.report_csv import (
@@ -588,7 +587,6 @@ def main(argv: list[str] | None = None) -> None:
                          "to this directory")
     pa.add_argument("--vocab", action="append", default=[],
                     help="vocabulary file (repeatable)")
-    pa.add_argument("--buckets", type=int, default=32)
     pa.add_argument("--dataset-name")
     pa.add_argument("--base-uri")
     pa.add_argument("--type-property")

@@ -7,13 +7,13 @@ each family once, in one of two tiers, and batch DQA is "fold T as one
 delta into empty state". This module keeps that state on disk:
 
 1. State tier — each delta's state_aggregates are appended to one
-   SnapshotTable each as a new LEVEL: one small unbucketed data dir per
-   table per fold, with no read of old state, no bucket probe and no
-   rewrite (the fold into an empty table writes the BASE instead,
-   bucketed by the table's STATE_MERGES column). A table whose term list
-   is empty (dom_pairs without a class-domain property, say) is empty by
-   construction and gets no level; never written, it reads back as an
-   empty table. Reads merge:
+   SnapshotTable each as a new LEVEL: one small data dir per table per
+   fold, with no read of old state and no rewrite (the fold into an
+   empty table writes the BASE). State tables are unbucketed: base,
+   levels and compactions are plain parquet dirs, since no read prunes
+   them by bucket. A table whose term list is empty (dom_pairs without
+   a class-domain property, say) is empty by construction and gets no
+   level; never written, it reads back as an empty table. Reads merge:
    IncrementalDQAState.merged applies the table's STATE_MERGES rule
    (bool-max, sum or distinct) over base ∪ levels. Every rule is
    associative and commutative, so merging when the table is read gives
@@ -23,12 +23,12 @@ delta into empty state". This module keeps that state on disk:
 
    Compaction bounds the levels: once a table's current snapshot holds
    more than SnapshotTable.compact's default of 16 dirs, the fold that
-   crossed it rewrites base ∪ levels, merged by the same rule, as one base
-   bucketed by the STATE_MERGES column (IncrementalDQAState.compact, also
-   what vacuum and the streaming maintenance step run). The overwrite is
-   pinned to the snapshot it read: a fold racing it wins, and a later fold
-   compacts. violations_from_state evaluates state_violations over the
-   six merged reads.
+   crossed it rewrites base ∪ levels, merged by the same rule, as one
+   base (IncrementalDQAState.compact, also what vacuum and the streaming
+   maintenance step run). The overwrite is pinned to the snapshot it
+   read: a fold racing it wins, and a later fold compacts.
+   violations_from_state evaluates state_violations over the six merged
+   reads.
 
 2. Row tier — row_violations of each delta are FINAL (no later triple can
    create or retract them), so they are commit_append-ed to a violations
@@ -131,17 +131,17 @@ SPO_PAIRS_SCHEMA = StructType([
     StructField("o", StringType(), False),
 ])
 
-# state table → (bucket column of its base, merge rule applied over
-# base ∪ levels when the table is read or compacted)
+# state table → merge rule applied over base ∪ levels when the table is
+# read or compacted
 STATE_MERGES = {
-    "subj_flags": ("s", lambda df: df.groupBy("s").agg(
-        *[F.max(f).alias(f) for f in SUBJECT_FLAGS])),
-    "ps_counts": ("s", lambda df: df.groupBy("p", "s").agg(
-        F.sum("n").cast("long").alias("n"))),
-    "cls_pairs": ("s", DataFrame.distinct),
-    "po_pairs": ("o", DataFrame.distinct),
-    "dom_pairs": ("s", DataFrame.distinct),
-    "spo_pairs": ("o", DataFrame.distinct),
+    "subj_flags": lambda df: df.groupBy("s").agg(
+        *[F.max(f).alias(f) for f in SUBJECT_FLAGS]),
+    "ps_counts": lambda df: df.groupBy("p", "s").agg(
+        F.sum("n").cast("long").alias("n")),
+    "cls_pairs": DataFrame.distinct,
+    "po_pairs": DataFrame.distinct,
+    "dom_pairs": DataFrame.distinct,
+    "spo_pairs": DataFrame.distinct,
 }
 
 
@@ -187,17 +187,16 @@ class IncrementalDQAState:
         """State table ``name`` as of its current snapshot: its
         STATE_MERGES rule over base ∪ levels (see the module docstring).
         Builds a plan only."""
-        return STATE_MERGES[name][1](getattr(self, name).read())
+        return STATE_MERGES[name](getattr(self, name).read())
 
     def compact(self, name: str, **kw) -> str | None:
         """SnapshotTable.compact of table ``name`` (``kw`` passes through)
         with the table's STATE_MERGES rule: base ∪ levels are rewritten,
-        merged, as one base in the base's bucket layout, committed as an
-        overwrite pinned to the snapshot it read (CommitConflictError when
-        another commit landed meanwhile). The row-tier log has no rule and
-        is rewritten as it is."""
-        rule = STATE_MERGES.get(name)
-        return getattr(self, name).compact(merge=rule and rule[1], **kw)
+        merged, as one unbucketed base, committed as an overwrite pinned
+        to the snapshot it read (CommitConflictError when another commit
+        landed meanwhile). The row-tier log has no rule and is rewritten
+        as it is."""
+        return getattr(self, name).compact(merge=STATE_MERGES.get(name), **kw)
 
     def vacuum(self, keep_last: int = 1,
                orphan_grace_s: float = 3600.0) -> dict[str, int]:
@@ -238,22 +237,20 @@ def apply_delta(
     delta: DataFrame,
     cfg: DQAConfig,
     vocab_terms: list[VocabTerm],
-    n_buckets: int = 32,
     delta_id: str | None = None,
 ) -> None:
     """Fold one appended triple batch into the DQA state.
 
-    Each state table gets ONE append of the delta's aggregate as a new
-    level — O(|delta|) written, no read of old state, no rewrite; the
-    fold into an empty table writes the base, bucketed by the table's
-    STATE_MERGES column into ``n_buckets``. A table whose current
-    snapshot then holds more than 16 dirs is compacted into one base
-    (IncrementalDQAState.compact); a compaction that loses a race to
+    Each state table gets ONE plain append of the delta's aggregate as a
+    new unbucketed level — O(|delta|) written, no read of old state, no
+    rewrite; the fold into an empty table writes the base. A table whose
+    current snapshot then holds more than 16 dirs is compacted into one
+    base (IncrementalDQAState.compact); a compaction that loses a race to
     another commit is left to a later fold. The row-tier violations of
-    the delta are appended to the violations log, which is compacted
-    the same way (without a merge rule). A table
-    state_aggregates leaves out (its term list is empty) is not folded.
-    Historical triples are never re-read.
+    the delta are appended to the violations log, which is compacted the
+    same way (without a merge rule). A table state_aggregates leaves out
+    (its term list is empty) is not folded. Historical triples are never
+    re-read.
 
     The seven table folds are mutually INDEPENDENT (disjoint state dirs
     and logs, all reading the one persisted delta), so they are submitted
@@ -273,14 +270,7 @@ def apply_delta(
     extra = {"delta_id": delta_id} if delta_id is not None else None
 
     def _fold(name: str, rows: DataFrame) -> None:
-        table = getattr(state, name)
-        # the first fold of a state table writes the bucketed base:
-        # compaction keeps the base's layout. The row-tier log has no
-        # merge column and stays unbucketed.
-        base = name in STATE_MERGES and table.current() is None
-        table.commit_append(
-            rows, bucket_col=STATE_MERGES[name][0] if base else None,
-            n_buckets=n_buckets, extra=extra)
+        getattr(state, name).commit_append(rows, extra=extra)
         try:
             state.compact(name)
         except CommitConflictError:

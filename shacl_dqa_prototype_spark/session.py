@@ -63,10 +63,12 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Narrow triple rows → pack more rows per input split at scale.
         .config("spark.sql.files.maxPartitionBytes", str(256 * 1024 * 1024))
-        # A snapshot-table read names every leaf dir it serves (32 bucket
-        # dirs of a base plus one dir per appended level, sources/
-        # snapshots.py); past 32 paths Spark would list them in a Spark
-        # job per read instead of on the driver.
+        # A read of a bucketed snapshot table (the merge-upsert tables and
+        # the near-dup/novelty indexes) names one path per `_bucket=k` leaf
+        # dir of every dir it serves (sources/snapshots.py); past 32 paths
+        # Spark would list them in a Spark job per read instead of on the
+        # driver. Unbucketed tables, DQA state included, name one path per
+        # dir.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Quiet progress bars in test output

@@ -22,14 +22,20 @@ on a local/posix filesystem; a real deployment swaps this file for the
 catalog's atomic swap (which is also the only piece Iceberg itself
 delegates to the catalog).
 
+A snapshot has ONE layout: its record's ``bucket_col``/``n_buckets``
+describe every dir it references. An append or bucket merge onto a
+non-empty tail must keep that layout (ValueError before any data dir is
+written); only an overwrite — compaction included — may set a new one.
+
 Reads resolve a snapshot (latest by default, any historical id for time
-travel) to a CONCRETE path list — unbucketed dirs as roots, bucketed dirs
-expanded to their `_bucket=k` leaf directories — and load everything as
-ONE multi-path relation with an EXPLICIT schema, so the physical plan has
-a single parquet scan regardless of how many commits the snapshot chains
-(an empty table still reads back as a typed empty DataFrame). Leaf-dir
-expansion is also what makes bucket pruning a pure path-list filter:
-read_buckets(bs) lists only the wanted `_bucket=k` dirs.
+travel) to a CONCRETE path list — the dirs themselves when the snapshot
+is unbucketed, their `_bucket=k` leaf directories when it is bucketed —
+and load everything as ONE multi-path relation with an EXPLICIT schema,
+so the physical plan has a single parquet scan regardless of how many
+commits the snapshot chains (an empty table still reads back as a typed
+empty DataFrame). Leaf-dir expansion is also what makes bucket pruning a
+pure path-list filter: read_buckets(bs) lists only the wanted
+`_bucket=k` dirs.
 
 Bucket-level overwrites (commit_merge_buckets) record, per referenced
 dir, WHICH buckets it still serves — Iceberg's dynamic partition
@@ -41,8 +47,8 @@ O(#commits), never O(data). Data files are only ever appended, superseded
 bucket-by-bucket, or dropped whole-directory (expire) — no commit ever
 rewrites existing data files. compact() folds a long dir chain back into
 one dir when the driver-side path list grows past a threshold, optionally
-applying a merge rule on the way (merge-on-read tables: a base plus
-appended levels, see plans/incremental.py).
+applying a merge rule on the way (merge-on-read tables: an unbucketed
+base plus appended levels, see plans/incremental.py).
 
 Concurrency contract (r5 — Iceberg-parity optimistic concurrency):
 every commit is a compare-and-swap on the log tail, serialized by an
@@ -176,42 +182,50 @@ class SnapshotTable:
     # ---- commits --------------------------------------------------------
 
     def _write_data(self, df: DataFrame, bucket_col: str | None,
-                    n_buckets: int,
-                    sort_cols: list[str] | None = None) -> str:
-        """Step 1: write the (invisible) data directory for this commit.
-        ``sort_cols`` clusters rows within each output partition AFTER the
-        bucket repartition (the repartition would otherwise destroy the
-        order), tightening parquet row-group min/max stats."""
+                    n_buckets: int) -> str:
+        """Step 1: write the (invisible) data directory for this commit."""
         dirname = uuid.uuid4().hex[:16]
         path = os.path.join(self.data_dir, dirname)
         if bucket_col:
             out = df.withColumn(
                 "_bucket", F.pmod(F.xxhash64(bucket_col), F.lit(n_buckets))
             ).repartition("_bucket")
-            if sort_cols:
-                # _bucket must LEAD the sort: the dynamic-partition writer
-                # requires rows sorted by the partition column and would
-                # otherwise insert its own (_bucket-only) sort on top,
-                # destroying the secondary order
-                out = out.sortWithinPartitions("_bucket", *sort_cols)
             out.write.mode("overwrite").partitionBy("_bucket").parquet(path)
         else:
-            out = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-            out.write.mode("overwrite").parquet(path)
+            df.write.mode("overwrite").parquet(path)
         return dirname
+
+    def _check_layout(self, tail: dict | None, bucket_col: str | None,
+                      n_buckets: int) -> None:
+        """Refuse a dir whose layout differs from a non-empty ``tail``'s:
+        one layout per snapshot (module docstring) is what lets a read
+        resolve every dir, and a bucket merge prune every dir, by the
+        record's ``bucket_col``/``n_buckets`` alone."""
+        if not (tail and tail["dirs"]):
+            return
+        have = (tail.get("bucket_col"), tail.get("n_buckets"))
+        want = (bucket_col, n_buckets if bucket_col else None)
+        if have != want:
+            raise ValueError(
+                f"{self.table_dir!r} is laid out with bucket_col="
+                f"{have[0]!r}, n_buckets={have[1]}; cannot add a dir with "
+                f"bucket_col={want[0]!r}, n_buckets={want[1]} (overwrite "
+                "or compact to change the layout)")
 
     def _commit(self, df: DataFrame, operation: str,
                 bucket_col: str | None, n_buckets: int,
                 extra: dict | None = None,
-                sort_cols: list[str] | None = None,
                 expected_parent: dict | None | object = _UNSET) -> str:
         """``expected_parent`` pins the commit to a caller-read snapshot
         (CAS, no rebase — for state-derived writes like compact); unset,
         the commit re-bases onto the actual tail under race (appends and
-        blind overwrites commute)."""
+        blind overwrites commute). An append must keep the tail's layout
+        (``_check_layout``); an overwrite sets its own."""
         pinned = expected_parent is not _UNSET
         parent = expected_parent if pinned else self.current()
-        dirname = self._write_data(df, bucket_col, n_buckets, sort_cols)
+        if operation == "append":
+            self._check_layout(parent, bucket_col, n_buckets)
+        dirname = self._write_data(df, bucket_col, n_buckets)
         snapshot_id = uuid.uuid4().hex[:16]
 
         def build(tail: dict | None) -> dict:
@@ -219,47 +233,22 @@ class SnapshotTable:
             parent read above; under a commit race, the ACTUAL tail
             (appends and blind overwrites commute, so re-basing them is
             Iceberg's automatic retry with the data dir reused as-is)."""
-            dirs = [dirname] if operation == "overwrite" else (
-                (tail["dirs"] if tail else []) + [dirname]
-            )
-            # dir → bucket_col for every dir this snapshot references:
-            # read() resolves each dir with the layout it was WRITTEN with
-            # (Iceberg's partition-spec-per-file analog), so append chains
-            # may change layout. Carried in full on every record so
-            # expire_snapshots can drop old records without losing
-            # still-referenced dirs' layouts.
-            tail_layouts = (tail or {}).get("dir_layouts") or {}
-            dir_layouts = (
-                {k: v for k, v in tail_layouts.items() if k in dirs}
-                if operation != "overwrite" else {})
-            dir_layouts[dirname] = bucket_col
-            # per-dir bucket COUNT rides along like dir_layouts: append
-            # chains may legitimately change counts (read() resolves each
-            # dir with the layout it was written with), but a bucket-
-            # pruned MERGE over mixed counts would compute changed
-            # buckets mod the wrong count and silently miss rows — the
-            # merge path validates each referenced dir against ITS
-            # recorded count, not just the latest snapshot's
-            tail_nb = (tail or {}).get("dir_nbuckets") or {}
-            dir_nbuckets = (
-                {k: v for k, v in tail_nb.items() if k in dirs}
-                if operation != "overwrite" else {})
-            if bucket_col:
-                dir_nbuckets[dirname] = n_buckets
-            # appends after a merge_buckets commit must carry the parent's
-            # bucket restrictions — otherwise superseded buckets resurface
-            tail_buckets = (tail or {}).get("dir_buckets") or {}
-            dir_buckets = (
-                {k: v for k, v in tail_buckets.items() if k in dirs}
-                if operation != "overwrite" else {})
+            if operation == "overwrite":
+                dirs, dir_buckets = [dirname], {}
+            else:
+                # a re-based append meets a tail that may be laid out anew
+                self._check_layout(tail, bucket_col, n_buckets)
+                dirs = (tail["dirs"] if tail else []) + [dirname]
+                # appends after a merge_buckets commit must carry the
+                # parent's bucket restrictions — otherwise superseded
+                # buckets resurface
+                dir_buckets = (tail or {}).get("dir_buckets") or {}
             return {
                 "snapshot_id": snapshot_id,
                 "parent_id": tail["snapshot_id"] if tail else None,
                 "ts": time.time(),
                 "operation": operation,
                 "dirs": dirs,
-                "dir_layouts": dir_layouts,
-                **({"dir_nbuckets": dir_nbuckets} if dir_nbuckets else {}),
                 **({"dir_buckets": dir_buckets} if dir_buckets else {}),
                 "bucket_col": bucket_col,
                 "n_buckets": n_buckets if bucket_col else None,
@@ -277,7 +266,8 @@ class SnapshotTable:
     def commit_append(self, df: DataFrame, bucket_col: str | None = None,
                       n_buckets: int = 32, extra: dict | None = None) -> str:
         """Append df as a new snapshot; prior data dirs are reused as-is.
-        ``extra`` lands in the log record (e.g. the ``delta_id`` has_delta
+        On a table with data the layout must be the tail's (ValueError
+        before anything is written otherwise). ``extra`` lands in the log record (e.g. the ``delta_id`` has_delta
         checks for replay idempotence)."""
         return self._commit(df, "append", bucket_col, n_buckets, extra)
 
@@ -297,8 +287,11 @@ class SnapshotTable:
         ``changed_buckets``; every other bucket is carried over from the
         parent snapshot BY REFERENCE — zero data rewritten for untouched
         buckets, so an append-merge writes O(|changed buckets|) not
-        O(|table|). Requires the parent chain to share this bucket layout
-        (first commit on an empty table is fine).
+        O(|table|). Requires a non-empty parent to share this bucket
+        layout (``_check_layout``): pruning a 32-bucket dir with buckets
+        computed mod 16 would silently miss half its leaves, rows lost
+        from the merge and then masked forever by the ``dir_buckets``
+        restriction.
 
         ``expected_parent`` pins the commit to the snapshot the CALLER
         derived ``df`` from (merge_upsert/merge_delete pass the snapshot
@@ -307,34 +300,11 @@ class SnapshotTable:
         stale state must never land (Iceberg's overwrite validation)."""
         parent = self.current() if expected_parent is _UNSET \
             else expected_parent
+        self._check_layout(parent, bucket_col, n_buckets)
         changed = sorted({int(b) for b in changed_buckets})
         changed_set = set(changed)
-        if parent:
-            layouts = parent.get("dir_layouts") or {}
-            parent_nb = parent.get("dir_nbuckets") or {}
-            for d in parent["dirs"]:
-                if layouts.get(d, parent.get("bucket_col")) != bucket_col:
-                    raise ValueError(
-                        f"commit_merge_buckets needs every parent dir "
-                        f"bucketed by {bucket_col!r}; dir {d} is not")
-                # per-dir bucket COUNT too: pruning a 32-bucket dir with
-                # buckets computed mod 16 would silently miss half its
-                # leaves (rows lost from the merge, then masked forever by
-                # the dir_buckets restriction)
-                if parent_nb.get(d, parent.get("n_buckets")) not in (
-                        None, n_buckets):
-                    raise ValueError(
-                        f"dir {d} was written with n_buckets="
-                        f"{parent_nb.get(d, parent.get('n_buckets'))}, "
-                        f"cannot merge with n_buckets={n_buckets}")
-            if parent["dirs"] and parent.get("n_buckets") not in (None, n_buckets):
-                raise ValueError(
-                    f"bucket count mismatch: parent {parent.get('n_buckets')}"
-                    f" vs {n_buckets}")
         dirname = self._write_data(df, bucket_col, n_buckets)
         dirs: list[str] = []
-        dir_layouts: dict[str, str | None] = {}
-        dir_nbuckets: dict[str, int] = {}
         dir_buckets: dict[str, list[int]] = {}
         if parent:
             parent_buckets = parent.get("dir_buckets") or {}
@@ -346,12 +316,8 @@ class SnapshotTable:
                 if not remaining:
                     continue  # dir fully superseded by this merge
                 dirs.append(d)
-                dir_layouts[d] = bucket_col
-                dir_nbuckets[d] = n_buckets
                 dir_buckets[d] = remaining
         dirs.append(dirname)
-        dir_layouts[dirname] = bucket_col
-        dir_nbuckets[dirname] = n_buckets
         dir_buckets[dirname] = changed
         snapshot_id = uuid.uuid4().hex[:16]
         self._append_log_cas(
@@ -362,8 +328,6 @@ class SnapshotTable:
                 "ts": time.time(),
                 "operation": "merge_buckets",
                 "dirs": dirs,
-                "dir_layouts": dir_layouts,
-                "dir_nbuckets": dir_nbuckets,
                 "dir_buckets": dir_buckets,
                 "bucket_col": bucket_col,
                 "n_buckets": n_buckets,
@@ -430,7 +394,6 @@ class SnapshotTable:
                 "operation": "evolve_schema",
                 "schema": json.dumps(new_schema.jsonValue()),
                 "dirs": parent["dirs"] if parent else [],
-                "dir_layouts": (parent or {}).get("dir_layouts") or {},
                 **({"dir_buckets": parent["dir_buckets"]}
                    if parent and parent.get("dir_buckets") else {}),
                 "bucket_col": (parent or {}).get("bucket_col"),
@@ -441,21 +404,17 @@ class SnapshotTable:
 
     def _resolve_paths(self, snap: dict,
                        buckets: set[int] | None = None) -> list[str]:
-        """Concrete read paths for a snapshot: unbucketed dirs as roots,
-        bucketed dirs as their `_bucket=k` leaf dirs (restricted to the
-        dir's recorded bucket set, further intersected with ``buckets``)."""
-        layout_of = snap.get("dir_layouts") or {}
+        """Concrete read paths for a snapshot: its dirs as roots when it
+        is unbucketed, else their `_bucket=k` leaf dirs (restricted to
+        each dir's recorded bucket set, further intersected with
+        ``buckets``)."""
+        roots = [os.path.join(self.data_dir, d) for d in snap["dirs"]]
+        if not snap.get("bucket_col"):
+            return roots
         dir_buckets = snap.get("dir_buckets") or {}
         paths: list[str] = []
-        for d in snap["dirs"]:
-            root = os.path.join(self.data_dir, d)
-            # legacy logs (no per-dir layout) fall back to the snapshot's
-            bucketed = layout_of.get(d, snap.get("bucket_col"))
-            if not bucketed:
-                paths.append(root)
-                continue
+        for d, root in zip(snap["dirs"], roots):
             allowed = dir_buckets.get(d)
-            allowed = None if allowed is None else set(allowed)
             for leaf in sorted(os.listdir(root)):
                 if not leaf.startswith("_bucket="):
                     continue
@@ -488,8 +447,8 @@ class SnapshotTable:
     def read_buckets(self, buckets, snapshot_id: str | None = None) -> DataFrame:
         """Read only the given buckets — pruning happens at the PATH level
         (unwanted leaf dirs are never listed to Spark), so touching 2 of
-        32 buckets scans ~1/16th of the table's files. Unbucketed dirs in
-        the chain (if any) are always included for correctness."""
+        32 buckets scans ~1/16th of the table's files. An unbucketed
+        snapshot has nothing to prune and is read whole."""
         snaps = self.snapshots()  # parse the log ONCE per read
         snap = self._resolve_snapshot(snapshot_id, snaps)
         schema = self._schema_at(snap, snaps)
@@ -595,48 +554,32 @@ class SnapshotTable:
     # ---- maintenance ----------------------------------------------------
 
     def compact(self, max_dirs: int = 16,
-                sort_cols: list[str] | None = None,
                 extra: dict | None = None,
                 merge: Callable[[DataFrame], DataFrame] | None = None,
                 ) -> str | None:
         """If the current snapshot references more than ``max_dirs`` data
-        dirs, fold everything into ONE overwrite commit, written with the
-        bucket layout of the snapshot's first (base) dir. Bounds
-        driver-side path resolution and file counts on long append chains;
-        returns the new snapshot id or None if no compaction was needed.
+        dirs, fold everything into ONE overwrite commit, written in the
+        snapshot's layout. Bounds driver-side path resolution and file
+        counts on long append chains; returns the new snapshot id or None
+        if no compaction was needed.
 
         ``merge`` (DataFrame → DataFrame) is applied to the rows read
         before they are rewritten — a merge-on-read table (plans/
         incremental.py: a base plus appended levels, merged by a per-table
         rule when read) passes its rule, so the compacted base holds the
-        merged rows and reads back the same.
-
-        ``sort_cols`` additionally clusters the rewrite within each
-        partition (sortWithinPartitions) — Iceberg's sort-ordered rewrite:
-        parquet row-group min/max stats on the sort columns become tight,
-        so subsequent filtered reads skip row groups instead of scanning
-        them (pushed filters prune on the stats). Sorting is per-partition
-        (no extra shuffle) — bucketing still owns placement; the sort owns
-        within-file clustering."""
+        merged rows and reads back the same."""
         snap = self.current()
         if snap is None or len(snap["dirs"]) <= max_dirs:
             return None
-        base = snap["dirs"][0]
-        bucket_col = (snap.get("dir_layouts") or {}).get(
-            base, snap.get("bucket_col"))
-        n_buckets = (snap.get("dir_nbuckets") or {}).get(
-            base, snap.get("n_buckets")) or 32
         rows = self.read(snap["snapshot_id"])
         # the rewrite is derived from `snap`, so the commit is PINNED to
         # it: a concurrent append must win over the compaction (which the
         # caller just re-runs later), never be clobbered by it
         return self._commit(
             merge(rows) if merge else rows, "overwrite",
-            bucket_col, n_buckets,
-            extra={"compacted_from": len(snap["dirs"]),
-                   **({"sort_cols": sort_cols} if sort_cols else {}),
-                   **(extra or {})},
-            sort_cols=sort_cols, expected_parent=snap)
+            snap.get("bucket_col"), snap.get("n_buckets") or 32,
+            extra={"compacted_from": len(snap["dirs"]), **(extra or {})},
+            expected_parent=snap)
 
     def expire_snapshots(self, keep_last: int = 1,
                          orphan_grace_s: float = 3600.0) -> list[str]:

@@ -253,7 +253,6 @@ def start_streaming_dqa(
     cfg,
     vocab_terms,
     checkpoint_dir: str,
-    n_buckets: int = 32,
     max_files_per_trigger: int = 16,
 ) -> StreamingQuery:
     """Continuous data-quality assessment: a stream of triple appends is
@@ -278,8 +277,7 @@ def start_streaming_dqa(
     return _start_epochs(
         spark, input_dir, TRIPLES_SCHEMA, checkpoint_dir, state.tables(),
         lambda batch_df, delta_id: apply_delta(
-            state, batch_df, cfg, vocab_terms, n_buckets=n_buckets,
-            delta_id=delta_id),
+            state, batch_df, cfg, vocab_terms, delta_id=delta_id),
         max_files_per_trigger, compact=state.compact)
 
 

@@ -685,11 +685,11 @@ def test_cmd_dqa_append_matches_batch_dqa(spark, tmp_path):
     state = str(tmp_path / "state")
     cmd_dqa_append(argparse.Namespace(
         cmd="dqa-append", state=state, delta=d1, delta_id="d1",
-        report=None, buckets=8, **common))
+        report=None, **common))
     rep_dir = str(tmp_path / "inc_report")
     cmd_dqa_append(argparse.Namespace(
         cmd="dqa-append", state=state, delta=d2, delta_id="d2",
-        report=rep_dir, buckets=8, **common))
+        report=rep_dir, **common))
 
     batch_dir = str(tmp_path / "batch_report")
     cmd_dqa(argparse.Namespace(

@@ -44,9 +44,9 @@ def _fold_in_two(spark, tmp_path, T, cfg=core.ENTRY_CFG):
     state = IncrementalDQAState.open(spark, str(tmp_path / "state"))
     split = F.abs(F.xxhash64("s")) % 2 == 0
     apply_delta(state, T.filter(split), cfg, core.ENTRY_VOCAB,
-                n_buckets=4, delta_id="d1")
+                delta_id="d1")
     apply_delta(state, T.filter(~split), cfg, core.ENTRY_VOCAB,
-                n_buckets=4, delta_id="d2")
+                delta_id="d2")
     return state
 
 
@@ -119,15 +119,16 @@ def test_apply_delta_idempotent_on_retry(spark, tmp_path):
     }
     split = F.abs(F.xxhash64("s")) % 2 == 0
     apply_delta(state, T.filter(~split), core.ENTRY_CFG, core.ENTRY_VOCAB,
-                n_buckets=4, delta_id="d2")  # retry of the second delta
+                delta_id="d2")  # retry of the second delta
     assert state.ps_counts.read().agg(F.sum("n")).first()[0] == before["n_triples"]
     assert state.mono_violations.read().count() == before["mono"]
     assert [len(t.snapshots()) for t in tables] == before["snaps"]
 
 
-def test_merge_commits_rewrite_only_touched_buckets(spark, tmp_path):
-    """A small second delta must leave the data files of untouched state
-    buckets byte-identical — the whole point of bucket-pruned commits."""
+def test_second_fold_leaves_state_files_byte_identical(spark, tmp_path):
+    """A second fold only appends a level: every ps_counts data file the
+    first fold wrote is still there, byte for byte, and the merged read
+    stays exact."""
     import glob
     import hashlib
     import os
@@ -135,8 +136,7 @@ def test_merge_commits_rewrite_only_touched_buckets(spark, tmp_path):
     T = core._triples(spark, SF).persist()
     state = IncrementalDQAState.open(spark, str(tmp_path / "state"))
     big = T.limit(20000)
-    apply_delta(state, big, core.ENTRY_CFG, core.ENTRY_VOCAB,
-                n_buckets=16, delta_id="d1")
+    apply_delta(state, big, core.ENTRY_CFG, core.ENTRY_VOCAB, delta_id="d1")
 
     def file_hashes():
         out = {}
@@ -147,20 +147,15 @@ def test_merge_commits_rewrite_only_touched_buckets(spark, tmp_path):
         return out
 
     before = file_hashes()
-    # a delta touching ONE subject → at most a couple of buckets
     one = T.filter(F.col("s") == T.select("s").first()["s"])
-    apply_delta(state, one, core.ENTRY_CFG, core.ENTRY_VOCAB,
-                n_buckets=16, delta_id="d2")
+    apply_delta(state, one, core.ENTRY_CFG, core.ENTRY_VOCAB, delta_id="d2")
     after = file_hashes()
     T.unpersist()
 
-    surviving = {k: v for k, v in before.items() if k in after}
-    assert surviving, "old data dirs must be carried by reference"
-    assert all(after[k] == v for k, v in surviving.items())
-    # most of the 16 buckets must be carried over untouched, not rewritten
-    assert len(surviving) >= 12, (len(surviving), len(before))
-    # and the merged view is still exact
-    assert (state.ps_counts.read().agg(F.sum("n")).first()[0]
+    assert before, "the first fold wrote no ps_counts data file"
+    assert {k: after.get(k) for k in before} == before
+    assert len(after) > len(before)  # the second fold's level
+    assert (state.merged("ps_counts").agg(F.sum("n")).first()[0]
             == big.unionByName(one).count())
 
 
@@ -342,7 +337,7 @@ def test_rescoring_caches_nothing(spark, tmp_path, monkeypatch):
         [("urn:s:new", "urn:p:hasSupplier", "urn:o:1", "iri", None, None)],
         T.schema)
     apply_delta(state, delta, core.ENTRY_CFG, core.ENTRY_VOCAB,
-                n_buckets=4, delta_id="d3")
+                delta_id="d3")
     assert calls == ["persist"]
     assert _cache_entries(spark) == entries_before
     assert set(dict(spark.sparkContext._jsc.getPersistentRDDs())) == rdds_before
@@ -381,14 +376,30 @@ def test_vacuum_bounds_state_and_preserves_idempotence(spark, tmp_path):
     # replaying a pre-vacuum delta is STILL a no-op
     split = F.abs(F.xxhash64("s")) % 2 == 0
     apply_delta(state, T.filter(split), core.ENTRY_CFG, core.ENTRY_VOCAB,
-                n_buckets=4, delta_id="d1")
+                delta_id="d1")
     assert state.ps_counts.read().agg(F.sum("n")).first()[0] == n_before
     assert all(len(t.snapshots()) <= 1 for t in state.tables().values())
 
     # and a genuinely NEW delta still applies after the vacuum
     apply_delta(state, T.filter(split).limit(0), core.ENTRY_CFG,
-                core.ENTRY_VOCAB, n_buckets=4, delta_id="d3")
+                core.ENTRY_VOCAB, delta_id="d3")
     assert state.ps_counts.read().agg(F.sum("n")).first()[0] == n_before
+
+    # a tiny first delta, then larger ones — the first epochs of a
+    # stream: the vacuum must still leave fewer files than it found
+    small = IncrementalDQAState.open(spark, str(tmp_path / "small"))
+    first = F.col("s") == T.select("s").first()["s"]
+    slot = F.abs(F.xxhash64("s")) % 3
+    deltas = [T.filter(first)] + [T.filter(~first & (slot == i))
+                                  for i in range(3)]
+    for i, delta in enumerate(deltas):
+        apply_delta(small, delta, core.ENTRY_CFG, core.ENTRY_VOCAB,
+                    delta_id=f"s{i}")
+    n_small = small.ps_counts.read().agg(F.sum("n")).first()[0]
+    files_before = dir_count(str(tmp_path / "small"))
+    small.vacuum(orphan_grace_s=0.0)
+    assert dir_count(str(tmp_path / "small")) < files_before
+    assert small.ps_counts.read().agg(F.sum("n")).first()[0] == n_small
 
 
 def test_apply_delta_dedups_within_delta(spark, tmp_path):
@@ -415,7 +426,7 @@ def test_apply_delta_dedups_within_delta(spark, tmp_path):
         [row, row],  # same triple asserted twice in one delta
         "s string, p string, o string, o_kind string, "
         "o_dtype string, o_lang string")
-    apply_delta(state, delta, cfg, terms, n_buckets=4, delta_id="d1")
+    apply_delta(state, delta, cfg, terms, delta_id="d1")
     prof = profile_from_state(state)
     assert prof.num_triples == 1
     v = violations_from_state(state, terms, cfg)
@@ -501,7 +512,7 @@ def test_incremental_matches_batch_on_random_splits(spark, data):
             delta_rows = [r for r, a in zip(rows, assign) if a == d]
             delta = spark.createDataFrame(delta_rows or [], T.schema)
             apply_delta(state, delta, core.ENTRY_CFG, core.ENTRY_VOCAB,
-                        n_buckets=4, delta_id=f"d{d}")
+                        delta_id=f"d{d}")
         inc_v = violations_from_state(
             state, core.ENTRY_VOCAB, core.ENTRY_CFG,
             disjoint_pairs=core.ENTRY_DISJOINT)

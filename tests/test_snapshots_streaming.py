@@ -233,23 +233,29 @@ def test_apply_in_pandas_with_state_totals(spark, tmp_path):
     assert g == e and len(g) > 0
 
 
-def test_snapshot_mixed_bucket_layouts_read_correctly(spark, tmp_path):
-    """Each commit dir is read with the layout it was WRITTEN with
-    (partition-spec evolution): an append chain mixing unbucketed and
-    bucketed commits — and layout survival across expire_snapshots —
-    must read back exactly."""
+def test_snapshot_append_with_other_layout_refused(spark, tmp_path):
+    """One layout per snapshot: an append whose bucket column or count
+    differs from the table's raises before it writes a data dir, and the
+    table reads back as before. An overwrite may lay the table out anew."""
+    import pytest
+
     ev = _events_subset(spark, 10).select(
         "event_id", "user_id", "event_type", "value")
     n = ev.count()
     t = SnapshotTable(spark, str(tmp_path / "tbl"), ev.schema)
-    t.commit_append(ev)                                     # unbucketed
-    t.commit_append(ev, bucket_col="user_id", n_buckets=4)  # bucketed
-    t.commit_append(ev, bucket_col="user_id", n_buckets=8)  # rebucketed
-    assert t.read().count() == 3 * n
+    t.commit_append(ev, bucket_col="user_id", n_buckets=4)
+    dirs = sorted(os.listdir(t.data_dir))
+    for layout in ({}, {"bucket_col": "event_id", "n_buckets": 4},
+                   {"bucket_col": "user_id", "n_buckets": 8}):
+        with pytest.raises(ValueError, match="laid out with"):
+            t.commit_append(ev, **layout)
+        assert sorted(os.listdir(t.data_dir)) == dirs, layout
+    assert t.read().count() == n and len(t.snapshots()) == 1
+    # an overwrite sets a new layout, and appends follow it
+    t.commit_overwrite(ev)
+    t.commit_append(ev)
+    assert t.read().count() == 2 * n
     assert t.read().columns == ev.columns                   # no _bucket leak
-    # expire old log records: kept snapshot still knows every dir's layout
-    t.expire_snapshots(keep_last=1)
-    assert t.read().count() == 3 * n
 
 
 def test_streaming_snapshot_epoch_keyed_per_run(spark, tmp_path):
@@ -315,7 +321,7 @@ def test_streaming_dqa_matches_batch_and_is_drain_idempotent(
     state = IncrementalDQAState.open(spark, str(tmp_path / "state"))
     start_streaming_dqa(
         spark, in_dir, state, core.ENTRY_CFG, core.ENTRY_VOCAB,
-        checkpoint_dir=str(tmp_path / "ckpt"), n_buckets=4,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     ).awaitTermination(300)
     # maintenance bounds history: every state table's log stays tiny no
     # matter how many epochs ran
@@ -344,7 +350,7 @@ def test_streaming_dqa_matches_batch_and_is_drain_idempotent(
                         "dom_pairs", "spo_pairs", "mono_violations")}
     start_streaming_dqa(
         spark, in_dir, state, core.ENTRY_CFG, core.ENTRY_VOCAB,
-        checkpoint_dir=str(tmp_path / "ckpt"), n_buckets=4,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     ).awaitTermination(180)
     after = {t: len(getattr(state, t).snapshots()) for t in before}
     assert after == before
@@ -434,36 +440,6 @@ def test_streaming_upsert_cdc(spark, tmp_path, monkeypatch):
         max_files_per_trigger=1,
     ).awaitTermination(120)
     assert {r["k"]: (r["n"], r["seq"]) for r in tbl.read().collect()} == got
-
-
-def test_sorted_compaction_clusters_files(spark, tmp_path):
-    """compact(sort_cols=...) rewrites with rows clustered inside each
-    file, so parquet row-group stats become tight (pruning-friendly)."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType([StructField("k", LongType(), False),
-                         StructField("v", LongType(), False)])
-    t = SnapshotTable(spark, str(tmp_path / "tbl"), schema)
-    # several appends of interleaved keys -> unclustered files
-    for lo in range(4):
-        t.commit_append(
-            spark.createDataFrame(
-                [(i * 4 + lo, i) for i in range(200)], schema),
-            bucket_col="k", n_buckets=4)
-    before = t.read().count()
-    assert t.compact(max_dirs=1, sort_cols=["k"]) is not None
-    assert t.read().count() == before
-    assert t.current()["sort_cols"] == ["k"]
-    dirname = t.current()["dirs"][0]
-    files = glob.glob(os.path.join(t.data_dir, dirname, "**", "*.parquet"),
-                      recursive=True)
-    assert files
-    for f in files:
-        ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
-        assert ks == sorted(ks), f
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
@@ -865,7 +841,7 @@ def test_expire_snapshots_waits_for_commit_lock(spark, tmp_path):
         _time.sleep(0.8)  # expire must be blocked on the flock meanwhile
         f.write('{"snapshot_id": "feedfacefeedface", "parent_id": null, '
                 '"ts": 0, "operation": "append", "dirs": [], '
-                '"dir_layouts": {}, "bucket_col": null, "n_buckets": null}'
+                '"bucket_col": null, "n_buckets": null}'
                 "\n")
         f.flush()
         appended.set()
@@ -952,11 +928,10 @@ def test_streaming_neardup_default_schema_and_no_self_pairs(spark, tmp_path):
 
 
 def test_mixed_bucket_counts_rejected(spark, tmp_path):
-    """A bucket-pruned MERGE over a mixed-n_buckets chain must be refused
-    per dir (review finding): computing changed buckets mod 16 over a dir
-    written with 32 silently misses rows in leaves 16..31, then masks
-    them forever via dir_buckets. Mixed-count APPEND chains themselves
-    stay legal and readable (per-dir layout resolution)."""
+    """A 32-bucket table refuses a 16-bucket append and a 16-bucket
+    MERGE before either writes a data dir: buckets computed mod 16 over
+    leaves written mod 32 would silently miss rows, then mask them forever
+    via dir_buckets. The table reads back as before."""
     import pytest
     from pyspark.sql.types import (
         IntegerType,
@@ -970,15 +945,15 @@ def test_mixed_bucket_counts_rejected(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"), schema)
     t.commit_append(spark.createDataFrame([("a", 1)], schema),
                     bucket_col="k", n_buckets=32)
-    # a mixed-count append chain stays READABLE (read resolves each dir
-    # with its own layout — pinned by the mixed-layouts read test), but a
-    # bucket-pruned MERGE over it is rejected per dir
-    t.commit_append(spark.createDataFrame([("d", 4)], schema),
-                    bucket_col="k", n_buckets=16)
-    assert t.read().count() == 2
-    with pytest.raises(ValueError, match="was written with n_buckets"):
-        t.merge_upsert(spark.createDataFrame([("a", 9)], schema), "k",
-                       n_buckets=16)
+    dirs = sorted(os.listdir(t.data_dir))
+    d = spark.createDataFrame([("d", 4)], schema)
+    with pytest.raises(ValueError, match="n_buckets=32"):
+        t.commit_append(d, bucket_col="k", n_buckets=16)
+    with pytest.raises(ValueError, match="n_buckets=32"):
+        t.commit_merge_buckets(d, [0], bucket_col="k", n_buckets=16)
+    assert sorted(os.listdir(t.data_dir)) == dirs
+    assert [tuple(r) for r in t.read().collect()] == [("a", 1)]
+    assert len(t.snapshots()) == 1
 
 
 def test_schema_survives_merge_then_expire(spark, tmp_path):

@@ -61,7 +61,7 @@ def _deltas(spark, k: int):
 def _fold(state, deltas, first: int = 0) -> None:
     for i, delta in enumerate(deltas, start=first):
         apply_delta(state, delta, core.ENTRY_CFG, core.ENTRY_VOCAB,
-                    n_buckets=4, delta_id=f"d{i}")
+                    delta_id=f"d{i}")
 
 
 def _score(state):
