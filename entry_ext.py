@@ -3,7 +3,7 @@ SURVEY.md §2 operator families not covered by the core set in
 __spark_entry__.py — the remaining C* constraint families (C1, C7-C22,
 C26, C28), metadata shapes C33-C36, vocabulary shapes C37-C40, profiling
 B8/B9, TBox merge B11, and the construction operators E1-E8 (span explode,
-pandas-UDF extraction, broadcast+salted linking, connected components,
+Arrow-batched extraction, broadcast linking, connected components,
 invariant) plus multimodal plumbing.
 
 Everything oracled runs the REAL engine operators on the Spark side; the
@@ -478,7 +478,7 @@ def ext_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [(docs.count(), bad.count())], "n_docs long, n_bad long")
     q["kg_span_invariant"] = span_invariant
 
-    # --- E2 extraction (pandas-UDF path) ----------------------------------
+    # --- E2 extraction (mapInArrow path) ----------------------------------
     def extract(spark, sf_dir):
         m = extract_fact_mentions(_interleaved(spark, sf_dir))
         return m.select(F.col("doc_id").cast("long").alias("doc_id"),

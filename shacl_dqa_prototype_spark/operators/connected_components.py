@@ -102,12 +102,16 @@ def connected_components(
     (< ``driver_threshold`` rows ≈ tens of MB), a single collect + local
     union-find replaces 4-6 distributed rounds; above it, the
     large-star/small-star fixpoint runs — the path that scales to graphs
-    that never fit one machine."""
+    that never fit one machine. The edge count that picks the path is an
+    observe() on the eager localCheckpoint of the deduped edges, so the
+    choice costs no job of its own."""
     from pyspark.sql import Observation
 
     spark = edges.sparkSession
-    cur = _symmetrize(edges).localCheckpoint(eager=True)
-    n_edges = cur.count()
+    obs = Observation("cc-edges")
+    cur = _symmetrize(edges).observe(
+        obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    n_edges = obs.get["n"]
     if n_edges <= driver_threshold:
         # Arrow both ways: a Row-object collect() + createDataFrame(list)
         # costs tens of driver-seconds per million rows — measured as the

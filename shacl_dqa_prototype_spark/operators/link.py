@@ -4,23 +4,26 @@ north_star: "link mentions via broadcast candidate dictionary + salted
 hash-join disambiguation scoring".
 
 Plan shape (all native DataFrame ops, zero Python), tuned so the big
-(mention-cardinality) data crosses the network exactly twice:
+(mention-cardinality) data crosses the network exactly once:
 
   mentions → long format (role s/o; fact payload rides the s-rows)
     ⋈ F.broadcast(dictionary ⊕ per-surface candidate counts)   -- E3,
       candidate fan-out AND ambiguity degree in one broadcast lookup
       (a per-mention count(*) window would cost an extra shuffle)
-    → shuffle 1: coherence window over (doc_id, candidate) — does the
-      candidate appear unambiguously elsewhere in this doc?
-    → shuffle 2: ONE hash aggregate over the mention key that does top-1
-      per role (conditional min_by over struct(-score, candidate) — no
-      row_number sort) AND the s/o reassembly → (s_iri, o_iri, payload)
+    → THE shuffle, by doc_id, then with no further exchange:
+      coherence window over (doc_id, candidate) — does the candidate
+      appear unambiguously elsewhere in this doc? — and ONE hash
+      aggregate over the mention key that does top-1 per role
+      (conditional min_by over struct(-score, candidate) — no row_number
+      sort) AND the s/o reassembly → (s_iri, o_iri, payload)
 
-  popularity = docs-per-entity as a plain count_distinct, broadcast back.
-  Spark plans it as a two-phase aggregate whose first shuffle keys on
-  (candidate, doc_id), so the hot entity's rows already spread over many
-  reducers; an explicit salt on doc_id measured slower with the same
-  result (E4 skew handling rests on that rewrite and AQE).
+  popularity = docs-per-entity as a plain count_distinct, broadcast and
+  joined on the reduce side of the shuffle, so its aggregate runs beside
+  that shuffle's map stage rather than before it. Spark plans it as a
+  two-phase aggregate whose first shuffle keys on (candidate, doc_id), so
+  the hot entity's rows already spread over many reducers; an explicit
+  salt on doc_id measured slower with the same result (E4 skew handling
+  rests on that rewrite and AQE).
 
 Surfaces missing from the dictionary pass through as mint-IRI fallbacks so
 recall never silently drops rows.
@@ -92,7 +95,7 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     # The cheap second pass assumes ``mentions`` reads a snapshot, as in
     # the construction pipeline. A caller that passes a live extraction
     # plan (e.g. the kg_link_entities contract entry in entry_ext.py) pays
-    # a second run of the pandas-UDF extraction; persist or snapshot the
+    # a second run of the mapInArrow extraction; persist or snapshot the
     # mentions first where that matters.
     # E4 — popularity feature (docs per candidate), broadcast back
     popularity = cands.groupBy("candidate").agg(
@@ -101,11 +104,13 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     # THE one full shuffle of the mention stream: co-partition by doc_id.
     # HashPartitioning(doc_id) satisfies ClusteredDistribution for BOTH the
     # coherence window (doc_id, candidate) AND the final per-mention-key
-    # groupBy (key starts with doc_id), so neither adds another exchange —
-    # check .explain(): exactly one Exchange on this path.
-    cands = cands.join(F.broadcast(popularity), "candidate", "left").repartition(
-        F.col("doc_id")
-    )
+    # groupBy (key starts with doc_id), so neither adds another exchange
+    # (tests/test_construction.py checks the plan). The popularity joins
+    # AFTER the shuffle: the broadcast is then needed only by the reduce
+    # side, so its aggregate runs beside the shuffle's map stage instead
+    # of before it.
+    cands = cands.repartition(F.col("doc_id")).join(
+        F.broadcast(popularity), "candidate", "left")
 
     # context coherence over (doc_id, candidate) — no extra shuffle
     coh_w = Window.partitionBy("doc_id", "candidate")

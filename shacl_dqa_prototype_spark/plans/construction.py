@@ -22,6 +22,7 @@ from shacl_dqa_prototype_spark.operators.connected_components import (
 )
 from shacl_dqa_prototype_spark.operators.extract import extract_mentions
 from shacl_dqa_prototype_spark.operators.link import link_mentions, mentions_to_triples
+from shacl_dqa_prototype_spark.schemas import MENTIONS_SCHEMA, TRIPLES_SCHEMA
 from shacl_dqa_prototype_spark.sources.sinks import Manifest, read_triples, write_triples
 
 
@@ -53,12 +54,12 @@ def run_construction(
     run, resumed = [], []
     stage_seconds: dict[str, float] = {}
 
-    def stage(name: str, compute, path: str, writer=None, reader=None) -> DataFrame:
+    def stage(name: str, compute, path: str, read, writer=None) -> DataFrame:
         import time as _time
 
         if resume and manifest.committed(name):
             resumed.append(name)
-            return (reader or (lambda: spark.read.parquet(path)))()
+            return read()
         _t0 = _time.time()
         # Manifest counters ride the write job via observe() — zero extra
         # actions per stage (a per-stage count() would double the job count).
@@ -82,19 +83,26 @@ def run_construction(
         run.append(name)
         if stop_after == name:
             raise InterruptedError(f"simulated crash after stage {name}")
-        return (reader or (lambda: spark.read.parquet(path)))()
+        return read()
+
+    def parquet(path: str, schema):
+        # the stage's known schema: a schema-less read-back costs one
+        # footer-inference job per stage
+        return lambda: spark.read.schema(schema).parquet(path)
 
     mentions_path = os.path.join(workdir, "mentions.parquet")
     linked_path = os.path.join(workdir, "linked_triples.parquet")
     ccmap_path = os.path.join(workdir, "cc_mapping.parquet")
     triples_path = os.path.join(workdir, "triples.parquet")
 
-    mentions = stage("extract", lambda: extract_mentions(documents), mentions_path)
+    mentions = stage("extract", lambda: extract_mentions(documents),
+                     mentions_path, parquet(mentions_path, MENTIONS_SCHEMA))
 
     linked = stage(
         "link",
         lambda: mentions_to_triples(link_mentions(mentions, dictionary)),
         linked_path,
+        parquet(linked_path, TRIPLES_SCHEMA),
     )
 
     # Equivalence edges for canonicalization come from sameAs triples.
@@ -106,6 +114,7 @@ def run_construction(
             )
         ),
         ccmap_path,
+        parquet(ccmap_path, "node string, component string"),
     )
 
     stage(
@@ -114,8 +123,8 @@ def run_construction(
             linked.filter(F.col("p") != P_SAME_AS), ccmap
         ),
         triples_path,
+        lambda: read_triples(spark, triples_path),
         writer=lambda df: write_triples(df, triples_path, n_buckets),
-        reader=lambda: read_triples(spark, triples_path),
     )
 
     return PipelineResult(triples_path, run, resumed, stage_seconds)

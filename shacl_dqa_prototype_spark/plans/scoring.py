@@ -52,12 +52,15 @@ def violation_counts(violations: DataFrame) -> DataFrame:
     D2/D3 numerator and the D5 sample list, one row per shape that has
     violations.
 
-    Two-level aggregation keeps reducer state bounded: each salt bucket
-    contributes an exact sub-count plus its local smallest-K sample; the
-    final merge sums counts and re-sorts at most K × #buckets strings.
-    A single collect_set over the group (the naive plan) would buffer
-    EVERY distinct violation of a metric in one reducer — unbounded at
-    100 TB. The salt must be DETERMINISTIC (a hash of focus, not
+    Two-level aggregation spreads a metric's samples over salt buckets:
+    each (metric, item, salt) group contributes an exact sub-count plus
+    its local smallest-K sample; the final merge sums counts and re-sorts
+    at most K × #buckets strings. The first level still collect_lists
+    EVERY distinct focus of its bucket before slicing to K, so a reducer
+    holds about 1/n_buckets of a metric's violations — split
+    n_buckets ways, not bounded by K. A single collect_set over the group
+    (the naive plan) would buffer all of them in one reducer. The salt
+    must be DETERMINISTIC (a hash of focus, not
     spark_partition_id): nondeterministic expressions make the plan fail
     sameResult checks, so downstream queries would never hit a cache of
     this DF and silently re-aggregate."""

@@ -567,16 +567,30 @@ class SnapshotTable:
         before they are rewritten — a merge-on-read table (plans/
         incremental.py: a base plus appended levels, merged by a per-table
         rule when read) passes its rule, so the compacted base holds the
-        merged rows and reads back the same."""
+        merged rows and reads back the same. Without ``merge`` the rows are
+        rewritten as they are, coalesced to ceil(data bytes /
+        ``spark.sql.files.maxPartitionBytes``) part files, at least one —
+        the read alone would give one part file per input split, however
+        small."""
         snap = self.current()
         if snap is None or len(snap["dirs"]) <= max_dirs:
             return None
         rows = self.read(snap["snapshot_id"])
+        if merge:
+            rows = merge(rows)
+        else:
+            size = sum(os.path.getsize(os.path.join(root, f))
+                       for p in self._resolve_paths(snap)
+                       for root, _, files in os.walk(p)
+                       for f in files if f.endswith(".parquet"))
+            split = self.spark._jsparkSession.sessionState().conf() \
+                .filesMaxPartitionBytes()
+            rows = rows.coalesce(max(1, -(-size // split)))
         # the rewrite is derived from `snap`, so the commit is PINNED to
         # it: a concurrent append must win over the compaction (which the
         # caller just re-runs later), never be clobbered by it
         return self._commit(
-            merge(rows) if merge else rows, "overwrite",
+            rows, "overwrite",
             snap.get("bucket_col"), snap.get("n_buckets") or 32,
             extra={"compacted_from": len(snap["dirs"]), **(extra or {})},
             expected_parent=snap)

@@ -3,22 +3,34 @@ manifest resume (SURVEY.md §5.2 items 1, 4, 6)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from shacl_dqa_prototype_spark.datagen import (
     GenConfig,
+    P_DEPICTED_IN,
     P_SAME_AS,
+    RDF_LANGSTRING,
+    XSD_DATE,
     dup_iri,
     entity_dictionary,
     entity_iri,
     expected_triples,
     generate_documents,
 )
-from shacl_dqa_prototype_spark.operators.extract import explode_spans, extract_mentions
+from shacl_dqa_prototype_spark.operators.extract import (
+    EXTRACTION_PATTERNS,
+    explode_spans,
+    extract_fact_mentions,
+    extract_mentions,
+)
 from shacl_dqa_prototype_spark.operators.invariant import invariant_violations
 from shacl_dqa_prototype_spark.operators.connected_components import connected_components
+from shacl_dqa_prototype_spark.operators.link import link_mentions
 from shacl_dqa_prototype_spark.plans.construction import run_construction
+from shacl_dqa_prototype_spark.schemas import DOCUMENTS_SCHEMA
 
 CFG = GenConfig(n_docs=300, n_entities=60, seed=42)
 
@@ -123,3 +135,149 @@ def test_invariant_empty_spans_doc_passes(spark):
          ("d_one", [("text", "hello", None, 0)])], DOCUMENTS_SCHEMA)
     v = invariant_violations(docs, explode_spans(docs))
     assert v.count() == 0
+
+
+# Each doc is one extraction edge case; spans are (kind, text, media_ref,
+# offset) with span_pos = list position.
+EDGE_DOCS = [
+    ("media_first", [("image", None, "img://1", 0),
+                     ("text", "Alice is topped with Bob.", None, 1),
+                     ("text", "Alice was created on 2020-01-02.", None, 2)]),
+    ("media_no_fact", [("text", "Nothing to see here.", None, 0),
+                       ("video", None, "vid://2", 1)]),
+    ("empty", []),
+    ("null_text", [("text", None, None, 0),
+                   ("text", "Carol is located in Paris.", None, 1),
+                   ("audio", None, "aud://3", 2),
+                   ("image", None, None, 3)]),
+    ("no_match", [("text", "Dave is topped with Eve", None, 0),
+                  ("text", "Just a sentence.", None, 1),
+                  ("image", None, "img://4", 2)]),
+    ("all_kinds", [("text", 'Frank is labeled "Le Frank"@fr.', None, 0),
+                   ("text", "Gus is the same as Frank.", None, 1),
+                   ("text", "Hal was created on 1999-12-31.", None, 2),
+                   ("text", "Ivy is located in Rome.\n", None, 3),
+                   ("video", None, "vid://5", 4)]),
+    # one span matching two patterns: the first subject is the one of the
+    # lower pattern ordinal (topped, 0), not of located (1)
+    ("two_facts_one_span", [("text", "Jo is located in Oslo is topped with Kim.",
+                             None, 0),
+                            ("image", None, "img://6", 1)]),
+]
+
+
+def _reference_mentions(docs, with_media: bool) -> set[tuple]:
+    """Pure-Python E2: every pattern's regex on every text span, then each
+    media span attached to its doc's first fact subject."""
+    out = set()
+    for doc_id, spans in docs:
+        facts = []
+        for pos, (kind, text, _, _) in enumerate(spans):
+            if kind != "text" or text is None:
+                continue
+            for k, (pred, rx, role, dtype, _) in enumerate(EXTRACTION_PATTERNS):
+                m = re.search(rx, text)
+                if not m:
+                    continue
+                g = m.groupdict()
+                entity = role == "entity"
+                facts.append((doc_id, pos, k, g["subj"], pred,
+                              g["obj"] if entity else None,
+                              None if entity else g["obj"],
+                              dtype, g.get("lang")))
+        out.update(facts)
+        if with_media and facts:
+            first = min(facts, key=lambda f: (f[1], f[2]))[3]
+            out.update((doc_id, pos, 0, first, P_DEPICTED_IN, None, ref, None, None)
+                       for pos, (kind, _, ref, _) in enumerate(spans)
+                       if kind != "text")
+    return out
+
+
+def test_extraction_kernel_matches_python_reference(spark):
+    """extract_mentions / extract_fact_mentions equal the pure-Python
+    reference on the edge-case docs, with two docs per Arrow batch so the
+    docs spread over many batches, and every span_pos is the position
+    explode_spans gives that span."""
+    docs = spark.createDataFrame(EDGE_DOCS, DOCUMENTS_SCHEMA)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = {f: {tuple(r) for r in f(docs).collect()}
+               for f in (extract_mentions, extract_fact_mentions)}
+        spans = {(r["doc_id"], r["span_pos"]): r
+                 for r in explode_spans(docs).collect()}
+    finally:
+        spark.conf.set(key, old)
+    want = _reference_mentions(EDGE_DOCS, with_media=True)
+    assert got[extract_mentions] == want
+    assert got[extract_fact_mentions] == _reference_mentions(EDGE_DOCS, False)
+    # the edge cases are all exercised
+    assert {m[0] for m in want if m[4] == P_DEPICTED_IN} == {
+        "media_first", "null_text", "all_kinds", "two_facts_one_span"}
+    assert {m[7] for m in want} == {None, XSD_DATE, RDF_LANGSTRING}
+    for doc_id, pos, _, subj, pred, _, lit, _, _ in want:
+        span = spans[(doc_id, pos)]
+        if pred == P_DEPICTED_IN:
+            assert span["kind"] != "text" and span["media_ref"] == lit
+        else:
+            assert span["kind"] == "text" and span["text"].startswith(subj)
+
+
+def test_extraction_prefilter_literal_is_in_its_regex():
+    """Each pattern's prefilter literal is a plain string that occurs
+    verbatim in its alternation-free regex, so every match contains it and
+    the prefilter cannot drop a match."""
+    for pred, rx, _, _, literal in EXTRACTION_PATTERNS:
+        assert literal and not set(literal) & set(r".^$*+?{}[]\|()"), pred
+        assert literal in rx and "|" not in rx, pred
+    for _, spans in EDGE_DOCS:
+        for _, text, _, _ in spans:
+            for _, rx, _, _, literal in EXTRACTION_PATTERNS:
+                if text is not None and re.search(rx, text):
+                    assert literal in text
+
+
+def _plan_nodes(plan, skip: str | None = None) -> list:
+    """Every node of a physical plan, without the subtrees under ``skip``
+    nodes (by class name)."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == skip:
+            continue
+        nodes.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_extraction_plan_is_one_narrow_map(spark):
+    """extract_mentions is one mapInArrow over the documents: its executed
+    plan has no Exchange, Aggregate or Join."""
+    m = extract_mentions(spark.createDataFrame(EDGE_DOCS, DOCUMENTS_SCHEMA))
+    m.collect()
+    plan = m._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    for op in ("Exchange", "Aggregate", "Join"):
+        assert op not in plan, plan
+
+
+def test_link_main_path_has_one_exchange(spark):
+    """link_mentions shuffles the mention stream once (by doc_id), and the
+    popularity aggregate joins after that shuffle, not before it: off the
+    broadcast sides there is one ShuffleExchange, and nothing below it
+    aggregates."""
+    mentions = extract_mentions(spark.createDataFrame(EDGE_DOCS, DOCUMENTS_SCHEMA))
+    dictionary = spark.createDataFrame(
+        [("Alice", "ex:alice", 0.9), ("Alice", "ex:alice2", 0.1),
+         ("Paris", "ex:paris", 1.0)], "surface string, candidate string, prior double")
+    plan = link_mentions(mentions, dictionary)._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    main = _plan_nodes(plan, skip="BroadcastExchangeExec")
+    shuffles = [n for n in main if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert len(shuffles) == 1, plan.toString()
+    below = {n.getClass().getSimpleName() for n in _plan_nodes(shuffles[0])}
+    assert not any("Aggregate" in n for n in below), plan.toString()

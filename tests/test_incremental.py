@@ -400,6 +400,12 @@ def test_vacuum_bounds_state_and_preserves_idempotence(spark, tmp_path):
     small.vacuum(orphan_grace_s=0.0)
     assert dir_count(str(tmp_path / "small")) < files_before
     assert small.ps_counts.read().agg(F.sum("n")).first()[0] == n_small
+    # the row-tier log has no merge rule: its compaction is sized by
+    # bytes, so four small levels come out as one part file
+    (log_dir,) = small.mono_violations.current()["dirs"]
+    parts = [f for f in os.listdir(os.path.join(
+        small.mono_violations.data_dir, log_dir)) if f.startswith("part-")]
+    assert len(parts) == 1, parts
 
 
 def test_apply_delta_dedups_within_delta(spark, tmp_path):
