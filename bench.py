@@ -236,9 +236,10 @@ def _corpus(n_docs: int, flat: bool = False):
 @contextmanager
 def _kg(tag: str, corpus: tuple[str, GenConfig], cores: int = CPUS):
     """A fresh session holding the KG constructed from ``corpus`` (as
-    _corpus yields it) in a temp workdir: yields (spark, workdir,
-    n_triples, construction seconds, per-stage seconds). The triple count
-    is outside the timer; the workdir goes with the session."""
+    _corpus yields it) in a temp workdir: yields (spark, workdir, the
+    committed triples dir, n_triples, construction seconds, per-stage
+    seconds). The triple count is outside the timer; the workdir goes
+    with the session."""
     docs_path, cfg = corpus
     wd = tempfile.mkdtemp(prefix=f"bench_{tag}_")
     with _session(f"{tag}-{cores}", wd, cores=cores) as spark:
@@ -249,7 +250,7 @@ def _kg(tag: str, corpus: tuple[str, GenConfig], cores: int = CPUS):
         res = run_construction(spark, docs, dictionary, wd, n_buckets=32)
         sec = time.time() - t0
         n_triples = read_triples(spark, res.triples_path).count()
-        yield spark, wd, n_triples, sec, res.stage_seconds
+        yield spark, wd, res.triples_path, n_triples, sec, res.stage_seconds
 
 
 def _datagen_vocab_cfg():
@@ -300,12 +301,11 @@ def _construction_run(cores: int, corpus: tuple[str, GenConfig],
     "phases"}; the phase split shows where non-scaling (serial/driver)
     time sits at each parallelism level, down to the construction stage
     (extract/link/canonicalize/materialize)."""
-    with _kg("construct", corpus, cores) as (spark, wd, n, t_construct,
+    with _kg("construct", corpus, cores) as (spark, wd, kg, n, t_construct,
                                              stages):
         t0 = time.time()
         if with_dqa:
-            _run_dqa(spark, os.path.join(wd, "triples.parquet"),
-                     os.path.join(wd, "report"))
+            _run_dqa(spark, kg, os.path.join(wd, "report"))
         t_dqa = time.time() - t0
     return {"sec": t_construct + t_dqa, "n_triples": n,
             "phases": {"construct_sec": round(t_construct, 2),
@@ -399,10 +399,9 @@ def _dqa_throughput() -> dict:
     evaluation + scoring + report write."""
     n_docs = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", 8_000_000))
     with _corpus(n_docs) as corpus, \
-            _kg("dqa", corpus) as (spark, wd, n_t, *_):
+            _kg("dqa", corpus) as (spark, wd, kg, n_t, *_):
         t0 = time.time()
-        _run_dqa(spark, os.path.join(wd, "triples.parquet"),
-                 os.path.join(wd, "report"))
+        _run_dqa(spark, kg, os.path.join(wd, "report"))
         sec = time.time() - t0
     return {
         "cores": CPUS,
@@ -436,14 +435,14 @@ def _streaming() -> dict:
 
     n_docs = int(os.environ.get("SPARK_GRAFT_STREAM_DOCS", 200_000))
     with _corpus(n_docs) as corpus, \
-            _kg("stream", corpus) as (spark, wd, n_t, *_):
+            _kg("stream", corpus) as (spark, wd, kg, n_t, *_):
         vocab, dqa_cfg = _datagen_vocab_cfg()
         state_dir = os.path.join(wd, "state")
         state = IncrementalDQAState.open(spark, state_dir)
         t0 = time.time()
         start_streaming_dqa(
-            spark, os.path.join(wd, "triples.parquet"), state, dqa_cfg,
-            vocab, checkpoint_dir=os.path.join(wd, "ckpt"),
+            spark, kg, state, dqa_cfg, vocab,
+            checkpoint_dir=os.path.join(wd, "ckpt"),
             max_files_per_trigger=4,
         ).awaitTermination()
         sd_sec = time.time() - t0
@@ -596,8 +595,8 @@ def _incremental() -> dict:
     n_in = int(os.environ.get("SPARK_GRAFT_INC_DOCS", 1_000_000))
     k_deltas = int(os.environ.get("SPARK_GRAFT_INC_DELTAS", 10))
     with _corpus(n_in) as corpus, \
-            _kg("inc", corpus) as (spark, wd, n_t, *_):
-        T = read_triples(spark, os.path.join(wd, "triples.parquet"))
+            _kg("inc", corpus) as (spark, wd, kg, n_t, *_):
+        T = read_triples(spark, kg)
         vocab, dqa_cfg = _datagen_vocab_cfg()
         state = IncrementalDQAState.open(spark, os.path.join(wd, "state"))
         slot = F.pmod(F.xxhash64("s", "p", "o"), F.lit(k_deltas))

@@ -8,11 +8,14 @@ Engine equivalent of the reference CLI (/root/reference/main.py:59-75,
     spark-submit --py-files engine.zip main.py dqa \
         --triples kg/triples.parquet --vocab pizza.xml --metadata void.ttl \
         --base-uri http://example.org/pizza# --output results/
-    spark-submit --py-files engine.zip main.py pipeline ... (both stages)
 
-`construct` resumes from the last committed snapshot in --workdir
-(manifest-driven; kill it and re-run with the same workdir). `dqa` emits
-the reference-shaped report CSV + JSON plus a profile JSON.
+`construct` resumes from the last committed snapshot in --workdir: each
+stage writes a fresh dir under its stage path, then one durable line in
+`manifest.jsonl` names it, so a killed run leaves only an unnamed dir and
+a re-run with the same workdir reads what the last lines name. A finished
+workdir holds one dir per stage, so `<workdir>/triples.parquet` reads as
+the KG. `dqa` emits the reference-shaped report CSV + JSON plus a profile
+JSON.
 
 Packaging: `python main.py --make-pyfiles engine.zip` zips the package for
 --py-files; on the sandbox the repo dir on PYTHONPATH works as-is.
@@ -267,10 +270,7 @@ def cmd_dqa(args) -> None:
         if args.triples.endswith(".parquet") or os.path.isdir(args.triples):
             from shacl_dqa_prototype_spark.sources.sinks import read_triples
 
-            try:
-                T_raw = read_triples(spark, args.triples)
-            except Exception:
-                T_raw = spark.read.parquet(args.triples)
+            T_raw = read_triples(spark, args.triples)
         else:
             T_raw, _ = _read_rdf(spark, args.triples,
                                  getattr(args, "triples_format", None))

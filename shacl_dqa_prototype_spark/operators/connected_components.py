@@ -166,26 +166,23 @@ def connected_components(
     return cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
 
 
-def canonicalize_triples(triples: DataFrame, mapping: DataFrame,
-                         force_broadcast: bool = False) -> DataFrame:
+def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subject and IRI-object columns through the CC mapping;
     identity for unmapped nodes.
 
     The mapping covers only nodes with equivalence edges — usually tiny
     relative to T, so the planner (parquet size stats + AQE runtime stats)
-    picks a broadcast join on its own. The hint is NOT forced by default:
-    at 10^12-doc scale an equivalence map can exceed executor memory, and
-    a hard-coded broadcast hint would OOM exactly where a shuffle join
-    (both sides hashed on the node id) still works. ``force_broadcast``
-    restores the hint for callers that know their map is bounded."""
-    m = F.broadcast(mapping) if force_broadcast else mapping
+    picks a broadcast join on its own. The hint is NOT forced: at
+    10^12-doc scale an equivalence map can exceed executor memory, and a
+    hard-coded broadcast hint would OOM exactly where a shuffle join (both
+    sides hashed on the node id) still works."""
     t = (
-        triples.join(m.withColumnsRenamed({"node": "s", "component": "s_canon"}), "s", "left")
+        triples.join(mapping.withColumnsRenamed({"node": "s", "component": "s_canon"}), "s", "left")
         .withColumn("s", F.coalesce("s_canon", "s"))
         .drop("s_canon")
     )
     t = (
-        t.join(m.withColumnsRenamed({"node": "o", "component": "o_canon"}), "o", "left")
+        t.join(mapping.withColumnsRenamed({"node": "o", "component": "o_canon"}), "o", "left")
         .withColumn(
             "o",
             F.when(F.col("o_kind") == "iri", F.coalesce("o_canon", "o")).otherwise(F.col("o")),

@@ -1,18 +1,25 @@
 """Staged KG-construction pipeline: documents → mentions → linked →
 canonicalized triples, each stage committed to the manifest (E6/E7).
 
-Resume protocol: a stage whose manifest row is committed and whose parquet
-snapshot exists is NOT recomputed — the pipeline reads the snapshot and
-continues. This is the sandbox rendering of "resume from the last committed
-Iceberg snapshot" (north_rule); tests kill between stages and re-run.
+Commit rule (the one sources/snapshots.py defines): a stage writes a fresh
+dir under its stage path, ``<workdir>/triples.parquet/<commit id>/``, then
+one durable manifest line names it. A run killed mid-write leaves only an
+unnamed dir; resume reads the dir a stage's last line names — the sandbox
+rendering of "resume from the last committed Iceberg snapshot"
+(north_rule). Committing or resuming a stage removes every other entry
+under its stage path (a superseded commit, a crashed run's dir), so a
+finished workdir holds one dir per stage. One writer per workdir.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from shacl_dqa_prototype_spark.datagen import P_SAME_AS
@@ -23,12 +30,13 @@ from shacl_dqa_prototype_spark.operators.connected_components import (
 from shacl_dqa_prototype_spark.operators.extract import extract_mentions
 from shacl_dqa_prototype_spark.operators.link import link_mentions, mentions_to_triples
 from shacl_dqa_prototype_spark.schemas import MENTIONS_SCHEMA, TRIPLES_SCHEMA
-from shacl_dqa_prototype_spark.sources.sinks import Manifest, read_triples, write_triples
+from shacl_dqa_prototype_spark.sources.sinks import Manifest, write_triples
+from shacl_dqa_prototype_spark.sources.snapshots import dir_writer
 
 
 @dataclass
 class PipelineResult:
-    triples_path: str
+    triples_path: str  # the committed materialize dir
     stages_run: list[str]
     stages_resumed: list[str]
     # wall seconds per executed stage (resumed stages absent) — the
@@ -48,83 +56,73 @@ def run_construction(
 ) -> PipelineResult:
     """Run (or resume) the full construction DAG.
 
-    ``stop_after`` simulates a crash after the named stage (for resume
-    tests). Each stage writes parquet + a manifest commit."""
+    ``stop_after`` simulates a crash after the named stage commits (for
+    resume tests)."""
     manifest = Manifest(workdir)
     run, resumed = [], []
     stage_seconds: dict[str, float] = {}
 
-    def stage(name: str, compute, path: str, read, writer=None) -> DataFrame:
-        import time as _time
-
-        if resume and manifest.committed(name):
+    def stage(name: str, dirname: str, compute,
+              write=lambda df, path: dir_writer(df).parquet(path)) -> str:
+        """The committed dir of stage ``name``: resumed or written."""
+        root = os.path.join(workdir, dirname)
+        path = manifest.committed(name) if resume else None
+        # a dir outside the stage path (an older fixed-path layout) is
+        # recomputed: the clean-up below would empty it
+        if path and os.path.dirname(path) == root:
             resumed.append(name)
-            return read()
-        _t0 = _time.time()
-        # Manifest counters ride the write job via observe() — zero extra
-        # actions per stage (a per-stage count() would double the job count).
-        from pyspark.sql import Observation
-
-        obs = Observation(f"stage:{name}")
-        df = compute().observe(obs, F.count(F.lit(1)).alias("rows"))
-        if writer:
-            writer(df)
         else:
-            df.write.mode("overwrite").parquet(path)
-        metrics = obs.get
-        # partition count from the committed files — pure metadata, no job
-        n_parts = sum(
-            1 for root, _, files in os.walk(path)
-            for f in files if f.endswith(".parquet")
-        )
-        manifest.commit(name, rows=metrics["rows"] or 0, partitions=n_parts,
-                        payload={"path": path})
-        stage_seconds[name] = round(_time.time() - _t0, 2)
-        run.append(name)
-        if stop_after == name:
+            t0 = time.time()
+            path = os.path.join(root, uuid.uuid4().hex[:16])
+            # Manifest counters ride the write job via observe() — zero
+            # extra actions per stage (a per-stage count() would double
+            # the job count).
+            obs = Observation(f"stage:{name}")
+            write(compute().observe(obs, F.count(F.lit(1)).alias("rows")),
+                  path)
+            # partition count from the written files — pure metadata, no job
+            n_parts = sum(
+                1 for _, _, files in os.walk(path)
+                for f in files if f.endswith(".parquet")
+            )
+            manifest.commit(name, rows=obs.get["rows"] or 0,
+                            partitions=n_parts, payload={"path": path})
+            stage_seconds[name] = round(time.time() - t0, 2)
+            run.append(name)
+        for other in (os.path.join(root, e) for e in os.listdir(root)):
+            if other != path:
+                (shutil.rmtree if os.path.isdir(other) else os.remove)(other)
+        if stop_after == name and name in run:
             raise InterruptedError(f"simulated crash after stage {name}")
-        return read()
+        return path
 
-    def parquet(path: str, schema):
-        # the stage's known schema: a schema-less read-back costs one
-        # footer-inference job per stage
-        return lambda: spark.read.schema(schema).parquet(path)
+    # read back with the stage's known schema: a schema-less read costs
+    # one footer-inference job per stage
+    mentions = spark.read.schema(MENTIONS_SCHEMA).parquet(
+        stage("extract", "mentions.parquet",
+              lambda: extract_mentions(documents)))
 
-    mentions_path = os.path.join(workdir, "mentions.parquet")
-    linked_path = os.path.join(workdir, "linked_triples.parquet")
-    ccmap_path = os.path.join(workdir, "cc_mapping.parquet")
-    triples_path = os.path.join(workdir, "triples.parquet")
-
-    mentions = stage("extract", lambda: extract_mentions(documents),
-                     mentions_path, parquet(mentions_path, MENTIONS_SCHEMA))
-
-    linked = stage(
-        "link",
+    linked = spark.read.schema(TRIPLES_SCHEMA).parquet(stage(
+        "link", "linked_triples.parquet",
         lambda: mentions_to_triples(link_mentions(mentions, dictionary)),
-        linked_path,
-        parquet(linked_path, TRIPLES_SCHEMA),
-    )
+    ))
 
     # Equivalence edges for canonicalization come from sameAs triples.
-    ccmap = stage(
-        "canonicalize",
+    ccmap = spark.read.schema("node string, component string").parquet(stage(
+        "canonicalize", "cc_mapping.parquet",
         lambda: connected_components(
             linked.filter(F.col("p") == P_SAME_AS).select(
                 F.col("s").alias("src"), F.col("o").alias("dst")
             )
         ),
-        ccmap_path,
-        parquet(ccmap_path, "node string, component string"),
-    )
+    ))
 
-    stage(
-        "materialize",
+    triples_path = stage(
+        "materialize", "triples.parquet",
         lambda: canonicalize_triples(
             linked.filter(F.col("p") != P_SAME_AS), ccmap
         ),
-        triples_path,
-        lambda: read_triples(spark, triples_path),
-        writer=lambda df: write_triples(df, triples_path, n_buckets),
+        write=lambda df, path: write_triples(df, path, n_buckets),
     )
 
     return PipelineResult(triples_path, run, resumed, stage_seconds)

@@ -127,19 +127,6 @@ REPORT_SCHEMA = StructType(
     ]
 )
 
-# --- Manifest: per-stage/per-partition lineage + counters (E7) ---
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("status", StringType(), False),       # committed | failed
-        StructField("rows", LongType(), False),
-        StructField("partitions", IntegerType(), False),
-        StructField("payload", StringType(), True),       # JSON extras (path, counters)
-        StructField("seq", LongType(), False),            # monotone commit sequence
-    ]
-)
-
 # --- Events feed (driver testdata events.parquet; streaming ops) ---
 EVENTS_SCHEMA = StructType(
     [

@@ -1,8 +1,8 @@
 """A8/A9/E6/E7 — triple sink, report sinks, manifest + resume.
 
-north_rule: triples partitioned by subject hash; every stage commits a
-manifest row (per-partition lineage + counters) so a killed job resumes
-from the last committed snapshot.
+north_rule: triples partitioned by subject hash; every construction stage
+commits a fresh dir, then one durable manifest line (with counters) that
+names it, so a killed job resumes from the dirs the last lines name.
 
 Sandbox note: Iceberg's runtime jar is not baked into this container, so
 the sink writes parquet with an explicit ``s_bucket = pmod(xxhash64(s), N)``
@@ -15,29 +15,26 @@ from __future__ import annotations
 
 import json
 import os
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from shacl_dqa_prototype_spark.schemas import MANIFEST_SCHEMA, TRIPLES_SCHEMA
+from shacl_dqa_prototype_spark.schemas import TRIPLES_SCHEMA
+from shacl_dqa_prototype_spark.sources.snapshots import append_log, dir_writer
 
 
 def write_triples(triples: DataFrame, path: str, n_buckets: int = 32) -> None:
-    """E6: materialize T partitioned by subject hash.
+    """E6: materialize T partitioned by subject hash into the fresh
+    commit dir ``path``.
 
     One shuffle keyed on the bucket, then a partitioned write — downstream
     per-subject work (groupBy('s'), self-joins on s) reuses the layout."""
-    (
+    dir_writer(
         triples.withColumn("s_bucket", F.pmod(F.xxhash64("s"), F.lit(n_buckets)))
         .repartition("s_bucket")
-        .write.mode("overwrite")
-        .partitionBy("s_bucket")
-        .parquet(path)
-    )
+    ).partitionBy("s_bucket").parquet(path)
 
 
 def read_triples(spark: SparkSession, path: str) -> DataFrame:
@@ -51,58 +48,39 @@ def read_triples(spark: SparkSession, path: str) -> DataFrame:
 
 
 class Manifest:
-    """E7: append-only per-stage commit log backed by JSON lines.
+    """E7: the construction commit log, one JSON line per stage commit.
 
-    A stage is 'committed' when a row with status=committed exists AND its
-    payload path is readable. ``resume`` = skip stages already committed.
-    (On a real deployment this is an Iceberg table written with
-    snapshot-per-stage commits; JSONL keeps the sandbox dependency-free
-    while preserving the exact protocol.)"""
+    A stage writes a fresh dir nothing names yet; ``commit`` then appends
+    ONE line naming it (``payload.path``) through ``snapshots.append_log``
+    — the snapshot rule, so file order is commit order and a crashed
+    write leaves only a dir no line names. (On a real deployment this is
+    an Iceberg table written with snapshot-per-stage commits; JSONL keeps
+    the sandbox dependency-free while preserving the exact protocol.)"""
 
-    def __init__(self, workdir: str, run_id: str | None = None):
+    def __init__(self, workdir: str):
         os.makedirs(workdir, exist_ok=True)
         self.path = os.path.join(workdir, "manifest.jsonl")
-        self.run_id = run_id or uuid.uuid4().hex[:12]
 
-    def _rows(self) -> list[dict]:
+    def committed(self, stage: str) -> str | None:
+        """The dir the stage's last committed line names (any run —
+        resume crosses runs), or None when there is none or it vanished
+        (→ recompute)."""
         if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    def committed(self, stage: str) -> dict | None:
-        """Latest committed row for a stage (any run — resume crosses runs)."""
-        rows = [r for r in self._rows() if r["stage"] == stage and r["status"] == "committed"]
-        if not rows:
             return None
-        row = max(rows, key=lambda r: r["seq"])
-        payload = json.loads(row.get("payload") or "{}")
-        out_path = payload.get("path")
-        if out_path and not os.path.exists(out_path):
-            return None  # snapshot vanished → not resumable
-        return row
+        with open(self.path) as f:
+            rows = [r for r in map(json.loads, filter(str.strip, f))
+                    if r["stage"] == stage and r["status"] == "committed"]
+        path = json.loads(rows[-1]["payload"]).get("path") if rows else None
+        return path if path and os.path.exists(path) else None
 
     def commit(self, stage: str, rows: int, partitions: int, payload: dict | None = None) -> None:
-        # wall clock, NOT time.monotonic_ns(): committed() orders rows
-        # across RUNS by seq, and monotonic time resets on reboot — a
-        # re-run after reboot would lose to a high-uptime row from before
-        # it and resume() would silently read the stale snapshot
-        seq = int(time.time_ns())
-        rec = {
-            "run_id": self.run_id,
+        append_log(self.path, lambda: {
             "stage": stage,
             "status": "committed",
             "rows": int(rows),
             "partitions": int(partitions),
             "payload": json.dumps(payload or {}),
-            "seq": seq,
-        }
-        with open(self.path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    def as_df(self, spark: SparkSession) -> DataFrame:
-        rows = self._rows()
-        return spark.createDataFrame(rows, schema=MANIFEST_SCHEMA) if rows else spark.createDataFrame([], MANIFEST_SCHEMA)
+        })
 
 
 def write_report_csv(report: DataFrame, path: str) -> None:

@@ -17,10 +17,11 @@ Commit protocol (same ordering Iceberg uses):
      dir alone).
 A job killed between 1 and 2 leaves an orphan directory only — readers
 still see the parent snapshot, exactly the Iceberg crash story. The log
-line is a single O_APPEND write + flush, atomic for concurrent readers
-on a local/posix filesystem; a real deployment swaps this file for the
-catalog's atomic swap (which is also the only piece Iceberg itself
-delegates to the catalog).
+line is one flock'd O_APPEND write + flush + fsync (``append_log``),
+atomic for concurrent readers on a local/posix filesystem; a real
+deployment swaps this file for the catalog's atomic swap (which is also
+the only piece Iceberg itself delegates to the catalog). The
+construction manifest (sources/sinks.py) commits through the same steps.
 
 A snapshot has ONE layout: its record's ``bucket_col``/``n_buckets``
 describe every dir it references. An append or bucket merge onto a
@@ -74,12 +75,57 @@ import time
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
 _UNSET = object()  # sentinel: "caller did not pin a parent snapshot"
+
+
+def locked_log(log_path: str):
+    """Exclusive flock on the LIVE log file. flock binds to the inode,
+    not the path, and expire_snapshots atomically replaces the log
+    (tmp + os.replace): a writer that blocked on the old inode would,
+    once granted, append to an unlinked file and silently lose its
+    commit. After acquiring, re-stat the path — if the inode moved
+    while we waited, reopen and retry on the replacement. The lock is
+    released on close and on process death, so a crashed writer never
+    wedges the log."""
+    import fcntl
+
+    while True:
+        f = open(log_path, "a")
+        fcntl.flock(f.fileno(), fcntl.LOCK_EX)
+        try:
+            live_ino = os.stat(log_path).st_ino
+        except FileNotFoundError:
+            f.close()
+            continue
+        if os.fstat(f.fileno()).st_ino == live_ino:
+            return f
+        f.close()
+
+
+def append_log(log_path: str, build_rec: Callable[[], dict]) -> dict:
+    """Step 2 of a commit: under ``locked_log``, build the record
+    (``build_rec`` may read the tail and raise to refuse) and append it as ONE
+    line, fsync'd before the lock is released. File order is commit
+    order: the flock serializes every appender."""
+    with locked_log(log_path) as f:
+        rec = build_rec()
+        f.write(json.dumps(rec) + "\n")
+        f.flush()
+        os.fsync(f.fileno())
+        return rec
+
+
+def dir_writer(df: DataFrame) -> DataFrameWriter:
+    """Step 1's writer: the log line is the commit point, so no
+    ``_SUCCESS`` marker (per write: ``__spark_entry__``'s triple-store
+    cache uses its marker)."""
+    return df.write.option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
 
 class CommitConflictError(RuntimeError):
@@ -128,29 +174,6 @@ class SnapshotTable:
         check of every idempotent writer (apply_delta, the streams)."""
         return delta_id in self.delta_ids()
 
-    def _locked_log(self):
-        """Exclusive flock on the LIVE log file. flock binds to the inode,
-        not the path, and expire_snapshots atomically replaces the log
-        (tmp + os.replace): a writer that blocked on the old inode would,
-        once granted, append to an unlinked file and silently lose its
-        commit. After acquiring, re-stat the path — if the inode moved
-        while we waited, reopen and retry on the replacement. The lock is
-        released on close and on process death, so a crashed writer never
-        wedges the table."""
-        import fcntl
-
-        while True:
-            f = open(self.log_path, "a")
-            fcntl.flock(f.fileno(), fcntl.LOCK_EX)
-            try:
-                live_ino = os.stat(self.log_path).st_ino
-            except FileNotFoundError:
-                f.close()
-                continue
-            if os.fstat(f.fileno()).st_ino == live_ino:
-                return f
-            f.close()
-
     def _append_log_cas(self, expected_parent_id: str | None,
                         build_rec, rebase=None) -> dict:
         """Step-2 commit with the catalog's compare-and-swap semantics:
@@ -161,23 +184,20 @@ class SnapshotTable:
         committed; without it (state-derived commits) raise
         CommitConflictError, exactly what Iceberg's catalog swap would
         reject."""
-        with self._locked_log() as f:
+        def build() -> dict:
             tail = self.current()
             tail_id = tail["snapshot_id"] if tail else None
             if tail_id == expected_parent_id:
-                rec = build_rec(tail)
-            elif rebase is not None:
-                rec = rebase(tail)
-            else:
-                raise CommitConflictError(
-                    f"concurrent commit on {self.table_dir}: this operation "
-                    f"read snapshot {expected_parent_id!r} but the table "
-                    f"tail is now {tail_id!r}; re-read the table state and "
-                    "retry")
-            f.write(json.dumps(rec) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-            return rec
+                return build_rec(tail)
+            if rebase is not None:
+                return rebase(tail)
+            raise CommitConflictError(
+                f"concurrent commit on {self.table_dir}: this operation "
+                f"read snapshot {expected_parent_id!r} but the table "
+                f"tail is now {tail_id!r}; re-read the table state and "
+                "retry")
+
+        return append_log(self.log_path, build)
 
     # ---- commits --------------------------------------------------------
 
@@ -190,9 +210,9 @@ class SnapshotTable:
             out = df.withColumn(
                 "_bucket", F.pmod(F.xxhash64(bucket_col), F.lit(n_buckets))
             ).repartition("_bucket")
-            out.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+            dir_writer(out).partitionBy("_bucket").parquet(path)
         else:
-            df.write.mode("overwrite").parquet(path)
+            dir_writer(df).parquet(path)
         return dirname
 
     def _check_layout(self, tail: dict | None, bucket_col: str | None,
@@ -611,7 +631,7 @@ class SnapshotTable:
         pre-rewrite log between our read and the os.replace and be
         silently dropped (its data dir later orphan-deleted). Readers are
         unaffected either way."""
-        with self._locked_log():
+        with locked_log(self.log_path):
             snaps = self.snapshots()
             kept = snaps[-keep_last:] if keep_last > 0 else []
             referenced_kept = {d for s in kept for d in s["dirs"]}

@@ -3,10 +3,13 @@ manifest resume (SURVEY.md §5.2 items 1, 4, 6)."""
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from shacl_dqa_prototype_spark.datagen import (
     GenConfig,
@@ -29,8 +32,10 @@ from shacl_dqa_prototype_spark.operators.extract import (
 from shacl_dqa_prototype_spark.operators.invariant import invariant_violations
 from shacl_dqa_prototype_spark.operators.connected_components import connected_components
 from shacl_dqa_prototype_spark.operators.link import link_mentions
+from shacl_dqa_prototype_spark.plans import construction
 from shacl_dqa_prototype_spark.plans.construction import run_construction
 from shacl_dqa_prototype_spark.schemas import DOCUMENTS_SCHEMA
+from shacl_dqa_prototype_spark.sources.sinks import Manifest, read_triples
 
 CFG = GenConfig(n_docs=300, n_entities=60, seed=42)
 
@@ -61,7 +66,7 @@ def test_span_invariant(docs):
 
 def test_extraction_precision_recall(spark, docs, dictionary, tmp_path):
     res = run_construction(spark, docs, dictionary, str(tmp_path / "wd"))
-    got = spark.read.parquet(str(tmp_path / "wd/linked_triples.parquet"))
+    got = spark.read.parquet(Manifest(str(tmp_path / "wd")).committed("link"))
 
     truth = expected_triples(spark, CFG).drop("doc_id").distinct()
     got_spo = got.select("s", "p", "o").distinct()
@@ -95,7 +100,7 @@ def test_canonicalization_merges_dups(spark, docs, dictionary, tmp_path):
     triples = spark.read.parquet(res.triples_path)
     # All sameAs-linked dup/entity pairs collapsed: no subject may remain in
     # the entity/ namespace if its dup twin existed (dup sorts first).
-    linked = spark.read.parquet(str(tmp_path / "wd2/linked_triples.parquet"))
+    linked = spark.read.parquet(Manifest(str(tmp_path / "wd2")).committed("link"))
     merged = (
         linked.filter(F.col("p") == P_SAME_AS)
         .select(F.col("o").alias("ent"))
@@ -118,6 +123,192 @@ def test_resume_skips_committed_stages(spark, docs, dictionary, tmp_path):
     assert "extract" in res.stages_resumed and "link" in res.stages_resumed
     assert "canonicalize" in res.stages_run and "materialize" in res.stages_run
     assert spark.read.parquet(res.triples_path).count() > 0
+
+
+STAGE_DIRS = {"extract": "mentions.parquet", "link": "linked_triples.parquet",
+              "canonicalize": "cc_mapping.parquet",
+              "materialize": "triples.parquet"}
+
+
+def _spo(spark, path) -> set[tuple]:
+    return {tuple(r) for r in
+            read_triples(spark, path).select("s", "p", "o").collect()}
+
+
+def _lost_executor(col):
+    """A column whose tasks raise — a task failure standing in for a
+    lost executor."""
+    def boom(v):  # nested, so the workers unpickle it by value
+        raise RuntimeError("simulated executor loss")
+
+    return F.udf(boom, StringType())(col)
+
+
+def _crash_after_bucket_shuffle(monkeypatch, spark):
+    """Make the materialize write's tasks raise AFTER the bucket shuffle:
+    the column is computed by a raising UDF on the output of
+    write_triples' ``repartition("s_bucket")``, i.e. in the write tasks."""
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    repartition = cls.repartition
+
+    def crashing(self, *cols, **kw):
+        out = repartition(self, *cols, **kw)
+        if tuple(map(str, cols)) == ("s_bucket",):
+            out = out.withColumn("o", _lost_executor("o"))
+        return out
+
+    monkeypatch.setattr(cls, "repartition", crashing)
+
+
+def _crash_in_link_write(monkeypatch, spark):
+    """Make the link write's tasks raise: the raising UDF sits on the
+    stage's output, downstream of link's doc_id exchange."""
+    to_triples = construction.mentions_to_triples
+    monkeypatch.setattr(
+        construction, "mentions_to_triples",
+        lambda df: to_triples(df).withColumn("o", _lost_executor("o")))
+
+
+@pytest.fixture(scope="module")
+def uncrashed_kg(spark, docs, dictionary, tmp_path_factory):
+    res = run_construction(spark, docs, dictionary,
+                           str(tmp_path_factory.mktemp("uncrashed")))
+    return _spo(spark, res.triples_path)
+
+
+def test_crashed_rerun_resumes_to_the_committed_kg(spark, docs, dictionary,
+                                                    tmp_path, monkeypatch):
+    """Run 1 commits the KG; run 2 (resume=False, what `construct
+    --no-resume` passes) dies inside materialize's write job after the
+    bucket shuffle; run 3 is a plain resume. Every stage is committed
+    (run 2's extract/link/canonicalize, run 1's materialize), so run 3
+    resumes all four and must read run 1's triples — never the empty dir
+    an in-place overwrite leaves behind."""
+    wd = str(tmp_path / "wd")
+    first = run_construction(spark, docs, dictionary, wd)
+    kg = _spo(spark, first.triples_path)
+    assert kg
+    with monkeypatch.context() as m:
+        _crash_after_bucket_shuffle(m, spark)
+        with pytest.raises(Exception, match="simulated executor loss"):
+            run_construction(spark, docs, dictionary, wd, resume=False)
+    res = run_construction(spark, docs, dictionary, wd)
+    assert res.stages_resumed == list(STAGE_DIRS)
+    assert _spo(spark, res.triples_path) == kg
+    # the crashed write's dir is removed once the stage resumes its commit
+    assert os.listdir(os.path.join(wd, "triples.parquet")) == [
+        os.path.basename(res.triples_path)]
+
+
+@pytest.mark.parametrize("stage,crash", [
+    ("link", _crash_in_link_write),
+    ("materialize", _crash_after_bucket_shuffle),
+])
+def test_kill_during_stage_write_resumes_cleanly(
+        spark, docs, dictionary, uncrashed_kg, tmp_path, monkeypatch,
+        stage, crash):
+    """A run killed inside a stage's write job leaves only a dir no
+    manifest line names; a plain resume recomputes that stage, returns
+    the uncrashed run's triples and removes the crashed run's dir."""
+    wd = str(tmp_path / "wd")
+    root = os.path.join(wd, STAGE_DIRS[stage])
+    with monkeypatch.context() as m:
+        crash(m, spark)
+        with pytest.raises(Exception, match="simulated executor loss"):
+            run_construction(spark, docs, dictionary, wd)
+    partial = os.listdir(root)
+    assert len(partial) == 1  # the crashed write's uncommitted dir
+    res = run_construction(spark, docs, dictionary, wd)
+    before = list(STAGE_DIRS)[:list(STAGE_DIRS).index(stage)]
+    assert res.stages_resumed == before
+    assert _spo(spark, res.triples_path) == uncrashed_kg
+    committed = os.listdir(root)
+    assert len(committed) == 1 and committed != partial
+
+
+def test_resume_recomputes_a_fixed_path_commit(spark, docs, dictionary,
+                                               uncrashed_kg, tmp_path):
+    """A manifest line naming the stage path itself — the fixed-path
+    layout of older workdirs — is recomputed, never resumed: the stage's
+    clean-up would otherwise empty the dir it reads."""
+    wd = str(tmp_path / "wd")
+    run_construction(spark, docs, dictionary, wd)
+    Manifest(wd).commit("materialize", rows=0, partitions=0, payload={
+        "path": os.path.join(wd, "triples.parquet")})
+    res = run_construction(spark, docs, dictionary, wd)
+    assert res.stages_run == ["materialize"]
+    assert _spo(spark, res.triples_path) == uncrashed_kg
+
+
+def test_workdir_reads_as_the_benchmark_reads_it(spark, docs, dictionary,
+                                                 tmp_path):
+    """The construct benchmark checks a workdir with pyarrow alone: the
+    linked triples as a dataset over the stage path, the KG as a hive
+    dataset over ``triples_path`` and manifest.jsonl as stage → rows. No
+    commit dir carries a _SUCCESS marker — the manifest line is the
+    commit point."""
+    import pyarrow.dataset as ds
+
+    wd = str(tmp_path / "wd")
+    res = run_construction(spark, docs, dictionary, wd)
+    linked = ds.dataset(os.path.join(wd, "linked_triples.parquet"))
+    got = set(linked.to_table(columns=["s", "p", "o"]).to_pandas()
+              .itertuples(index=False, name=None))
+    assert got == {tuple(r) for r in spark.read.parquet(
+        Manifest(wd).committed("link")).select("s", "p", "o").collect()}
+    n = ds.dataset(res.triples_path, partitioning="hive").count_rows()
+    assert n == read_triples(spark, res.triples_path).count() > 0
+    # the stage path itself still reads as the KG
+    assert read_triples(spark, os.path.join(wd, "triples.parquet")).count() == n
+    with open(os.path.join(wd, "manifest.jsonl")) as f:
+        rows = {r["stage"]: r["rows"] for r in map(json.loads, f)}
+    assert set(rows) == set(STAGE_DIRS)
+    assert rows["link"] == linked.count_rows()
+    assert rows["materialize"] == n
+    assert not [f for _, _, files in os.walk(wd) for f in files
+                if "_SUCCESS" in f]
+
+
+def test_cli_construct_then_dqa_on_the_stage_path(spark, docs, dictionary,
+                                                 tmp_path):
+    """`main.py construct` then `main.py dqa --triples
+    <workdir>/triples.parquet` assesses the committed KG: its report is
+    row-equal to a run on the committed dir itself."""
+    import argparse
+    import csv
+    import io
+    from contextlib import redirect_stdout
+
+    from main import cmd_construct, cmd_dqa
+
+    docs_path, dict_path = str(tmp_path / "docs"), str(tmp_path / "dict")
+    docs.write.parquet(docs_path)
+    dictionary.write.parquet(dict_path)
+    wd = str(tmp_path / "wd")
+    common = dict(master=None, shuffle_partitions=None)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        cmd_construct(argparse.Namespace(
+            cmd="construct", docs=docs_path, dictionary=dict_path,
+            workdir=wd, buckets=32, no_resume=False, **common))
+    committed = json.loads(buf.getvalue().strip().splitlines()[-1])[
+        "triples_path"]
+
+    def report(triples, out):
+        cmd_dqa(argparse.Namespace(
+            cmd="dqa", config=None, triples=triples, triples_format=None,
+            vocab=[], vocab_names=[], vocab_formats=[], metadata=None,
+            metadata_format=None, metadata_class=None, output=out,
+            dataset_name="kg", base_uri=None, type_property="rdf:type",
+            labeling_property=None, description_property=None,
+            interlinking_property=None, uris_max_length=None, **common))
+        with open(os.path.join(out, "dq_assessment_kg.csv")) as f:
+            return sorted(tuple(r.values()) for r in csv.DictReader(f))
+
+    via_stage_path = report(os.path.join(wd, "triples.parquet"),
+                            str(tmp_path / "a"))
+    assert via_stage_path == report(committed, str(tmp_path / "b"))
+    assert len(via_stage_path) > 5
 
 
 def test_invariant_empty_spans_doc_passes(spark):

@@ -406,6 +406,11 @@ def test_vacuum_bounds_state_and_preserves_idempotence(spark, tmp_path):
     parts = [f for f in os.listdir(os.path.join(
         small.mono_violations.data_dir, log_dir)) if f.startswith("part-")]
     assert len(parts) == 1, parts
+    # the log line is the commit point: no commit dir carries _SUCCESS
+    markers = [os.path.join(root, f)
+               for root, _, fs in os.walk(str(tmp_path / "small"))
+               for f in fs if "_SUCCESS" in f]
+    assert not markers, markers
 
 
 def test_apply_delta_dedups_within_delta(spark, tmp_path):

@@ -756,7 +756,7 @@ def test_log_replace_race_with_blocked_commit(spark, tmp_path):
     """flock binds to the inode, not the path: a writer blocked on the
     pre-vacuum log inode would — once expire_snapshots os.replace'd the
     file and released — append to the unlinked inode and silently lose
-    its commit (review finding). _locked_log re-checks the inode after
+    its commit (review finding). locked_log re-checks the inode after
     every blocked acquire and retries on the live file; this forces that
     exact interleaving deterministically."""
     import fcntl
